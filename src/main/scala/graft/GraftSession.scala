@@ -24,13 +24,10 @@ object GraftSession {
       // partition bytes, is the cost — get 2m (A/B'd r15: 64m serialized
       // the compute-dense small-byte stages, q_node_similarity 3x slower);
       // any non-local master gets the scale-safe 64m (2m at cluster scale
-      // would be a partition-count explosion). GRAFT_AQE_ADVISORY_BYTES
-      // overrides either way.
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("GRAFT_AQE_PARALLELISM_FIRST", "false"))
+      // would be a partition-count explosion).
+      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
       .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        sys.env.getOrElse("GRAFT_AQE_ADVISORY_BYTES",
-          if (master.startsWith("local")) "2m" else "64m"))
+        if (master.startsWith("local")) "2m" else "64m")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       // Kryo for RDD shuffle/broadcast data (guide §2.3 — shuffle fewer

@@ -1298,9 +1298,13 @@ object Planner {
     rehydrate(ctx, withPath, newVars)
   }
 
-  /** ON MATCH SET / ON CREATE SET for node MERGE. */
-  private def applyMergeActions(ctx: Ctx, env: Env, mergedVar: String,
+  /** ON MATCH SET / ON CREATE SET for node MERGE. The merge binds a bare
+    * id, so the node's stored properties are hydrated first: a SET value
+    * such as `c.acctbal + $x` reads the matched node's current value. */
+  private def applyMergeActions(ctx: Ctx, env0: Env, mergedVar: String,
       m: MergeClause, createdFlag: Column): Unit = {
+    if (m.onCreate.isEmpty && m.onMatch.isEmpty) return
+    val env = rehydrate(ctx, env0, Seq(mergedVar))
     def apply(items: Seq[SetItem], filter: Column): Unit = {
       if (items.isEmpty) return
       val rows = env.df.get.filter(filter)
@@ -2615,19 +2619,6 @@ object Planner {
     * behave like shortestPath endpoints. Binds pv$length and pv$rels per
     * returned path (up to k per pair). */
   private def planShortestK(ctx: Ctx, envIn: Env, s: ShortestPart): Env = {
-    val __t0 = System.nanoTime()
-    try planShortestK0(ctx, envIn, s)
-    finally if (sys.env.contains("GRAFT_NFA_PROF"))
-      System.err.println(f"NFAPROF planShortestK ${(System.nanoTime()-__t0)/1e9}%.3f s")
-  }
-
-  private def planShortestK0(ctx: Ctx, envIn: Env, s: ShortestPart): Env = {
-    def prof2[A](tag: String)(f: => A): A =
-      if (sys.env.contains("GRAFT_NFA_PROF")) {
-        val t0 = System.nanoTime(); val a = f
-        System.err.println(f"NFAPROF $tag ${(System.nanoTime()-t0)/1e9}%.3f s")
-        a
-      } else f
     val p = namedStart(ctx, s.pattern)
     val kk = s.k.get
     require(p.hops.nonEmpty, "SHORTEST k needs a relationship pattern")
@@ -2687,7 +2678,7 @@ object Planner {
     val unboundedCap =
       if (nUnbounded == 0) 0
       else math.max(1, math.min(30, (60 - boundedSum) / nUnbounded))
-    val segs = prof2("segs") { p.hops.zip(boundaries).map { case ((r, _), bnd) =>
+    val segs = p.hops.zip(boundaries).map { case ((r, _), bnd) =>
       val (mn, mxOpt) = r.varLength.getOrElse((1, Some(1)))
       val mx = mxOpt.getOrElse(unboundedCap)
       // unbounded quantifier: mx is a search CAP, not a bound — an alive
@@ -2730,7 +2721,6 @@ object Planner {
             mn, mx, bnd, unbounded = unb)
       }
     }
-    }
     val pv = s.pathVar.getOrElse(ctx.fresh("p"))
     // endpoint constraints on a PRE-BOUND side (labels, label expressions,
     // property maps, inline WHERE — GQL allows them on any pattern node):
@@ -2747,59 +2737,57 @@ object Planner {
       val d0 = filterEndpoint(env.df.get, p.first, fromVar)
       if (toBound) filterEndpoint(d0, toNode, toVar) else d0
     }
-    val res0 = prof2("search") {
-      if (s.groups) {
-        // SHORTEST k GROUPS (reference Selector.ShortestGroups): whole
-        // length-groups survive, so the search runs the distinct-arrival-
-        // depth budget. A single plain var-length leg takes the
-        // shortestGroups fast path (driver-local replica for small
-        // inputs); alternation branches and interior node predicates run
-        // the same product-graph search as SHORTEST k with group pruning
-        // (Trail.shortestGroupsSegments).
-        val simple = segs.size == 1 && !segs.head.composite &&
-          segs.head.boundary.isEmpty
-        val targetIds =
-          if (toBound || (toNode.labels.isEmpty && toNode.labelExpr.isEmpty &&
-            toNode.props.isEmpty && toNode.where.isEmpty)) None
-          else boundarySet(ctx, toNode)
-        if (simple) {
-          if (toBound)
-            graft.ops.Trail.shortestGroups(segs.head.edges,
-              df.select(col(fromVar).as("source"), col(toVar).as("target")).distinct(),
-              kk, segs.head.min, segs.head.max,
-              capIsHorizon = segs.head.unbounded)
-          else
-            graft.ops.Trail.shortestGroupsTo(segs.head.edges,
-              df.select(col(fromVar).as("source")).distinct(), targetIds,
-              kk, segs.head.min, segs.head.max,
-              capIsHorizon = segs.head.unbounded)
-        } else {
-          if (toBound)
-            graft.ops.Trail.shortestGroupsSegments(segs,
-              df.select(col(fromVar).as("source"), col(toVar).as("target")).distinct(),
-              kk, partBnds = boundNodeLegs.map(_._2))
-          else
-            graft.ops.Trail.shortestGroupsSegmentsTo(segs,
-              df.select(col(fromVar).as("source")).distinct(),
-              targetIds.map(_.select(col("id").as("target"))), kk,
-              partBnds = boundNodeLegs.map(_._2))
-        }
-      } else if (toBound)
-        graft.ops.Trail.shortestKSegments(segs,
-          df.select(col(fromVar).as("source"), col(toVar).as("target")).distinct(), kk,
-          partBnds = boundNodeLegs.map(_._2))
-      else {
-        // unbound target: source-driven search, accepted ends semi-joined
-        // against the label scan — never a sources × candidates cartesian
-        // (boundarySet folds the label/props scan AND any inline WHERE)
-        val targetIds =
-          if (toNode.labels.isEmpty && toNode.labelExpr.isEmpty &&
-            toNode.props.isEmpty && toNode.where.isEmpty) None
-          else boundarySet(ctx, toNode).map(_.select(col("id").as("target")))
-        graft.ops.Trail.shortestKSegmentsTo(segs,
-          df.select(col(fromVar).as("source")).distinct(), targetIds, kk,
-          partBnds = boundNodeLegs.map(_._2))
+    val res0 = if (s.groups) {
+      // SHORTEST k GROUPS (reference Selector.ShortestGroups): whole
+      // length-groups survive, so the search runs the distinct-arrival-
+      // depth budget. A single plain var-length leg takes the
+      // shortestGroups fast path (driver-local replica for small
+      // inputs); alternation branches and interior node predicates run
+      // the same product-graph search as SHORTEST k with group pruning
+      // (Trail.shortestGroupsSegments).
+      val simple = segs.size == 1 && !segs.head.composite &&
+        segs.head.boundary.isEmpty
+      val targetIds =
+        if (toBound || (toNode.labels.isEmpty && toNode.labelExpr.isEmpty &&
+          toNode.props.isEmpty && toNode.where.isEmpty)) None
+        else boundarySet(ctx, toNode)
+      if (simple) {
+        if (toBound)
+          graft.ops.Trail.shortestGroups(segs.head.edges,
+            df.select(col(fromVar).as("source"), col(toVar).as("target")).distinct(),
+            kk, segs.head.min, segs.head.max,
+            capIsHorizon = segs.head.unbounded)
+        else
+          graft.ops.Trail.shortestGroupsTo(segs.head.edges,
+            df.select(col(fromVar).as("source")).distinct(), targetIds,
+            kk, segs.head.min, segs.head.max,
+            capIsHorizon = segs.head.unbounded)
+      } else {
+        if (toBound)
+          graft.ops.Trail.shortestGroupsSegments(segs,
+            df.select(col(fromVar).as("source"), col(toVar).as("target")).distinct(),
+            kk, partBnds = boundNodeLegs.map(_._2))
+        else
+          graft.ops.Trail.shortestGroupsSegmentsTo(segs,
+            df.select(col(fromVar).as("source")).distinct(),
+            targetIds.map(_.select(col("id").as("target"))), kk,
+            partBnds = boundNodeLegs.map(_._2))
       }
+    } else if (toBound)
+      graft.ops.Trail.shortestKSegments(segs,
+        df.select(col(fromVar).as("source"), col(toVar).as("target")).distinct(), kk,
+        partBnds = boundNodeLegs.map(_._2))
+    else {
+      // unbound target: source-driven search, accepted ends semi-joined
+      // against the label scan — never a sources × candidates cartesian
+      // (boundarySet folds the label/props scan AND any inline WHERE)
+      val targetIds =
+        if (toNode.labels.isEmpty && toNode.labelExpr.isEmpty &&
+          toNode.props.isEmpty && toNode.where.isEmpty) None
+        else boundarySet(ctx, toNode).map(_.select(col("id").as("target")))
+      graft.ops.Trail.shortestKSegmentsTo(segs,
+        df.select(col(fromVar).as("source")).distinct(), targetIds, kk,
+        partBnds = boundNodeLegs.map(_._2))
     }
     // UNBOUND interior pattern variables BIND from the boundary-crossing
     // nodes the search records per segment transition (`bnds[i]` = the

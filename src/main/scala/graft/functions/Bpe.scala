@@ -30,8 +30,8 @@ object Bpe {
   /** Train `merges` BPE merge rules over the corpus.
     *
     * After the ONE corpus-scale word count, the dictionary is
-    * vocabulary-bounded — when it fits under `localThreshold` distinct
-    * words (LIMIT probe, the astar/kCheapest pattern), the merge loop
+    * vocabulary-bounded — when it fits under
+    * [[graft.ops.Placement.BpeDict]] distinct words, the merge loop
     * runs DRIVER-LOCAL with incremental pair-count updates (the classic
     * trainer loop: one argmax scan + delta updates on the words that
     * contain the merged pair, what subword-nmt does) — a real 32k-merge
@@ -44,7 +44,7 @@ object Bpe {
     *         merge table, highest-frequency pair first
     */
   def train(df: DataFrame, merges: Int, textCol: String = "text",
-      lowercase: Boolean = true, localThreshold: Int = 500000): DataFrame = {
+      lowercase: Boolean = true): DataFrame = {
     require(merges >= 1, s"need merges >= 1: $merges")
     val spark = df.sparkSession
     import spark.implicits._
@@ -56,12 +56,9 @@ object Bpe {
       // initial symbols = characters, with the end-of-word marker
       .select(col("__cnt"),
         concat(split(col("__w"), ""), array(lit(Eow))).as("__s"))
-    if (localThreshold > 0 &&
-        dict0.limit(localThreshold + 1).count() <= localThreshold) {
-      val rows = dict0.collect().map(r =>
-        (r.getLong(0), r.getSeq[String](1).toArray))
-      return localTrain(spark, rows, merges)
-    }
+    for (rows <- graft.ops.Placement.local(dict0, graft.ops.Placement.BpeDict))
+      return localTrain(spark,
+        rows.map(r => (r.getLong(0), r.getSeq[String](1).toArray)), merges)
     var words = dict0.localCheckpoint(false)
     val out = Seq.newBuilder[(Int, String, String, String, Long)]
     var rank = 0

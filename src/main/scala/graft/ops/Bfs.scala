@@ -25,23 +25,17 @@ import org.apache.spark.sql.functions._
  */
 object Bfs {
 
-  /** Measurement override for the guarded local fast paths (r16, VERDICT
-    * item #5): GRAFT_LOCAL_EDGE_THRESHOLD=0 forces the distributed
-    * branches so their scaling can be benched on fixtures the local walk
-    * would otherwise absorb. Unset = the caller's threshold. */
-  private def effThreshold(t: Int): Int =
-    sys.env.get("GRAFT_LOCAL_EDGE_THRESHOLD").map(_.toInt).getOrElse(t)
-
   /** Long-id contract cast for the RDD/local fast paths: a non-null id
-    * that does not cast to LONG fails loudly instead of becoming NULL and
-    * silently dropping the edge (the generic-typed DataFrame joins these
-    * paths replaced would have matched string ids). */
+    * that does not cast to LONG fails loudly, naming the operator, instead
+    * of becoming NULL and silently dropping the edge (the generic-typed
+    * DataFrame joins these paths replaced would have matched string ids).
+    * `try_cast` keeps the named error under ANSI mode too. */
   private def longId(c: org.apache.spark.sql.Column, op: String):
       org.apache.spark.sql.Column =
-    when(c.isNotNull && c.cast("long").isNull,
+    when(c.isNotNull && c.try_cast("long").isNull,
       raise_error(concat(lit(s"$op: id not castable to LONG: "),
         c.cast("string"))).cast("long"))
-      .otherwise(c.cast("long"))
+      .otherwise(c.try_cast("long"))
 
   /**
    * Multi-source BFS distances.
@@ -79,8 +73,11 @@ object Bfs {
     // reachability only sees distinct (src, dst): parallel edges would be
     // rescanned every round otherwise. Callers holding a pre-deduped pair
     // set (PropertyGraph.topologyPairs) pass edgesDeduped = true.
-    val eRaw = edges.select(col("src").cast("long"), col("dst").cast("long"))
-      .na.drop("any") // a null endpoint never matched the join either
+    // ids go through the longId contract: a non-null id that does not cast
+    // fails loudly; a null endpoint or source never matched a join either
+    val eRaw = edges.select(longId(col("src"), "distances"),
+        longId(col("dst"), "distances"))
+      .na.drop("any")
       .rdd.map(r => (r.getLong(0), r.getLong(1)))
     val nPart = math.min(
       spark.sessionState.conf.numShufflePartitions,
@@ -93,7 +90,9 @@ object Bfs {
     // frontier/visited/target rows keyed by NODE so the dedupe, the
     // anti-join and the hit count are partition-local
     val targets = targetPairs.map(
-      _.select(col("target").cast("long"), col("source").cast("long"))
+      _.select(longId(col("target"), "distances"),
+          longId(col("source"), "distances"))
+        .na.drop("any")
         .distinct()
         .rdd.map(r => (r.getLong(0), r.getLong(1)))
         .partitionBy(part)
@@ -113,7 +112,8 @@ object Bfs {
             (a + x, b + y) }
         case None => (f.count(), 0L)
       }
-    var frontier = sources.select(col("source").cast("long"))
+    var frontier = sources.select(longId(col("source"), "distances"))
+      .na.drop("any")
       .rdd.map { r => val s = r.getLong(0); (s, s) }
       .partitionBy(part)
       .persist(StorageLevel.MEMORY_AND_DISK)
@@ -257,32 +257,22 @@ object Bfs {
    * rounds the per-job overhead dominates; pointer doubling finishes in
    * ⌈log₂ L⌉ rounds, each one V-sized self-join on the jump table.
    *
+   * Inputs within [[Placement.Walk]] edge rows walk their chains on the
+   * driver instead.
+   *
    * @param edges (src, dst) successor edges, in/out degree ≤ 1 (lists)
-   * @param localEdgeThreshold bounded inputs (≤ threshold raw edge rows,
-   *        probed with a LIMIT that never shuffles) walk their chains on
-   *        the driver in 2 jobs total — the connectedComponents /
-   *        WeightedPaths.astar guarded-fast-path precedent; bigger inputs
-   *        take the distributed doubling loop (specs cover it via 0)
    * @return (node, head, rank): head = start of the node's chain,
    *         rank = distance from the head (head itself has rank 0)
    */
-  def listRanks(edges: DataFrame, maxLength: Long = 1L << 20,
-      localEdgeThreshold: Int = 200000): DataFrame = {
+  def listRanks(edges: DataFrame, maxLength: Long = 1L << 20): DataFrame = {
     val spark = edges.sparkSession
     val raw = edges.select(longId(col("src"), "listRanks").as("src"),
         longId(col("dst"), "listRanks").as("dst"))
       .na.drop("any")
     val roundsCap = (64 - java.lang.Long.numberOfLeadingZeros(math.max(1L, maxLength))) + 1
-    val locT = effThreshold(localEdgeThreshold)
-    if (locT > 0) {
-      // probe and collect in ONE evaluation: a separate LIMIT-probe would
-      // re-run the caller's edge-producing subtree (often a window +
-      // self-join) before the collect ran it again
-      val probe = raw.limit(locT + 1).collect()
-      if (probe.length <= locT)
-        return localListRanks(spark, probe.map(r => (r.getLong(0), r.getLong(1))),
-          maxLength, roundsCap)
-    }
+    for (rows <- Placement.local(raw, Placement.Walk))
+      return localListRanks(spark, rows.map(r => (r.getLong(0), r.getLong(1))),
+        maxLength, roundsCap)
     // RDD rounds under ONE shared HashPartitioner (the Ranking.iterateRanks
     // treatment): the DataFrame loop re-ran Catalyst + a localCheckpoint +
     // an anti-join-vs-heads count job every round — ~5 stages of fixed
@@ -402,30 +392,28 @@ object Bfs {
    *
    * @return (node, component) where component = min node id in the component
    *
-   * Guarded driver-local fast path (the WeightedPaths.astar precedent): a
-   * LIMIT probe on the RAW edge stream (pre-distinct, so the probe never
-   * pays a shuffle and stops scanning at threshold+1 rows) detects a small
-   * pair graph — the common case when the input is a near-duplicate pair
-   * list, which is tiny relative to the corpus that produced it — and runs
-   * union-find on the driver: 2 jobs total instead of ~4 per contraction
-   * round. Bigger inputs take the distributed contraction loop unchanged
-   * (specs cover it via localEdgeThreshold = 0).
+   * A small pair graph — the common case when the input is a
+   * near-duplicate pair list, tiny relative to the corpus that produced it
+   * — runs union-find on the driver instead ([[Placement]]; the probe reads
+   * the RAW edge stream, pre-distinct, so it never pays a shuffle). The
+   * bound is `localEdgeThreshold` raw edge rows, [[Placement.Walk]] by
+   * default.
    */
   def connectedComponents(edges: DataFrame, maxIter: Int = 25,
-      localEdgeThreshold: Int = 200000): DataFrame = {
+      localEdgeThreshold: Int = Placement.Walk): DataFrame = {
     val raw = edges.select(col("src").cast("long").as("u"),
         col("dst").cast("long").as("v"))
       .filter(col("u") =!= col("v"))
-    if (localEdgeThreshold > 0 &&
-        raw.limit(localEdgeThreshold + 1).count() <= localEdgeThreshold)
-      return localComponents(edges.sparkSession, raw)
-    connectedComponentsDistributed(edges, maxIter)
+    Placement.local(raw, localEdgeThreshold) match {
+      case Some(rows) => localComponents(edges.sparkSession, rows)
+      case None => connectedComponentsDistributed(edges, maxIter)
+    }
   }
 
   /** union-find over a collected (bounded) edge list; component = min id */
   private def localComponents(spark: org.apache.spark.sql.SparkSession,
-      raw: DataFrame): DataFrame = {
-    val pairs = raw.distinct().collect().map(r => (r.getLong(0), r.getLong(1)))
+      rows: Array[org.apache.spark.sql.Row]): DataFrame = {
+    val pairs = rows.map(r => (r.getLong(0), r.getLong(1))).distinct
     val parent = scala.collection.mutable.HashMap.empty[Long, Long]
     def find(x: Long): Long = {
       var r = x
@@ -556,7 +544,7 @@ object Bfs {
    * @return (source, node, arrival LONG) including (s, s, t0)
    */
   def earliestArrival(edges: DataFrame, sources: DataFrame,
-      maxHops: Int = 50, localEdgeThreshold: Int = 200000): DataFrame = {
+      maxHops: Int = 50): DataFrame = {
     // source is cast (with the loud-failure guard) alongside the edge
     // columns: the local path reads it with getLong, and the distributed
     // join compares it against cast edge ids — an un-cast IntegerType
@@ -566,24 +554,16 @@ object Bfs {
         col("t0").cast("long").as("arrival"))
     else sources.select(longId(col("source"), "earliestArrival").as("source"),
       lit(0L).as("arrival"))
-    val locT = effThreshold(localEdgeThreshold)
-    if (locT > 0) {
-      // guarded driver-local fast path (the connectedComponents /
-      // listRanks precedent): a bounded temporal-edge list runs the SAME
-      // keep-the-min round DP on the driver — 2 jobs total instead of ~3
-      // per relaxation round. Probe + collect in one evaluation.
-      val eProbe = edges.select(longId(col("src"), "earliestArrival"),
-          longId(col("dst"), "earliestArrival"), col("ts").cast("long"))
-        .na.drop("any") // a null edge field never matches the join either
-        .limit(locT + 1).collect()
-      if (eProbe.length <= locT) {
-        val srcRows = s0.limit(locT + 1).collect()
-        if (srcRows.length <= locT)
-          return localEarliestArrival(edges.sparkSession,
-            eProbe.map(r => (r.getLong(0), r.getLong(1), r.getLong(2))),
-            srcRows.map(r => (r.getLong(0), r.getLong(1))), maxHops)
-      }
-    }
+    // a bounded temporal-edge list runs the SAME keep-the-min round DP on
+    // the driver — 2 jobs total instead of ~3 per relaxation round
+    val eLocal = edges.select(longId(col("src"), "earliestArrival"),
+        longId(col("dst"), "earliestArrival"), col("ts").cast("long"))
+      .na.drop("any") // a null edge field never matches the join either
+    for (es <- Placement.local(eLocal, Placement.Walk);
+         ss <- Placement.local(s0, Placement.Walk))
+      return localEarliestArrival(edges.sparkSession,
+        es.map(r => (r.getLong(0), r.getLong(1), r.getLong(2))),
+        ss.map(r => (r.getLong(0), r.getLong(1))), maxHops)
     val e = edges.select(col("src").as("__s"), col("dst").as("__d"),
       col("ts").cast("long").as("__t")).localCheckpoint(false)
     var best = s0.select(col("source"), col("source").as("node"),

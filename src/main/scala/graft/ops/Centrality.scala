@@ -41,13 +41,11 @@ object Centrality {
    * @return (node, reached LONG, closeness DOUBLE 4dp, harmonic DOUBLE 4dp)
    */
   def closenessHarmonic(edges: DataFrame, sources: DataFrame,
-      maxDepth: Int, localEdgeThreshold: Int = 200000): DataFrame = {
-    val local = smallGraph(edges, sources, localEdgeThreshold)
-    if (local.isDefined) {
-      // driver-local BFS per source (the connectedComponents/astar fast-
-      // path precedent): a diameter-D exact sweep costs 2·D driver rounds
-      // distributed — on a probe-small graph that is all job overhead
-      val (adj, srcs) = local.get
+      maxDepth: Int): DataFrame = {
+    for ((adj, srcs) <- smallGraph(edges, sources)) {
+      // driver-local BFS per source: a diameter-D exact sweep costs 2·D
+      // driver rounds distributed — on a small graph that is all job
+      // overhead
       val spark = edges.sparkSession
       import spark.implicits._
       return srcs.map { s =>
@@ -72,21 +70,21 @@ object Centrality {
   private def round4(x: Double): Double =
     BigDecimal(x).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
 
-  /** LIMIT-probe guard shared by the driver-local fast paths: Some((adj,
-    * sources)) when BOTH the edge list and the source set are bounded —
-    * the probes never scan past threshold+1 rows. */
-  private def smallGraph(edges: DataFrame, sources: DataFrame,
-      threshold: Int): Option[(Map[Long, Array[Long]], Seq[Long])] = {
-    if (threshold <= 0) return None
-    val raw = edges.select(col("src").cast("long"), col("dst").cast("long"))
-    if (raw.limit(threshold + 1).count() > threshold) return None
-    if (sources.limit(threshold + 1).count() > threshold) return None
-    val pairs = raw.distinct().collect().map(r => (r.getLong(0), r.getLong(1)))
-    val adj = pairs.groupBy(_._1).view.mapValues(_.map(_._2)).toMap
-    val srcs = sources.select(col("source").cast("long")).distinct()
-      .collect().map(_.getLong(0)).toSeq
-    Some((adj, srcs))
-  }
+  /** Some((adj, distinct sources)) when BOTH the edge list and the source
+    * set fit [[Placement.Walk]]. */
+  private def smallGraph(edges: DataFrame, sources: DataFrame):
+      Option[(Map[Long, Array[Long]], Seq[Long])] =
+    for {
+      es <- Placement.local(
+        edges.select(col("src").cast("long"), col("dst").cast("long")),
+        Placement.Walk)
+      ss <- Placement.local(sources.select(col("source").cast("long")),
+        Placement.Walk)
+    } yield {
+      val pairs = es.map(r => (r.getLong(0), r.getLong(1))).distinct
+      (pairs.groupBy(_._1).view.mapValues(_.map(_._2)).toMap,
+        ss.map(_.getLong(0)).distinct.toSeq)
+    }
 
   /** single-source BFS over a driver-local adjacency; returns dist map
     * (source included at 0) */
@@ -129,12 +127,10 @@ object Centrality {
    *         are absent
    */
   def betweenness(edges: DataFrame, sources: DataFrame,
-      maxDepth: Int, localEdgeThreshold: Int = 200000): DataFrame = {
-    val local = smallGraph(edges, sources, localEdgeThreshold)
-    if (local.isDefined) {
+      maxDepth: Int): DataFrame = {
+    for ((adj, srcs) <- smallGraph(edges, sources)) {
       // textbook per-source Brandes on the driver — 2·diameter·|pivots|
-      // distributed rounds collapse to 2 jobs on a probe-small graph
-      val (adj, srcs) = local.get
+      // distributed rounds collapse to 2 jobs on a small graph
       val spark = edges.sparkSession
       import spark.implicits._
       val acc = scala.collection.mutable.LongMap.empty[Double]
@@ -299,17 +295,13 @@ object Centrality {
    * @return (node, coreness) — floor 1 (isolated nodes only appear
    *         through edges)
    */
-  def coreDecomposition(edges: DataFrame, maxIter: Int = 200,
-      localEdgeThreshold: Int = 200000): DataFrame = {
+  def coreDecomposition(edges: DataFrame, maxIter: Int = 200): DataFrame = {
     val raw = edges.select(col("src").cast("long"), col("dst").cast("long"))
       .filter(col("src") =!= col("dst"))
-    // LIMIT-probe guard (same protocol as betweenness/SCC): graphs whose
-    // edge list fits the driver peel locally (Batagelj–Zaveršnik, 2 jobs
-    // total); the distributed h-index loop is spec-covered via
-    // localEdgeThreshold = 0
-    if (localEdgeThreshold > 0 &&
-        raw.limit(localEdgeThreshold + 1).count() <= localEdgeThreshold)
-      return localCoreness(edges.sparkSession, raw)
+    // graphs whose edge list fits the driver peel locally
+    // (Batagelj–Zaveršnik)
+    for (rows <- Placement.local(raw, Placement.Walk))
+      return localCoreness(edges.sparkSession, rows)
     val canon = raw
       .select(least(col("src"), col("dst")).as("src"),
         greatest(col("src"), col("dst")).as("dst"))
@@ -346,12 +338,12 @@ object Centrality {
   /** Driver-local coreness: Batagelj–Zaveršnik bucket peeling over a
     * collected adjacency (min-heap with lazy deletion; O(E log V)). */
   private def localCoreness(spark: org.apache.spark.sql.SparkSession,
-      raw: DataFrame): DataFrame = {
+      rows: Array[org.apache.spark.sql.Row]): DataFrame = {
     import spark.implicits._
-    val pairs = raw
-      .select(least(col("src"), col("dst")).as("u"),
-        greatest(col("src"), col("dst")).as("v"))
-      .distinct().collect().map(r => (r.getLong(0), r.getLong(1)))
+    val pairs = rows.map { r =>
+      val (a, b) = (r.getLong(0), r.getLong(1))
+      (math.min(a, b), math.max(a, b))
+    }.distinct
     val adj = scala.collection.mutable.LongMap[List[Long]]()
     pairs.foreach { case (u, v) =>
       adj(u) = v :: adj.getOrElse(u, Nil)
@@ -428,21 +420,18 @@ object Centrality {
    *  repeat.
    *
    * Each trim round is two aggregates + two semi-joins; each pivot round
-   * two frontier BFS runs. Like [[Bfs.connectedComponents]], a LIMIT
-   * probe on the raw edge stream routes small pair graphs to a
-   * driver-local iterative Tarjan (2 jobs total) — the distributed loop
-   * is spec-covered via localEdgeThreshold = 0.
+   * two frontier BFS runs. Like [[Bfs.connectedComponents]], small pair
+   * graphs run a driver-local iterative Tarjan instead.
    *
    * @param edges (src, dst) directed; self-loops ignored
    * @return (node, component) — component = min node id of the SCC
    */
   def stronglyConnectedComponents(edges: DataFrame, maxIter: Int = 50,
-      maxDepth: Int = 1024, localEdgeThreshold: Int = 200000): DataFrame = {
+      maxDepth: Int = 1024): DataFrame = {
     val raw = edges.select(col("src").cast("long"), col("dst").cast("long"))
       .filter(col("src") =!= col("dst"))
-    if (localEdgeThreshold > 0 &&
-        raw.limit(localEdgeThreshold + 1).count() <= localEdgeThreshold)
-      return localScc(edges.sparkSession, raw)
+    for (rows <- Placement.local(raw, Placement.Walk))
+      return localScc(edges.sparkSession, rows)
     var e = raw.distinct().localCheckpoint(false)
     val done = Seq.newBuilder[DataFrame]
     var remaining = e.count()
@@ -501,8 +490,8 @@ object Centrality {
   /** iterative (explicit-stack) Tarjan over a collected bounded edge list;
     * component = min id of the SCC, matching the distributed form */
   private def localScc(spark: org.apache.spark.sql.SparkSession,
-      raw: DataFrame): DataFrame = {
-    val pairs = raw.distinct().collect().map(r => (r.getLong(0), r.getLong(1)))
+      rows: Array[org.apache.spark.sql.Row]): DataFrame = {
+    val pairs = rows.map(r => (r.getLong(0), r.getLong(1))).distinct
     val adj = pairs.groupBy(_._1).view.mapValues(_.map(_._2)).toMap
     val nodes = pairs.iterator.flatMap(p => Iterator(p._1, p._2)).toArray.distinct
     val index = scala.collection.mutable.HashMap.empty[Long, Int]

@@ -29,8 +29,8 @@ object Landmarks {
     val spark = edges.sparkSession
     import spark.implicits._
     val ls = landmarks.toDF("source")
-    // the LIMIT-probed small-graph fast path applies exactly as in the
-    // APSP surface; past the threshold both tables build distributed
+    // the small-graph fast path applies exactly as in the APSP surface;
+    // past its bound both tables build distributed
     val fromL = WeightedPaths.allPairsDistances(edges, ls, maxIter)
       .select(col("source").as("landmark"), col("node"), col("dist"))
     val rev = edges.select(col("id"), col("dst").as("src"),

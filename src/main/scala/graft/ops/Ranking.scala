@@ -359,8 +359,8 @@ object Ranking {
    * @return (node, community) — community ids canonicalized to the
    *         smallest member node id
    */
-  def louvain(edges: DataFrame, maxRounds: Int = 12, levels: Int = 2,
-      localThreshold: Int = 20000): DataFrame = {
+  def louvain(edges: DataFrame, maxRounds: Int = 12,
+      levels: Int = 2): DataFrame = {
     require(maxRounds >= 1 && levels >= 1, "louvain needs rounds and levels >= 1")
     val w0 = if (edges.columns.contains("weight")) col("weight").cast("double")
       else lit(1.0)
@@ -375,18 +375,17 @@ object Ranking {
     // Small-graph fast path: classic sequential greedy (the single-machine
     // formulation the paper describes) over a collected edge list — the
     // distributed rounds below cost ~2 driver jobs each, which for a graph
-    // that fits in one task is pure scheduling latency. The LIMIT probe
-    // reads at most threshold+1 rows; past it, the frontier-parallel rounds
-    // are the only shape that survives 100 TB. Both paths greedily optimize
-    // the same modularity with deterministic (gain desc, community asc)
+    // that fits in one task is pure scheduling latency. Past
+    // Placement.Louvain, the frontier-parallel rounds are the only shape
+    // that survives 100 TB. Both paths greedily optimize the same
+    // modularity with deterministic (gain desc, community asc)
     // tie-breaks; on tie-heavy graphs they may settle different local
     // optima (sequential moves see earlier moves within a round,
     // synchronous ones don't) — each is individually deterministic.
-    if (localThreshold > 0 &&
-        g.limit(localThreshold + 1).count() <= localThreshold) {
+    for (rows <- Placement.local(g, Placement.Louvain)) {
       val spark = edges.sparkSession
       import spark.implicits._
-      val es = g.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+      val es = rows.map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
       return localLouvain(es, maxRounds, levels).toSeq.toDF("node", "community")
     }
     // per-node self-loop weight (intra weight of the contracted community)

@@ -3,7 +3,7 @@ package graft.ops
 import graft.ops.Ckpt._
 
 import graft.graph.{Direction, PropertyGraph}
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /**
@@ -227,9 +227,9 @@ object Trail {
     * built. */
   def shortestGroupsTo(edges: DataFrame, sources: DataFrame,
       targetNodes: Option[DataFrame], k: Int, min: Int, maxDepth: Int,
-      localThreshold: Int = 10000, capIsHorizon: Boolean = false): DataFrame =
+      capIsHorizon: Boolean = false): DataFrame =
     shortestGroupsImpl(edges, sources.select("source").distinct(), k, min,
-      maxDepth, localThreshold, capIsHorizon = capIsHorizon, accept = fin => {
+      maxDepth, capIsHorizon = capIsHorizon, accept = fin => {
         val t = fin.withColumn("target", col("end"))
         targetNodes.fold(t)(tn => t.join(
           tn.select(col("id").as("target")).distinct(),
@@ -237,14 +237,13 @@ object Trail {
       })
 
   def shortestGroups(edges: DataFrame, pairs: DataFrame, k: Int,
-      min: Int, maxDepth: Int, localThreshold: Int = 10000,
-      capIsHorizon: Boolean = false): DataFrame =
+      min: Int, maxDepth: Int, capIsHorizon: Boolean = false): DataFrame =
     shortestGroupsImpl(edges, pairs.select("source").distinct(), k, min,
-      maxDepth, localThreshold, capIsHorizon = capIsHorizon, accept =
+      maxDepth, capIsHorizon = capIsHorizon, accept =
       fin => fin.join(pairs, Seq("source")).filter(col("end") === col("target")))
 
   private def shortestGroupsImpl(edges: DataFrame, sources: DataFrame, k: Int,
-      min: Int, maxDepth: Int, localThreshold: Int,
+      min: Int, maxDepth: Int,
       accept: DataFrame => DataFrame, capIsHorizon: Boolean = false): DataFrame = {
     require(k >= 1 && min >= 0 && maxDepth >= math.max(min, 1) && maxDepth <= 30,
       s"shortestGroups bounds out of range: k=$k min=$min maxDepth=$maxDepth")
@@ -253,34 +252,31 @@ object Trail {
     // EXACT round DP on the driver — per-round trail expansion gated by
     // the same distinct-arrival-round budget — so results are identical
     // while the ~maxDepth driver jobs of scheduling latency disappear.
-    // LIMIT probes only; past the threshold the distributed rounds run.
-    val kept: DataFrame =
-      if (localThreshold > 0 &&
-          edges.limit(localThreshold + 1).count() <= localThreshold &&
-          sources.limit(localThreshold + 1).count() <= localThreshold) {
-        val es = edges.select(col("id"), col("src"), col("dst")).collect()
-          .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-        val ss = sources.select(col("source")).collect().map(_.getLong(0))
-        localKeptRows(edges.sparkSession, es, ss, maxDepth, budget.toInt,
-          capIsHorizon)
-      } else {
-        // RDD rounds (TrailRdd.search, ArrivalBudget policy): one shuffle
-        // per round under one shared HashPartitioner, replacing the
-        // per-round counts join + two localCheckpoints; the distinct-
-        // arrival-round budget is the decision-for-decision twin of the
-        // replaced counts relation.
-        val e = edges.select(col("src").as("__es"), col("dst").as("__ed"),
-          array(col("id")).as("__ers"), array(col("dst")).as("__ens"),
-          lit(1).as("__elen"))
-        val out = TrailRdd.search(Seq(e), Seq(None), sources,
-          Array(0), Array(maxDepth), TrailRdd.ArrivalBudget(budget.toInt),
-          keepAll = true, maxRounds = maxDepth)
-        // mirror the local fast path: an alive frontier at an
-        // unbounded-quantifier cap means longer SHORTEST matches are missed
-        if (capIsHorizon && out.finalFrontier.take(1).nonEmpty)
-          onHorizon("SHORTEST", maxDepth)
-        TrailRdd.toDf(edges.sparkSession, out.result)
-      }
+    val local = for {
+      es <- Placement.local(edges.select(col("id"), col("src"), col("dst")),
+        Placement.RoundDp)
+      ss <- Placement.local(sources.select(col("source")), Placement.RoundDp)
+    } yield localKeptRows(edges.sparkSession,
+      es.map(r => (r.getLong(0), r.getLong(1), r.getLong(2))),
+      ss.map(_.getLong(0)), maxDepth, budget.toInt, capIsHorizon)
+    val kept: DataFrame = local.getOrElse {
+      // RDD rounds (TrailRdd.search, ArrivalBudget policy): one shuffle
+      // per round under one shared HashPartitioner, replacing the
+      // per-round counts join + two localCheckpoints; the distinct-
+      // arrival-round budget is the decision-for-decision twin of the
+      // replaced counts relation.
+      val e = edges.select(col("src").as("__es"), col("dst").as("__ed"),
+        array(col("id")).as("__ers"), array(col("dst")).as("__ens"),
+        lit(1).as("__elen"))
+      val out = TrailRdd.search(Seq(e), Seq(None), sources,
+        Array(0), Array(maxDepth), TrailRdd.ArrivalBudget(budget.toInt),
+        keepAll = true, maxRounds = maxDepth)
+      // mirror the local fast path: an alive frontier at an
+      // unbounded-quantifier cap means longer SHORTEST matches are missed
+      if (capIsHorizon && out.finalFrontier.take(1).nonEmpty)
+        onHorizon("SHORTEST", maxDepth)
+      TrailRdd.toDf(edges.sparkSession, out.result)
+    }
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("source", "target").orderBy(col("hops").asc)
     accept(kept)
@@ -372,11 +368,10 @@ object Trail {
    *         rank 1..k)
    */
   def shortestKSegments(segments: Seq[PathSegment], pairs: DataFrame,
-      k: Int, localThreshold: Int = 10000,
-      partBnds: Seq[Int] = Nil): DataFrame =
+      k: Int, partBnds: Seq[Int] = Nil): DataFrame =
     shortestKImpl(segments, pairs.select("source").distinct(), k,
       fin => fin.join(pairs, Seq("source")).filter(col("end") === col("target")),
-      localThreshold, partBnds)
+      partBnds)
 
   /**
    * Unbound-target SHORTEST k: search from the distinct `sources` and
@@ -389,16 +384,15 @@ object Trail {
    */
   def shortestKSegmentsTo(segments: Seq[PathSegment], sources: DataFrame,
       targetNodes: Option[DataFrame], k: Int,
-      localThreshold: Int = 10000, partBnds: Seq[Int] = Nil): DataFrame =
+      partBnds: Seq[Int] = Nil): DataFrame =
     shortestKImpl(segments, sources.select("source").distinct(), k, fin => {
       val t = fin.withColumn("target", col("end"))
       targetNodes.fold(t)(tn =>
         t.join(tn.select("target").distinct(), Seq("target"), "left_semi"))
-    }, localThreshold, partBnds)
+    }, partBnds)
 
   private def shortestKImpl(segments: Seq[PathSegment], sources: DataFrame,
       k: Int, accept: DataFrame => DataFrame,
-      localThreshold: Int = 10000,
       // segment indices whose boundary-crossing node PARTITIONS the
       // selection (a pre-bound interior variable is part of the match,
       // reference StatefulShortestPath solution prefix): both the
@@ -420,12 +414,8 @@ object Trail {
             scala.math.Ordering.Tuple2(scala.math.Ordering.Int, pathOrd))
             .take(k))
         .toSeq
-    val __t0 = System.nanoTime()
     val finished = segmentSearch(segments, sources, k,
-      TrailRdd.KBestPerState(k, partBnds), Some(localPrune),
-      localThreshold)
-    if (sys.env.contains("GRAFT_NFA_PROF"))
-      System.err.println(f"NFAPROF segmentSearch-total ${(System.nanoTime()-__t0)/1e9}%.3f s")
+      TrailRdd.KBestPerState(k, partBnds), Some(localPrune))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("source") +: col("target") +: bndCols: _*)
       .orderBy(col("hops").asc, col("path").asc)
@@ -454,26 +444,25 @@ object Trail {
     * a group can in principle arrive only via prefixes beyond the budget
     * (see [[shortestGroups]]'s note) — the slack absorbs the common cases. */
   def shortestGroupsSegments(segments: Seq[PathSegment], pairs: DataFrame,
-      k: Int, localThreshold: Int = 10000,
-      partBnds: Seq[Int] = Nil): DataFrame =
+      k: Int, partBnds: Seq[Int] = Nil): DataFrame =
     shortestGroupsSegImpl(segments, pairs.select("source").distinct(), k,
       fin => fin.join(pairs, Seq("source")).filter(col("end") === col("target")),
-      localThreshold, partBnds)
+      partBnds)
 
   /** Unbound-target [[shortestGroupsSegments]] (source-driven accept). */
   def shortestGroupsSegmentsTo(segments: Seq[PathSegment], sources: DataFrame,
       targetNodes: Option[DataFrame], k: Int,
-      localThreshold: Int = 10000, partBnds: Seq[Int] = Nil): DataFrame =
+      partBnds: Seq[Int] = Nil): DataFrame =
     shortestGroupsSegImpl(segments, sources.select("source").distinct(), k,
       fin => {
         val t = fin.withColumn("target", col("end"))
         targetNodes.fold(t)(tn =>
           t.join(tn.select("target").distinct(), Seq("target"), "left_semi"))
-      }, localThreshold, partBnds)
+      }, partBnds)
 
   private def shortestGroupsSegImpl(segments: Seq[PathSegment],
       sources: DataFrame, k: Int, accept: DataFrame => DataFrame,
-      localThreshold: Int = 10000, partBnds: Seq[Int] = Nil): DataFrame = {
+      partBnds: Seq[Int] = Nil): DataFrame = {
     val budget = k + segments.map(_.min).sum + GroupsBudgetSlack
     // Two prunes compose per round: (a) length-cohort budget WITHIN a
     // state — only bites where lengths diverge inside one round, i.e.
@@ -506,7 +495,7 @@ object Trail {
       kept
     }
     val finished = segmentSearch(segments, sources, k,
-      TrailRdd.GroupsLedger(budget), Some(localPrune), localThreshold)
+      TrailRdd.GroupsLedger(budget), Some(localPrune))
     // a pre-bound interior variable partitions the LENGTH-GROUP rank too
     // (the budget slack absorbs the cross-partition pruning interplay)
     val w = org.apache.spark.sql.expressions.Window
@@ -531,35 +520,30 @@ object Trail {
   private final case class LEdge(dst: Long, rels: Array[Long],
       ns: Array[Long], len: Int)
 
-  /** Driver-local replica of [[segmentSearch]]'s round DP over collected
-    * (LIMIT-probed) inputs — identical closure/advance/boundary/expansion
+  /** Driver-local replica of [[segmentSearch]]'s round DP over the rows its
+    * probes collected — identical closure/advance/boundary/expansion
     * semantics, with the caller's prune policy supplied as a local
     * function, so results match the distributed rounds row for row while
     * the ~maxTotal Spark jobs of scheduling latency disappear (the
     * astar/kCheapest/localKeptRows pattern; the NFA-family queries run on
     * sub-threshold fixtures and were round-latency-bound). */
-  private def localSegmentSearch(segments: Seq[PathSegment],
-      normEdges: Seq[DataFrame], normBounds: Seq[Option[DataFrame]],
-      sources: DataFrame, prune: Seq[LRow] => Seq[LRow]): DataFrame = {
-    val spark = sources.sparkSession
+  private def localSegmentSearch(spark: org.apache.spark.sql.SparkSession,
+      segments: Seq[PathSegment], sources: Array[Row],
+      normEdges: Seq[Array[Row]], normBounds: Seq[Option[Array[Row]]],
+      prune: Seq[LRow] => Seq[LRow]): DataFrame = {
     import spark.implicits._
     val nSeg = segments.size
     val mins = segments.map(_.min).toIndexedSeq
     val maxs = segments.map(_.max).toIndexedSeq
     val maxTotal = maxs.sum
-    // collect from the SAME normalized checkpointed relations the probe
-    // just scanned — no second compile/compute of the raw edge trees
     val adj: IndexedSeq[Map[Long, Array[LEdge]]] = normEdges.map { e =>
-      e.collect()
-        .map(r => (r.getLong(0), LEdge(r.getLong(1),
-          r.getSeq[Long](2).toArray, r.getSeq[Long](3).toArray,
-          r.getInt(4))))
+      e.map(r => (r.getLong(0), LEdge(r.getLong(1),
+        r.getSeq[Long](2).toArray, r.getSeq[Long](3).toArray, r.getInt(4))))
         .groupBy(_._1).view.mapValues(_.map(_._2)).toMap
     }.toIndexedSeq
     val bounds: IndexedSeq[Option[Set[Long]]] = normBounds.map(
-      _.map(_.collect().map(_.getLong(0)).toSet)).toIndexedSeq
-    val srcs = sources.select(col("source")).distinct().collect()
-      .map(_.getLong(0))
+      _.map(_.map(_.getLong(0)).toSet)).toIndexedSeq
+    val srcs = sources.map(_.getLong(0)).distinct
     def closure(rows: Seq[LRow]): Seq[LRow] = {
       val out = Seq.newBuilder[LRow]
       out ++= rows
@@ -615,47 +599,28 @@ object Trail {
     * receives the previous CHECKPOINTED frontier (null on the first call)
     * so it may carry per-state bookkeeping rows across rounds (GROUPS'
     * segHops = -1 arrival ledger). When every input relation passes the
-    * LIMIT probe, the search instead runs driver-local through
-    * [[localSegmentSearch]] with the caller's `localPrune` policy —
+    * [[Placement.RoundDp]] bound, the search instead runs driver-local
+    * through [[localSegmentSearch]] with the caller's `localPrune` policy —
     * identical rows, none of the per-round job latency. */
-  // localThreshold stays at 10k (r15 opt note): raising it to the
-  // connectedComponents-style 200k bound was MEASURED 7-20x SLOWER on the
-  // 15k-edge sf0.1 fixtures — the driver DP's per-round trail expansion
-  // is single-threaded and its frontier scales with sources × fan-out, so
-  // past ~10k edges the distributed rounds win despite their scheduling
-  // latency. Do not "align" these bounds: components/listRanks collect
-  // once and run linear union-find/chain walks; this DP is round-iterated.
   private def segmentSearch(segments: Seq[PathSegment], sources: DataFrame,
       k: Int, policy: TrailRdd.Policy,
-      localPrune: Option[Seq[LRow] => Seq[LRow]] = None,
-      localThreshold: Int = 10000): DataFrame = {
+      localPrune: Option[Seq[LRow] => Seq[LRow]] = None): DataFrame = {
     require(segments.nonEmpty && k >= 1, "need segments and k >= 1")
     segments.foreach(s => require(s.min >= 0 && s.max >= s.min && s.max <= 30,
       s"segment bounds out of range: ${s.min}..${s.max}"))
     val maxTotal = segments.map(_.max).sum
     require(maxTotal <= 60, s"total path bound too large: $maxTotal")
-    def prof3[A](tag: String)(f: => A): A =
-      if (sys.env.contains("GRAFT_NFA_PROF")) {
-        val t0 = System.nanoTime(); val a = f
-        System.err.println(f"NFAPROF $tag ${(System.nanoTime()-t0)/1e9}%.3f s")
-        a
-      } else f
-    def prof(tag: String)(f: => Unit): Unit =
-      if (sys.env.contains("GRAFT_NFA_PROF")) {
-        val t0 = System.nanoTime(); f
-        System.err.println(f"NFAPROF $tag ${(System.nanoTime()-t0)/1e9}%.3f s")
-      } else f
     import graft.ops.Ckpt._
     val cap = org.apache.spark.sql.graftstats.FreshStats.capStats _
     // every segment in composite form: one "expansion step" = one rel for
     // a plain var-length leg, one whole branch traversal for an
     // alternation segment — the state machinery is identical either way.
-    // Checkpointed (lazily) FIRST so the local/distributed probe, the
-    // driver-local collect, and every search round reuse ONE compiled
-    // plan: the probe previously paid a second full Catalyst pass over
-    // the raw (often join-heavy composite) edge trees — about a third of
+    // Checkpointed (lazily) FIRST so the probe (whose rows the local
+    // search runs on) and every search round reuse ONE compiled plan: a
+    // probe over the raw edge trees paid a second full Catalyst pass over
+    // the (often join-heavy composite) edges — about a third of
     // q_shortest_nfa_alt's warm driver time.
-    val eBySeg = prof3("eBySeg") { segments.map { s =>
+    val eBySeg = segments.map { s =>
       val c =
         if (s.composite) s.edges
           .select(col("__es"), col("__ed"), col("__ers"), col("__ens"),
@@ -664,25 +629,24 @@ object Trail {
           array(col("id")).as("__ers"), array(col("dst")).as("__ens"),
           lit(1).as("__elen"))
       cap(c.localCheckpoint(false))
-    } }
+    }
     val bBySeg: Seq[Option[DataFrame]] = segments.map(_.boundary.map(b =>
       cap(b.select(col("id")).distinct().localCheckpoint(false))))
-    var isLocal = false
-    prof("probe") {
-      localPrune match {
-        case Some(_) if localThreshold > 0 &&
-            sources.limit(localThreshold + 1).count() <= localThreshold &&
-            eBySeg.forall(
-              _.limit(localThreshold + 1).count() <= localThreshold) &&
-            bBySeg.forall(_.forall(
-              _.limit(localThreshold + 1).count() <= localThreshold)) =>
-          isLocal = true
-        case _ => ()
+    // probed in order, stopping at the first relation past the bound
+    def localRows(dfs: Seq[DataFrame]): Option[Seq[Array[Row]]] =
+      dfs.foldLeft(Option(Seq.empty[Array[Row]])) { (acc, df) =>
+        acc.flatMap(rs => Placement.local(df, Placement.RoundDp).map(rs :+ _))
       }
+    for {
+      prune <- localPrune
+      srcRows <- Placement.local(sources.select(col("source")), Placement.RoundDp)
+      eRows <- localRows(eBySeg)
+      bRows <- localRows(bBySeg.flatten)
+    } {
+      val bIt = bRows.iterator
+      return localSegmentSearch(sources.sparkSession, segments, srcRows,
+        eRows, bBySeg.map(_.map(_ => bIt.next())), prune)
     }
-    if (isLocal)
-      return localSegmentSearch(segments, eBySeg, bBySeg, sources,
-        localPrune.get)
     // RDD rounds (TrailRdd.search): one compiled loop under one shared
     // HashPartitioner — ONE shuffle per round instead of a per-round
     // Catalyst-planned join+window+checkpoint stack. Epsilon closure,
@@ -692,10 +656,8 @@ object Trail {
     // the same frontier state.
     val minsArr = segments.map(_.min).toArray
     val maxsArr = segments.map(_.max).toArray
-    val out = prof3("rdd-search") {
-      TrailRdd.search(eBySeg, bBySeg, sources.select("source"),
-        minsArr, maxsArr, policy, keepAll = false, maxRounds = maxTotal)
-    }
+    val out = TrailRdd.search(eBySeg, bBySeg, sources.select("source"),
+      minsArr, maxsArr, policy, keepAll = false, maxRounds = maxTotal)
     // horizon: surviving rows AT an unbounded segment's cap mean the
     // search was cut, not exhausted; one tiny job, only for searches that
     // had an unbounded quantifier

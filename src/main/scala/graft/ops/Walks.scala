@@ -86,16 +86,12 @@ object Walks {
    * @param edges (src, dst) — must be a DAG
    * @return (node, layer INT); roots (no incoming edge) are layer 0
    */
-  def topologicalLayers(edges: DataFrame, maxDepth: Int = 1000,
-      localEdgeThreshold: Int = 200000): DataFrame = {
+  def topologicalLayers(edges: DataFrame, maxDepth: Int = 1000): DataFrame = {
     val raw = edges.select(col("src").cast("long"), col("dst").cast("long"))
-    // probe-small DAGs take a driver-local Kahn longest-path (the
-    // connectedComponents/astar fast-path precedent — a depth-D DAG costs
-    // D+1 distributed rounds of pure job overhead at this size); the
-    // distributed loop below is spec-covered via localEdgeThreshold = 0
-    if (localEdgeThreshold > 0 &&
-        raw.limit(localEdgeThreshold + 1).count() <= localEdgeThreshold)
-      return localLayers(edges.sparkSession, raw, maxDepth)
+    // small DAGs take a driver-local Kahn longest-path — a depth-D DAG
+    // costs D+1 distributed rounds of pure job overhead at this size
+    for (rows <- Placement.local(raw, Placement.Walk))
+      return localLayers(edges.sparkSession, rows)
     val e = raw.distinct().localCheckpoint(false)
     val nodes = e.select(col("src").as("node"))
       .unionByName(e.select(col("dst").as("node"))).distinct()
@@ -128,8 +124,8 @@ object Walks {
   /** driver-local longest-path layering (Kahn order) over a bounded edge
     * list; throws on cycles like the distributed form */
   private def localLayers(spark: org.apache.spark.sql.SparkSession,
-      raw: DataFrame, maxDepth: Int): DataFrame = {
-    val pairs = raw.distinct().collect().map(r => (r.getLong(0), r.getLong(1)))
+      rows: Array[org.apache.spark.sql.Row]): DataFrame = {
+    val pairs = rows.map(r => (r.getLong(0), r.getLong(1))).distinct
     val adj = pairs.groupBy(_._1).view.mapValues(_.map(_._2)).toMap
     val indeg = scala.collection.mutable.LongMap.empty[Int]
     pairs.foreach { case (s, d) =>

@@ -103,9 +103,8 @@ object WeightedPaths {
    * All-pairs shortest path COSTS (reference graph-algo FloydWarshall.java
    * — O(V³)/O(V²), documented for small dense graphs). Two shapes behind
    * one surface:
-   *  - bounded inputs (LIMIT-probed, never scans past the threshold): the
-   *    reference's own regime — per-source binary-heap Dijkstra on the
-   *    driver, V ≤ threshold sources over E ≤ threshold edges, microseconds
+   *  - bounded inputs ([[Placement.RoundDp]]): the reference's own
+   *    regime — per-source binary-heap Dijkstra on the driver, microseconds
    *    each; paying ~hop-count distributed rounds of driver-loop latency
    *    for a graph that fits in one task would be a constant-factor loss
    *    with zero scale benefit.
@@ -117,19 +116,19 @@ object WeightedPaths {
    * @return (source, node, dist) incl. the zero-cost diagonal
    */
   def allPairsDistances(edges: DataFrame, sources: DataFrame,
-      maxIter: Int = 50, localThreshold: Int = 10000): DataFrame = {
+      maxIter: Int = 50): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
     val e0 = edges.select(col("src"), col("dst"), col("weight").cast("double"))
-    if (localThreshold > 0 &&
-        e0.limit(localThreshold + 1).count() <= localThreshold &&
-        sources.limit(localThreshold + 1).count() <= localThreshold) {
-      val es = e0.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+    for (eRows <- Placement.local(e0, Placement.RoundDp);
+         sRows <- Placement.local(sources.select(col("source").cast("long")),
+           Placement.RoundDp)) {
+      val es = eRows.map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
       // Dijkstra's settled-node argument needs non-negative weights; the
       // distributed relaxation below has no such precondition
       if (es.forall(_._3 >= 0)) {
-        val srcs = sources.select(col("source").cast("long"))
-          .collect().map(_.getLong(0))
+        // one search per distinct source, like the distributed min-merge
+        val srcs = sRows.map(_.getLong(0)).distinct
         val adj = es.groupBy(_._1).map { case (s, xs) =>
           s -> xs.map(x => (x._2, x._3)) }
         val out = Seq.newBuilder[(Long, Long, Double)]
@@ -208,25 +207,21 @@ object WeightedPaths {
    * @return (source, target, dist, hops, path ARRAY<LONG>, rank 1..k)
    */
   def kCheapest(edges: DataFrame, pairs: DataFrame, k: Int,
-      maxDepth: Int, localThreshold: Int = 10000): DataFrame = {
+      maxDepth: Int): DataFrame = {
     require(k >= 1 && maxDepth >= 1 && maxDepth <= 30,
       s"kCheapest bounds out of range: k=$k maxDepth=$maxDepth")
     // Small-input fast path (the pattern of astar/allPairsDistances): the
     // distributed rounds cost a driver job each — pure scheduling latency
-    // on a graph that fits in one task. The LIMIT probes read at most
-    // threshold+1 rows; the local loop replicates the EXACT same DP
-    // (per-round per-(source,node) top-k by (dist, path-lex)), so results
-    // are identical, not merely equivalent.
-    if (localThreshold > 0 &&
-        edges.limit(localThreshold + 1).count() <= localThreshold &&
-        pairs.limit(localThreshold + 1).count() <= localThreshold) {
-      val es = edges.select(col("id"), col("src"), col("dst"),
-          col("weight").cast("double")).collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
-      val ps = pairs.select(col("source"), col("target")).collect()
-        .map(r => (r.getLong(0), r.getLong(1)))
-      return localKCheapest(edges.sparkSession, es, ps, k, maxDepth)
-    }
+    // on a graph that fits in one task. The local loop replicates the
+    // EXACT same DP (per-round per-(source,node) top-k by (dist,
+    // path-lex)), so results are identical, not merely equivalent.
+    for (es <- Placement.local(edges.select(col("id"), col("src"), col("dst"),
+           col("weight").cast("double")), Placement.RoundDp);
+         ps <- Placement.local(pairs.select(col("source"), col("target")),
+           Placement.RoundDp))
+      return localKCheapest(edges.sparkSession,
+        es.map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))),
+        ps.map(r => (r.getLong(0), r.getLong(1))), k, maxDepth)
     val e = edges.select(col("id").as("__er"), col("src").as("__es"),
       col("dst").as("__ed"), col("weight").cast("double").as("__ew"))
     val wRound = org.apache.spark.sql.expressions.Window
@@ -393,30 +388,18 @@ object WeightedPaths {
    *               distance to the target's coords x scale
    */
   def astar(edges: DataFrame, coords: DataFrame, source: Long, target: Long,
-      scale: Double = 1.0, maxIter: Int = 50,
-      localEdgeThreshold: Int = 10000): DataFrame = {
+      scale: Double = 1.0, maxIter: Int = 50): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    val e = edges.select(col("src").as("__s"), col("dst").as("__d"),
-      col("weight").as("__w"), col("id").as("__e")).localCheckpoint(false)
     // Small-graph fast path: the reference's AStar.java IS one priority
     // queue on one machine — matching its single-pair throughput on a tiny
     // edge set means not paying ~20 distributed rounds of driver-loop
-    // latency for a graph that fits in one task. The LIMIT probe reads at
-    // most threshold+1 rows regardless of corpus size, so the check itself
-    // is scale-safe; past the threshold the frontier-parallel loop below is
-    // the only shape that survives 100 TB.
-    if (localEdgeThreshold > 0 &&
-        e.limit(localEdgeThreshold + 1).count() <= localEdgeThreshold) {
-      val rows = e.collect().map(r =>
-        (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3)))
-      // zero-weight edges break the local tie-break argument (a prefix can
-      // cost the same as its extension) — fall through to the distributed
-      // min-struct formulation, which handles them
-      if (rows.forall(_._3 > 0)) {
-        return localDijkstraPair(spark, rows, source, target)
-      }
-    }
+    // latency for a graph that fits in one task. Past the bound the
+    // frontier-parallel loop below is the only shape that survives 100 TB.
+    for (rows <- localPairEdges(edges))
+      return localDijkstraPair(spark, rows, source, target)
+    val e = edges.select(col("src").as("__s"), col("dst").as("__d"),
+      col("weight").as("__w"), col("id").as("__e")).localCheckpoint(false)
     val cs = coords.select(col("id").as("node"), col("x").cast("double"),
       col("y").cast("double"))
     val t = cs.filter(col("node") === target).select("x", "y").first()
@@ -557,20 +540,13 @@ object WeightedPaths {
    * @param fromL (landmark, node, dist) — d(landmark → node)
    */
   def astarAlt(edges: DataFrame, toL: DataFrame, fromL: DataFrame,
-      source: Long, target: Long, maxIter: Int = 50,
-      localEdgeThreshold: Int = 10000): DataFrame = {
+      source: Long, target: Long, maxIter: Int = 50): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
+    for (rows <- localPairEdges(edges))
+      return localDijkstraPair(spark, rows, source, target)
     val e = edges.select(col("src").as("__s"), col("dst").as("__d"),
       col("weight").as("__w"), col("id").as("__e")).localCheckpoint(false)
-    if (localEdgeThreshold > 0 &&
-        e.limit(localEdgeThreshold + 1).count() <= localEdgeThreshold) {
-      val rows = e.collect().map(r =>
-        (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3)))
-      if (rows.forall(_._3 > 0)) {
-        return localDijkstraPair(spark, rows, source, target)
-      }
-    }
     val tTo = toL.filter(col("node") === target)
       .select(col("landmark"), col("dist").as("__tt"))
     val tFrom = fromL.filter(col("node") === target)
@@ -624,6 +600,18 @@ object WeightedPaths {
       .select(lit(source).as("source"), col("node").as("target"),
         col("dist"), col("path"), col("nodes"))
   }
+
+  /** The (src, dst, weight, id) edges of a single-pair search when they fit
+    * [[Placement.RoundDp]] and every weight is positive: zero-weight edges
+    * break [[localDijkstraPair]]'s tie-break argument (a prefix can cost
+    * the same as its extension), so those inputs take the distributed
+    * min-struct formulation, which handles them. */
+  private def localPairEdges(edges: DataFrame):
+      Option[Array[(Long, Long, Double, Long)]] =
+    Placement.local(edges.select(col("src"), col("dst"), col("weight"),
+        col("id")), Placement.RoundDp)
+      .map(_.map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3))))
+      .filter(_.forall(_._3 > 0))
 
   /** Driver-local single-pair Dijkstra over a collected (bounded) edge set,
     * producing EXACTLY the distributed formulation's output: labels are

@@ -201,8 +201,11 @@ object GraphQueries {
           .join(ranks, "node")
           .filter(array_contains(col("labels"), "Nation") ||
             array_contains(col("labels"), "Region"))
+          // rounded to 9dp first: a tier rank whose exact value sits on a
+          // 4dp half (35.68425 at sf0.01) arrives as 35.684249999…; the
+          // oracle's exact decimal arithmetic rounds it up
           .select(element_at(col("labels"), 1).as("label"), col("key"),
-            round(col("rank"), 4).as("rank"))
+            round(round(col("rank"), 9), 4).as("rank"))
       },
       Some("""WITH members AS (
              |  SELECT n_nationkey, n_regionkey,

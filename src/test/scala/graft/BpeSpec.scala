@@ -66,9 +66,10 @@ class BpeSpec extends AnyFunSuite {
     import spark.implicits._
     val docs = Seq("low low low low low", "lower lower", "newest newest newest",
       "newest newest newest", "widest widest widest", "aa ab aa ba bb").toDF("text")
-    val local = Bpe.train(docs, merges = 10).collect().map(_.toString).toSeq
-    val dist = Bpe.train(docs, merges = 10, localThreshold = 0)
-      .collect().map(_.toString).toSeq
+    val local = TestSession.withForcedDistributed(false)(
+      Bpe.train(docs, merges = 10).collect()).map(_.toString).toSeq
+    val dist = TestSession.withForcedDistributed(true)(
+      Bpe.train(docs, merges = 10).collect()).map(_.toString).toSeq
     assert(local == dist, s"\nlocal: $local\ndist:  $dist")
   }
 

@@ -20,11 +20,11 @@ class CentralitySpec extends AnyFunSuite {
     import spark.implicits._
     // 1→2→3→4: through 2 pass (1,3),(1,4); through 3 pass (1,4),(2,4)
     val e = edges(1L -> 2L, 2L -> 3L, 3L -> 4L)
-    for (thr <- Seq(0, 200000)) { // distributed loop AND local fast path
+    TestSession.bothPlacements { forced => // local fast path AND distributed loop
       val r = Centrality.betweenness(e, Seq(1L, 2L, 3L, 4L).toDF("source"),
-          10, localEdgeThreshold = thr)
+          10)
         .collect().map(x => x.getLong(0) -> x.getDouble(1)).toMap
-      assert(r == Map(2L -> 2.0, 3L -> 2.0), s"threshold=$thr")
+      assert(r == Map(2L -> 2.0, 3L -> 2.0), s"forced=$forced")
     }
   }
 
@@ -32,26 +32,26 @@ class CentralitySpec extends AnyFunSuite {
     import spark.implicits._
     // diamond 1→{2,3}→4: σ(1,4)=2, δ shares 0.5/0.5
     val e = edges(1L -> 2L, 1L -> 3L, 2L -> 4L, 3L -> 4L)
-    for (thr <- Seq(0, 200000)) {
+    TestSession.bothPlacements { forced =>
       val r = Centrality.betweenness(e, Seq(1L, 2L, 3L, 4L).toDF("source"),
-          10, localEdgeThreshold = thr)
+          10)
         .collect().map(x => x.getLong(0) -> x.getDouble(1)).toMap
-      assert(r == Map(2L -> 0.5, 3L -> 0.5), s"threshold=$thr")
+      assert(r == Map(2L -> 0.5, 3L -> 0.5), s"forced=$forced")
     }
   }
 
   test("closeness and harmonic on a directed path") {
     import spark.implicits._
     val e = edges(1L -> 2L, 2L -> 3L, 3L -> 4L)
-    for (thr <- Seq(0, 200000)) {
+    TestSession.bothPlacements { forced =>
       val r = Centrality.closenessHarmonic(e, Seq(1L, 3L).toDF("source"),
-          10, localEdgeThreshold = thr)
+          10)
         .collect().map(x => (x.getLong(0), (x.getLong(1), x.getDouble(2), x.getDouble(3))))
         .toMap
       // from 1: dists 1,2,3 → closeness 3/6, harmonic 1+1/2+1/3
-      assert(r(1L) == ((3L, 0.5, 1.8333)), s"threshold=$thr")
+      assert(r(1L) == ((3L, 0.5, 1.8333)), s"forced=$forced")
       // from 3: dist 1 → closeness 1, harmonic 1
-      assert(r(3L) == ((1L, 1.0, 1.0)), s"threshold=$thr")
+      assert(r(3L) == ((1L, 1.0, 1.0)), s"forced=$forced")
     }
   }
 
@@ -77,11 +77,11 @@ class CentralitySpec extends AnyFunSuite {
       df.collect().map(x => x.getLong(0) -> x.getInt(1)).toMap
     val peel = toMapOf(Centrality.coreDecompositionPeeling(e)
       .select(col("node"), col("coreness").cast("int")))
-    for (thr <- Seq(0, 200000)) { // distributed h-index AND local BZ peel
-      val r = toMapOf(Centrality.coreDecomposition(e, localEdgeThreshold = thr))
-      assert(r == peel, s"threshold=$thr")
+    TestSession.bothPlacements { forced => // local BZ peel AND distributed h-index
+      val r = toMapOf(Centrality.coreDecomposition(e))
+      assert(r == peel, s"forced=$forced")
       assert(r(0L) == 3 && r(10L) == 1 && r(11L) == 1 &&
-        r(20L) == 2 && r(30L) == 2, s"threshold=$thr")
+        r(20L) == 2 && r(30L) == 2, s"forced=$forced")
     }
   }
 
@@ -89,14 +89,16 @@ class CentralitySpec extends AnyFunSuite {
     // 3-cycle {1,2,3} + tail 3→4→5 + back-edge pair 6⇄7 feeding 1
     val e = edges(1L -> 2L, 2L -> 3L, 3L -> 1L, 3L -> 4L, 4L -> 5L,
       6L -> 7L, 7L -> 6L, 7L -> 1L)
-    // localEdgeThreshold = 0 forces the distributed trim + FW-BW path
-    val r = Centrality.stronglyConnectedComponents(e, localEdgeThreshold = 0)
-      .collect().map(x => x.getLong(0) -> x.getLong(1)).toMap
+    // the forced distributed trim + FW-BW path
+    val r = TestSession.withForcedDistributed(true)(
+      Centrality.stronglyConnectedComponents(e).collect())
+      .map(x => x.getLong(0) -> x.getLong(1)).toMap
     assert(r == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 4L, 5L -> 5L,
       6L -> 6L, 7L -> 6L))
     // and the driver Tarjan fast path agrees exactly
-    val fast = Centrality.stronglyConnectedComponents(e)
-      .collect().map(x => x.getLong(0) -> x.getLong(1)).toMap
+    val fast = TestSession.withForcedDistributed(false)(
+      Centrality.stronglyConnectedComponents(e).collect())
+      .map(x => x.getLong(0) -> x.getLong(1)).toMap
     assert(fast == r)
   }
 

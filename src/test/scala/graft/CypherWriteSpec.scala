@@ -63,6 +63,21 @@ class CypherWriteSpec extends AnyFunSuite {
     assert(zed.length == 1 && zed(0).getAs[Long]("age") == 1L)
   }
 
+  test("MERGE ON MATCH SET reads the matched node's existing property") {
+    val (g2, _) = Cypher.execute(spark, freshGraph,
+      """MERGE (p:Person {name: $n}) ON MATCH SET p.age = p.age + $x
+        |ON CREATE SET p.age = $x""".stripMargin,
+      Map("n" -> "Alice", "x" -> 5L))
+    assert(g2.nodes.filter(col("name") === "Alice").select("age")
+      .collect().map(_.get(0)).toSeq == Seq(35L))
+    val (g3, _) = Cypher.execute(spark, g2,
+      """MERGE (p:Person {name: $n}) ON MATCH SET p.age = p.age + $x
+        |ON CREATE SET p.age = $x""".stripMargin,
+      Map("n" -> "Dora", "x" -> 5L))
+    assert(g3.nodes.filter(col("name") === "Dora").select("age")
+      .collect().map(_.get(0)).toSeq == Seq(5L))
+  }
+
   test("MERGE is idempotent per key over UNWIND input") {
     val (g2, _) = Cypher.execute(spark, freshGraph,
       "UNWIND ['X', 'X', 'Y'] AS nm MERGE (p:Person {name: nm})")

@@ -67,13 +67,15 @@ class GraphOpsSpec extends AnyFunSuite {
   test("connectedComponents on a 1000-node chain converges (O(log n) rounds)") {
     // chain diameter 999: neighbor-min propagation would need ~999 rounds;
     // star contraction must finish within maxIter=25 ≈ 2·log2(1000)+c
-    // localEdgeThreshold = 0 forces the distributed contraction loop — the
+    // the forced run covers the distributed contraction loop — the
     // driver-local union-find fast path must not steal this test's coverage
     val edges = (0L until 999L).map(i => (i, i + 1)).toDF("src", "dst")
-    val comp = Bfs.connectedComponents(edges, maxIter = 25, localEdgeThreshold = 0)
-    val comps = comp.select("component").distinct().collect().map(_.getLong(0))
-    assert(comps === Array(0L))
-    assert(comp.count() === 1000)
+    TestSession.bothPlacements { forced =>
+      val comp = Bfs.connectedComponents(edges, maxIter = 25)
+      val comps = comp.select("component").distinct().collect().map(_.getLong(0))
+      assert(comps === Array(0L), s"forced=$forced")
+      assert(comp.count() === 1000, s"forced=$forced")
+    }
   }
 
   test("connectedComponents local fast path matches the distributed loop") {
@@ -81,10 +83,12 @@ class GraphOpsSpec extends AnyFunSuite {
     val edges = (0 until 400).map(_ =>
       (rng.nextInt(120).toLong, rng.nextInt(120).toLong))
       .filter(p => p._1 != p._2).toDF("src", "dst")
-    val local = Bfs.connectedComponents(edges)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val dist = Bfs.connectedComponents(edges, localEdgeThreshold = 0)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val local = TestSession.withForcedDistributed(false)(
+      Bfs.connectedComponents(edges).collect())
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val dist = TestSession.withForcedDistributed(true)(
+      Bfs.connectedComponents(edges).collect())
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(local === dist)
   }
 
@@ -114,14 +118,17 @@ class GraphOpsSpec extends AnyFunSuite {
   test("listRanks distributed path (threshold 0) matches the local walk") {
     val edges = ((0L until 39L).map(i => (i, i + 1)) ++
       Seq((100L, 101L), (101L, 102L))).toDF("src", "dst")
-    val r = Bfs.listRanks(edges, maxLength = 64, localEdgeThreshold = 0)
-      .collect().map(x => x.getLong(0) -> (x.getLong(1), x.getLong(2))).toMap
-    assert(r(0L) == (0L, 0L) && r(39L) == (0L, 39L) && r(20L) == (0L, 20L))
-    assert(r(100L) == (100L, 0L) && r(102L) == (100L, 2L))
-    assert(r.size == 43)
     val cyc = Seq((0L, 1L), (1L, 2L), (2L, 0L)).toDF("src", "dst")
-    intercept[IllegalArgumentException] {
-      Bfs.listRanks(cyc, maxLength = 8, localEdgeThreshold = 0).collect()
+    TestSession.bothPlacements { forced =>
+      val r = Bfs.listRanks(edges, maxLength = 64)
+        .collect().map(x => x.getLong(0) -> (x.getLong(1), x.getLong(2))).toMap
+      assert(r(0L) == (0L, 0L) && r(39L) == (0L, 39L) && r(20L) == (0L, 20L),
+        s"forced=$forced")
+      assert(r(100L) == (100L, 0L) && r(102L) == (100L, 2L), s"forced=$forced")
+      assert(r.size == 43, s"forced=$forced")
+      intercept[IllegalArgumentException] {
+        Bfs.listRanks(cyc, maxLength = 8).collect()
+      }
     }
   }
 
@@ -200,13 +207,17 @@ class GraphOpsSpec extends AnyFunSuite {
     val (toL, fromL) = Landmarks.build(edges, Seq(5L))
     val est = Landmarks.estimateAll(toL, fromL).collect()
       .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
-    val exact = WeightedPaths.allPairsDistances(edges,
-        (0L until 10L).toDF("source"), localThreshold = 0)
-      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
-    est.foreach { case (pair, e) =>
-      assert(e >= exact(pair) - 1e-9, s"estimate below exact for $pair")
+    TestSession.bothPlacements { forced =>
+      val exact = WeightedPaths.allPairsDistances(edges,
+          (0L until 10L).toDF("source"))
+        .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
+      est.foreach { case (pair, e) =>
+        assert(e >= exact(pair) - 1e-9,
+          s"estimate below exact for $pair, forced=$forced")
+      }
+      assert(est((2L, 8L)) == exact((2L, 8L)),
+        s"crossing pair must be exact, forced=$forced")
     }
-    assert(est((2L, 8L)) == exact((2L, 8L)), "crossing pair must be exact")
     assert(est((0L, 5L)) == 5.0 && est((5L, 9L)) == 4.0)
     // same-side pair 6->8 routes via 5? 6 cannot reach 5 on the chain —
     // absent from the sketch (no common landmark route)
@@ -236,11 +247,12 @@ class GraphOpsSpec extends AnyFunSuite {
     val edges = broom.rels.select(col("id"), col("src"), col("dst"),
       (lit(1.0) + col("src") % 3).as("weight"))
     val sources = broom.nodes.select(col("id").as("source"))
-    val local = WeightedPaths.allPairsDistances(edges, sources)
-      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
-    val dist = WeightedPaths.allPairsDistances(edges, sources,
-        localThreshold = 0)
-      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
+    val local = TestSession.withForcedDistributed(false)(
+      WeightedPaths.allPairsDistances(edges, sources).collect())
+      .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
+    val dist = TestSession.withForcedDistributed(true)(
+      WeightedPaths.allPairsDistances(edges, sources).collect())
+      .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
     assert(local == dist, "fast path must equal the distributed loop")
     assert(local((0L, 0L)) == 0.0, "diagonal present at cost 0")
     // both agree with the full path-carrying formulation
@@ -307,15 +319,16 @@ class GraphOpsSpec extends AnyFunSuite {
     val exact = WeightedPaths.shortestPaths(edges, Seq(0L).toDF("source"))
       .filter(col("node") === target).select("dist").collect()(0).getDouble(0)
     // default: the small-edge-set probe takes the driver-local PQ path
-    val got = WeightedPaths.astar(edges, coords, 0L, target)
-      .select("dist", "path").collect()(0)
+    val got = TestSession.withForcedDistributed(false)(
+      WeightedPaths.astar(edges, coords, 0L, target)
+        .select("dist", "path").collect()(0))
     assert(got.getDouble(0) == exact)
     assert(got.getSeq[Long](1).size == 2 * (w - 1)) // all grid paths: 10 hops
-    // distributed frontier loop (forced past the local threshold) returns
-    // the identical deterministic tie-break
-    val dist = WeightedPaths.astar(edges, coords, 0L, target,
-        localEdgeThreshold = 0)
-      .select("dist", "path").collect()(0)
+    // the forced distributed frontier loop returns the identical
+    // deterministic tie-break
+    val dist = TestSession.withForcedDistributed(true)(
+      WeightedPaths.astar(edges, coords, 0L, target)
+        .select("dist", "path").collect()(0))
     assert(dist.getDouble(0) == got.getDouble(0))
     assert(dist.getSeq[Long](1) == got.getSeq[Long](1))
   }

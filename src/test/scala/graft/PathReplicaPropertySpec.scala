@@ -40,11 +40,11 @@ class PathReplicaPropertySpec extends AnyFunSuite {
       if (es.nonEmpty) {
         val e = es.toDF("id", "src", "dst", "weight")
         val pairs = Seq((src, dst)).toDF("source", "target")
-        def run(th: Int) = WeightedPaths.kCheapest(e, pairs, k = 3,
-            maxDepth = 4, localThreshold = th)
-          .collect().map(r => (r.getDouble(2), r.getInt(3),
+        def run(forced: Boolean) = TestSession.withForcedDistributed(forced)(
+          WeightedPaths.kCheapest(e, pairs, k = 3, maxDepth = 4).collect())
+          .map(r => (r.getDouble(2), r.getInt(3),
             r.getSeq[Long](4).toList, r.getInt(5))).sortBy(_._4)
-        assert(run(10000).toList == run(0).toList, s"sample $i: $es $src->$dst")
+        assert(run(false).toList == run(true).toList, s"sample $i: $es $src->$dst")
       }
     }
   }
@@ -55,13 +55,13 @@ class PathReplicaPropertySpec extends AnyFunSuite {
       if (es.nonEmpty) {
         val e = es.map(x => (x._1, x._2, x._3)).toDF("id", "src", "dst")
         val pairs = Seq((src, dst)).toDF("source", "target")
-        def run(th: Int) = Trail.shortestGroups(e, pairs, k = 2, min = 1,
-            maxDepth = 4, localThreshold = th)
-          .collect().map(r => (r.getInt(r.fieldIndex("hops")),
+        def run(forced: Boolean) = TestSession.withForcedDistributed(forced)(
+          Trail.shortestGroups(e, pairs, k = 2, min = 1, maxDepth = 4).collect())
+          .map(r => (r.getInt(r.fieldIndex("hops")),
             r.getSeq[Long](r.fieldIndex("path")).toList,
             r.getInt(r.fieldIndex("group"))))
           .sortBy(x => (x._1, x._2.mkString(",")))
-        assert(run(10000).toList == run(0).toList, s"sample $i: $es $src->$dst")
+        assert(run(false).toList == run(true).toList, s"sample $i: $es $src->$dst")
       }
     }
   }

@@ -123,10 +123,10 @@ class RankingSpec extends AnyFunSuite {
 
   test("louvain distributed rounds agree with the local fast path") {
     val e = ringOfCliques(7, 5)
-    val local = Ranking.louvain(e).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).sorted
-    val dist = Ranking.louvain(e, localThreshold = 0).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).sorted
+    val local = TestSession.withForcedDistributed(false)(
+      Ranking.louvain(e).collect()).map(r => (r.getLong(0), r.getLong(1))).sorted
+    val dist = TestSession.withForcedDistributed(true)(
+      Ranking.louvain(e).collect()).map(r => (r.getLong(0), r.getLong(1))).sorted
     assert(local.sameElements(dist),
       s"local=${local.take(10).toSeq}… dist=${dist.take(10).toSeq}…")
   }

@@ -154,12 +154,11 @@ class Round13AdviceSpec extends AnyFunSuite {
     val fired = new java.util.concurrent.atomic.AtomicReference[(String, Int)]
     val prev = graft.ops.Trail.onHorizon
     graft.ops.Trail.onHorizon = (w, c) => fired.set((w, c))
-    try {
-      // localThreshold = 0 forces the distributed branch
-      val out = graft.ops.Trail.shortestGroupsTo(edges, sources, None,
-        k = 1, min = 0, maxDepth = 3, localThreshold = 0, capIsHorizon = true)
-      out.collect()
-      assert(fired.get() == ("SHORTEST", 3))
+    try TestSession.bothPlacements { forced =>
+      fired.set(null)
+      graft.ops.Trail.shortestGroupsTo(edges, sources, None,
+        k = 1, min = 0, maxDepth = 3, capIsHorizon = true).collect()
+      assert(fired.get() == ("SHORTEST", 3), s"forced=$forced")
     } finally graft.ops.Trail.onHorizon = prev
   }
 }

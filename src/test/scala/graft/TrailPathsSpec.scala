@@ -212,10 +212,11 @@ class TrailPathsSpec extends AnyFunSuite {
       (103L, 0L, 2L, 2.5), (104L, 2L, 3L, 0.5), (105L, 1L, 3L, 4.0)
     ).toDF("id", "src", "dst", "weight")
     val pairs = Seq((0L, 3L)).toDF("source", "target")
-    def run(th: Int) = WeightedPaths.kCheapest(e, pairs, k = 4, maxDepth = 6, th)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2),
+    def run(forced: Boolean) = TestSession.withForcedDistributed(forced)(
+      WeightedPaths.kCheapest(e, pairs, k = 4, maxDepth = 6).collect())
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2),
         r.getInt(3), r.getSeq[Long](4).toList, r.getInt(5))).sortBy(_._6)
-    assert(run(10000).toList == run(0).toList)
+    assert(run(false).toList == run(true).toList)
   }
 
   test("shortestGroups keeps whole length-groups and both paths agree") {
@@ -228,19 +229,20 @@ class TrailPathsSpec extends AnyFunSuite {
       (200L, 1L, 0L), (201L, 2L, 1L), (202L, 3L, 2L), (203L, 0L, 3L)
     ).toDF("id", "src", "dst")
     val pairs = Seq((0L, 2L)).toDF("source", "target")
-    def run(th: Int) = graft.ops.Trail.shortestGroups(e, pairs, k = 2,
-        min = 1, maxDepth = 5, localThreshold = th)
-      .collect().map(r => (r.getInt(r.fieldIndex("hops")),
+    def run(forced: Boolean) = TestSession.withForcedDistributed(forced)(
+      graft.ops.Trail.shortestGroups(e, pairs, k = 2, min = 1, maxDepth = 5)
+        .collect())
+      .map(r => (r.getInt(r.fieldIndex("hops")),
         r.getSeq[Long](r.fieldIndex("path")).toList,
         r.getInt(r.fieldIndex("group")))).sortBy(x => (x._1, x._2.mkString(",")))
-    val local = run(10000)
+    val local = run(false)
     assert(local.count(_._1 == 2) == 2, s"got ${local.toList}")
     assert(local.forall(x => (x._1 == 2) == (x._3 == 1)))
-    val one = graft.ops.Trail.shortestGroups(e, pairs, k = 1,
-        min = 1, maxDepth = 5)
-      .collect().map(r => r.getInt(r.fieldIndex("hops"))).toSeq
+    val one = TestSession.withForcedDistributed(false)(
+      graft.ops.Trail.shortestGroups(e, pairs, k = 1, min = 1, maxDepth = 5)
+        .collect()).map(r => r.getInt(r.fieldIndex("hops"))).toSeq
     assert(one.sorted == Seq(2, 2), s"got $one")
-    assert(local.toList == run(0).toList, "local and distributed disagree")
+    assert(local.toList == run(true).toList, "local and distributed disagree")
   }
 
   test("shortestGroups budget slack keeps groups behind dead-end arrivals") {
@@ -256,11 +258,11 @@ class TrailPathsSpec extends AnyFunSuite {
       (113L, 12L, 13L), (114L, 13L, 1L)
     ).toDF("id", "src", "dst")
     val pairs = Seq((0L, 2L)).toDF("source", "target")
-    for (th <- Seq(10000, 0)) { // local replica AND distributed rounds
+    TestSession.bothPlacements { forced => // local replica AND distributed rounds
       val hops = graft.ops.Trail.shortestGroups(e, pairs, k = 2,
-          min = 1, maxDepth = 8, localThreshold = th)
+          min = 1, maxDepth = 8)
         .collect().map(r => r.getInt(r.fieldIndex("hops"))).toSeq.sorted
-      assert(hops == Seq(2, 6), s"threshold=$th got $hops")
+      assert(hops == Seq(2, 6), s"forced=$forced got $hops")
     }
   }
 
@@ -303,15 +305,17 @@ class TrailPathsSpec extends AnyFunSuite {
       (100 + i, i, 100 + i, 50.0), (200 + i, 100 + i, 5L, 50.0)))
     val e = (chain ++ detours).toDF("id", "src", "dst", "weight")
     val (toL, fromL) = graft.ops.Landmarks.build(e, Seq(5L))
-    val alt = WeightedPaths.astarAlt(e, toL, fromL, 0L, 5L,
-        localEdgeThreshold = 0)
-      .collect().map(r => (r.getDouble(2), r.getSeq[Long](3).toList))
     val plain = WeightedPaths.shortestPathsTo(e,
         Seq((0L, 5L)).toDF("source", "target"))
       .collect().map(r => (r.getDouble(r.fieldIndex("dist")),
         r.getSeq[Long](r.fieldIndex("path")).toList))
-    assert(alt.toList == plain.toList, s"alt=${alt.toList} plain=${plain.toList}")
-    assert(alt.head._1 == 5.0 && alt.head._2 == (10L to 14L).toList)
+    TestSession.bothPlacements { forced =>
+      val alt = WeightedPaths.astarAlt(e, toL, fromL, 0L, 5L)
+        .collect().map(r => (r.getDouble(2), r.getSeq[Long](3).toList))
+      assert(alt.toList == plain.toList,
+        s"forced=$forced alt=${alt.toList} plain=${plain.toList}")
+      assert(alt.head._1 == 5.0 && alt.head._2 == (10L to 14L).toList)
+    }
   }
 
   test("kCheapest breaks cost ties by the lexicographic edge path") {
@@ -346,19 +350,18 @@ class TrailPathsSpec extends AnyFunSuite {
     val bnd = (0 until 12 by 2).map(i => Tuple1(i.toLong)).toDF("id")
     val pairs = (0 until 4).flatMap(sx => (6 until 10).map(t =>
       (sx.toLong, t.toLong))).toDF("source", "target")
-    def canon(df: org.apache.spark.sql.DataFrame): Seq[String] =
-      df.collect().map(_.toString).sorted.toSeq
+    def canon(forced: Boolean)(df: => org.apache.spark.sql.DataFrame): Seq[String] =
+      TestSession.withForcedDistributed(forced)(df.collect())
+        .map(_.toString).sorted.toSeq
 
     val segsK = Seq(PathSegment(edges, 1, 2, Some(bnd)),
       PathSegment(edges, 0, 2))
-    assert(canon(graft.ops.Trail.shortestKSegments(segsK, pairs, k = 3)) ==
-      canon(graft.ops.Trail.shortestKSegments(segsK, pairs, k = 3,
-        localThreshold = 0)))
+    assert(canon(false)(graft.ops.Trail.shortestKSegments(segsK, pairs, k = 3)) ==
+      canon(true)(graft.ops.Trail.shortestKSegments(segsK, pairs, k = 3)))
 
     val segsG = Seq(PathSegment(comp, 1, 2, Some(bnd), composite = true),
       PathSegment(edges, 1, 2))
-    assert(canon(graft.ops.Trail.shortestGroupsSegments(segsG, pairs, k = 2)) ==
-      canon(graft.ops.Trail.shortestGroupsSegments(segsG, pairs, k = 2,
-        localThreshold = 0)))
+    assert(canon(false)(graft.ops.Trail.shortestGroupsSegments(segsG, pairs, k = 2)) ==
+      canon(true)(graft.ops.Trail.shortestGroupsSegments(segsG, pairs, k = 2)))
   }
 }

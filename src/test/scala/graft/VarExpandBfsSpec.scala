@@ -59,6 +59,22 @@ class VarExpandBfsSpec extends AnyFunSuite {
     val got = d.collect().map(r => r.getLong(1) -> r.getInt(2)).toMap
     for (r <- 0 until 4; c <- 0 until 4)
       assert(got((r * 4 + c).toLong) === r + c, s"node ($r,$c)")
+    // a null source yields no rows, like a null edge endpoint
+    val withNull = spark.createDataFrame(Seq(Tuple1(Option(0L)),
+      Tuple1(Option.empty[Long]))).toDF("source")
+    assert(Bfs.distances(GraphFixtures.edges(g), withNull, 10)
+      .collect().map(r => r.getLong(1) -> r.getInt(2)).toMap === got)
+    // a non-null id that does not cast to LONG fails with a named error
+    // instead of silently dropping its edge
+    val badEdges = GraphFixtures.edges(g)
+      .select(col("src").cast("string").as("src"), col("dst").cast("string").as("dst"))
+      .unionByName(spark.createDataFrame(Seq(("0", "x1"))).toDF("src", "dst"))
+    val err = intercept[Exception] {
+      Bfs.distances(badEdges, sources, 10).collect()
+    }
+    assert(Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+      .exists(e => String.valueOf(e.getMessage)
+        .contains("distances: id not castable to LONG: x1")), err.toString)
   }
 
   test("pruningExpand returns distinct nodes only, within hop bounds") {
@@ -99,17 +115,19 @@ class VarExpandBfsSpec extends AnyFunSuite {
     // second, later 2 -(t9)-> 3 edge opens node 3 at t9
     val e = Seq((1L, 2L, 5L), (2L, 3L, 3L), (1L, 4L, 1L), (4L, 5L, 2L),
       (2L, 3L, 9L)).toDF("src", "dst", "ts")
-    val r = Bfs.earliestArrival(e, Seq(1L).toDF("source"))
-      .collect().map(x => x.getLong(1) -> x.getLong(2)).toMap
+    val r = TestSession.withForcedDistributed(false)(
+      Bfs.earliestArrival(e, Seq(1L).toDF("source")).collect())
+      .map(x => x.getLong(1) -> x.getLong(2)).toMap
     assert(r == Map(1L -> 0L, 2L -> 5L, 3L -> 9L, 4L -> 1L, 5L -> 2L), s"$r")
     // a start instant after every edge reaches nothing
-    val late = Bfs.earliestArrival(e, Seq((1L, 100L)).toDF("source", "t0"))
-      .collect().map(x => x.getLong(1) -> x.getLong(2)).toMap
+    val late = TestSession.withForcedDistributed(false)(
+      Bfs.earliestArrival(e, Seq((1L, 100L)).toDF("source", "t0")).collect())
+      .map(x => x.getLong(1) -> x.getLong(2)).toMap
     assert(late == Map(1L -> 100L), s"$late")
-    // the distributed loop (local fast path off) must agree exactly
-    val dist = Bfs.earliestArrival(e, Seq(1L).toDF("source"),
-        localEdgeThreshold = 0)
-      .collect().map(x => x.getLong(1) -> x.getLong(2)).toMap
+    // the forced distributed loop must agree exactly
+    val dist = TestSession.withForcedDistributed(true)(
+      Bfs.earliestArrival(e, Seq(1L).toDF("source")).collect())
+      .map(x => x.getLong(1) -> x.getLong(2)).toMap
     assert(dist == Map(1L -> 0L, 2L -> 5L, 3L -> 9L, 4L -> 1L, 5L -> 2L), s"$dist")
   }
 }

@@ -46,16 +46,15 @@ class WalksSpec extends AnyFunSuite {
   test("topologicalLayers: longest path wins, roots at 0, cycle throws") {
     // diamond with a long arm: 1→2→3→5, 1→4→5 — layer(5) = 3 (longest)
     val e = edges(1L -> 2L, 2L -> 3L, 3L -> 5L, 1L -> 4L, 4L -> 5L)
-    for (thr <- Seq(0, 200000)) { // distributed loop AND local fast path
-      val r = Walks.topologicalLayers(e, localEdgeThreshold = thr).collect()
+    TestSession.bothPlacements { forced => // local fast path AND distributed loop
+      val r = Walks.topologicalLayers(e).collect()
         .map(x => x.getLong(0) -> x.getInt(1)).toMap
       assert(r == Map(1L -> 0, 2L -> 1, 3L -> 2, 4L -> 1, 5L -> 3),
-        s"threshold=$thr")
+        s"forced=$forced")
       val cyc = intercept[IllegalArgumentException] {
-        Walks.topologicalLayers(edges(1L -> 2L, 2L -> 1L), maxDepth = 10,
-          localEdgeThreshold = thr)
+        Walks.topologicalLayers(edges(1L -> 2L, 2L -> 1L), maxDepth = 10)
       }
-      assert(cyc.getMessage.contains("cycle"), s"threshold=$thr")
+      assert(cyc.getMessage.contains("cycle"), s"forced=$forced")
     }
   }
 
@@ -130,10 +129,12 @@ class WalksSpec extends AnyFunSuite {
     // genuine power-law skew, not a hand fixture
     val e = graft.ops.Walks.rmatEdges(spark, scale = 11, edges = 30000)
       .filter(col("src") =!= col("dst"))
-    val local = graft.ops.Bfs.connectedComponents(e).collect()
+    val local = TestSession.withForcedDistributed(false)(
+      graft.ops.Bfs.connectedComponents(e).collect())
       .map(r => (r.getLong(0), r.getLong(1))).sorted
-    val dist = graft.ops.Bfs.connectedComponents(e, localEdgeThreshold = 0)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).sorted
+    val dist = TestSession.withForcedDistributed(true)(
+      graft.ops.Bfs.connectedComponents(e).collect())
+      .map(r => (r.getLong(0), r.getLong(1))).sorted
     assert(local.length == dist.length && local.sameElements(dist),
       s"local ${local.length} rows vs dist ${dist.length}")
   }
@@ -141,10 +142,11 @@ class WalksSpec extends AnyFunSuite {
   test("distributed SCC equals local Tarjan on a skewed R-MAT corpus") {
     val e = graft.ops.Walks.rmatEdges(spark, scale = 9, edges = 4000)
       .filter(col("src") =!= col("dst"))
-    val local = graft.ops.Centrality.stronglyConnectedComponents(e).collect()
+    val local = TestSession.withForcedDistributed(false)(
+      graft.ops.Centrality.stronglyConnectedComponents(e).collect())
       .map(r => (r.getLong(0), r.getLong(1))).sorted
-    val dist = graft.ops.Centrality.stronglyConnectedComponents(e,
-        localEdgeThreshold = 0).collect()
+    val dist = TestSession.withForcedDistributed(true)(
+      graft.ops.Centrality.stronglyConnectedComponents(e).collect())
       .map(r => (r.getLong(0), r.getLong(1))).sorted
     assert(local.length == dist.length && local.sameElements(dist),
       s"local ${local.length} rows vs dist ${dist.length}")
