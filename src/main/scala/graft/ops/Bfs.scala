@@ -14,14 +14,14 @@ import org.apache.spark.sql.functions._
  *
  * Design (SURVEY §7.4 hard-part #5): never self-join-to-fixpoint over full
  * path sets — instead iterate a *frontier* (node, source) set, anti-joined
- * against the visited set. Each round's frontier is a lazy
- * `localCheckpoint` materialized by that round's single bookkeeping
- * action, so a round costs ONE job: frontier⋈edges plus an anti-join
- * against visited — the same asymptotics as Pregel, expressed
- * in DataFrames so AQE/broadcast still apply. The visited set is kept as a
- * lazy union of the per-round checkpointed frontier deltas (never
- * re-materialized wholesale — at depth D that would cost O(V·D) redundant
- * I/O); the anti-join reads the materialized RDDs directly.
+ * against the visited set. The rounds run over RDDs through [[Rounds]]:
+ * edges are hash-partitioned by src once, each round is one narrow
+ * co-partitioned join plus ONE shuffle of the expanded rows onto their
+ * nodes, and the dedupe and visited anti-join run partition-locally. Each
+ * round's frontier is persisted and materialized by that round's single
+ * bookkeeping action — the same asymptotics as Pregel. The visited set is
+ * the narrow union of the persisted frontier deltas (never re-materialized
+ * wholesale — at depth D that would cost O(V·D) redundant I/O).
  */
 object Bfs {
 
@@ -69,7 +69,6 @@ object Bfs {
     // target-hit count all run partition-locally because every row of a
     // node lives in that node's partition.
     val spark = edges.sparkSession
-    import org.apache.spark.storage.StorageLevel
     // reachability only sees distinct (src, dst): parallel edges would be
     // rescanned every round otherwise. Callers holding a pre-deduped pair
     // set (PropertyGraph.topologyPairs) pass edgesDeduped = true.
@@ -79,24 +78,19 @@ object Bfs {
         longId(col("dst"), "distances"))
       .na.drop("any")
       .rdd.map(r => (r.getLong(0), r.getLong(1)))
-    val nPart = math.min(
-      spark.sessionState.conf.numShufflePartitions,
-      math.max(math.max(1, spark.sparkContext.defaultParallelism / 4),
-        eRaw.getNumPartitions))
-    val part = new org.apache.spark.HashPartitioner(nPart)
-    val e = (if (edgesDeduped) eRaw else eRaw.distinct(nPart))
-      .partitionBy(part)
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val rounds = Rounds(spark, eRaw.getNumPartitions)
+    val part = rounds.part
+    val e = rounds.persist((if (edgesDeduped) eRaw
+      else eRaw.distinct(part.numPartitions)).partitionBy(part))
     // frontier/visited/target rows keyed by NODE so the dedupe, the
     // anti-join and the hit count are partition-local
-    val targets = targetPairs.map(
-      _.select(longId(col("target"), "distances"),
+    val targets = targetPairs.map(tp => rounds.persist(
+      tp.select(longId(col("target"), "distances"),
           longId(col("source"), "distances"))
         .na.drop("any")
         .distinct()
         .rdd.map(r => (r.getLong(0), r.getLong(1)))
-        .partitionBy(part)
-        .persist(StorageLevel.MEMORY_AND_DISK))
+        .partitionBy(part)))
     val tCnt = targets.map(_.count())
     // one job per round: zipping the (persisted) frontier with the target
     // partition yields (rows, hits) and materializes the round
@@ -112,11 +106,11 @@ object Bfs {
             (a + x, b + y) }
         case None => (f.count(), 0L)
       }
-    var frontier = sources.select(longId(col("source"), "distances"))
-      .na.drop("any")
-      .rdd.map { r => val s = r.getLong(0); (s, s) }
-      .partitionBy(part)
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    var frontier = rounds.persist(
+      sources.select(longId(col("source"), "distances"))
+        .na.drop("any")
+        .rdd.map { r => val s = r.getLong(0); (s, s) }
+        .partitionBy(part))
     val pieces = Seq.newBuilder[(Int, org.apache.spark.rdd.RDD[(Long, Long)])]
     pieces += ((0, frontier))
     var visitedUnion = frontier
@@ -130,29 +124,21 @@ object Bfs {
         .map { case (_, (s, d)) => (d, s) }
         .partitionBy(part) // the round's one shuffle
       val vis = visitedUnion
-      frontier = expanded
+      frontier = rounds.persist(expanded
         .zipPartitions(vis, preservesPartitioning = true) { (expIt, visIt) =>
           val seen = scala.collection.mutable.HashSet.from(visIt)
           expIt.filter(p => seen.add(p)) // dedupe + visited anti-join
-        }
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        })
       val s = stats(frontier) // materializes the round
       fCnt = s._1
       pieces += ((depth, frontier))
       visitedUnion = visitedUnion.union(frontier) // narrow: same partitioner
       remaining = remaining.map(_ - s._2)
     }
-    spark.createDataFrame(
-      spark.sparkContext.union(pieces.result().map { case (d, rdd) =>
-        rdd.map { case (n, s) =>
-          org.apache.spark.sql.Row(s, n, d) }: org.apache.spark.rdd.RDD[org.apache.spark.sql.Row] }),
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("source",
-          org.apache.spark.sql.types.LongType, nullable = false),
-        org.apache.spark.sql.types.StructField("node",
-          org.apache.spark.sql.types.LongType, nullable = false),
-        org.apache.spark.sql.types.StructField("dist",
-          org.apache.spark.sql.types.IntegerType, nullable = false))))
+    val rs = pieces.result()
+    rounds.release(rs.map(_._2))
+    Rounds.toDf(spark, spark.sparkContext.union(rs.map { case (d, rdd) =>
+      rdd.map { case (n, s) => (s, n, d) } }), "source", "node", "dist")
   }
 
   /** PruningVarExpand: distinct nodes with SOME trail of length in
@@ -204,11 +190,13 @@ object Bfs {
   /**
    * allShortestPaths (reference graph-algo AllPaths/ShortestPath with
    * all-ties semantics, Cypher `allShortestPaths()`): every minimal-hop
-   * path, not just one. Depth-synchronized BFS carrying rel-id path
-   * arrays: a node's paths are frozen at the depth it is first reached —
-   * ties at that depth all survive, longer paths never expand. Path count
-   * can be exponential on dense graphs (inherent to the semantics — the
-   * reference enumerates the same set serially); maxDepth bounds the walk.
+   * path, not just one. These are TrailRdd's depth-synchronized rounds
+   * under an arrival budget of one: a (source, node) state keeps every
+   * tie of the round it is first reached in, later arrivals are dropped
+   * and never expand, and the trail check never fires (a repeated rel
+   * would repeat a node). Path count can be exponential on dense graphs
+   * (inherent to the semantics — the reference enumerates the same set
+   * serially); maxDepth bounds the walk.
    *
    * @param edges (id, src, dst) pre-oriented/filtered
    * @param sources (source)
@@ -217,35 +205,12 @@ object Bfs {
    *         per distinct shortest path
    */
   def allShortestPaths(edges: DataFrame, sources: DataFrame, maxDepth: Int): DataFrame = {
-    val e = edges.select(col("src").as("__s"), col("dst").as("__d"),
-      col("id").as("__e")).localCheckpoint(false)
-    // lazy checkpoints: each round's count() is the single job that
-    // materializes the frontier (the listRanks pattern — see distancesImpl)
-    var frontier = sources.select(col("source"), col("source").as("node"),
-        lit(0).as("dist"), array().cast("array<long>").as("path"),
-        array(col("source")).as("nodes"))
-      .localCheckpoint(false)
-    var fCnt = frontier.count()
-    var visited = frontier.select("source", "node")
-    val out = Seq.newBuilder[DataFrame]
-    out += frontier
-    var depth = 0
-    while (depth < maxDepth && fCnt > 0) {
-      depth += 1
-      // path rows are wide (arrays) — lower broadcast bar than distances
-      val f = if (fCnt <= 200000) broadcast(frontier) else frontier
-      frontier = f.join(e, col("node") === col("__s"))
-        .select(col("source"), col("__d").as("node"), lit(depth).as("dist"),
-          concat(col("path"), array(col("__e"))).as("path"),
-          concat(col("nodes"), array(col("__d"))).as("nodes"))
-        .join(visited, Seq("source", "node"), "left_anti")
-        .localCheckpoint(false)
-      fCnt = frontier.count() // materializes the round's checkpoint
-      visited = visited.unionByName(frontier.select("source", "node").distinct())
-      if (depth % 4 == 0) visited = visited.localCheckpoint(false) // compact deltas
-      out += frontier
-    }
-    out.result().reduce(_ unionByName _)
+    val out = TrailRdd.search(Seq(TrailRdd.legEdges(edges)), Seq(None),
+      sources.select("source").na.drop(), Array(0), Array(maxDepth),
+      TrailRdd.ArrivalBudget(1), keepAll = true, maxRounds = maxDepth)
+    Rounds.toDf(edges.sparkSession, out.result)
+      .select(col("source"), col("end").as("node"), col("hops").as("dist"),
+        col("path"), col("nodes"))
   }
 
   /**
@@ -283,62 +248,46 @@ object Bfs {
     // persist the edge pairs: pred and the two legs of the node-id union
     // all read them — without this the caller's (possibly expensive)
     // edge-producing subtree re-executes three times at init
-    val eIn = raw.rdd
-      .map(r => (r.getLong(0), r.getLong(1)))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val nPart = math.min(
-      spark.sessionState.conf.numShufflePartitions,
-      math.max(math.max(1, spark.sparkContext.defaultParallelism / 4),
-        eIn.getNumPartitions))
-    val part = new org.apache.spark.HashPartitioner(nPart)
+    val eRdd = raw.rdd.map(r => (r.getLong(0), r.getLong(1)))
+    val rounds = Rounds(spark, eRdd.getNumPartitions)
+    val part = rounds.part
+    val eIn = rounds.persist(eRdd)
     // (node, predecessor) — in/out degree ≤ 1 by contract
-    val pred = eIn.map { case (s, d) => (d, s) }.partitionBy(part)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val nodes = eIn.map(_._1).union(eIn.map(_._2)).distinct(nPart)
+    val pred = rounds.persist(eIn.map { case (s, d) => (d, s) }.partitionBy(part))
+    val nodes = eIn.map(_._1).union(eIn.map(_._2)).distinct(part.numPartitions)
       .map((_, ())).partitionBy(part)
     // jump table row: node → (p = 2^k-th predecessor-or-head, r = hops to
     // p, pIsHead); heads self-point with r = 0 and act as fixpoints.
     // pIsHead is seeded from "my predecessor has no predecessor" and then
     // maintained by the jump (new p = b.p, new flag = b's flag).
-    var ptr = nodes.leftOuterJoin(pred, part)
+    var ptr = rounds.persist(nodes.leftOuterJoin(pred, part)
       .map { case (n, (_, po)) => (po.getOrElse(n), (n, po.isDefined)) }
       .leftOuterJoin(pred, part) // does the pointed-to node have a pred?
       .map { case (p, ((n, hasPred), pPred)) =>
         if (!hasPred) (n, (n, 0L, true))
         else (n, (p, 1L, pPred.isEmpty))
       }
-      .partitionBy(part)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .partitionBy(part))
     var remaining = ptr.filter(!_._2._3).count() // materializes ptr too
     var i = 0
     while (remaining > 0 && i < roundsCap) {
       i += 1
       val prev = ptr
-      ptr = prev
+      ptr = rounds.persist(prev
         .map { case (n, (p, r, _)) => (p, (n, r)) }
         .join(prev, part)
         .map { case (_, ((n, rA), (p2, rB, pHead2))) => (n, (p2, rA + rB, pHead2)) }
-        .partitionBy(part)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .partitionBy(part))
       // converged when every pointer rests on a chain head (fixpoint);
       // this count is the one action that materializes the round
       remaining = ptr.filter(!_._2._3).count()
-      prev.unpersist(blocking = false)
+      rounds.unpersist(prev)
     }
+    rounds.release(Seq(ptr))
     require(remaining == 0,
       s"listRanks did not converge in $roundsCap rounds — chain longer than $maxLength or a cycle")
-    pred.unpersist(blocking = false)
-    eIn.unpersist(blocking = false)
-    val out = spark.createDataFrame(
-      ptr.map { case (n, (p, r, _)) => org.apache.spark.sql.Row(n, p, r) },
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("node",
-          org.apache.spark.sql.types.LongType, nullable = false),
-        org.apache.spark.sql.types.StructField("head",
-          org.apache.spark.sql.types.LongType, nullable = false),
-        org.apache.spark.sql.types.StructField("rank",
-          org.apache.spark.sql.types.LongType, nullable = false))))
-    out
+    Rounds.toDf(spark, ptr.map { case (n, (p, r, _)) => (n, p, r) },
+      "node", "head", "rank")
   }
 
   /** Driver-local chain walk over a collected (bounded) successor list —
@@ -573,7 +522,7 @@ object Bfs {
     var it = 0
     while (fCnt > 0 && it < maxHops) {
       it += 1
-      val f = if (fCnt <= 200000) broadcast(frontier) else frontier
+      val f = if (fCnt <= Rounds.BroadcastFrontierRows) broadcast(frontier) else frontier
       val relaxed = f.join(e,
           col("node") === col("__s") && col("arrival") <= col("__t"))
         .select(col("source"), col("__d").as("node"), col("__t").as("arrival"))

@@ -117,25 +117,14 @@ object Ranking {
     // DataFrame formulation's null-sum semantics), not NPE the job
     val in = edges.na.drop("any").rdd
       .map(r => (r.getLong(0), (r.getLong(1), r.getDouble(2))))
-    // partition count follows the INPUT (scan splits scale with data
-    // size; AQE can't coalesce RDD stages, so the session's full
-    // shuffle-partition count would run iterations×32 near-empty tasks on
-    // a small graph), floored at a quarter of the executor cores — one
-    // 128 MB parquet split can hold millions of edge rows, too much for a
-    // single task chained across every round — and capped by the
-    // session's shuffle-partition setting like any SQL shuffle
-    val nPart = math.min(
-      spark.sessionState.conf.numShufflePartitions,
-      math.max(math.max(1, spark.sparkContext.defaultParallelism / 4),
-        in.getNumPartitions))
-    val part = new org.apache.spark.HashPartitioner(nPart)
+    val part = Rounds(spark, in.getNumPartitions).part
     val e = in.partitionBy(part) // the ONLY edge shuffle, reused every round
     val srcSet = sources.map(_.rdd.map(r => (r.getLong(0), ()))
       .partitionBy(part))
     val nodes = e.map(_._1)
       .union(e.map(_._2._1))
       .union(srcSet.map(_.map(_._1)).getOrElse(spark.sparkContext.emptyRDD))
-      .distinct(nPart).map((_, ())).partitionBy(part)
+      .distinct(part.numPartitions).map((_, ())).partitionBy(part)
     // per-source total out-weight (count for the unweighted form)
     val outW = e.mapValues(_._2).reduceByKey(part, _ + _)
     // teleport term: uniform (1-d) classic; (1-d)/|S| on seeds personalized
@@ -158,13 +147,7 @@ object Ranking {
         .mapValues { case (b, in) => b + damping * in.getOrElse(0.0) }
       i += 1
     }
-    spark.createDataFrame(
-      ranks.map { case (n, r) => org.apache.spark.sql.Row(n, r) },
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("node",
-          org.apache.spark.sql.types.LongType, nullable = false),
-        org.apache.spark.sql.types.StructField("rank",
-          org.apache.spark.sql.types.DoubleType, nullable = false))))
+    Rounds.toDf(spark, ranks, "node", "rank")
   }
 
   /**

@@ -176,13 +176,10 @@ object Trail {
     // (source, end) k-total budget with path-ascending in-round selection
     // is the decision-for-decision twin of the replaced counts relation
     // (candidates within one round share a hop count — rank on path only).
-    val e = edges.select(col("src").as("__es"), col("dst").as("__ed"),
-      array(col("id")).as("__ers"), array(col("dst")).as("__ens"),
-      lit(1).as("__elen"))
-    val out = TrailRdd.search(Seq(e), Seq(None),
+    val out = TrailRdd.search(Seq(TrailRdd.legEdges(edges)), Seq(None),
       pairs.select("source").distinct(), Array(0), Array(maxDepth),
       TrailRdd.KTotal(k), keepAll = true, maxRounds = maxDepth)
-    val kept = TrailRdd.toDf(edges.sparkSession, out.result)
+    val kept = Rounds.toDf(edges.sparkSession, out.result)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("source", "target").orderBy(col("hops").asc, col("path").asc)
     kept.join(pairs, Seq("source")).filter(col("end") === col("target"))
@@ -265,17 +262,14 @@ object Trail {
       // per-round counts join + two localCheckpoints; the distinct-
       // arrival-round budget is the decision-for-decision twin of the
       // replaced counts relation.
-      val e = edges.select(col("src").as("__es"), col("dst").as("__ed"),
-        array(col("id")).as("__ers"), array(col("dst")).as("__ens"),
-        lit(1).as("__elen"))
-      val out = TrailRdd.search(Seq(e), Seq(None), sources,
-        Array(0), Array(maxDepth), TrailRdd.ArrivalBudget(budget.toInt),
+      val out = TrailRdd.search(Seq(TrailRdd.legEdges(edges)), Seq(None),
+        sources, Array(0), Array(maxDepth), TrailRdd.ArrivalBudget(budget.toInt),
         keepAll = true, maxRounds = maxDepth)
       // mirror the local fast path: an alive frontier at an
       // unbounded-quantifier cap means longer SHORTEST matches are missed
       if (capIsHorizon && out.finalFrontier.take(1).nonEmpty)
         onHorizon("SHORTEST", maxDepth)
-      TrailRdd.toDf(edges.sparkSession, out.result)
+      Rounds.toDf(edges.sparkSession, out.result)
     }
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("source", "target").orderBy(col("hops").asc)
@@ -625,9 +619,7 @@ object Trail {
         if (s.composite) s.edges
           .select(col("__es"), col("__ed"), col("__ers"), col("__ens"),
             col("__elen"))
-        else s.edges.select(col("src").as("__es"), col("dst").as("__ed"),
-          array(col("id")).as("__ers"), array(col("dst")).as("__ens"),
-          lit(1).as("__elen"))
+        else TrailRdd.legEdges(s.edges)
       cap(c.localCheckpoint(false))
     }
     val bBySeg: Seq[Option[DataFrame]] = segments.map(_.boundary.map(b =>
@@ -671,7 +663,7 @@ object Trail {
         if (atCap > 0) onHorizon("SHORTEST", maxTotal)
       }
     }
-    TrailRdd.toDf(sources.sparkSession, out.result)
+    Rounds.toDf(sources.sparkSession, out.result)
   }
 
   /** PropertyGraph convenience: orient + type-filter the rels table. */

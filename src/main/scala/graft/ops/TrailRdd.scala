@@ -1,9 +1,7 @@
 package graft.ops
 
-import org.apache.spark.HashPartitioner
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.storage.StorageLevel
 
 /**
  * RDD round engine for the SHORTEST-k / GROUPS product-graph searches —
@@ -101,11 +99,8 @@ private[ops] object TrailRdd {
         (r.getLong(0), (r.getLong(1),
           r.getSeq[Long](2).toArray, r.getSeq[Long](3).toArray, r.getInt(4)))
       })
-    val nPart = math.min(
-      spark.sessionState.conf.numShufflePartitions,
-      math.max(math.max(1, sc.defaultParallelism / 4),
-        eIn.map(_.getNumPartitions).max))
-    val part = new HashPartitioner(nPart)
+    val rounds = Rounds(spark, eIn.map(_.getNumPartitions).max)
+    val part = rounds.part
 
     // bit i preset for segments with NO boundary; boundary segments
     // contribute their bit per member node
@@ -130,19 +125,18 @@ private[ops] object TrailRdd {
     val taggedRaw = sc.union(eIn.zipWithIndex.map { case (e, i) =>
       e.map { case (src, (dst, rels, ns, len)) =>
         (src, (i, REdge(dst, rels, ns, len, fullMask))) } })
-    val edgesFlat: RDD[(Long, (Int, REdge))] =
-      (if (!hasBounds) taggedRaw
+    val edgesFlat: RDD[(Long, (Int, REdge))] = rounds.persist(
+      if (!hasBounds) taggedRaw
        else taggedRaw
          .map { case (src, (i, e)) => (e.dst, (src, i, e)) }
          .partitionBy(part)
          .leftOuterJoin(maskRdd, part)
          .map { case (_, ((src, i, e), m)) =>
            (src, (i, e.copy(dstMask = fullMask | m.getOrElse(0)))) })
-      .persist(StorageLevel.MEMORY_AND_DISK)
     // co-partitioned layout, built only if a round's frontier outgrows the
     // broadcast threshold
     lazy val edgesPart: RDD[(Long, (Int, REdge))] =
-      edgesFlat.partitionBy(part).persist(StorageLevel.MEMORY_AND_DISK)
+      rounds.persist(edgesFlat.partitionBy(part))
 
     val isLedger = (r: RRow) => r.segHops == -1
     val isActive = (r: RRow) => r.segHops >= 0 && r.seg < nSeg &&
@@ -259,11 +253,10 @@ private[ops] object TrailRdd {
          .flatMap { case (s, (_, m)) =>
            closure(RRow(s, s, 0, 0, 0, Array.empty, Array(s), Array.empty),
              fullMask | m.getOrElse(0)).map(r => (r.end, r)) })
-    var frontier = init.partitionBy(part)
-      .mapPartitions(prune, preservesPartitioning = true)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val pieces = Seq.newBuilder[RDD[RRow]]
-    pieces += frontier.map(_._2).filter(isAccepted)
+    var frontier = rounds.persist(init.partitionBy(part)
+      .mapPartitions(prune, preservesPartitioning = true))
+    val frontiers = Seq.newBuilder[RDD[(Long, RRow)]]
+    frontiers += frontier
     var activeCnt = frontier.mapPartitions(it =>
       Iterator.single(it.count(p => isActive(p._2)))).sum().toLong
 
@@ -283,7 +276,7 @@ private[ops] object TrailRdd {
       // map-side — no edge shuffle, ever; big frontiers fall back to the
       // co-partitioned join (edges shuffled once, lazily, then reused).
       val expanded: RDD[(Long, RRow)] =
-        if (activeCnt <= 200000) {
+        if (activeCnt <= Rounds.BroadcastFrontierRows) {
           val byNodeSeg = active.map(_._2).collect()
             .groupBy(r => (r.end, r.seg))
           val bc = sc.broadcast(byNodeSeg)
@@ -304,34 +297,26 @@ private[ops] object TrailRdd {
         }
       val ledger = frontier.filter(p => isLedger(p._2))
       val moved = expanded.partitionBy(part)
-      frontier = moved.union(ledger) // same partitioner -> narrow union
-        .mapPartitions(prune, preservesPartitioning = true)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      pieces += frontier.map(_._2).filter(isAccepted)
+      // same partitioner -> narrow union
+      frontier = rounds.persist(moved.union(ledger)
+        .mapPartitions(prune, preservesPartitioning = true))
+      frontiers += frontier
       activeCnt = frontier.mapPartitions(it =>
         Iterator.single(it.count(p => isActive(p._2)))).sum().toLong
       depth += 1
     }
-    SearchOut(sc.union(pieces.result()),
+    val fs = frontiers.result()
+    rounds.release(fs)
+    SearchOut(sc.union(fs.map(_.map(_._2).filter(isAccepted))),
       frontier.map(_._2).filter(r => !isLedger(r)))
   }
 
-  /** Rows → DataFrame with the Trail search schema. */
-  def toDf(spark: org.apache.spark.sql.SparkSession,
-      rows: RDD[RRow]): DataFrame = {
-    import org.apache.spark.sql.types._
-    val arr = ArrayType(LongType, containsNull = false)
-    spark.createDataFrame(
-      rows.map(r => org.apache.spark.sql.Row(r.source, r.end, r.seg,
-        r.segHops, r.hops, r.path.toSeq, r.nodes.toSeq, r.bnds.toSeq)),
-      StructType(Seq(
-        StructField("source", LongType, nullable = false),
-        StructField("end", LongType, nullable = false),
-        StructField("seg", IntegerType, nullable = false),
-        StructField("segHops", IntegerType, nullable = false),
-        StructField("hops", IntegerType, nullable = false),
-        StructField("path", arr, nullable = false),
-        StructField("nodes", arr, nullable = false),
-        StructField("bnds", arr, nullable = false))))
+  /** A plain var-length leg in the composite edge form [[search]] takes:
+    * one expansion step per rel. */
+  def legEdges(edges: DataFrame): DataFrame = {
+    import org.apache.spark.sql.functions.{array, col, lit}
+    edges.select(col("src").as("__es"), col("dst").as("__ed"),
+      array(col("id")).as("__ers"), array(col("dst")).as("__ens"),
+      lit(1).as("__elen"))
   }
 }

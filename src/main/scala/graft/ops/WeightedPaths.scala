@@ -60,7 +60,7 @@ object WeightedPaths {
       iter += 1
       // small frontiers broadcast: relaxation probes edges map-side instead
       // of shuffling the full edge table (checkpointed RDDs have no stats)
-      val f = if (fCnt <= 200000) broadcast(frontier) else frontier
+      val f = if (fCnt <= Rounds.BroadcastFrontierRows) broadcast(frontier) else frontier
       val relaxed = f.join(e, col("node") === col("__s"))
         .select(col("source"), col("__d").as("node"),
           (col("dist") + col("__w")).as("dist"),
@@ -236,7 +236,7 @@ object WeightedPaths {
     var d = 0
     var fCnt = frontier.count()
     while (d < maxDepth && fCnt > 0) {
-      val f = if (fCnt <= 200000) broadcast(frontier) else frontier
+      val f = if (fCnt <= Rounds.BroadcastFrontierRows) broadcast(frontier) else frontier
       val kept = f.join(e,
           col("end") === col("__es") && !array_contains(col("path"), col("__er")))
         .select(col("source"), col("__ed").as("end"),

@@ -26,8 +26,10 @@ class AcceptanceSpec extends AnyFunSuite {
     "graft.acceptance.dir",
     "/root/reference/community/cypher/spec-suite-tools/src/test/resources/acceptance/features"))
 
+  // from the test classpath: forked test groups run in their own working
+  // directories, so a path relative to the project root finds nothing
   private val (denylist, deniedFeatures) = TckHarness.loadDenylist(
-    new java.io.File("src/test/resources/acceptance-denylist.txt"))
+    new java.io.File(getClass.getResource("/acceptance-denylist.txt").toURI))
 
   private val scenarios: Seq[TckHarness.Scenario] =
     if (dir.isDirectory) TckHarness.loadScenarios(dir) else Nil

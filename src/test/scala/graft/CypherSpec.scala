@@ -661,6 +661,19 @@ class CypherSpec extends AnyFunSuite {
         |ORDER BY name""".stripMargin)
       .collect().map(r => (r.getString(0), r.getInt(1)))
     assert(rows.toSeq == Seq(("Bob", 1), ("Carol", 1), ("Dave", 2)))
+    // two parallel shortest routes n0->n1->n3 / n0->n2->n3 plus a self-loop
+    // at n0: both ties reach n3, no path takes the loop
+    val routes = GraphFixtures.graph(spark,
+      (0L to 3L).map(i => (i, Seq("N"), s"n$i")),
+      Seq((10L, 0L, 1L, "T"), (11L, 0L, 2L, "T"), (12L, 1L, 3L, "T"),
+        (13L, 2L, 3L, "T"), (14L, 0L, 0L, "T")))
+    val ties = Cypher.run(spark, routes,
+      """MATCH (a {name: 'n0'})
+        |MATCH p = allShortestPaths((a)-[:T*..4]->(x))
+        |RETURN x.name AS name, length(p) AS hops, relationships(p) AS rels""".stripMargin)
+      .collect().map(r => (r.getString(0), r.getInt(1), r.getSeq[Long](2))).toSet
+    assert(ties == Set(("n1", 1, Seq(10L)), ("n2", 1, Seq(11L)),
+      ("n3", 2, Seq(10L, 12L)), ("n3", 2, Seq(11L, 13L))))
   }
 
   test("pattern comprehension collects per-row lists, [] on no match") {

@@ -143,11 +143,22 @@ class GraphOpsSpec extends AnyFunSuite {
     // longer 0->...->3 routes must NOT appear even under a higher maxDepth
     val all = Bfs.allShortestPaths(edges, Seq(0L).toDF("source"), maxDepth = 5)
     assert(all.filter(col("node") === 3L && col("dist") =!= 2).count() == 0)
+    // two parallel shortest routes 0->1->3 / 0->2->3 and a self-loop at the
+    // source: the loop re-reaches 0 after round 0, so no path uses it
+    val routes = Seq((10L, 0L, 1L), (11L, 0L, 2L), (12L, 1L, 3L),
+      (13L, 2L, 3L), (14L, 0L, 0L)).toDF("id", "src", "dst")
+    val got = Bfs.allShortestPaths(routes, Seq(0L).toDF("source"), maxDepth = 4)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2),
+        r.getSeq[Long](3), r.getSeq[Long](4))).toSet
+    assert(got == Set((0L, 0L, 0, Seq(), Seq(0L)),
+      (0L, 1L, 1, Seq(10L), Seq(0L, 1L)), (0L, 2L, 1, Seq(11L), Seq(0L, 2L)),
+      (0L, 3L, 2, Seq(10L, 12L), Seq(0L, 1L, 3L)),
+      (0L, 3L, 2, Seq(11L, 13L), Seq(0L, 2L, 3L))))
   }
 
   test("deep BFS (depth 25) completes with compacted visited set") {
-    // 25-deep chain: exercises the every-4-rounds visited re-checkpoint —
-    // without compaction the round-25 anti-join plan unions 24 deltas
+    // 25-deep chain: 25 rounds, each anti-joining against the narrow union
+    // of every earlier round's persisted frontier
     val edges = (0L until 25L).map(i => (i, i + 1)).toDF("src", "dst")
     val d = Bfs.distances(edges, Seq(0L).toDF("source"), maxDepth = 30)
     assert(d.count() == 26)

@@ -19,7 +19,9 @@ import org.scalatest.funsuite.AnyFunSuite
 class TckSpec extends AnyFunSuite {
   private lazy val spark = TestSession.spark
 
-  private val tckDir = new java.io.File("src/test/resources/tck")
+  // from the test classpath: forked test groups run in their own working
+  // directories, so a path relative to the project root finds nothing
+  private val tckDir = new java.io.File(getClass.getResource("/tck").toURI)
   private val (denylist, deniedFeatures) =
     TckHarness.loadDenylist(new java.io.File(tckDir, "denylist.txt"))
 
