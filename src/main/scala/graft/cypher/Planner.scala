@@ -4,7 +4,7 @@ import graft.ops.Ckpt._
 
 import graft.graph.{Direction, PropertyGraph}
 import graft.graph.PropertyGraph.{colProp, propCol}
-import graft.ops.{UpdateOps, VarExpand}
+import graft.ops.UpdateOps
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, StringType}
@@ -1864,7 +1864,8 @@ object Planner {
     * frontier BFS (Bfs.pruningExpand, |V|-bounded) instead of trail
     * enumeration (path-count-bounded). Restricted to minHops <= 1, where
     * BFS distance + the self-cycle correction is exactly "exists a trail of
-    * length in [min,max]"; deeper minimums keep VarExpand. */
+    * length in [min,max]"; deeper minimums keep trail enumeration
+    * (Trail.trail). */
   private def pruneEligibleRels(q: SingleQuery): java.util.Set[RelPattern] = {
     val out = java.util.Collections.newSetFromMap(
       new java.util.IdentityHashMap[RelPattern, java.lang.Boolean]())
@@ -2457,10 +2458,11 @@ object Planner {
     // traversed rel must satisfy it → the search walks a pre-filtered
     // edge set (stepFilteredRels)
     val stepDf = stepFilteredRels(ctx, rel)
-    val dirConv = rel.dir match {
-      case Out => Direction.Out; case In => Direction.In
-      case Both => Direction.Both
-    }
+    val dirConv = direction(rel)
+    // the inline property map and type expression filter every step too,
+    // as in the enumerating forms (expandHop)
+    val stepPred = stepPredicate(ctx, rel)
+    val idEdges = ctx.g.orientTyped(rel.types, dirConv, stepPred, stepDf)
     // endpoints need not be pre-bound (the reference plans both sides then
     // FindShortestPaths, LogicalPlan.scala:2178): an inline-filtered start
     // like `shortestPath((a:L {k:v})-[*..d]-(b))` binds here via its own
@@ -2481,16 +2483,9 @@ object Planner {
     // checkpointed once per snapshot); typed ones filter the topology and
     // let the BFS dedupe the filtered result itself
     val (edges, edgesDeduped) =
-      if (rel.types.isEmpty && rel.typeExpr.isEmpty && stepDf.isEmpty)
-        ((rel.dir match {
-          case Out  => ctx.g.topologyPairs
-          case In   => ctx.g.topologyPairs
-            .select(col("dst").as("src"), col("src").as("dst"))
-          case Both => ctx.g.undirectedTopoPairs
-        }), true)
-      else (orientTyped(ctx.g, rel.types, dirConv,
-          rel.typeExpr.map(typeExprFilter), stepDf)
-        .select("src", "dst"), false)
+      if (rel.types.isEmpty && stepPred.isEmpty && stepDf.isEmpty)
+        (ctx.g.orientedPairs(dirConv), true)
+      else (idEdges.select("src", "dst"), false)
     val pv = s.pathVar.getOrElse(ctx.fresh("p"))
     val minHops = rel.varLength.map(_._1).getOrElse(1)
     // endpoint inline WHERE: bound sides semi-join their boundary set
@@ -2523,7 +2518,6 @@ object Planner {
       rel.variable.exists(v => !envIn.has(v)) // leg rel var binds from the path
     if (s.all) {
       // allShortestPaths: every minimal-hop tie, path always bound
-      val idEdges = orientTyped(ctx.g, rel.types, dirConv, None, stepDf)
       // bound far node: BFS output needs a fresh name, else the equality
       // filter below would reference an ambiguous column
       val toVar = if (toNode.variable.exists(env.has)) ctx.fresh("n")
@@ -2552,8 +2546,7 @@ object Planner {
     if (needPath) {
       // PathPropagatingBFS: unit-weight frontier relaxation carries the
       // rel-id path; dist == hop count
-      val wEdges = orientTyped(ctx.g, rel.types, dirConv, None, stepDf)
-        .withColumn("weight", lit(1.0))
+      val wEdges = idEdges.withColumn("weight", lit(1.0))
       val toVar = if (toNode.variable.exists(env.has)) ctx.fresh("n")
         else toNode.variable.getOrElse(ctx.fresh("n"))
       val sp = graft.ops.WeightedPaths.shortestPaths(wEdges,
@@ -2703,21 +2696,9 @@ object Planner {
           // a plain one-hop quantified group `((a)-[r]->(b))+` inside a
           // selector is just a var-length leg: the group variables bind
           // to nothing here (the path value carries nodes/rels)
-          val pre = {
-            val propF = if (r.props.isEmpty) None
-              else Some(r.props.map { case (key, e) =>
-                if (ctx.g.rels.columns.contains(propCol(key)))
-                  col(propCol(key)) === constExpr(ctx, e)
-                else lit(false)
-              }.reduce(_ && _))
-            (propF ++ r.typeExpr.map(typeExprFilter)).reduceOption(_ && _)
-          }
-          val dir = r.dir match {
-            case Out => Direction.Out; case In => Direction.In
-            case Both => Direction.Both
-          }
           graft.ops.Trail.PathSegment(
-            orientTyped(ctx.g, r.types, dir, pre, stepFilteredRels(ctx, r)),
+            ctx.g.orientTyped(r.types, direction(r), stepPredicate(ctx, r),
+              stepFilteredRels(ctx, r)),
             mn, mx, bnd, unbounded = unb)
       }
     }
@@ -2926,20 +2907,8 @@ object Planner {
     hops.zipWithIndex.foreach { case ((r, n), i) =>
       require(r.qppVars.isEmpty && r.branches.isEmpty,
         "alternation branches take single or bounded var-length hops")
-      val pre = {
-        val propF = if (r.props.isEmpty) None
-          else Some(r.props.map { case (key, e) =>
-            if (ctx.g.rels.columns.contains(propCol(key)))
-              col(propCol(key)) === constExpr(ctx, e)
-            else lit(false)
-          }.reduce(_ && _))
-        (propF ++ r.typeExpr.map(typeExprFilter)).reduceOption(_ && _)
-      }
-      val dir = r.dir match {
-        case Out => Direction.Out; case In => Direction.In
-        case Both => Direction.Both
-      }
-      val e = orientTyped(ctx.g, r.types, dir, pre, stepFilteredRels(ctx, r))
+      val e = ctx.g.orientTyped(r.types, direction(r), stepPredicate(ctx, r),
+          stepFilteredRels(ctx, r))
         .select(col("id").as("__r"), col("src").as("__s"), col("dst").as("__d"))
       val (min, max) = r.varLength match {
         case None => (1, 1)
@@ -3957,38 +3926,23 @@ object Planner {
     Env(Some(df), cur.binds + (pv -> PathVar))
   }
 
-  /** Oriented + type-filtered (id, src, dst) edge view for Trail. The
-    * optional predicate (var-length inline property map) is applied BEFORE
-    * orientation drops the property columns. */
-  private def orientTyped(g: PropertyGraph, types: Seq[String],
-      dir: Direction, pre: Option[Column] = None,
-      baseRels: Option[DataFrame] = None): DataFrame = {
-    // no inline property predicate → warm compact topology; with one the
-    // raw rels keep the property columns the predicate reads. A caller
-    // that pre-filtered the raw rels (per-step WHERE) overrides the base.
-    val base = baseRels match {
-      case Some(b) => dir match {
-        case Direction.Both =>
-          val swapped = b
-            .withColumnRenamed("src", "__tmp_src")
-            .withColumnRenamed("dst", "src")
-            .withColumnRenamed("__tmp_src", "dst")
-          b.unionByName(swapped.select(b.columns.map(col).toIndexedSeq: _*))
-        case _ => b
-      }
-      case None => dir match {
-        case Direction.Both => if (pre.isEmpty) g.undirectedTopo else g.undirectedRels
-        case _              => if (pre.isEmpty) g.topology else g.rels
-      }
-    }
-    val filtered = pre.fold(base)(base.filter)
-    val r0 = dir match {
-      case Direction.In => filtered.select(col("id"), col("dst").as("src"),
-        col("src").as("dst"), col("type"))
-      case _ => filtered.select(col("id"), col("src"), col("dst"), col("type"))
-    }
-    val f = if (types.isEmpty) r0 else r0.filter(col("type").isin(types: _*))
-    f.select("id", "src", "dst")
+  /** The traversal direction of a pattern relationship. */
+  private def direction(r: RelPattern): Direction = r.dir match {
+    case Out => Direction.Out; case In => Direction.In; case Both => Direction.Both
+  }
+
+  /** Per-step predicate of a var-length rel over the raw rel columns —
+    * its inline property map and type expression; every traversed rel
+    * must match (reference VarLengthExpand per-step relationship
+    * predicate). */
+  private def stepPredicate(ctx: Ctx, r: RelPattern): Option[Column] = {
+    val propF =
+      if (r.props.isEmpty) None
+      else Some(r.props.map { case (k, e) =>
+        if (ctx.g.rels.columns.contains(propCol(k))) col(propCol(k)) === constExpr(ctx, e)
+        else lit(false)
+      }.reduce(_ && _))
+    (propF ++ r.typeExpr.map(typeExprFilter)).reduceOption(_ && _)
   }
 
   /** Per-step WHERE on a var-length relationship (Cypher 5
@@ -4636,9 +4590,9 @@ object Planner {
   }
 
   /** One hop: single-rel equi-join (Expand All/Into semantics) or a
-    * var-length expansion via VarExpand. `pathNodesAlias` (named paths)
-    * forces the var-length branch through Trail, keeping the per-hop node
-    * sequence in the given column. */
+    * var-length expansion — pruning BFS when only endpoints are read,
+    * otherwise Trail.trail. `pathNodesAlias` (named paths) keeps the
+    * per-hop node sequence in the given column. */
   private def expandHop(ctx: Ctx, env: Env, fromVar: String, rel: RelPattern,
       node: NodePattern, pathNodesAlias: Option[String] = None): (Env, String) = {
     val g = ctx.g
@@ -4723,67 +4677,19 @@ object Planner {
         endpointProps("__en_", "dst")
         Env(Some(joined), env.binds + (relVar -> RelVar))
       case Some((min, maxOpt)) =>
-        // inline property map on a var-length rel: EVERY traversed rel must
-        // match → a pre-orientation edge filter (reference VarLengthExpand
-        // per-step relationship predicate); an inline WHERE likewise
-        // pre-filters the raw rels (stepFilteredRels)
-        val edgeFilter: Option[Column] = {
-          val propF =
-            if (rel.props.isEmpty) None
-            else Some(rel.props.map { case (k, e) =>
-              if (g.rels.columns.contains(propCol(k)))
-                col(propCol(k)) === constExpr(ctx, e)
-              else lit(false)
-            }.reduce(_ && _))
-          (propF ++ rel.typeExpr.map(typeExprFilter)).reduceOption(_ && _)
-        }
+        // inline property map / WHERE on a var-length rel: EVERY traversed
+        // rel must match → a pre-orientation edge filter (stepPredicate)
+        // and pre-filtered raw rels (stepFilteredRels)
+        val edgeFilter = stepPredicate(ctx, rel)
         val stepDf = stepFilteredRels(ctx, rel)
-        val dir = rel.dir match {
-          case Out => Direction.Out; case In => Direction.In; case Both => Direction.Both
-        }
-        if (pathNodesAlias.isDefined) {
-          // named path: Trail carries the node sequence alongside the rels;
-          // unbounded `*` iterates to an empty frontier (rel-uniqueness
-          // terminates, like the reference's VarLengthExpand)
-          val hopsCol = ctx.fresh("ph")
-          val oriented = orientTyped(g, rel.types, dir, edgeFilter, stepDf)
-          val expanded = (maxOpt match {
-            case Some(max) => graft.ops.Trail.trail(
-              oriented, env.df.get, fromVar, min, max, endAlias = "__to",
-              relsAlias = relVar, nodesAlias = pathNodesAlias.get,
-              hopsAlias = hopsCol)
-            case None => graft.ops.Trail.trailToExhaustion(
-              oriented, env.df.get, fromVar, min, endAlias = "__to",
-              relsAlias = relVar, nodesAlias = pathNodesAlias.get,
-              hopsAlias = hopsCol)
-          }).drop(hopsCol)
-          // a named path over a one-hop QPP (`p = (a) ((b)-[r]->(c))+ (d)`,
-          // reference ProjectNamedPath over Trail) also binds the group
-          // variables from the carried node sequence, same slices as the
-          // unnamed QPP branch below
-          var out = expanded
-          var binds = env.binds + (relVar -> RelListVar)
-          rel.qppVars.foreach { case (xVar, _, yVar) =>
-            val nc = col(pathNodesAlias.get)
-            xVar.foreach { v =>
-              out = out.withColumn(v,
-                slice(nc, lit(1), greatest(size(nc) - 1, lit(0))))
-              binds += (v -> NodeListVar)
-            }
-            yVar.foreach { v =>
-              out = out.withColumn(v,
-                slice(nc, lit(2), greatest(size(nc) - 1, lit(0))))
-              binds += (v -> NodeListVar)
-            }
-          }
-          Env(Some(out), binds)
-        } else if (ctx.pruneRels.contains(rel)) {
+        val dir = direction(rel)
+        if (pathNodesAlias.isEmpty && ctx.pruneRels.contains(rel)) {
           // endpoints-only: pruningVarExpander rewrite — frontier BFS keeps
           // |V|-bounded state; unbounded `*` iterates to an empty frontier
           val (edges, deduped) =
             if (rel.types.isEmpty && edgeFilter.isEmpty && stepDf.isEmpty)
               (g.orientedPairs(dir), true)
-            else (orientTyped(g, rel.types, dir, edgeFilter, stepDf)
+            else (g.orientTyped(rel.types, dir, edgeFilter, stepDf)
               .select("src", "dst"), false)
           val srcs = env.df.get.select(col(fromVar).as("source")).distinct()
           val reach = graft.ops.Bfs.pruningExpand(
@@ -4794,55 +4700,33 @@ object Planner {
           // no rel/group bindings: eligibility means nothing reads them
           Env(Some(joined), env.binds)
         } else {
-        rel.qppVars match {
-          case None =>
-            val depthCol = ctx.fresh("depth")
-            val expanded = (maxOpt match {
-              case Some(max) =>
-                VarExpand.varExpand(g, env.df.get, fromVar, rel.types,
-                  dir, min, max, toAlias = "__to", relsAlias = relVar,
-                  depthAlias = depthCol, edgeFilter = edgeFilter,
-                  baseRels = stepDf)
-              case None =>
-                // unbounded enumeration: iterate to an empty frontier
-                // (rel-uniqueness terminates, reference VarLengthExpand)
-                val nodesCol = ctx.fresh("vn")
-                graft.ops.Trail.trailToExhaustion(
-                  orientTyped(g, rel.types, dir, edgeFilter, stepDf), env.df.get,
-                  fromVar, min, endAlias = "__to", relsAlias = relVar,
-                  nodesAlias = nodesCol, hopsAlias = depthCol)
-                  .drop(nodesCol)
-            }).drop(depthCol)
-            Env(Some(expanded), env.binds + (relVar -> RelListVar))
-          case Some((xVar, _, yVar)) =>
-            // quantified path pattern: Trail collects the group variables —
-            // x group = all but the last trail node, y group = all but the
-            // first, r group = the rel array
-            val nodesCol = ctx.fresh("qn")
-            val hopsCol = ctx.fresh("qh")
-            val oriented = orientTyped(g, rel.types, dir, edgeFilter, stepDf)
-            val expanded = maxOpt match {
-              case Some(max) => graft.ops.Trail.trail(
-                oriented, env.df.get, fromVar, min, max, endAlias = "__to",
-                relsAlias = relVar, nodesAlias = nodesCol, hopsAlias = hopsCol)
-              case None => graft.ops.Trail.trailToExhaustion(
-                oriented, env.df.get, fromVar, min, endAlias = "__to",
-                relsAlias = relVar, nodesAlias = nodesCol, hopsAlias = hopsCol)
+          // path enumeration (Trail): the node sequence is carried only
+          // when a named path or QPP group variables read it; unbounded `*`
+          // iterates to an empty frontier (rel-uniqueness terminates, like
+          // the reference's VarLengthExpand)
+          val nodesCol = pathNodesAlias.orElse(rel.qppVars.map(_ => ctx.fresh("qn")))
+          val hopsCol = ctx.fresh("depth")
+          var out = graft.ops.Trail.trail(
+              g.orientTyped(rel.types, dir, edgeFilter, stepDf), env.df.get,
+              fromVar, min, maxOpt, endAlias = "__to", relsAlias = relVar,
+              nodesAlias = nodesCol, hopsAlias = hopsCol)
+            .drop(hopsCol)
+          var binds = env.binds + (relVar -> RelListVar)
+          // quantified path pattern group variables (also under a named
+          // path, reference ProjectNamedPath over Trail): x group = all
+          // but the last trail node, y group = all but the first
+          rel.qppVars.foreach { case (xVar, _, yVar) =>
+            val nc = col(nodesCol.get)
+            Seq(xVar -> 1, yVar -> 2).foreach { case (v, from) =>
+              v.foreach { name =>
+                out = out.withColumn(name,
+                  slice(nc, lit(from), greatest(size(nc) - 1, lit(0))))
+                binds += (name -> NodeListVar)
+              }
             }
-            var out = expanded.drop(hopsCol)
-            var binds = env.binds + (relVar -> RelListVar)
-            xVar.foreach { v =>
-              out = out.withColumn(v,
-                slice(col(nodesCol), lit(1), greatest(size(col(nodesCol)) - 1, lit(0))))
-              binds += (v -> NodeListVar)
-            }
-            yVar.foreach { v =>
-              out = out.withColumn(v,
-                slice(col(nodesCol), lit(2), greatest(size(col(nodesCol)) - 1, lit(0))))
-              binds += (v -> NodeListVar)
-            }
-            Env(Some(out.drop(nodesCol)), binds)
-        }
+          }
+          if (pathNodesAlias.isEmpty) nodesCol.foreach(c => out = out.drop(c))
+          Env(Some(out), binds)
         }
     }
 

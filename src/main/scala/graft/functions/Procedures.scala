@@ -250,21 +250,16 @@ object Procedures {
 
   /** (id, src, dst) rel relation oriented per the direction argument the
     * graph-algo procedures share (reference Direction.OUTGOING/INCOMING/
-    * BOTH on the PathExpander). */
+    * BOTH on the PathExpander), read from the warm topology. */
   private def orientedEdges(g: graft.graph.PropertyGraph, types: Seq[String],
-      direction: String): org.apache.spark.sql.DataFrame = {
-    val base = if (types.isEmpty) g.rels
-      else g.rels.filter(col("type").isin(types: _*))
-    val fwd = base.select(col("id"), col("src"), col("dst"))
-    val rev = base.select(col("id"), col("dst").as("src"), col("src").as("dst"))
-    direction match {
-      case "OUT"  => fwd
-      case "IN"   => rev
-      case "BOTH" => fwd.unionByName(rev)
+      direction: String): org.apache.spark.sql.DataFrame =
+    g.orientTyped(types, direction match {
+      case "OUT"  => graft.graph.Direction.Out
+      case "IN"   => graft.graph.Direction.In
+      case "BOTH" => graft.graph.Direction.Both
       case other  => throw new IllegalArgumentException(
         s"direction must be OUT, IN or BOTH, got $other")
-    }
-  }
+    })
 
   private def relTypesArg(a: Option[Any]): Seq[String] = a.map {
     case xs: Seq[_] => xs.map(_.toString)
@@ -553,8 +548,8 @@ object Procedures {
       args.lift(4).map(_.toString.toUpperCase).getOrElse("OUT"))
     import spark.implicits._
     graft.ops.Trail.trail(edges, Seq(src.longValue).toDF("__src"), "__src",
-        1, depth.intValue, endAlias = "__to", relsAlias = "relIds",
-        nodesAlias = "nodeIds", hopsAlias = "hops", checkpointEvery = 3)
+        1, Some(depth.intValue), endAlias = "__to", relsAlias = "relIds",
+        nodesAlias = Some("nodeIds"), hopsAlias = "hops", checkpointEvery = 3)
       .filter(col("__to") === dst.longValue)
       .select(col("hops"), col("relIds"), col("nodeIds"))
   })
@@ -575,8 +570,8 @@ object Procedures {
     if (allowLoops) {
       import spark.implicits._
       graft.ops.Trail.trail(edges, Seq(src.longValue).toDF("__src"), "__src",
-          d, d, endAlias = "__to", relsAlias = "relIds",
-          nodesAlias = "nodeIds", hopsAlias = "hops", checkpointEvery = 3)
+          d, Some(d), endAlias = "__to", relsAlias = "relIds",
+          nodesAlias = Some("nodeIds"), hopsAlias = "hops", checkpointEvery = 3)
         .filter(col("__to") === dst.longValue)
         .select(col("hops"), col("relIds"), col("nodeIds"))
     } else {

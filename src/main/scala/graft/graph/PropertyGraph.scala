@@ -1,6 +1,6 @@
 package graft.graph
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /**
@@ -36,21 +36,11 @@ final case class PropertyGraph(nodes: DataFrame, rels: DataFrame,
    * single-node analog. Registered with RddGuard so benchmark RDD sweeps
    * don't free blocks a live snapshot still references.
    */
-  @transient lazy val topology: DataFrame = {
-    val t = rels.select(col("id"), col("src"), col("dst"), col("type"))
-      .localCheckpoint(false)
-    t.queryExecution.logical match {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        RddGuard.protect(lr.rdd.id, this)
-      case _ => ()
-    }
-    t
-  }
+  @transient lazy val topology: DataFrame =
+    warm(rels.select(col("id"), col("src"), col("dst"), col("type")))
 
   /** Undirected view of the compact adjacency (both orientations). */
-  def undirectedTopo: DataFrame =
-    topology.unionByName(topology.select(col("id"), col("dst").as("src"),
-      col("src").as("dst"), col("type")))
+  def undirectedTopo: DataFrame = PropertyGraph.bothWays(topology)
 
   /**
    * Warm DISTINCT (src, dst) reachability pairs — what every untyped
@@ -59,24 +49,20 @@ final case class PropertyGraph(nodes: DataFrame, rels: DataFrame,
    * lineitem between the same order and part — would otherwise be
    * re-deduped by every query); RddGuard-protected like [[topology]].
    */
-  @transient lazy val topologyPairs: DataFrame = {
-    val t = topology.select(col("src"), col("dst")).distinct()
-      .localCheckpoint(false)
-    t.queryExecution.logical match {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        RddGuard.protect(lr.rdd.id, this)
-      case _ => ()
-    }
-    t
-  }
+  @transient lazy val topologyPairs: DataFrame =
+    warm(topology.select(col("src"), col("dst")).distinct())
 
   /** Distinct undirected reachability pairs (both orientations). */
-  @transient lazy val undirectedTopoPairs: DataFrame = {
-    val t = topologyPairs
+  @transient lazy val undirectedTopoPairs: DataFrame =
+    warm(topologyPairs
       .unionByName(topologyPairs.select(col("dst").as("src"),
         col("src").as("dst")))
-      .distinct()
-      .localCheckpoint(false)
+      .distinct())
+
+  /** Lazy local checkpoint of `df`, registered with RddGuard for the life
+    * of this snapshot. */
+  private def warm(df: DataFrame): DataFrame = {
+    val t = df.localCheckpoint(false)
     t.queryExecution.logical match {
       case lr: org.apache.spark.sql.execution.LogicalRDD =>
         RddGuard.protect(lr.rdd.id, this)
@@ -91,6 +77,29 @@ final case class PropertyGraph(nodes: DataFrame, rels: DataFrame,
     case Direction.In   => topologyPairs
       .select(col("dst").as("src"), col("src").as("dst"))
     case Direction.Both => undirectedTopoPairs
+  }
+
+  /**
+   * Oriented, type-filtered (id, src, dst) relationship view — the one
+   * edge orientation every traversal builds on (`types` empty = any
+   * type). `pre`, a per-step predicate over raw rel columns (the inline
+   * property map of `[r:T*1..3 {k: v}]`), applies BEFORE orientation
+   * drops the property columns; without one the warm compact [[topology]]
+   * suffices. `base` overrides the raw rels (a per-step WHERE pre-filters
+   * them).
+   */
+  def orientTyped(types: Seq[String], dir: Direction,
+      pre: Option[Column] = None, base: Option[DataFrame] = None): DataFrame = {
+    val raw = base.getOrElse(if (pre.isEmpty) topology else rels)
+    val both = if (dir == Direction.Both) PropertyGraph.bothWays(raw) else raw
+    val filtered = pre.fold(both)(both.filter)
+    val typed =
+      if (types.isEmpty) filtered else filtered.filter(col("type").isin(types: _*))
+    dir match {
+      case Direction.In =>
+        typed.select(col("id"), col("dst").as("src"), col("src").as("dst"))
+      case _ => typed.select(col("id"), col("src"), col("dst"))
+    }
   }
 
   /** NodeByLabelScan (reference LogicalPlan.scala:2703): label predicate on
@@ -133,13 +142,7 @@ final case class PropertyGraph(nodes: DataFrame, rels: DataFrame,
     * (UndirectedAllRelationshipsScan :4220). Narrow map-only union — no
     * shuffle, 2× rows, which is exactly what the reference's undirected
     * iteration does per node. */
-  def undirectedRels: DataFrame = {
-    val swapped = rels
-      .withColumnRenamed("src", "__tmp_src")
-      .withColumnRenamed("dst", "src")
-      .withColumnRenamed("__tmp_src", "dst")
-    rels.unionByName(swapped.select(rels.columns.map(col).toIndexedSeq: _*))
-  }
+  def undirectedRels: DataFrame = PropertyGraph.bothWays(rels)
 
   /** Degree per node (GetDegree rewrite, reference getDegreeRewriter.scala):
     * one shuffle, reusable; at scale this is the pre-aggregated degree table. */
@@ -160,6 +163,15 @@ object Direction {
 }
 
 object PropertyGraph {
+  /** Every row of a (…, src, dst, …) relation plus its src/dst swap. */
+  private def bothWays(df: DataFrame): DataFrame = {
+    val swapped = df
+      .withColumnRenamed("src", "__tmp_src")
+      .withColumnRenamed("dst", "src")
+      .withColumnRenamed("__tmp_src", "dst")
+    df.unionByName(swapped.select(df.columns.map(col).toIndexedSeq: _*))
+  }
+
   /** Storage column for a Cypher property KEY. A property legally named
     * `id` (`CREATE (n {id: 1})` — pervasive in the reference's acceptance
     * corpus) must not collide with the structural id column, so it stores

@@ -148,7 +148,7 @@ object Bfs {
     * except the source itself, which for minHops = 1 is reachable iff some
     * in-neighbor u of the source sits at dist <= maxHops-1 (the shortest
     * path to u is node-simple, so appending u→source is a valid trail).
-    * minHops >= 2 would need trail semantics — callers keep VarExpand.
+    * minHops >= 2 would need trail semantics — callers keep Trail.trail.
     * maxHops = Int.MaxValue walks to an empty frontier (unbounded `*`). */
   def pruningExpand(edges: DataFrame, sources: DataFrame, minHops: Int,
       maxHops: Int, edgesDeduped: Boolean = false): DataFrame = {

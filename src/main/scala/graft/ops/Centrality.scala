@@ -709,15 +709,12 @@ object Centrality {
    */
   def kTruss(edges: DataFrame, k: Int, maxIter: Int = 30): DataFrame = {
     require(k >= 3, s"k-truss needs k >= 3, got $k")
-    var e = edges.select(least(col("src"), col("dst")).as("u"),
-        greatest(col("src"), col("dst")).as("v"))
-      .filter(col("u") =!= col("v")).distinct()
-      .freshCkpt()
+    var e = Ranking.canonical(edges).freshCkpt()
     var dropped = 1L
     var it = 0
     while (dropped > 0 && it < maxIter) {
       it += 1
-      val tri = Ranking.triangles(e.select(col("u").as("src"), col("v").as("dst")))
+      val tri = Ranking.canonicalTriangles(e)
       // each triangle (a < b < c) supports edges (a,b), (b,c), (a,c)
       val support = tri.select(col("a").as("u"), col("b").as("v"))
         .unionByName(tri.select(col("b").as("u"), col("c").as("v")))
@@ -745,14 +742,11 @@ object Centrality {
    * @return (u, v, trussness) for every undirected input edge
    */
   def trussDecomposition(edges: DataFrame, maxIter: Int = 200): DataFrame = {
-    val und = edges.select(least(col("src"), col("dst")).as("u"),
-        greatest(col("src"), col("dst")).as("v"))
-      .filter(col("u") =!= col("v")).distinct()
-      .localCheckpoint(false)
+    val und = Ranking.canonical(edges).localCheckpoint(false)
     // Triangles computed ONCE (the peeling cascade recomputed them every
     // peel of every phase); melt each triangle (a<b<c) into its three
     // (edge, other-edge-1, other-edge-2) incidences.
-    val tri = Ranking.triangles(und.select(col("u").as("src"), col("v").as("dst")))
+    val tri = Ranking.canonicalTriangles(und)
     def inc(e: (Column, Column), o1: (Column, Column), o2: (Column, Column)) =
       tri.select(e._1.as("u"), e._2.as("v"), o1._1.as("p1"), o1._2.as("q1"),
         o2._1.as("p2"), o2._2.as("q2"))
@@ -799,10 +793,7 @@ object Centrality {
    * cross-check for the h-index fixpoint form.
    */
   def trussDecompositionPeeling(edges: DataFrame, maxK: Int = 30): DataFrame = {
-    var cur = edges.select(least(col("src"), col("dst")).as("u"),
-        greatest(col("src"), col("dst")).as("v"))
-      .filter(col("u") =!= col("v")).distinct()
-      .freshCkpt()
+    var cur = Ranking.canonical(edges).freshCkpt()
     val out = Seq.newBuilder[DataFrame]
     var k = 3
     var curCnt = cur.count()

@@ -61,14 +61,11 @@ object Ranking {
    *         nodes with degree ≥ 2
    */
   def clusteringCoefficients(edges: DataFrame): DataFrame = {
-    val canon = edges.filter(col("src") =!= col("dst"))
-      .select(least(col("src"), col("dst")).as("u"),
-        greatest(col("src"), col("dst")).as("v"))
-      .distinct().localCheckpoint(false)
+    val canon = canonical(edges).localCheckpoint(false)
     val deg = canon.select(col("u").as("node"))
       .unionByName(canon.select(col("v").as("node")))
       .groupBy("node").agg(count(lit(1)).as("degree"))
-    val tri = triangleCounts(canon.select(col("u").as("src"), col("v").as("dst")))
+    val tri = cornerCounts(canonicalTriangles(canon))
     deg.filter(col("degree") >= 2)
       .join(tri, Seq("node"), "left_outer")
       .select(col("node"), col("degree"),
@@ -205,26 +202,35 @@ object Ranking {
    * @param edges (src, dst) — direction ignored
    * @return (a, b, c) with a < b < c, one row per triangle
    */
-  def triangles(edges: DataFrame): DataFrame = {
-    val und = edges
-      .select(least(col("src"), col("dst")).as("u"),
+  def triangles(edges: DataFrame): DataFrame =
+    canonicalTriangles(canonical(edges).localCheckpoint(false))
+
+  /** Per-node triangle participation counts (a node appears in each of its
+    * triangles once per corner role). */
+  def triangleCounts(edges: DataFrame): DataFrame =
+    cornerCounts(triangles(edges))
+
+  /** The undirected simple edge set: (u, v) with u < v, self-loops
+    * dropped, one row per node pair. */
+  private[ops] def canonical(edges: DataFrame): DataFrame =
+    edges.select(least(col("src"), col("dst")).as("u"),
         greatest(col("src"), col("dst")).as("v"))
-      .filter(col("u") =!= col("v")).distinct().localCheckpoint(false)
+      .filter(col("u") =!= col("v")).distinct()
+
+  /** [[triangles]] over an edge set that is already [[canonical]] — read
+    * three times, so pass it materialized. */
+  private[ops] def canonicalTriangles(und: DataFrame): DataFrame = {
     val wedges = und.select(col("u").as("a"), col("v").as("b"))
       .join(und.select(col("u").as("b"), col("v").as("c")), "b")
     wedges.join(und.select(col("u").as("a"), col("v").as("c")), Seq("a", "c"))
       .select(col("a"), col("b"), col("c"))
   }
 
-  /** Per-node triangle participation counts (a node appears in each of its
-    * triangles once per corner role). */
-  def triangleCounts(edges: DataFrame): DataFrame = {
-    val t = triangles(edges)
+  private def cornerCounts(t: DataFrame): DataFrame =
     t.select(col("a").as("node"))
       .unionByName(t.select(col("b").as("node")))
       .unionByName(t.select(col("c").as("node")))
       .groupBy("node").agg(count(lit(1)).as("triangles"))
-  }
 
   /**
    * Label propagation (community detection, Raghavan et al. 2007) with
@@ -242,10 +248,7 @@ object Ranking {
    */
   def labelPropagation(edges: DataFrame, iterations: Int = 10): DataFrame = {
     require(iterations >= 1, s"bad iterations: $iterations")
-    val und = edges
-      .select(least(col("src"), col("dst")).as("u"),
-        greatest(col("src"), col("dst")).as("v"))
-      .filter(col("u") =!= col("v")).distinct()
+    val und = canonical(edges)
     val sym = und.unionByName(und.select(col("v").as("u"), col("u").as("v")))
       .localCheckpoint(false)
     val nodes = sym.select(col("u").as("node")).distinct().freshCkpt()

@@ -2,25 +2,28 @@ package graft.ops
 
 import graft.ops.Ckpt._
 
-import graft.graph.{Direction, PropertyGraph}
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /**
- * Trail — quantified path patterns `((a)-[r:T]->(b)){min,max}` with GROUP
- * VARIABLES (reference pipes/TrailPipe.scala:65, logical Trail
- * LogicalPlan.scala:3977): repeat a one-hop pattern between min and max
- * times, collecting the per-iteration nodes and relationships into arrays,
- * under Cypher's relationship-uniqueness rule (a rel may appear at most once
- * per path — "trail" semantics, front-end AddUniquenessPredicates.scala).
+ * Trail — the one variable-length expansion: `(a)-[:T*min..max]->(b)`
+ * (reference VarLengthExpandPipe.scala:83-123) and quantified path
+ * patterns `((a)-[r:T]->(b)){min,max}` with GROUP VARIABLES (reference
+ * pipes/TrailPipe.scala:65, logical Trail LogicalPlan.scala:3977) both
+ * compile to [[Trail.trail]]: repeat a one-hop join between min and max
+ * times, collecting the per-iteration relationships (and, when a path or
+ * group variable reads them, nodes) into arrays, under Cypher's
+ * relationship-uniqueness rule (a rel may appear at most once per path —
+ * "trail" semantics, front-end AddUniquenessPredicates.scala), enforced by
+ * rejecting rels already in the accumulated array (`array_contains`).
  *
- * Spark formulation: bounded unrolled join loop (same skeleton as
- * VarExpand), accumulating BOTH the rel-id array (the `r` group variable)
- * and the node-id array (start + every hop end — the `a` group is its init,
- * the `b` group its tail). Each iteration is one equi-join on the frontier
- * node; arrays hold 8-byte ids only, so the shuffle payload stays narrow
- * even at 100 TB — property hydration of group elements is a post-join
- * against the nodes table, outside the loop.
+ * Each iteration is one equi-join on the frontier node; arrays hold
+ * 8-byte ids only, so the shuffle payload stays narrow — property
+ * hydration of group elements is a post-join against the nodes table,
+ * outside the loop. The per-level relation grows multiplicatively on
+ * hub-heavy graphs; that is inherent to enumerating paths, so when only
+ * endpoints matter the planner uses Bfs.pruningExpand instead. The
+ * SHORTEST family below searches the same trails with per-state budgets.
  */
 object Trail {
 
@@ -43,109 +46,80 @@ object Trail {
       s"$what: unbounded-quantifier search still had live paths at its " +
         s"$cap-hop cap; a longer match would be missed")
 
+  /** Runaway guard of an unbounded trail: relationship uniqueness ends
+    * every trail within |rels| hops, but a clique enumerates factorially
+    * many trails long before this many rounds — not a semantic bound. */
+  private val UnboundedRoundCap = 1000
+
   /**
    * @param edges (id LONG, src LONG, dst LONG) — pre-oriented/filtered
+   *              ([[graft.graph.PropertyGraph.orientTyped]])
    * @param input rows with bound start-node column `fromCol`
-   * @param edgePredicate extra per-iteration predicate over edge columns
+   * @param max   `Some(max)`: a lazy plan unrolled to `max` hops (at most
+   *              30); `None`: iterate to an EMPTY frontier, the way the
+   *              reference terminates an unbounded VarLengthExpand — the
+   *              plan cannot encode an unknown depth, so each round is
+   *              checkpointed and counted on the driver
+   * @param nodesAlias the node sequence column, or None to carry only the
+   *              rel array (a var-length rel whose nodes nothing reads)
+   * @param checkpointEvery bounded form only: deep unrolls (8+ self-joins)
+   *              spend more time in analysis/codegen than in rows, so an
+   *              occasional lazy lineage reset keeps the plan the optimizer
+   *              sees shallow; 0 = never (short unrolls fuse better)
    * @return input + `endAlias` LONG, `nodesAlias` ARRAY<LONG> (length
    *         hops+1, starts with the start node), `relsAlias` ARRAY<LONG>,
-   *         `hopsAlias` INT — one row per distinct trail of length
-   *         in [min, max]
+   *         `hopsAlias` INT — one row per distinct trail of length in
+   *         [min, max]
    */
   def trail(edges: DataFrame, input: DataFrame, fromCol: String,
-      min: Int, max: Int,
+      min: Int, max: Option[Int],
       endAlias: String = "end", relsAlias: String = "trail_rels",
-      nodesAlias: String = "trail_nodes", hopsAlias: String = "hops",
-      edgePredicate: Option[Column] = None,
+      nodesAlias: Option[String] = Some("trail_nodes"), hopsAlias: String = "hops",
       checkpointEvery: Int = 0): DataFrame = {
-    require(min >= 0 && max >= min && max <= 30,
-      s"trail bounds out of range: $min..$max")
-    val e0 = edges.select(col("id").as("__er"), col("src").as("__es"), col("dst").as("__ed"))
-    val e = edgePredicate.fold(e0)(p => edges.filter(p)
-      .select(col("id").as("__er"), col("src").as("__es"), col("dst").as("__ed")))
-
-    var level = input
-      .withColumn(endAlias, col(fromCol))
-      .withColumn(nodesAlias, array(col(fromCol)))
+    require(min >= 0 && max.forall(m => m >= min && m <= 30),
+      s"trail bounds out of range: $min..${max.getOrElse("")}")
+    val e0 = edges.select(col("src").as("__es"), col("dst").as("__ed"),
+      col("id").as("__er"))
+    val e = if (max.isEmpty) e0.localCheckpoint(false) else e0
+    val start = input.withColumn(endAlias, col(fromCol))
+    val level0 = nodesAlias.fold(start)(n => start.withColumn(n, array(col(fromCol))))
       .withColumn(relsAlias, array().cast("array<long>"))
-    val out = Seq.newBuilder[DataFrame]
-    out += level.filter(lit(false)).withColumn(hopsAlias, lit(0))
-    if (min == 0) out += level.withColumn(hopsAlias, lit(0))
-
-    var k = 1
-    while (k <= max) {
-      level = level
+    // the one hop step: extend every trail by an edge it has not used
+    def hop(level: DataFrame): DataFrame = {
+      val step = level
         .join(e, col(endAlias) === col("__es") &&
           !array_contains(col(relsAlias), col("__er")))
         .withColumn(relsAlias, concat(col(relsAlias), array(col("__er"))))
-        .withColumn(nodesAlias, concat(col(nodesAlias), array(col("__ed"))))
+      nodesAlias.fold(step)(n => step.withColumn(n, concat(col(n), array(col("__ed")))))
         .withColumn(endAlias, col("__ed"))
         .drop("__es", "__ed", "__er")
-      // deep unrolls (8+ self-joins) spend more time in analysis/codegen
-      // than in rows — an occasional lazy lineage reset keeps the plan the
-      // optimizer sees shallow; off by default (short unrolls fuse better)
-      if (checkpointEvery > 0 && k % checkpointEvery == 0 && k < max)
-        level = level.localCheckpoint(false)
-      if (k >= min) out += level.withColumn(hopsAlias, lit(k))
-      k += 1
     }
-    out.result().reduce(_ unionByName _)
-  }
 
-  /**
-   * Unbounded trail — `[*]` / `[*2..]` WITH path enumeration: iterate the
-   * one-hop expansion to an EMPTY frontier, exactly how the reference
-   * terminates unbounded VarLengthExpand (relationship uniqueness: every
-   * path may use each rel at most once, so the frontier must die within
-   * |rels| rounds; in practice within the graph's longest trail). Driver
-   * loop with per-round checkpoints instead of plan-time unrolling —
-   * the plan cannot encode an unknown depth. Same output contract as
-   * trail(). The roundCap is a runaway guard for pathological inputs
-   * (a clique enumerates factorially many trails long before 1000
-   * rounds), not a semantic bound.
-   */
-  def trailToExhaustion(edges: DataFrame, input: DataFrame, fromCol: String,
-      min: Int,
-      endAlias: String = "end", relsAlias: String = "trail_rels",
-      nodesAlias: String = "trail_nodes", hopsAlias: String = "hops",
-      edgePredicate: Option[Column] = None, roundCap: Int = 1000): DataFrame = {
-    require(min >= 0, s"trail bounds out of range: $min..")
-    val e0 = edges.select(col("id").as("__er"), col("src").as("__es"),
-      col("dst").as("__ed"))
-    val e = edgePredicate.fold(e0)(p => edges.filter(p)
-      .select(col("id").as("__er"), col("src").as("__es"), col("dst").as("__ed")))
-      .localCheckpoint(false)
-
-    var level = input
-      .withColumn(endAlias, col(fromCol))
-      .withColumn(nodesAlias, array(col(fromCol)))
-      .withColumn(relsAlias, array().cast("array<long>"))
-      .freshCkpt()
+    var level = if (max.isEmpty) level0.freshCkpt() else level0
+    var alive = max.isDefined || level.count() > 0
     val out = Seq.newBuilder[DataFrame]
-    // zero-row seed with the output schema: an empty input frontier, or a
-    // `[*n..]` on a graph whose longest trail is < n, must return zero
-    // rows — without the seed the final reduce would be an empty.reduce
-    out += level.filter(lit(false)).withColumn(hopsAlias, lit(0))
     if (min == 0) out += level.withColumn(hopsAlias, lit(0))
     var k = 1
-    var levelCnt = level.count()
-    while (levelCnt > 0 && k <= roundCap) {
-      level = level
-        .join(e, col(endAlias) === col("__es") &&
-          !array_contains(col(relsAlias), col("__er")))
-        .withColumn(relsAlias, concat(col(relsAlias), array(col("__er"))))
-        .withColumn(nodesAlias, concat(col(nodesAlias), array(col("__ed"))))
-        .withColumn(endAlias, col("__ed"))
-        .drop("__es", "__ed", "__er")
-        .freshCkpt()
-      levelCnt = level.count()
-      if (levelCnt > 0 && k >= min) out += level.withColumn(hopsAlias, lit(k))
+    while (alive && k <= max.getOrElse(UnboundedRoundCap)) {
+      level = hop(level)
+      max match {
+        case Some(m) =>
+          if (checkpointEvery > 0 && k % checkpointEvery == 0 && k < m)
+            level = level.localCheckpoint(false)
+        case None =>
+          level = level.freshCkpt()
+          alive = level.count() > 0
+      }
+      if (alive && k >= min) out += level.withColumn(hopsAlias, lit(k))
       k += 1
     }
-    require(levelCnt == 0,
-      s"unbounded trail still expanding after $roundCap rounds — " +
+    require(!alive || max.isDefined,
+      s"unbounded trail still expanding after $UnboundedRoundCap rounds — " +
         "bound the pattern explicitly")
-    out.result().reduce(_ unionByName _)
+    // zero-row fallback with the output schema: an empty input frontier,
+    // or a `[*n..]` on a graph whose longest trail is < n, returns no rows
+    out.result().reduceOption(_ unionByName _)
+      .getOrElse(level0.filter(lit(false)).withColumn(hopsAlias, lit(0)))
   }
 
   /**
@@ -664,17 +638,5 @@ object Trail {
       }
     }
     Rounds.toDf(sources.sparkSession, out.result)
-  }
-
-  /** PropertyGraph convenience: orient + type-filter the rels table. */
-  def trail(g: PropertyGraph, input: DataFrame, fromCol: String,
-      relTypes: Seq[String], direction: Direction, min: Int, max: Int): DataFrame = {
-    val r0 = direction match {
-      case Direction.Out  => g.topology
-      case Direction.In   => g.topology.select(col("id"), col("dst").as("src"), col("src").as("dst"), col("type"))
-      case Direction.Both => g.undirectedTopo
-    }
-    val filtered = if (relTypes.isEmpty) r0 else r0.filter(col("type").isin(relTypes: _*))
-    trail(filtered.select("id", "src", "dst"), input, fromCol, min, max)
   }
 }

@@ -1,13 +1,13 @@
 package graft.queries
 
 import graft.graph.{Direction, TpchGraph}
-import graft.ops.{Bfs, Centrality, Expand, Ranking, SpanningTree, Trail, Triadic, VarExpand, Walks}
+import graft.ops.{Bfs, Centrality, Expand, Ranking, SpanningTree, Trail, Triadic, Walks}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /**
  * Graph-operator coverage (SURVEY §2.3): these run through the engine's
- * actual traversal operators (Expand/VarExpand/Bfs/Triadic over the
+ * actual traversal operators (Expand/Trail/Bfs/Triadic over the
  * PropertyGraph projection of the driver tables), while the oracle
  * re-derives the same answer relationally in DuckDB — so the oracle is an
  * independent implementation, not a restatement.
@@ -48,7 +48,8 @@ object GraphQueries {
       Some("""SELECT n_name AS nation, r_name AS region
              |FROM nation JOIN region ON n_regionkey = r_regionkey""".stripMargin)),
 
-    // VarExpand :2057 — (c:Customer)-[*1..2]->(x) over FROM/IN_REGION edges:
+    // VarExpand :2057 — (c:Customer)-[*1..2]->(x) over FROM/IN_REGION edges
+    // (Trail.trail without a node array, as the planner compiles it):
     // depth 1 reaches the nation, depth 2 the region. Exercises the bounded
     // iterative-join loop incl. rel-uniqueness bookkeeping.
     QueryDef("q_var_expand",
@@ -56,8 +57,8 @@ object GraphQueries {
         val g = TpchGraph.load(s, d)
         val start = g.nodesByLabel("Customer").filter(col("key") < 200)
           .select(col("id").as("c"), col("key").as("c_key"))
-        val paths = VarExpand.varExpand(g, start, "c",
-          relTypes = Seq("FROM", "IN_REGION"), Direction.Out, minHops = 1, maxHops = 2)
+        val paths = Trail.trail(g.orientTyped(Seq("FROM", "IN_REGION"), Direction.Out),
+          start, "c", min = 1, max = Some(2), nodesAlias = None, hopsAlias = "depth")
         val names = g.nodes.select(col("id").as("end"), col("name"))
         paths.join(names, "end")
           .select(col("c_key"), col("name").as("reached"), col("depth"))
@@ -71,7 +72,7 @@ object GraphQueries {
              |JOIN region ON n_regionkey = r_regionkey
              |WHERE c_custkey < 200""".stripMargin)),
 
-    // VarExpand with NO type filter — the default Cypher `(c)-[*1..2]->(x)`
+    // Var-length expand with NO type filter — the default Cypher `(c)-[*1..2]->(x)`
     // form (regression coverage for the any-type edge construction). Counts
     // distinct paths per (customer, depth).
     QueryDef("q_var_expand_anytype",
@@ -79,8 +80,8 @@ object GraphQueries {
         val g = TpchGraph.load(s, d)
         val start = g.nodesByLabel("Customer").filter(col("key") < 100)
           .select(col("id").as("c"), col("key").as("c_key"))
-        VarExpand.varExpand(g, start, "c",
-          relTypes = Seq.empty, Direction.Out, minHops = 1, maxHops = 2)
+        Trail.trail(g.orientTyped(Seq.empty, Direction.Out), start, "c",
+          min = 1, max = Some(2), nodesAlias = None, hopsAlias = "depth")
           .groupBy(col("c_key"), col("depth")).agg(count(lit(1)).as("n_paths"))
       },
       // depth1 = nation + orders; depth2 = region + (CONTAINS + SUPPLIED_BY)
@@ -163,7 +164,7 @@ object GraphQueries {
           .unionByName(nation.select((col("key") + 2000).as("id"), col("key").as("src"),
             ((col("key") + 24) % 25).as("dst")))
         val starts = nation.filter(col("key") < 5).select(col("key").as("start"))
-        Trail.trail(edges, starts, "start", min = 1, max = 4)
+        Trail.trail(edges, starts, "start", min = 1, max = Some(4))
           .select(col("start"), col("end"), col("hops"),
             array_join(col("trail_rels"), ",").as("path"))
       },

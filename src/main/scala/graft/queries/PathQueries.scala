@@ -53,7 +53,7 @@ object PathQueries {
           .select(col("b.ok").as("id"), col("a.ok").as("src"), col("b.ok").as("dst"))
         val starts = seq0.filter(col("rn") === 1)
           .select(col("o_custkey").as("custkey"), col("ok").as("start"))
-        Trail.trail(edges, starts, "start", min = 1, max = 3)
+        Trail.trail(edges, starts, "start", min = 1, max = Some(3))
           .select(col("custkey"), array_join(col("trail_nodes"), ",").as("path"), col("hops"))
       },
       Some("""WITH seq AS (SELECT o_custkey, o_orderkey,

@@ -330,6 +330,20 @@ class CypherSpec extends AnyFunSuite {
     assert(rows.toSeq == Seq(("Carol", 1), ("Dave", 2)))
   }
 
+  test("shortestPath walks only rels matching the inline property map") {
+    // only Alice->Bob is since 2015: Carol (direct since 2020) and Dave
+    // are unreachable over matching rels
+    def reached(fn: String, ret: String) = run(
+      s"""MATCH (a {name: 'Alice'})
+         |MATCH p = $fn((a)-[:KNOWS*..3 {since: 2015}]->(x))
+         |RETURN x.name AS name, $ret AS v""".stripMargin)
+      .collect().map(r => (r.getString(0), r.get(1).toString)).toSeq
+    assert(reached("shortestPath", "length(p)") == Seq(("Bob", "1")))
+    assert(reached("allShortestPaths", "length(p)") == Seq(("Bob", "1")))
+    assert(reached("shortestPath", "[r IN relationships(p) | r.since]") ==
+      Seq(("Bob", "ArraySeq(2015)")))
+  }
+
   test("shortestPath with both endpoints unbound seeds from AllNodesScan") {
     val rows = run(
       """MATCH p = shortestPath((a)-[:KNOWS*2..6]->(b))
@@ -848,8 +862,8 @@ class CypherSpec extends AnyFunSuite {
 
   test("path-enumerating unbounded * with a rel variable runs to exhaustion") {
     // rs binds the rel list, so this can't take the endpoints-only pruning
-    // rewrite — it enumerates trails until the frontier dies (was a
-    // compile-time rejection before trailToExhaustion)
+    // rewrite — it enumerates trails until the frontier dies (Trail.trail
+    // with no upper bound)
     val rows = run(
       "MATCH (a {name: 'Alice'})-[rs:KNOWS*]->(b) " +
         "RETURN b.name AS n, size(rs) AS len ORDER BY n, len")

@@ -1,12 +1,12 @@
 package graft
 
 import graft.graph.Direction
-import graft.ops.{Bfs, VarExpand}
+import graft.ops.{Bfs, Trail}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Golden tests for VarExpand / Bfs — including the any-rel-type VarExpand
-  * path (the default Cypher `[*1..2]` form) and the O(log n) round bound of
+/** Golden tests for var-length expand (Trail.trail) / Bfs — including the
+  * any-rel-type path (the default Cypher `[*1..2]` form) and the O(log n) round bound of
   * the star-contraction connected components. */
 class GraphOpsSpec extends AnyFunSuite {
   lazy val spark = TestSession.spark
@@ -15,8 +15,8 @@ class GraphOpsSpec extends AnyFunSuite {
   test("varExpand with empty relTypes (any type) traverses all edges") {
     val g = GraphFixtures.chainGraph(spark, 4) // 0->1->2->3, type T
     val start = g.nodes.filter(col("id") === 0L).select(col("id").as("a"))
-    val out = VarExpand.varExpand(g, start, "a",
-      relTypes = Seq.empty, Direction.Out, minHops = 1, maxHops = 2)
+    val out = Trail.trail(g.orientTyped(Seq.empty, Direction.Out), start, "a",
+      1, Some(2), relsAlias = "rels", nodesAlias = None, hopsAlias = "depth")
     val reached = out.select("end", "depth").collect()
       .map(r => (r.getLong(0), r.getInt(1))).toSet
     assert(reached === Set((1L, 1), (2L, 2)))
@@ -25,7 +25,8 @@ class GraphOpsSpec extends AnyFunSuite {
   test("varExpand minHops=0 includes the zero-length path") {
     val g = GraphFixtures.chainGraph(spark, 3)
     val start = g.nodes.filter(col("id") === 0L).select(col("id").as("a"))
-    val out = VarExpand.varExpand(g, start, "a", Seq("T"), Direction.Out, 0, 1)
+    val out = Trail.trail(g.orientTyped(Seq("T"), Direction.Out), start, "a",
+      0, Some(1), relsAlias = "rels", nodesAlias = None, hopsAlias = "depth")
     val reached = out.select("end", "depth").collect()
       .map(r => (r.getLong(0), r.getInt(1))).toSet
     assert(reached === Set((0L, 0), (1L, 1)))
@@ -38,7 +39,8 @@ class GraphOpsSpec extends AnyFunSuite {
       Seq((0L, Seq("N"), "a"), (1L, Seq("N"), "b")),
       Seq((100L, 0L, 1L, "T"), (101L, 1L, 0L, "T")))
     val start = g.nodes.filter(col("id") === 0L).select(col("id").as("a"))
-    val out = VarExpand.varExpand(g, start, "a", Seq("T"), Direction.Both, 1, 2)
+    val out = Trail.trail(g.orientTyped(Seq("T"), Direction.Both), start, "a",
+      1, Some(2), relsAlias = "rels", nodesAlias = None, hopsAlias = "depth")
     // depth1: 0->1 via 100, 0->1 via 101 reversed (Both sees both rels)
     // depth2: each continues over the *other* rel back to 0; never the same rel twice
     val paths = out.select("rels").collect().map(_.getSeq[Long](0))

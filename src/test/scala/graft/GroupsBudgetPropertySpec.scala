@@ -13,39 +13,20 @@ import org.scalatest.funsuite.AnyFunSuite
 class GroupsBudgetPropertySpec extends AnyFunSuite {
   private lazy val spark = TestSession.spark
 
-  /** all relationship-unique trails source→target with ≤ maxDepth rels */
-  private def exhaustive(edges: Seq[(Long, Long, Long)], source: Long,
-      maxDepth: Int): Seq[(Long, Int, Vector[Long])] = {
-    val adj = edges.groupBy(_._2) // src -> edges
-    val out = Seq.newBuilder[(Long, Int, Vector[Long])]
-    def dfs(node: Long, used: Vector[Long]): Unit = {
-      if (used.nonEmpty) out += ((node, used.length, used))
-      if (used.length < maxDepth)
-        adj.getOrElse(node, Seq.empty).foreach { case (id, _, dst) =>
-          if (!used.contains(id)) dfs(dst, used :+ id)
-        }
-    }
-    dfs(source, Vector.empty)
-    out.result()
-  }
-
   test("groups equal exhaustive k smallest length-groups on random cyclic graphs") {
     val spark2 = spark
     import spark2.implicits._
     val misses = Seq.newBuilder[String]
     for (seed <- 0 until 12) {
       val rnd = new scala.util.Random(seed)
-      val n = 4 + rnd.nextInt(4) // 4..7 nodes
-      val m = n + 2 + rnd.nextInt(2 * n) // enough edges to force cycles
-      val edges = (0 until m).map(i =>
-        (100L + i, rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
+      val (n, edges) = TrailOracle.cyclicMultigraph(rnd)
       val k = 1 + rnd.nextInt(3)
       val maxDepth = 6
       val sources = Seq(0L)
       val targets = (0L until n.toLong)
 
       val truth: Map[(Long, Long), Seq[(Int, Set[Vector[Long]])]] = {
-        val all = exhaustive(edges, 0L, maxDepth)
+        val all = TrailOracle.trails(edges, 0L, maxDepth).filter(_._2 > 0)
         all.groupBy(_._1).map { case (tgt, rows) =>
           val byLen = rows.groupBy(_._2).toSeq.sortBy(_._1).take(k)
             .map { case (len, rs) => (len, rs.map(_._3).toSet) }

@@ -53,7 +53,7 @@ class PlanAuditSpec extends AnyFunSuite {
     val plan = executedPlan(
       """MATCH (c:Customer)-[*1..2]->(n:Part)
         |WHERE c.key < 50 RETURN DISTINCT n.key AS pkey""".stripMargin)
-    // VarExpand's per-path uniqueness filter is array_contains over the
+    // trail enumeration's per-path uniqueness filter is array_contains over the
     // accumulated rel array; the pruning rewrite must not carry paths at all
     assert(!plan.contains("array_contains"),
       s"var-length expansion still enumerates paths:\n${plan.take(3000)}")
@@ -65,6 +65,28 @@ class PlanAuditSpec extends AnyFunSuite {
       """MATCH (c:Customer)-[rs*1..2]->(n:Part)
         |WHERE c.key < 50 RETURN DISTINCT n.key AS pkey, size(rs) AS len""".stripMargin)
     assert(plan.contains("array_contains"), "rel-reading var-length lost its paths")
+  }
+
+  test("unnamed var-length rel list carries one array column, no node array") {
+    import org.apache.spark.sql.catalyst.expressions.ArrayContains
+    import org.apache.spark.sql.catalyst.plans.logical.Join
+    import org.apache.spark.sql.types.ArrayType
+    val plan = Cypher.run(spark, g,
+      """MATCH (c:Customer)-[rs*1..2]->(n)
+        |WHERE c.key < 50 RETURN c.key AS ckey, size(rs) AS len""".stripMargin)
+      .queryExecution.optimizedPlan
+    // the second hop checks rel uniqueness against the carried array (the
+    // first hop's check folds away against the empty start array); no
+    // join anywhere carries a second array
+    val hops = plan.collect {
+      case j: Join if j.condition.exists(_.exists(_.isInstanceOf[ArrayContains])) => j
+    }
+    assert(hops.nonEmpty, s"no rel-uniqueness hop join:\n$plan")
+    def arrays(j: Join) =
+      j.left.output.filter(_.dataType.isInstanceOf[ArrayType]).map(_.name)
+    hops.foreach(j => assert(arrays(j).size == 1, s"hop carries ${arrays(j)}"))
+    plan.collect { case j: Join => j }.foreach(j =>
+      assert(arrays(j).size <= 1, s"join carries ${arrays(j)}, want the rel list only"))
   }
 
   test("relationship property range predicate pushes down to the rel scan") {

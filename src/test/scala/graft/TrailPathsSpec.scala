@@ -19,7 +19,7 @@ class TrailPathsSpec extends AnyFunSuite {
 
   test("trail on a chain collects node and rel groups per iteration count") {
     val g = GraphFixtures.chainGraph(spark, 6)
-    val rows = Trail.trail(g.rels.select("id", "src", "dst"), starts(0L), "start", 1, 3)
+    val rows = Trail.trail(g.rels.select("id", "src", "dst"), starts(0L), "start", 1, Some(3))
       .select(col("hops"), col("end"),
         array_join(col("trail_nodes"), ",").as("ns"),
         array_join(col("trail_rels"), ",").as("rs"))
@@ -33,7 +33,7 @@ class TrailPathsSpec extends AnyFunSuite {
 
   test("trail min=0 emits the zero-length path") {
     val g = GraphFixtures.chainGraph(spark, 3)
-    val zero = Trail.trail(g.rels.select("id", "src", "dst"), starts(0L), "start", 0, 1)
+    val zero = Trail.trail(g.rels.select("id", "src", "dst"), starts(0L), "start", 0, Some(1))
       .filter(col("hops") === 0).collect()
     assert(zero.length == 1 && zero(0).getAs[Long]("end") == 0L &&
       zero(0).getSeq[Long](zero(0).fieldIndex("trail_rels")).isEmpty)
@@ -41,11 +41,49 @@ class TrailPathsSpec extends AnyFunSuite {
 
   test("trail enforces relationship uniqueness (circle terminates)") {
     val g = GraphFixtures.circleGraph(spark, 4)
-    val rows = Trail.trail(g.rels.select("id", "src", "dst"), starts(0L), "start", 1, 8)
+    val rows = Trail.trail(g.rels.select("id", "src", "dst"), starts(0L), "start", 1, Some(8))
       .select("hops").collect().map(_.getInt(0)).sorted
     // a 4-circle admits trails of 1..4 hops from node 0, then every rel is
     // used — levels 5..8 must be empty
     assert(rows.toSeq == Seq(1, 2, 3, 4))
+  }
+
+  test("trail equals exhaustive enumeration on random cyclic multigraphs") {
+    import graft.graph.Direction
+    val bounds = Seq((0, Some(1)), (1, Some(3)), (2, Some(2)), (2, None))
+    for (seed <- 0 until 4) {
+      val (n, all) = TrailOracle.cyclicMultigraph(new scala.util.Random(seed))
+      val nodes = (0L until n).map(i => (i, Seq("N"), s"n$i"))
+      for ((min, max) <- bounds) {
+        // exhaustive enumeration of every unbounded trail stays small only
+        // on a prefix of the edge list
+        val edges = if (max.isEmpty) all.take(8) else all
+        val g = GraphFixtures.graph(spark, nodes,
+          edges.map { case (id, s, d) => (id, s, d, "T") })
+        val reversed = edges.map { case (id, s, d) => (id, d, s) }
+        for ((dir, oriented) <- Seq(Direction.Out -> edges,
+            Direction.In -> reversed, Direction.Both -> (edges ++ reversed))) {
+          val want = (0L until n).flatMap(s =>
+            TrailOracle.trails(oriented, s, max.getOrElse(edges.size))
+              .filter(_._2 >= min)
+              .map { case (end, hops, rs, ns) => (s, end, hops, rs, ns) })
+          for (withNodes <- Seq(true, false)) {
+            val df = Trail.trail(g.orientTyped(Seq("T"), dir),
+              starts(0L until n: _*), "start", min, max,
+              nodesAlias = if (withNodes) Some("ns") else None)
+            assert(df.columns.toSeq == Seq("start", "end") ++
+              (if (withNodes) Seq("ns") else Nil) ++ Seq("trail_rels", "hops"))
+            val got = df.collect().map(r => (r.getAs[Long]("start"), r.getAs[Long]("end"),
+                r.getAs[Int]("hops"), r.getAs[Seq[Long]]("trail_rels").toVector,
+                if (withNodes) r.getAs[Seq[Long]]("ns").toVector
+                else Vector.empty[Long]))
+            val expect = want.map(t => if (withNodes) t else t.copy(_5 = Vector.empty[Long]))
+            assert(got.map(_.toString).sorted.toSeq == expect.map(_.toString).sorted,
+              s"seed=$seed dir=$dir bounds=$min..${max.getOrElse("")} nodes=$withNodes")
+          }
+        }
+      }
+    }
   }
 
   private def weightedEdges(rows: Seq[(Long, Long, Long, Double)]) = {

@@ -1,12 +1,12 @@
 package graft
 
 import graft.graph.Direction
-import graft.ops.{Bfs, VarExpand}
+import graft.ops.{Bfs, Trail}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** VarExpand / pruning BFS / shortest-path / connected-components golden
-  * tests on chain, circle and grid fixtures (reference
+/** Var-length expand (Trail.trail without a node array) / pruning BFS /
+  * shortest-path / connected-components golden tests on chain, circle and grid fixtures (reference
   * VarLengthExpandTestBase, PruningVarLengthExpandTestBase shapes). */
 class VarExpandBfsSpec extends AnyFunSuite {
   lazy val spark = TestSession.spark
@@ -14,7 +14,8 @@ class VarExpandBfsSpec extends AnyFunSuite {
   test("varExpand enumerates bounded paths on a chain") {
     val g = GraphFixtures.chainGraph(spark, 5) // 0->1->2->3->4
     val start = spark.createDataFrame(Seq(Tuple1(0L))).toDF("s")
-    val out = VarExpand.varExpand(g, start, "s", Seq("T"), Direction.Out, 1, 3)
+    val out = Trail.trail(g.orientTyped(Seq("T"), Direction.Out), start, "s",
+      1, Some(3), relsAlias = "rels", nodesAlias = None, hopsAlias = "depth")
     // from 0: depth1 -> 1, depth2 -> 2, depth3 -> 3
     assert(out.select("end", "depth").collect().map(r => (r.getLong(0), r.getInt(1))).toSet ===
       Set((1L, 1), (2L, 2), (3L, 3)))
@@ -23,7 +24,8 @@ class VarExpandBfsSpec extends AnyFunSuite {
   test("varExpand minHops=0 includes the start node") {
     val g = GraphFixtures.chainGraph(spark, 3)
     val start = spark.createDataFrame(Seq(Tuple1(0L))).toDF("s")
-    val out = VarExpand.varExpand(g, start, "s", Seq("T"), Direction.Out, 0, 1)
+    val out = Trail.trail(g.orientTyped(Seq("T"), Direction.Out), start, "s",
+      0, Some(1), relsAlias = "rels", nodesAlias = None, hopsAlias = "depth")
     assert(out.select("end", "depth").collect().map(r => (r.getLong(0), r.getInt(1))).toSet ===
       Set((0L, 0), (1L, 1)))
   }
@@ -34,7 +36,8 @@ class VarExpandBfsSpec extends AnyFunSuite {
     // within one path (AddUniquenessPredicates semantics).
     val g = GraphFixtures.circleGraph(spark, 3)
     val start = spark.createDataFrame(Seq(Tuple1(0L))).toDF("s")
-    val out = VarExpand.varExpand(g, start, "s", Seq("T"), Direction.Both, 2, 2)
+    val out = Trail.trail(g.orientTyped(Seq("T"), Direction.Both), start, "s",
+      2, Some(2), relsAlias = "rels", nodesAlias = None, hopsAlias = "depth")
     val ends = out.select("end").collect().map(_.getLong(0)).sorted
     // 2-hop paths from 0 without reusing a rel: 0->1->2 and 0<-2<-1 — never
     // back to 0 or bounce-back to itself via the same rel
@@ -47,7 +50,8 @@ class VarExpandBfsSpec extends AnyFunSuite {
       Seq((0L, Seq("N"), "a"), (1L, Seq("N"), "b")),
       Seq((100L, 0L, 1L, "T"), (101L, 0L, 1L, "T")))
     val start = spark.createDataFrame(Seq(Tuple1(0L))).toDF("s")
-    val out = VarExpand.varExpand(g, start, "s", Seq("T"), Direction.Both, 2, 2)
+    val out = Trail.trail(g.orientTyped(Seq("T"), Direction.Both), start, "s",
+      2, Some(2), relsAlias = "rels", nodesAlias = None, hopsAlias = "depth")
     // 0-[100]-1-[101]-0 and 0-[101]-1-[100]-0: both end at 0, length 2
     assert(out.select("end").collect().map(_.getLong(0)).toSeq === Seq(0L, 0L))
   }
