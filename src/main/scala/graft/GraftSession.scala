@@ -47,9 +47,16 @@ object GraftSession {
       .config("spark.ui.retainedJobs", "100")
       .config("spark.ui.retainedStages", "100")
       .config("spark.ui.retainedTasks", "1000")
-      // engine extensions: native expressions (unicode_normalize, …)
+      // Spark's codegen cache keeps 100 classes by default; one block of
+      // the 8 tpch_read templates compiles ~260, so every template's
+      // classes were evicted before it ran again. 2000 holds the workload.
+      // A static conf: JVM-wide, read once when codegen is first used.
+      .config("spark.sql.codegen.cache.maxEntries", "2000")
+      // engine extensions: native expressions (unicode_normalize, …) and
+      // filter constants the generated code reads by reference
       .withExtensions(graft.functions.expressions.NormalizeUnicode.inject)
       .withExtensions(graft.functions.expressions.IntArrayMaxAgg.inject)
+      .withExtensions(graft.functions.expressions.ReferencedLiteral.inject)
 
   /** events.ts read under nanosAsLong is LONG nanos → TimestampType (µs).
     * Integer division (`div`), not `/`: epoch nanos exceed double's 2^53

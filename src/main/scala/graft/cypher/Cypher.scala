@@ -8,10 +8,23 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
  * PropertyGraph, get back a DataFrame (lazily planned — nothing executes
  * until an action). The Spark-native counterpart of the reference's
  * GraphDatabaseService#execute path (community/kernel/.../GraphDatabaseAPI →
- * cypher compiler); here parse → plan happen on the driver in milliseconds
- * and the returned DataFrame carries the whole declarative plan, so Catalyst
- * optimizes across the Cypher/DataFrame boundary (filter pushdown into the
- * node/rel parquet scans, broadcast of small sides, AQE re-planning).
+ * cypher compiler); here parse → plan happen on the driver and the returned
+ * DataFrame carries the whole declarative plan, so Catalyst optimizes across
+ * the Cypher/DataFrame boundary (filter pushdown into the node/rel parquet
+ * scans, broadcast of small sides, AQE re-planning).
+ *
+ * What is done once rather than per request:
+ *  - per query text: the parse;
+ *  - per (text, parameter values, snapshot): the planned DataFrame;
+ *  - per graph snapshot: the count store (`PropertyGraph.stats`, read by
+ *    the planner's scan-side choice) and the warm topology;
+ *  - per template: the generated code — comparison constants in filters
+ *    are read by reference (`ReferencedLiteral`), so a new parameter value
+ *    reuses the classes compiled for the first one.
+ * Planning a new parameter value still builds a fresh DataFrame and runs
+ * Catalyst on it, and `shortestPath` still runs its BFS rounds at plan
+ * time (about 1 s of planning on the benchmark's tpch_read `shortest`
+ * template; ROADMAP #5).
  *
  * Supported subset: MATCH (incl. OPTIONAL, multi-pattern, var-length,
  * undirected), WHERE (incl. EXISTS{} / NOT EXISTS{} pattern predicates),
@@ -116,13 +129,17 @@ object Cypher {
       case _ => ()
     }
     val key = (query, params)
+    // the hit is counted inside the lookup's lock: concurrent clients
+    // would otherwise lose increments of the volatile counter
     val cached = planCache.synchronized {
-      Option(planCache.get(key)).collect {
+      val hit = Option(planCache.get(key)).collect {
         case (ref, df) if ref.get != null && (ref.get eq graph) => df
       }
+      if (hit.isDefined) planCacheHits += 1
+      hit
     }
     cached match {
-      case Some(df) => planCacheHits += 1; df
+      case Some(df) => df
       case None =>
         val df = Planner.plan(spark, graph, parse(query), params)
         planCache.synchronized {

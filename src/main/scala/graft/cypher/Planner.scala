@@ -88,10 +88,6 @@ object Planner {
       * group slots): exempt from the pairwise uniqueness predicates — they
       * overlap their source by construction */
     val relUniqExempt = scala.collection.mutable.Set.empty[String]
-    /** count-store label cardinalities, computed at most once per plan —
-      * drives scan-side selection for doubly-unbound labeled paths */
-    lazy val labelCounts: Map[String, Long] =
-      graft.graph.GraphStats.compute(g).labelCountMap
   }
 
   def plan(spark: SparkSession, g: PropertyGraph, query: Query,
@@ -3842,7 +3838,7 @@ object Planner {
         def score(n: NodePattern): Double =
           (if (n.labels.isEmpty) Double.MaxValue
            else n.labels.map(x =>
-             ctx.labelCounts.getOrElse(x, Long.MaxValue)).min.toDouble) *
+             ctx.g.stats.labelCountMap.getOrElse(x, Long.MaxValue)).min.toDouble) *
             math.pow(0.1, n.props.size)
         val fl = p0.first.labels
         val ll = p0.hops.last._2.labels
@@ -4642,8 +4638,10 @@ object Planner {
         val edges0 = rel.dir match {
           case Out  => orient(col("src"), col("dst"))
           case In   => orient(col("dst"), col("src"))
+          // a self-loop matches an undirected hop once
           case Both => orient(col("src"), col("dst"))
-            .unionByName(orient(col("dst"), col("src")))
+            .unionByName(orient(col("dst"), col("src"))
+              .filter(col("__from") =!= col("__to")))
         }
         // MultiNodeIndexSeek shape (reference :multi-seek): an inline
         // property SEEK on the unbound far end prunes the rel relation

@@ -1,6 +1,6 @@
 package graft.functions
 
-import graft.graph.{GraphStats, PropertyGraph}
+import graft.graph.PropertyGraph
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -89,7 +89,7 @@ object Procedures {
   /** db.schema.visualization: the (srcLabel)-[type]->(dstLabel) summary
     * graph — exactly the count-store triples. */
   register("db.schema.visualization", (_, g, _) =>
-    GraphStats.compute(g).tripleCounts
+    g.stats.tripleCounts
       .select(col("srcLabel"), col("type"), col("dstLabel"), col("cnt")))
 
   /** db.awaitIndex(es): index population is synchronous in a columnar

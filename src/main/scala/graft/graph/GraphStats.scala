@@ -11,9 +11,10 @@ import org.apache.spark.sql.functions._
  *   - NodeCountFromCountStore / RelationshipCountFromCountStore (O(1) counts)
  *   - the pattern-join orderer's cardinality estimates (SURVEY §4.2)
  *
- * At 100 TB these stay small (|labels| × |types| rows), are recomputed per
- * load as one pass each, and are broadcast to the planner — the same shape as
- * the reference's model, distributed.
+ * At 100 TB these stay small (|labels| × |types| rows), are computed once
+ * per graph snapshot (`PropertyGraph.stats`) as one pass each, and are
+ * broadcast to the planner — the same shape as the reference's model,
+ * distributed.
  */
 final case class GraphStats(labelCounts: DataFrame, tripleCounts: DataFrame) {
   /** label -> node count, collected (tiny). */

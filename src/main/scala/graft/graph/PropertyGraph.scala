@@ -39,6 +39,15 @@ final case class PropertyGraph(nodes: DataFrame, rels: DataFrame,
   @transient lazy val topology: DataFrame =
     warm(rels.select(col("id"), col("src"), col("dst"), col("type")))
 
+  /**
+   * The count store of this snapshot (label and (srcLabel, type, dstLabel)
+   * cardinalities), computed at most once: a snapshot is immutable, so
+   * every plan over it reads the same counts, and a write's new snapshot
+   * starts with fresh ones — the reference maintains its CountsStore
+   * alongside the data rather than recounting per query.
+   */
+  @transient lazy val stats: GraphStats = GraphStats.compute(this)
+
   /** Undirected view of the compact adjacency (both orientations). */
   def undirectedTopo: DataFrame = PropertyGraph.bothWays(topology)
 
@@ -138,10 +147,10 @@ final case class PropertyGraph(nodes: DataFrame, rels: DataFrame,
   def relsByTypes(types: Seq[String]): DataFrame =
     rels.filter(col("type").isin(types: _*))
 
-  /** Undirected view: every relationship in both orientations
-    * (UndirectedAllRelationshipsScan :4220). Narrow map-only union — no
-    * shuffle, 2× rows, which is exactly what the reference's undirected
-    * iteration does per node. */
+  /** Undirected view: every relationship in both orientations, a
+    * self-loop once (UndirectedAllRelationshipsScan :4220). Narrow
+    * map-only union — no shuffle, 2× rows, which is exactly what the
+    * reference's undirected iteration does per node. */
   def undirectedRels: DataFrame = PropertyGraph.bothWays(rels)
 
   /** Degree per node (GetDegree rewrite, reference getDegreeRewriter.scala):
@@ -163,9 +172,11 @@ object Direction {
 }
 
 object PropertyGraph {
-  /** Every row of a (…, src, dst, …) relation plus its src/dst swap. */
+  /** Every row of a (…, src, dst, …) relation plus its src/dst swap. A
+    * self-loop (src = dst) has no second orientation, so it appears once:
+    * an undirected pattern matches a loop once (openCypher). */
   private def bothWays(df: DataFrame): DataFrame = {
-    val swapped = df
+    val swapped = df.filter(col("src") =!= col("dst"))
       .withColumnRenamed("src", "__tmp_src")
       .withColumnRenamed("dst", "src")
       .withColumnRenamed("__tmp_src", "dst")

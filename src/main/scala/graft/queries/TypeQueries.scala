@@ -165,9 +165,8 @@ object TypeQueries {
     QueryDef("q_procedures_introspect",
       (s, d) => {
         val g = graft.graph.TpchGraph.load(s, d)
-        val stats = graft.graph.GraphStats.compute(g)
         graft.functions.Procedures.call(s, g, "db.labels")
-          .join(stats.labelCounts, Seq("label"))
+          .join(g.stats.labelCounts, Seq("label"))
           .select(col("label").as("name"), col("cnt"))
           .unionByName(graft.functions.Procedures.call(s, g, "db.relationshipTypes")
             .join(g.rels.groupBy(col("type").as("relationshipType"))

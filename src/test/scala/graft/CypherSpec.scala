@@ -1047,4 +1047,19 @@ class CypherSpec extends AnyFunSuite {
     }
     assert(e.getMessage.contains("only the relationship variable"))
   }
+
+  private lazy val selfLoop = GraphFixtures.graph(spark, Seq((0L, Seq("N"), "n0")),
+    Seq((100L, 0L, 0L, "T")))
+
+  test("an undirected hop matches a self-loop once") {
+    val rows = Cypher.run(spark, selfLoop, "MATCH ()-[r]-() RETURN type(r) AS t")
+      .collect().map(_.getString(0))
+    assert(rows.toSeq == Seq("T"))
+  }
+
+  test("an undirected var-length pattern matches a self-loop once") {
+    val rows = Cypher.run(spark, selfLoop,
+      "MATCH (a)-[rs*1..1]-(b) RETURN size(rs) AS n").collect().map(_.getInt(0))
+    assert(rows.toSeq == Seq(1))
+  }
 }

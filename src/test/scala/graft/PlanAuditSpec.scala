@@ -1,7 +1,12 @@
 package graft
 
 import graft.cypher.Cypher
+import graft.functions.expressions.ReferencedLiteral
 import graft.graph.TpchGraph
+import org.apache.spark.sql.{DataFrame, PlainSession}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Rand}
+import org.apache.spark.sql.execution.FilterExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.scalatest.funsuite.AnyFunSuite
 
 /**
@@ -399,5 +404,67 @@ class PlanAuditSpec extends AnyFunSuite {
     assert(plan.contains("*("), "expression pipeline fell out of codegen")
     // the string predicate itself must also push down
     assert(plan.contains("StringEndsWith(c_name,1)"), "ENDS WITH not pushed")
+  }
+
+  // ---- filter constants read by reference (ReferencedLiteral) ----
+
+  /** Runs `df`, then runs its analyzed plan again without graft's session
+    * extensions; returns both final physical plans (expression ids
+    * stripped) and both row sets. */
+  private def withAndWithout(df: DataFrame) = {
+    def ran(d: DataFrame) = {
+      val rows = d.collect().toSeq
+      (d.queryExecution.executedPlan.toString.replaceAll("#\\d+|plan_id=\\d+", ""), rows)
+    }
+    (ran(df), ran(PlainSession.rerun(df)))
+  }
+
+  private def filterConditions(df: DataFrame): Seq[Expression] =
+    new AdaptiveSparkPlanHelper {}.collect(df.queryExecution.executedPlan) {
+      case f: FilterExec => f.condition
+    }
+
+  test("a key lookup reads its filter constant by reference; the scan keeps the literal") {
+    val df = Cypher.run(spark, g,
+      "MATCH (c:Customer {key: $k}) " +
+        "RETURN c.name AS name, c.acctbal AS acctbal, c.mktsegment AS segment",
+      Map("k" -> 42L))
+    val ((plan, rows), (plainPlan, plainRows)) = withAndWithout(df)
+    assert(plan.contains("EqualTo(c_custkey,42)"),
+      s"key filter not pushed to the scan:\n${plan.take(3000)}")
+    assert(filterConditions(df).exists(_.exists {
+      case ReferencedLiteral(v, _) => v == 42L
+      case _                       => false
+    }), "the filter above the scan still inlines its constant")
+    assert(plan == plainPlan, s"plan text changed:\n$plan\nvs\n$plainPlan")
+    assert(rows == plainRows && rows.size == 1)
+  }
+
+  test("rand(), SKIP and LIMIT keep their constants and rows") {
+    val random = Cypher.run(spark, g,
+      "MATCH (c:Customer) WHERE rand() < 0.5 RETURN c.key AS k")
+    val ((_, rows), (_, plainRows)) = withAndWithout(random)
+    assert(rows.map(_.getLong(0)).sorted == plainRows.map(_.getLong(0)).sorted)
+    assert(filterConditions(random).exists(_.exists(_.isInstanceOf[Rand])))
+
+    val paged = Cypher.run(spark, g,
+      "MATCH (c:Customer) WHERE c.key < $hi RETURN c.key AS k ORDER BY k SKIP $s LIMIT $n",
+      Map("hi" -> 100L, "s" -> 3L, "n" -> 4L))
+    val ((plan, pagedRows), (plainPlan, plainPagedRows)) = withAndWithout(paged)
+    assert(pagedRows.map(_.getLong(0)) == Seq(3L, 4L, 5L, 6L))
+    assert(pagedRows == plainPagedRows)
+    assert(plan == plainPlan, s"plan text changed:\n$plan\nvs\n$plainPlan")
+  }
+
+  test("a row-framed window query is unchanged") {
+    val f = new java.io.File(new java.net.URI(g.nodes.inputFiles.head))
+    val fixtureDir = Iterator.iterate(f)(_.getParentFile)
+      .find(_.getName.endsWith(".parquet")).get.getParent
+    val df = graft.queries.ExpressionQueries.defs
+      .find(_.name == "q_window_running").get.fn(spark, fixtureDir)
+    val ((plan, rows), (plainPlan, plainRows)) = withAndWithout(df)
+    assert(plan.contains("RowFrame"), s"no row frame:\n$plan")
+    assert(plan == plainPlan, s"plan text changed:\n$plan\nvs\n$plainPlan")
+    assert(rows.nonEmpty && rows.toSet == plainRows.toSet)
   }
 }
