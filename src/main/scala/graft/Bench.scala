@@ -34,7 +34,8 @@ object Bench {
     // Caches are dropped FIRST: a DataFrame still reachable after the sweep
     // that references a localCheckpoint'ed RDD would hit missing-block
     // errors on reuse — truncated lineage cannot recompute. The plan cache
-    // (which holds checkpoint-backed write snapshots) is cleared; the
+    // (plans only, but a plan can read a snapshot's checkpointed RDDs) is
+    // cleared; the
     // TpchGraph memo deliberately SURVIVES the sweep: its frames are
     // pristine parquet lineage (doLoad never persists or checkpoints), so
     // unpersisting can't strand them, and re-assembling the graph (8

@@ -52,11 +52,13 @@ object GraftSession {
       // classes were evicted before it ran again. 2000 holds the workload.
       // A static conf: JVM-wide, read once when codegen is first used.
       .config("spark.sql.codegen.cache.maxEntries", "2000")
-      // engine extensions: native expressions (unicode_normalize, …) and
-      // filter constants the generated code reads by reference
+      // engine extensions: native expressions (unicode_normalize, …),
+      // filter constants the generated code reads by reference, and no
+      // physical plan for a Cypher plan template's unbound parameters
       .withExtensions(graft.functions.expressions.NormalizeUnicode.inject)
       .withExtensions(graft.functions.expressions.IntArrayMaxAgg.inject)
       .withExtensions(graft.functions.expressions.ReferencedLiteral.inject)
+      .withExtensions(graft.functions.expressions.ParamSlot.inject)
 
   /** events.ts read under nanosAsLong is LONG nanos → TimestampType (µs).
     * Integer division (`div`), not `/`: epoch nanos exceed double's 2^53

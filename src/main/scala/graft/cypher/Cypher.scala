@@ -1,7 +1,10 @@
 package graft.cypher
 
+import graft.functions.expressions.ParamSlot
 import graft.graph.PropertyGraph
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.graftplan.Plans
 
 /**
  * The engine's query surface: submit a Cypher string against a
@@ -15,16 +18,20 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
  *
  * What is done once rather than per request:
  *  - per query text: the parse;
- *  - per (text, parameter values, snapshot): the planned DataFrame;
+ *  - per (text, parameter types, snapshot): the plan. Scalar parameters
+ *    that become value columns are typed slots (`ParamSlot`) in one
+ *    analyzed plan, bound to each request's values before Catalyst
+ *    optimizes; a template that reads a value while it plans (SKIP/LIMIT,
+ *    CALL arguments, dynamic keys, `shortestPath`'s plan-time BFS, a
+ *    `Placement` probe of a filtered input) keeps one plan per value;
  *  - per graph snapshot: the count store (`PropertyGraph.stats`, read by
  *    the planner's scan-side choice) and the warm topology;
  *  - per template: the generated code — comparison constants in filters
  *    are read by reference (`ReferencedLiteral`), so a new parameter value
  *    reuses the classes compiled for the first one.
- * Planning a new parameter value still builds a fresh DataFrame and runs
- * Catalyst on it, and `shortestPath` still runs its BFS rounds at plan
- * time (about 1 s of planning on the benchmark's tpch_read `shortest`
- * template; ROADMAP #5).
+ * Every request still gets its own `QueryExecution`: Catalyst optimizes
+ * and plans the bound plan physically each time, and the executed plan
+ * and its broadcasts go when the client drops the DataFrame.
  *
  * Supported subset: MATCH (incl. OPTIONAL, multi-pattern, var-length,
  * undirected), WHERE (incl. EXISTS{} / NOT EXISTS{} pattern predicates),
@@ -60,21 +67,25 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object Cypher {
 
   /** LRU caches mirroring the reference's QueryCache (QueryCache.scala:122,
-    * 1000-entry default): parse results keyed by query text, planned
-    * DataFrames keyed by (text, params) and validated against the graph
-    * snapshot by reference (a new snapshot must re-plan). Read-only plans
-    * are immutable DataFrames, so handing the same instance back is safe;
-    * updating queries (execute) are never cached — each run re-plans with a
-    * fresh runTag. */
+    * 1000-entry default, keyed on query text and parameter types): parse
+    * results keyed by query text; analyzed logical plans keyed by (text,
+    * parameter types) — or by (text, parameter values) for templates that
+    * read a value while planning — and valid only for the graph snapshot
+    * they were planned on (a new snapshot must re-plan). The cache holds
+    * plans, never a DataFrame, QueryExecution or SparkPlan, so it pins no
+    * executed state. Updating queries (execute) are never cached — each
+    * run re-plans with a fresh runTag. */
   private final class Lru[K, V](max: Int)
       extends java.util.LinkedHashMap[K, V](16, 0.75f, true) {
     override def removeEldestEntry(e: java.util.Map.Entry[K, V]): Boolean =
       size > max
   }
   private val parseCache = new Lru[String, Ast.Query](1000)
+  /** (text, Left(parameter types) or Right(parameter values)) */
+  private type PlanKey = (String, Either[Map[String, Any], Map[String, Any]])
+  /** Under a types key, a null plan marks a template planned per value. */
   private val planCache =
-    new Lru[(String, Map[String, Any]),
-      (java.lang.ref.WeakReference[PropertyGraph], DataFrame)](256)
+    new Lru[PlanKey, (java.lang.ref.WeakReference[PropertyGraph], LogicalPlan)](256)
   /** cache observability (specs + operational parity with the reference's
     * cache hit/miss metrics) */
   @volatile var planCacheHits: Long = 0L
@@ -94,8 +105,7 @@ object Cypher {
         // depth-indented like the reference's plan rendering
         import spark.implicits._
         val qe = run(spark, graph, rest, params).queryExecution
-        def walk(p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
-            depth: Int): Seq[(String, String, Option[Long])] = {
+        def walk(p: LogicalPlan, depth: Int): Seq[(String, String, Option[Long])] = {
           val details = p.simpleString(100)
             .stripPrefix(p.nodeName).trim.take(200)
           (("  " * depth) + "+" + p.nodeName, details,
@@ -108,10 +118,9 @@ object Cypher {
         import spark.implicits._
         import org.apache.spark.sql.execution.SparkPlan
         import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-        // plan FRESH (not from the plan cache): metric accumulators live on
-        // the physical plan, and a cached instance would report totals
-        // accumulated across every prior run of the same query
-        val df = Planner.plan(spark, graph, parse(rest), params)
+        // a cached plan is fine: every request gets its own QueryExecution,
+        // so the metric accumulators count this run only
+        val df = run(spark, graph, rest, params)
         // drive THIS QueryExecution to completion (a write would spawn its
         // own QueryExecution and leave these metrics untouched)
         df.queryExecution.toRdd.foreach(_ => ())
@@ -128,36 +137,61 @@ object Cypher {
           .toDF("operator", "depth", "rows")
       case _ => ()
     }
-    val key = (query, params)
+    Plans.ofRows(spark, ParamSlot.bind(cachedPlan(spark, graph, query, params), params))
+  }
+
+  /** A parameter value as a cache key: lists and maps by content, arrays
+    * by element class and content, scalars with their class (Scala's `==`
+    * would equate 1 and 1.0). */
+  private def valueKey(v: Any): Any = v match {
+    case null => null
+    case a: Array[_] => (a.getClass, a.toSeq.map(valueKey))
+    case s: Seq[_] => s.map(valueKey)
+    case m: Map[_, _] => m.map { case (k, x) => k -> valueKey(x) }
+    case x => (x.getClass, x)
+  }
+
+  private def cachedPlan(spark: SparkSession, graph: PropertyGraph,
+      query: String, params: Map[String, Any]): LogicalPlan = {
+    val byType: PlanKey = (query, Left(params.map { case (n, v) =>
+      n -> ParamSlot.literal(v).fold(valueKey(v))(_.dataType) }))
+    val byValue: PlanKey = (query, Right(params.map { case (n, v) => n -> valueKey(v) }))
+    def lookup(key: PlanKey) =
+      Option(planCache.get(key)).collect {
+        case (ref, plan) if ref.get eq graph => Option(plan)
+      }
     // the hit is counted inside the lookup's lock: concurrent clients
     // would otherwise lose increments of the volatile counter
-    val cached = planCache.synchronized {
-      val hit = Option(planCache.get(key)).collect {
-        case (ref, df) if ref.get != null && (ref.get eq graph) => df
-      }
+    val (perValue, cached) = planCache.synchronized {
+      val t = lookup(byType)
+      val hit = if (t.contains(None)) lookup(byValue).flatten else t.flatten
       if (hit.isDefined) planCacheHits += 1
-      hit
+      (t.contains(None), hit)
     }
-    cached match {
-      case Some(df) => df
-      case None =>
-        val df = Planner.plan(spark, graph, parse(query), params)
-        planCache.synchronized {
-          // evict entries whose graph snapshot is gone: their DataFrames can
-          // never be returned again (lookup requires `ref.get eq graph`) but
-          // would pin the dead snapshot's checkpointed RDD blocks in the
-          // block manager for as long as the cache keeps them
-          val it = planCache.entrySet().iterator()
-          while (it.hasNext) if (it.next().getValue._1.get == null) it.remove()
-          planCache.put(key, (new java.lang.ref.WeakReference(graph), df))
+    cached.getOrElse {
+      val (plan, isTemplate) =
+        Planner.template(spark, graph, parse(query), params, slots = !perValue)
+      planCache.synchronized {
+        // evict entries whose graph snapshot is gone: they can never be
+        // returned again (lookup requires `ref.get eq graph`) but their
+        // plans would keep the dead snapshot's checkpointed RDDs alive
+        val it = planCache.entrySet().iterator()
+        while (it.hasNext) if (it.next().getValue._1.get == null) it.remove()
+        val ref = new java.lang.ref.WeakReference(graph)
+        if (isTemplate) planCache.put(byType, (ref, plan))
+        else {
+          planCache.put(byType, (ref, null))
+          planCache.put(byValue, (ref, plan))
         }
-        df
+      }
+      plan
     }
   }
 
   /** Drop all cached parses/plans (operational parity with the reference's
     * `db.clearQueryCaches()` procedure). Benchmarks call this between
-    * queries so one query's retained plans can't skew another's memory. */
+    * queries so each query pays its own planning and no cached plan reads
+    * RDD blocks a sweep has freed. */
   def clearCaches(): Unit = {
     parseCache.synchronized(parseCache.clear())
     planCache.synchronized(planCache.clear())

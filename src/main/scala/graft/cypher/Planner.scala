@@ -5,7 +5,10 @@ import graft.ops.Ckpt._
 import graft.graph.{Direction, PropertyGraph}
 import graft.graph.PropertyGraph.{colProp, propCol}
 import graft.ops.UpdateOps
+import graft.functions.expressions.ParamSlot
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.graftplan.Plans
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, StringType}
 import Ast._
@@ -93,6 +96,43 @@ object Planner {
   def plan(spark: SparkSession, g: PropertyGraph, query: Query,
       params: Map[String, Any]): DataFrame =
     plan(spark, g, query, params, decodeTop = true)
+
+  /** The parameters of a query planned as a template. Where a scalar
+    * parameter becomes a value column ([[paramColumn]]) the plan gets a
+    * typed `ParamSlot`, bound per request; every other read (`get`: SKIP /
+    * LIMIT, CALL arguments, dynamic keys, map access, the LOAD CSV URL,
+    * the needs pre-walk) puts the value itself into the plan and is
+    * recorded. */
+  private[cypher] final class Params(values: Map[String, Any])
+      extends scala.collection.immutable.AbstractMap[String, Any] {
+    private val read = scala.collection.mutable.Set.empty[String]
+    /** no scalar value is in the plan: it holds for every value of the
+      * parameters' types (lists and maps key the cache by content) */
+    def isTemplate: Boolean =
+      read.forall(n => values.get(n).flatMap(ParamSlot.literal).isEmpty)
+    def slot(n: String): Option[Column] = values.get(n).flatMap(ParamSlot.literal)
+      .map(l => Plans.column(ParamSlot(n, l.dataType)))
+    def get(n: String): Option[Any] = { read += n; values.get(n) }
+    def iterator: Iterator[(String, Any)] = { read ++= values.keys; values.iterator }
+    def removed(n: String): Map[String, Any] = { read ++= values.keys; values.removed(n) }
+    def updated[V >: Any](n: String, v: V): Map[String, V] = {
+      read ++= values.keys; values.updated(n, v)
+    }
+  }
+
+  /** The analyzed plan of read-only `query` and whether it is a template
+    * (see [[Params]]); with `slots` false, or when the template plan fails
+    * — a plan-time job reaches a slot (`shortestPath`'s BFS, a `Placement`
+    * probe of a filtered input), or Spark needs a constant — the plan
+    * holds the values. */
+  private[cypher] def template(spark: SparkSession, g: PropertyGraph,
+      query: Query, params: Map[String, Any], slots: Boolean): (LogicalPlan, Boolean) = {
+    def valued = (Plans.analyzed(plan(spark, g, query, params)), false)
+    val slotted = new Params(params)
+    if (!slots) valued
+    else try (Plans.analyzed(plan(spark, g, query, slotted)), slotted.isTemplate)
+    catch { case scala.util.control.NonFatal(_) => valued }
+  }
 
   /** decodeTop: top-level queries decode reconciled mixed-type union
     * columns to their toString() text; a nested CALL {} union keeps the
@@ -5920,10 +5960,18 @@ object Planner {
   /** Pattern-inline property values must be constants or parameters. */
   private def constExpr(ctx: Ctx, e: Expr): Column = e match {
     case Lit(v)   => lit(v)
-    case Param(n) => litAny(ctx.params(n))
+    case Param(n) => paramColumn(ctx, n)
     case other => throw new IllegalArgumentException(
       s"pattern property values must be literals or parameters, got $other")
   }
+
+  /** `$n` as a value column: its slot when planning a template, else the
+    * value. */
+  private def paramColumn(ctx: Ctx, n: String): Column = (ctx.params match {
+    case p: Params => p.slot(n)
+    case _ => None
+  }).getOrElse(litAny(ctx.params.getOrElse(n,
+    throw new IllegalArgumentException(s"missing parameter $$$n"))))
 
   private def litAny(v: Any): Column = v match {
     case null       => lit(null)
@@ -6268,8 +6316,7 @@ object Planner {
         if (types.forall(_.isDefined) && types.flatten.distinct.size == 1)
           map(vals.flatMap { case (k, vc) => Seq(lit(k), vc) }: _*)
         else struct(vals.map { case (k, vc) => vc.as(k) }: _*)
-      case Param(n)    => litAny(ctx.params.getOrElse(n,
-        throw new IllegalArgumentException(s"missing parameter $$$n")))
+      case Param(n)    => paramColumn(ctx, n)
       case Variable(v) =>
         lambdas.getOrElse(v,
           if (env.binds.get(v).contains(PathVar))

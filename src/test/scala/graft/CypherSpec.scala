@@ -796,17 +796,51 @@ class CypherSpec extends AnyFunSuite {
     val d1 = Cypher.run(spark, g, q)
     val hits0 = Cypher.planCacheHits
     val d2 = Cypher.run(spark, g, q)
-    assert(d2 eq d1, "second run must return the cached plan instance")
     assert(Cypher.planCacheHits == hits0 + 1)
+    // the cache hands back a plan, not the DataFrame that ran it: each
+    // request gets its own QueryExecution
+    assert(d2.queryExecution ne d1.queryExecution)
+    assert(d2.collect().toSeq == d1.collect().toSeq)
     // a NEW graph snapshot must re-plan (no stale reads)
     val g2 = g.copy(nodes = g.nodes.filter(lit(true)))
     val d3 = Cypher.run(spark, g2, q)
     assert(!(d3 eq d1))
-    // different params re-plan too
+    // different params share the template, each with its own value
     val qp = "MATCH (n:Person) WHERE n.age > $min RETURN count(*) AS c"
     val p1 = Cypher.run(spark, g, qp, Map("min" -> 20L))
     val p2 = Cypher.run(spark, g, qp, Map("min" -> 30L))
     assert(!(p1 eq p2))
+    def count(min: Long): Long =
+      run(s"MATCH (n:Person) WHERE n.age > $min RETURN count(*) AS c").head.getLong(0)
+    assert(p1.head.getLong(0) == count(20L) && p2.head.getLong(0) == count(30L))
+    assert(count(20L) != count(30L))
+  }
+
+  test("plan cache: an array parameter hits on a repeat with equal content") {
+    val q = "MATCH (n:Person) WHERE n.age IN $ages RETURN count(*) AS c"
+    val d1 = Cypher.run(spark, g, q, Map("ages" -> Array(30L, 25L)))
+    val hits0 = Cypher.planCacheHits
+    val d2 = Cypher.run(spark, g, q, Map("ages" -> Array(30L, 25L)))
+    assert(Cypher.planCacheHits == hits0 + 1)
+    assert(d2.collect().toSeq == d1.collect().toSeq)
+    // other content is another entry, with its own rows
+    val d3 = Cypher.run(spark, g, q, Map("ages" -> Array(30L)))
+    assert(Cypher.planCacheHits == hits0 + 1)
+    assert(d3.head.getLong(0) < d1.head.getLong(0))
+  }
+
+  test("PROFILE after repeated runs reports one run's row counts") {
+    val q = "MATCH (n:Person) WHERE n.age > $min RETURN n.name AS name"
+    val ps = Map[String, Any]("min" -> 26L)
+    Cypher.clearCaches()
+    val once = Cypher.run(spark, g, "PROFILE " + q, ps).collect().toSeq
+    Cypher.run(spark, g, q, ps).collect()
+    Cypher.run(spark, g, q, ps).collect()
+    val hits0 = Cypher.planCacheHits
+    val again = Cypher.run(spark, g, "PROFILE " + q, ps).collect().toSeq
+    assert(Cypher.planCacheHits == hits0 + 1, "PROFILE plans through the cache")
+    assert(again == once)
+    assert(once.exists(r => !r.isNullAt(2) && r.getLong(2) > 0))
   }
 
   test("min/max over mixed-type values follow orderability, skipping null") {

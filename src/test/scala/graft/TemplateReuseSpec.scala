@@ -2,19 +2,21 @@ package graft
 
 import java.util.concurrent.atomic.AtomicInteger
 
-import graft.cypher.Cypher
+import graft.cypher.{Cypher, Planner}
 import graft.graph.PropertyGraph
 import org.apache.spark.TestBus
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.{PlainSession, Row}
+import org.apache.spark.sql.{DatasetIds, PlainSession, Row}
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
 /**
  * Per-template work happens once: the count store once per graph snapshot
- * (`PropertyGraph.stats`), and generated code once per template, whatever
- * its parameter values (`ReferencedLiteral`).
+ * (`PropertyGraph.stats`), the plan once per (query, parameter types,
+ * snapshot) (`Cypher`'s plan cache with `ParamSlot`s), and generated code
+ * once per template, whatever its parameter values (`ReferencedLiteral`).
+ * The cache keeps no executed state.
  */
 class TemplateReuseSpec extends AnyFunSuite {
   private lazy val spark = TestSession.spark
@@ -99,5 +101,73 @@ class TemplateReuseSpec extends AnyFunSuite {
     val p0 = compiles
     assert(PlainSession.rerun(d2).collect().toSeq == second)
     assert(compiles > p0, "without the rule a new value compiles new classes")
+  }
+
+  /** The rows of `q` planned afresh, outside the cache. */
+  private def fresh(g: PropertyGraph, q: String, params: Map[String, Any]) =
+    Planner.plan(spark, g, Cypher.parse(q), params).collect().toSeq
+
+  test("a second value of a shared template plans with no job and its own rows") {
+    val g = shop()
+    plan(g, 1L, 5.0).collect()
+    val hits0 = Cypher.planCacheHits
+    var df: org.apache.spark.sql.DataFrame = null
+    val jobs = jobsDuring { df = plan(g, 3L, 45.0) }
+    assert(jobs == 0, s"planning a second value launched $jobs jobs")
+    assert(Cypher.planCacheHits == hits0 + 1, "the second value hits the template")
+    val rows = df.collect().toSeq
+    assert(rows == Seq(Row(2L, 110.0)))
+    assert(rows == fresh(g, ordersOf, Map("k" -> 3L, "p" -> 45.0)))
+  }
+
+  test("value-dependent templates keep a plan per value and stay correct") {
+    val g = shop()
+    val queries = Seq[(String, String, Any, Any)](
+      ("MATCH (o:Order) RETURN o.totalprice AS t ORDER BY t LIMIT $n", "n", 2L, 5L),
+      ("MATCH (c:Customer) RETURN c[$key] AS v ORDER BY v", "key", "key", "totalprice"),
+      ("MATCH (c:Customer) WHERE c.key = $k " +
+        "MATCH p = shortestPath((c)-[:PLACED*..2]->(o:Order)) " +
+        "RETURN o.totalprice AS t ORDER BY t", "k", 1L, 4L))
+    for ((q, name, a, b) <- queries) {
+      def req(v: Any) = Cypher.run(spark, g, q, Map(name -> v))
+      val first = req(a).collect().toSeq
+      val h0 = Cypher.planCacheHits
+      val second = req(b).collect().toSeq
+      assert(Cypher.planCacheHits == h0, s"a new value of `$q` reused a plan")
+      assert(req(a).collect().toSeq == first)
+      assert(Cypher.planCacheHits == h0 + 1, s"a repeated value of `$q` re-planned")
+      assert(first == fresh(g, q, Map(name -> a)) && second == fresh(g, q, Map(name -> b)))
+      assert(first != second, s"`$q` returned the same rows for both values")
+    }
+  }
+
+  test("a write's new snapshot misses the plan cache") {
+    val g = shop()
+    val q = "MATCH (c:Customer) WHERE c.key > $k RETURN count(c) AS n"
+    assert(Cypher.run(spark, g, q, Map("k" -> 0L)).collect().toSeq == Seq(Row(4L)))
+    val (g2, _) = Cypher.execute(spark, g, "CREATE (:Customer {key: 5})")
+    val h0 = Cypher.planCacheHits
+    assert(Cypher.run(spark, g2, q, Map("k" -> 0L)).collect().toSeq == Seq(Row(5L)))
+    assert(Cypher.planCacheHits == h0, "the new snapshot reused the old snapshot's plan")
+    assert(Cypher.run(spark, g, q, Map("k" -> 0L)).collect().toSeq == Seq(Row(4L)))
+  }
+
+  test("the executed plan goes with the client's DataFrame") {
+    val g = shop()
+    def executed(k: Long) = {
+      val df = plan(g, k, 0.0)
+      df.collect()
+      new java.lang.ref.WeakReference(df.queryExecution.executedPlan)
+    }
+    executed(1L)
+    val ref = executed(2L) // a cache hit
+    var tries = 0
+    while (ref.get != null && tries < 20) { System.gc(); Thread.sleep(100); tries += 1 }
+    assert(ref.get == null, "the plan cache keeps a request's executed plan alive")
+
+    // nor does a cached plan collect the id of every Dataset built on it
+    val q = "MATCH (c:Customer) RETURN count(c) AS n"
+    val roots = (1 to 3).map(_ => Cypher.run(spark, g, q).queryExecution.analyzed.children.head)
+    assert(roots.map(DatasetIds.on).max <= 1, "each request left its id on the cached plan")
   }
 }
