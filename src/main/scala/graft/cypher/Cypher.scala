@@ -70,19 +70,21 @@ object Cypher {
     * 1000-entry default, keyed on query text and parameter types): parse
     * results keyed by query text; analyzed logical plans keyed by (text,
     * parameter types) — or by (text, parameter values) for templates that
-    * read a value while planning — and valid only for the graph snapshot
-    * they were planned on (a new snapshot must re-plan). The cache holds
-    * plans, never a DataFrame, QueryExecution or SparkPlan, so it pins no
-    * executed state. Updating queries (execute) are never cached — each
-    * run re-plans with a fresh runTag. */
+    * read a value while planning — and by the graph snapshot they were
+    * planned on: a new snapshot re-plans, and snapshots queried in turn
+    * keep one entry each. The cache holds plans, never a DataFrame,
+    * QueryExecution or SparkPlan, so it pins no executed state. Updating
+    * queries (execute) are never cached — each run re-plans with a fresh
+    * runTag. */
   private final class Lru[K, V](max: Int)
       extends java.util.LinkedHashMap[K, V](16, 0.75f, true) {
     override def removeEldestEntry(e: java.util.Map.Entry[K, V]): Boolean =
       size > max
   }
   private val parseCache = new Lru[String, Ast.Query](1000)
-  /** (text, Left(parameter types) or Right(parameter values)) */
-  private type PlanKey = (String, Either[Map[String, Any], Map[String, Any]])
+  /** (snapshot identity hash, text, Left(parameter types) or
+    * Right(parameter values)): each live snapshot keeps its own entry */
+  private type PlanKey = (Int, String, Either[Map[String, Any], Map[String, Any]])
   /** Under a types key, a null plan marks a template planned per value. */
   private val planCache =
     new Lru[PlanKey, (java.lang.ref.WeakReference[PropertyGraph], LogicalPlan)](256)
@@ -153,9 +155,10 @@ object Cypher {
 
   private def cachedPlan(spark: SparkSession, graph: PropertyGraph,
       query: String, params: Map[String, Any]): LogicalPlan = {
-    val byType: PlanKey = (query, Left(params.map { case (n, v) =>
+    val snapshot = System.identityHashCode(graph)
+    val byType: PlanKey = (snapshot, query, Left(params.map { case (n, v) =>
       n -> ParamSlot.literal(v).fold(valueKey(v))(_.dataType) }))
-    val byValue: PlanKey = (query, Right(params.map { case (n, v) => n -> valueKey(v) }))
+    val byValue: PlanKey = (snapshot, query, Right(params.map { case (n, v) => n -> valueKey(v) }))
     def lookup(key: PlanKey) =
       Option(planCache.get(key)).collect {
         case (ref, plan) if ref.get eq graph => Option(plan)

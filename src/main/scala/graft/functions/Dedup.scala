@@ -191,9 +191,10 @@ object Dedup {
       shingleSize: Int = 3,
       hash64: org.apache.spark.sql.Column => org.apache.spark.sql.Column =
         xxhash64(_)): DataFrame = {
-    // materialize the pair list ONCE: connectedComponents runs two actions
-    // (small-graph probe + union-find collect, or per-round fingerprints),
-    // and each would otherwise re-execute the whole LSH+verify pipeline
+    // materialize the pair list ONCE: past the small-graph probe,
+    // connectedComponents reads it again (the first job of its distributed
+    // rounds), and each read would otherwise re-execute the whole
+    // LSH+verify pipeline
     val pairs = minhashDedup(docs, threshold, shingleSize, hash64 = hash64)
       .select(col("idA").as("src"), col("idB").as("dst"))
       .localCheckpoint(false)

@@ -2,6 +2,7 @@ package graft.ops
 
 import graft.ops.Ckpt._
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -334,14 +335,17 @@ object Bfs {
    *   small-star: every node links its smaller-or-equal neighbors (and
    *               itself) to that minimum.
    * The edge set monotonically contracts toward per-component stars rooted
-   * at the component's min id. Convergence is detected by an (edge-count,
-   * hash-sum) fingerprint of the checkpointed edge set — one action per
-   * round, no extra materialization. Throws if maxIter is exhausted before
-   * convergence rather than silently returning wrong components.
+   * at the component's min id. The rounds run over RDDs through [[Rounds]]:
+   * two shuffles a round, every dedupe a shuffle aggregation, and one
+   * action that materializes the round and checks whether it is already
+   * those stars — the fixed point, so no round is spent confirming it.
+   * Throws if maxIter rounds pass without convergence rather than silently
+   * returning wrong components.
    *
    * @return (node, component) where component = min node id in the component
    *
-   * A small pair graph — the common case when the input is a
+   * Ids go through the LONG contract of [[distances]] on both branches. A
+   * small pair graph — the common case when the input is a
    * near-duplicate pair list, tiny relative to the corpus that produced it
    * — runs union-find on the driver instead ([[Placement]]; the probe reads
    * the RAW edge stream, pre-distinct, so it never pays a shuffle). The
@@ -350,12 +354,12 @@ object Bfs {
    */
   def connectedComponents(edges: DataFrame, maxIter: Int = 25,
       localEdgeThreshold: Int = Placement.Walk): DataFrame = {
-    val raw = edges.select(col("src").cast("long").as("u"),
-        col("dst").cast("long").as("v"))
-      .filter(col("u") =!= col("v"))
+    val raw = edges.select(longId(col("src"), "connectedComponents").as("u"),
+        longId(col("dst"), "connectedComponents").as("v"))
+      .filter(col("u") =!= col("v")) // also drops null endpoints
     Placement.local(raw, localEdgeThreshold) match {
       case Some(rows) => localComponents(edges.sparkSession, rows)
-      case None => connectedComponentsDistributed(edges, maxIter)
+      case None => connectedComponentsDistributed(raw, maxIter)
     }
   }
 
@@ -382,57 +386,50 @@ object Bfs {
     nodes.toSeq.map(n => (n, find(n))).toDF("node", "component")
   }
 
-  private def connectedComponentsDistributed(edges: DataFrame, maxIter: Int): DataFrame = {
-    def largeStar(e: DataFrame): DataFrame = {
-      val sym = e.select(col("u"), col("v"))
-        .unionByName(e.select(col("v").as("u"), col("u").as("v")))
-      val m = sym.groupBy("u").agg(min(col("v")).as("mn"))
-        .select(col("u"), least(col("mn"), col("u")).as("m"))
-      sym.join(m, Seq("u"))
-        .filter(col("v") > col("u"))
-        .select(col("v").as("u"), col("m").as("v"))
-        .filter(col("u") =!= col("v"))
-        .distinct()
-    }
-    def smallStar(e: DataFrame): DataFrame = {
-      val dir = e.select(greatest(col("u"), col("v")).as("u"), least(col("u"), col("v")).as("v"))
-      val m = dir.groupBy("u").agg(min(col("v")).as("m"))
-      val nbr = dir.join(m, Seq("u")).select(col("v").as("u"), col("m").as("v"))
-      val self = m.select(col("u"), col("m").as("v"))
-      nbr.unionByName(self).filter(col("u") =!= col("v")).distinct()
-    }
-
-    var e = edges.select(col("src").as("u"), col("dst").as("v"))
-      .filter(col("u") =!= col("v")).distinct().freshCkpt()
-    val allNodes = e.select(col("u").as("node"))
-      .unionByName(e.select(col("v").as("node"))).distinct().freshCkpt()
-
-    def fingerprint(d: DataFrame): (Long, Long) = {
-      // xor-fold of per-edge hashes: commutative, duplicate-free input,
-      // and — unlike sum — can't overflow under ANSI mode
-      val r = d.agg(count(lit(1)),
-        coalesce(bit_xor(xxhash64(col("u"), col("v"))), lit(0L))).first()
-      (r.getLong(0), r.getLong(1))
-    }
-
-    var prev = fingerprint(e)
-    var converged = false
+  private def connectedComponentsDistributed(raw: DataFrame, maxIter: Int): DataFrame = {
+    val spark = raw.sparkSession
+    val in = raw.rdd.map(r => (r.getLong(0), r.getLong(1)))
+    val rounds = Rounds(spark, in.getNumPartitions)
+    val part = rounds.part
+    // the round state is the symmetrized, deduped edge set keyed by
+    // endpoint on `part`: a round's output dedupe and the next round's
+    // symmetrize are one shuffle, and every per-node minimum and join is
+    // narrow
+    def symmetric(pairs: RDD[(Long, Long)]) =
+      rounds.dedupe(pairs.flatMap { case (a, b) => Iterator((a, b), (b, a)) })
+    def minNbr(e: RDD[(Long, Long)]) = e.reduceByKey(part, math.min(_, _))
+    // the round's one job: materializes the persisted round and tells
+    // whether it is a union of stars, each centered at its minimum — the
+    // contraction's fixed point: a node is a center (no smaller neighbor)
+    // or a leaf (one neighbor, smaller)
+    def stars(e: RDD[(Long, Long)]): Boolean = e.mapValues((_, 1))
+      .reduceByKey(part, (a, b) => (math.min(a._1, b._1), a._2 + b._2))
+      .filter { case (u, (m, deg)) => m < u && deg > 1 }.count() == 0
+    var e = rounds.persist(symmetric(in))
+    var converged = stars(e)
     var iter = 0
     while (!converged && iter < maxIter) {
       iter += 1
-      // lazy: fingerprint() below materializes the checkpoint in one job
-      e = smallStar(largeStar(e)).localCheckpoint(false)
-      val cur = fingerprint(e)
-      converged = cur == prev
-      prev = cur
+      // large-star: (larger neighbor, neighborhood minimum), partitioned by
+      // the larger endpoint — the round's first shuffle. Its duplicates
+      // change no minimum, and the small-star output is deduped anyway.
+      val large = e.join(minNbr(e), part).flatMap { case (u, (v, m)) =>
+        if (v > u) Iterator((v, math.min(u, m))) else Iterator.empty }.partitionBy(part)
+      // small-star: a node and its smaller neighbors link to their minimum
+      val small = large.join(minNbr(large), part).flatMap { case (u, (v, m)) =>
+        if (v != m) Iterator((u, m), (v, m)) else Iterator((u, m)) }
+      val next = rounds.persist(symmetric(small)) // the second shuffle
+      converged = stars(next)
+      rounds.unpersist(e)
+      e = next
     }
+    rounds.release(if (converged) Seq(e) else Nil)
     require(converged,
       s"connectedComponents did not converge within $maxIter rounds")
-    // converged edge set is a union of stars (v → component root); roots and
-    // isolated nodes map to themselves
-    val assigned = e.select(col("u").as("node"), col("v").as("component"))
-    allNodes.join(assigned, Seq("node"), "left_outer")
-      .select(col("node"), coalesce(col("component"), col("node")).as("component"))
+    // a union of stars rooted at each component's min id: a node's
+    // component is the least of itself and its neighbors
+    Rounds.toDf(spark, minNbr(e).map { case (u, m) => (u, math.min(u, m)) },
+      "node", "component")
   }
 
   /**

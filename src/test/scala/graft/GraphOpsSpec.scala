@@ -103,6 +103,24 @@ class GraphOpsSpec extends AnyFunSuite {
       10L -> 10L, 11L -> 10L, 20L -> 20L, 21L -> 20L, 22L -> 20L))
   }
 
+  test("connectedComponents fails loudly on an id not castable to LONG") {
+    // both branches, ANSI on and off, name the bad id instead of casting
+    // it to NULL and dropping its edge
+    val edges = Seq(("1", "2"), ("2", "x1")).toDF("src", "dst")
+    val ansi = "spark.sql.ansi.enabled"
+    val prev = spark.conf.getOption(ansi)
+    try TestSession.bothPlacements { forced =>
+      Seq("true", "false").foreach { on =>
+        spark.conf.set(ansi, on)
+        val err = intercept[Exception](Bfs.connectedComponents(edges).collect())
+        assert(Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+          .exists(e => String.valueOf(e.getMessage)
+            .contains("connectedComponents: id not castable to LONG: x1")),
+          s"forced=$forced ansi=$on: $err")
+      }
+    } finally prev.fold(spark.conf.unset(ansi))(spark.conf.set(ansi, _))
+  }
+
   test("listRanks ranks chain nodes in O(log L) pointer-doubling rounds") {
     val edges = ((0L until 39L).map(i => (i, i + 1)) ++      // chain 0..39
       Seq((100L, 101L), (101L, 102L))).toDF("src", "dst")    // chain 100..102

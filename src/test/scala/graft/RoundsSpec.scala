@@ -1,7 +1,9 @@
 package graft
 
 import graft.ops.{Bfs, Ranking, Trail}
+import org.apache.spark.TestBus
 import org.apache.spark.rdd.RDD
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.storage.StorageLevel
@@ -60,10 +62,32 @@ class RoundsSpec extends AnyFunSuite {
     "Bfs.allShortestPaths" -> (() => Bfs.allShortestPaths(idEdges, sources, 5)),
     "Bfs.listRanks" -> (() => Bfs.listRanks(
       (0L until 6L).map(i => (i, i + 1)).toDF("src", "dst"))),
-    "Ranking.pageRank" -> (() => Ranking.pageRank(edges, 3))
+    "Ranking.pageRank" -> (() => Ranking.pageRank(edges, 3)),
+    "Bfs.connectedComponents" -> (() => Bfs.connectedComponents(edges))
   ).foreach { case (name, result) =>
     test(s"$name releases every persisted RDD its result does not read") {
       TestSession.withForcedDistributed(true)(assertReleased(name)(result()))
+    }
+  }
+
+  test("forced connectedComponents launches one job a round plus at most three") {
+    // the 1000-node chain of GraphOpsSpec's convergence test
+    val chain = (0L until 999L).map(i => (i, i + 1)).toDF("src", "dst")
+    TestSession.withForcedDistributed(true) {
+      // its rounds: the least maxIter the contraction converges within
+      val rounds = (1 to 25).find(k => scala.util.Try(
+          Bfs.connectedComponents(chain, maxIter = k)).isSuccess)
+        .getOrElse(fail("no convergence within 25 rounds"))
+      val sc = spark.sparkContext
+      val jobs = new java.util.concurrent.atomic.AtomicInteger
+      val l = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+      }
+      TestBus.drain(sc)
+      sc.addSparkListener(l)
+      try { Bfs.connectedComponents(chain).collect(); TestBus.drain(sc) }
+      finally sc.removeSparkListener(l)
+      assert(jobs.get <= rounds + 3, s"${jobs.get} jobs for $rounds rounds")
     }
   }
 }

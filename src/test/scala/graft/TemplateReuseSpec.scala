@@ -152,6 +152,20 @@ class TemplateReuseSpec extends AnyFunSuite {
     assert(Cypher.run(spark, g, q, Map("k" -> 0L)).collect().toSeq == Seq(Row(4L)))
   }
 
+  test("two live snapshots queried in turn keep one plan each") {
+    val a = shop()
+    val (b, _) = Cypher.execute(spark, a, "CREATE (:Customer {key: 5})")
+    val q = "MATCH (c:Customer) WHERE c.key >= $k RETURN count(c) AS n"
+    def hits(g: PropertyGraph, n: Long): Boolean = {
+      val h0 = Cypher.planCacheHits
+      assert(Cypher.run(spark, g, q, Map("k" -> 1L)).collect().toSeq == Seq(Row(n)))
+      Cypher.planCacheHits == h0 + 1
+    }
+    assert(!hits(a, 4L) && !hits(b, 5L), "a snapshot's first request hit")
+    assert(hits(a, 4L), "the third request (snapshot A) re-planned")
+    assert(hits(b, 5L), "the fourth request (snapshot B) re-planned")
+  }
+
   test("the executed plan goes with the client's DataFrame") {
     val g = shop()
     def executed(k: Long) = {
