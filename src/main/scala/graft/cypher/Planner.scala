@@ -122,16 +122,32 @@ object Planner {
 
   /** The analyzed plan of read-only `query` and whether it is a template
     * (see [[Params]]); with `slots` false, or when the template plan fails
-    * — a plan-time job reaches a slot (`shortestPath`'s BFS, a `Placement`
-    * probe of a filtered input), or Spark needs a constant — the plan
-    * holds the values. */
+    * — a plan-time job reaches a slot (a `Placement` probe of a filtered
+    * input), or Spark needs a constant — the plan holds the values. A
+    * query with a shortest-path pattern plans with its values at once:
+    * its search runs while it plans, so a slot in the search's input fails
+    * the template, and only after the planner and Catalyst work up to the
+    * search. */
   private[cypher] def template(spark: SparkSession, g: PropertyGraph,
       query: Query, params: Map[String, Any], slots: Boolean): (LogicalPlan, Boolean) = {
     def valued = (Plans.analyzed(plan(spark, g, query, params)), false)
     val slotted = new Params(params)
-    if (!slots) valued
+    if (!slots || searchesWhilePlanning(query)) valued
     else try (Plans.analyzed(plan(spark, g, query, slotted)), slotted.isTemplate)
-    catch { case scala.util.control.NonFatal(_) => valued }
+    catch { case scala.util.control.NonFatal(_) => fallbacks.incrementAndGet(); valued }
+  }
+
+  private val fallbacks = new java.util.concurrent.atomic.AtomicLong
+  /** Template plans that failed and were planned again with their values
+    * (observability, next to `Cypher.planCacheHits`). */
+  def templateFallbacks: Long = fallbacks.get
+
+  /** Whether any clause or expression of `ast` is a shortest-path pattern. */
+  private def searchesWhilePlanning(ast: Any): Boolean = ast match {
+    case _: ShortestPart | _: ShortestPathExpr => true
+    case p: Product => p.productIterator.exists(searchesWhilePlanning)
+    case i: Iterable[_] => i.exists(searchesWhilePlanning)
+    case _ => false
   }
 
   /** decodeTop: top-level queries decode reconciled mixed-type union

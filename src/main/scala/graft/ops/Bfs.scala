@@ -16,13 +16,15 @@ import org.apache.spark.sql.functions._
  * Design (SURVEY §7.4 hard-part #5): never self-join-to-fixpoint over full
  * path sets — instead iterate a *frontier* (node, source) set, anti-joined
  * against the visited set. The rounds run over RDDs through [[Rounds]]:
- * edges are hash-partitioned by src once, each round is one narrow
- * co-partitioned join plus ONE shuffle of the expanded rows onto their
- * nodes, and the dedupe and visited anti-join run partition-locally. Each
- * round's frontier is persisted and materialized by that round's single
- * bookkeeping action — the same asymptotics as Pregel. The visited set is
- * the narrow union of the persisted frontier deltas (never re-materialized
- * wholesale — at depth D that would cost O(V·D) redundant I/O).
+ * the edges shuffle once into [[Rounds.adjacency]] blocks (deduped while
+ * each block is built), each round expands the frontier by lookups into
+ * the block of its own partition plus ONE shuffle of the expanded rows
+ * onto their nodes, and the dedupe and visited anti-join run
+ * partition-locally. Each round's frontier is persisted and materialized
+ * by that round's single bookkeeping action — the same asymptotics as
+ * Pregel. The visited set is the narrow union of the persisted frontier
+ * deltas (never re-materialized wholesale — at depth D that would cost
+ * O(V·D) redundant I/O).
  */
 object Bfs {
 
@@ -59,20 +61,14 @@ object Bfs {
   def distancesImpl(edges: DataFrame, sources: DataFrame, maxDepth: Int,
       targetPairs: Option[DataFrame],
       edgesDeduped: Boolean = false): DataFrame = {
-    // RDD rounds under ONE shared HashPartitioner (the listRanks /
-    // TrailRdd treatment, r16): the DataFrame loop paid up to three wide
-    // stages per round (frontier⋈edges sort-merge once the frontier
-    // outgrew the broadcast cap, a distinct exchange, a visited
-    // anti-join exchange) plus a per-round Catalyst pass. Here edges are
-    // partitioned by src ONCE; each round the co-partitioned join is
-    // narrow, the expanded rows pay exactly ONE shuffle into the shared
-    // partitioning, and the (source, node) dedupe + visited anti-join +
-    // target-hit count all run partition-locally because every row of a
-    // node lives in that node's partition.
+    // RDD rounds under ONE shared HashPartitioner: the edges shuffle once
+    // into the adjacency blocks; a round expands by lookups into the
+    // block of the frontier's own partition, the expanded rows pay exactly
+    // ONE shuffle into the shared partitioning, and the (source, node)
+    // dedupe + visited anti-join + target-hit count all run
+    // partition-locally because every row of a node lives in that node's
+    // partition.
     val spark = edges.sparkSession
-    // reachability only sees distinct (src, dst): parallel edges would be
-    // rescanned every round otherwise. Callers holding a pre-deduped pair
-    // set (PropertyGraph.topologyPairs) pass edgesDeduped = true.
     // ids go through the longId contract: a non-null id that does not cast
     // fails loudly; a null endpoint or source never matched a join either
     val eRaw = edges.select(longId(col("src"), "distances"),
@@ -81,8 +77,11 @@ object Bfs {
       .rdd.map(r => (r.getLong(0), r.getLong(1)))
     val rounds = Rounds(spark, eRaw.getNumPartitions)
     val part = rounds.part
-    val e = rounds.persist((if (edgesDeduped) eRaw
-      else eRaw.distinct(part.numPartitions)).partitionBy(part))
+    // reachability only sees distinct (src, dst): parallel edges would be
+    // rescanned every round otherwise. Callers holding a pre-deduped pair
+    // set (PropertyGraph.topologyPairs) pass edgesDeduped = true and skip
+    // the blocks' local dedupe pass.
+    val adj = rounds.adjacency(eRaw, dedupe = !edgesDeduped)
     // frontier/visited/target rows keyed by NODE so the dedupe, the
     // anti-join and the hit count are partition-local
     val targets = targetPairs.map(tp => rounds.persist(
@@ -121,8 +120,12 @@ object Bfs {
     var depth = 0
     while (depth < maxDepth && remaining.forall(_ > 0) && fCnt > 0) {
       depth += 1
-      val expanded = frontier.join(e, part) // narrow: both sides on `part`
-        .map { case (_, (s, d)) => (d, s) }
+      // the expanded rows are keyed by their new node: not `part`'s layout
+      val expanded = frontier
+        .zipPartitions(adj, preservesPartitioning = false) { (fIt, aIt) =>
+          val a = aIt.next()
+          fIt.flatMap { case (n, s) => a.neighbours(n).map((_, s)) }
+        }
         .partitionBy(part) // the round's one shuffle
       val vis = visitedUnion
       frontier = rounds.persist(expanded
@@ -138,8 +141,11 @@ object Bfs {
     }
     val rs = pieces.result()
     rounds.release(rs.map(_._2))
+    // each piece keeps `part`, so the union is partitioner-aware: one
+    // output partition per partition of `part`, not one per round
     Rounds.toDf(spark, spark.sparkContext.union(rs.map { case (d, rdd) =>
-      rdd.map { case (n, s) => (s, n, d) } }), "source", "node", "dist")
+      rdd.mapPartitions(_.map { case (n, s) => (s, n, d) },
+        preservesPartitioning = true) }), "source", "node", "dist")
   }
 
   /** PruningVarExpand: distinct nodes with SOME trail of length in

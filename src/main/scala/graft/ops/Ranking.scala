@@ -82,14 +82,15 @@ object Ranking {
    * nodes, so DAGs converge in longest-path iterations exactly.
    *
    * The rounds run over RDDs under ONE shared HashPartitioner (the GraphX
-   * pattern): edges hash-partition by src ONCE; per round the
-   * rank-with-degree join is co-partitioned (narrow, zero shuffle) and
-   * only the contribution reduceByKey shuffles — one shuffle per round,
-   * against the DataFrame formulation's three, and ZERO Catalyst
+   * pattern): the edges shuffle once into [[Rounds.adjacency]] blocks,
+   * each partition's node ids and normalised out-weights are laid out
+   * once, and a round is the rank array zipped with the block, messages
+   * combined per destination on the map side, ONE shuffle, and a reduce
+   * side that adds into the rank array of the destination's partition —
+   * no round reads or rehashes the edges again, and ZERO Catalyst
    * analysis/codegen passes per round (the r13 profile showed planning
-   * at ~90% of this query's wall; iterating over the materialized rounds
-   * directly removes it). Shuffle outputs are reused across rounds by the
-   * scheduler (skipped stages), so nothing needs caching.
+   * at ~90% of this query's wall). The blocks are persisted and read by
+   * the (lazy) result, so the whole call is one job.
    *
    * @param edges (src, dst)
    * @return (node, rank)
@@ -99,62 +100,118 @@ object Ranking {
     require(iterations >= 1 && damping > 0 && damping < 1,
       s"bad pageRank config: iterations=$iterations damping=$damping")
     iterateRanks(edges.select(col("src").cast("long"),
-        col("dst").cast("long"), lit(1.0).as("w")),
-      iterations, damping, sources = None)
+        col("dst").cast("long")), iterations, damping, sources = None)
   }
 
   /** Shared RDD round loop for the pageRank family. `edges` must be
-    * (src LONG, dst LONG, w DOUBLE); `sources` switches the teleport mass
-    * to the personalized (seed-restart) form. */
+    * (src LONG, dst LONG[, w DOUBLE]); without `w` every edge weighs 1.
+    * `sources` switches the teleport mass to the personalized
+    * (seed-restart) form. */
   private def iterateRanks(edges: DataFrame, iterations: Int,
       damping: Double, sources: Option[DataFrame]): DataFrame = {
     val spark = edges.sparkSession
+    val weighted = edges.columns.length == 3
     // drop null src/dst/weight rows BEFORE the primitive-getter RDD map:
     // a rel missing the weight property must be ignored (the old
     // DataFrame formulation's null-sum semantics), not NPE the job
-    val in = edges.na.drop("any").rdd
-      .map(r => (r.getLong(0), (r.getLong(1), r.getDouble(2))))
-    val part = Rounds(spark, in.getNumPartitions).part
-    val e = in.partitionBy(part) // the ONLY edge shuffle, reused every round
-    val srcSet = sources.map(_.rdd.map(r => (r.getLong(0), ()))
-      .partitionBy(part))
-    val nodes = e.map(_._1)
-      .union(e.map(_._2._1))
-      .union(srcSet.map(_.map(_._1)).getOrElse(spark.sparkContext.emptyRDD))
-      .distinct(part.numPartitions).map((_, ())).partitionBy(part)
-    // per-source total out-weight (count for the unweighted form)
-    val outW = e.mapValues(_._2).reduceByKey(part, _ + _)
+    val rows = edges.na.drop("any").rdd
+    val rounds = Rounds(spark, rows.getNumPartitions)
+    val part = rounds.part
+    // multi-edges are kept: each copy carries its own weight
+    val adj =
+      if (weighted) rounds.weightedAdjacency(
+        rows.map(r => (r.getLong(0), (r.getLong(1), r.getDouble(2)))))
+      else rounds.adjacency(rows.map(r => (r.getLong(0), r.getLong(1))),
+        dedupe = false)
+    val seeds = sources.map(_.rdd.map(_.getLong(0)))
     // teleport term: uniform (1-d) classic; (1-d)/|S| on seeds personalized
-    val base: org.apache.spark.rdd.RDD[(Long, Double)] = srcSet match {
-      case None => nodes.mapValues(_ => 1.0 - damping)
-      case Some(s) =>
-        val nS = s.count()
-        require(nS > 0, "personalized PageRank needs a non-empty source set")
-        val tp = (1.0 - damping) / nS
-        nodes.leftOuterJoin(s, part)
-          .mapValues { case (_, hit) => if (hit.isDefined) tp else 0.0 }
+    val teleport = seeds.map { s =>
+      val nS = s.count()
+      require(nS > 0, "personalized PageRank needs a non-empty source set")
+      (1.0 - damping) / nS
     }
-    var ranks = base
+    // each partition's node ids — its sources, the destinations and seeds
+    // [[part]] places there — gathered by one shuffle of each block's
+    // distinct destinations, then laid out against the block
+    val ids = adj.mapPartitions(it => Adjacency.distinctSorted(it.next().dst)
+        .iterator.map((_, false)))
+      .union(seeds.fold(spark.sparkContext.emptyRDD[(Long, Boolean)])(_.map((_, true))))
+      .partitionBy(part)
+    val layout = rounds.persist(adj.zipPartitions(ids) { (aIt, idIt) =>
+      Iterator.single(RankLayout(aIt.next(), idIt, damping, teleport))
+    })
+    var ranks = layout.map(_.base)
     var i = 0
     while (i < iterations) {
-      val contrib = e.join(ranks.join(outW, part), part)
-        .map { case (_, ((dst, w), (r, ow))) => (dst, r * w / ow) }
-        .reduceByKey(part, _ + _) // the one shuffle of the round
-      ranks = base.leftOuterJoin(contrib, part)
-        .mapValues { case (b, in) => b + damping * in.getOrElse(0.0) }
+      // messages keyed by destination: not `part`'s layout
+      val msgs = adj.zipPartitions(layout, ranks, preservesPartitioning = false) {
+        (aIt, lIt, rIt) =>
+          val (a, l, r) = (aIt.next(), lIt.next(), rIt.next())
+          val sum = new Array[Double](l.nbr.length)
+          for (s <- a.src.indices) {
+            val rs = r(l.srcAt(s))
+            for (j <- a.offset(s) until a.offset(s + 1)) sum(l.nbrAt(j)) += rs * l.share(j)
+          }
+          Iterator.tabulate(sum.length)(k => (l.nbr(k), sum(k)))
+      }.partitionBy(part) // the one shuffle of the round
+      ranks = layout.zipPartitions(msgs) { (lIt, mIt) =>
+        val l = lIt.next()
+        val in = new Array[Double](l.ids.length)
+        mIt.foreach { case (d, v) => in(java.util.Arrays.binarySearch(l.ids, d)) += v }
+        Iterator.single(Array.tabulate(in.length)(k => l.base(k) + damping * in(k)))
+      }
       i += 1
     }
-    Rounds.toDf(spark, ranks, "node", "rank")
+    rounds.release(Seq(adj, layout))
+    Rounds.toDf(spark, layout.zipPartitions(ranks) { (lIt, rIt) =>
+      val (l, r) = (lIt.next(), rIt.next())
+      Iterator.tabulate(r.length)(k => (l.ids(k), r(k)))
+    }, "node", "rank")
+  }
+
+  /** One partition's rank layout next to its [[Adjacency]] block: `ids`,
+    * the partition's node ids ascending, and `base`, their teleport terms;
+    * `srcAt` places the block's sources in `ids`; `nbr` lists the block's
+    * distinct destinations and `nbrAt` places each edge's destination in
+    * it; `share` is each edge's weight over its source's total out-weight. */
+  private final case class RankLayout(ids: Array[Long], base: Array[Double],
+      srcAt: Array[Int], nbr: Array[Long], nbrAt: Array[Int], share: Array[Double])
+
+  private object RankLayout {
+    /** `idIt`: (node id, is a seed) rows [[Rounds.part]] places here. */
+    def apply(a: Adjacency, idIt: Iterator[(Long, Boolean)], damping: Double,
+        teleport: Option[Double]): RankLayout = {
+      val (all, seeds) = (Array.newBuilder[Long], Array.newBuilder[Long])
+      all ++= a.src
+      idIt.foreach { case (n, seed) => all += n; if (seed) seeds += n }
+      val ids = Adjacency.distinctSorted(all.result())
+      val seedSet = seeds.result()
+      java.util.Arrays.sort(seedSet)
+      val base = teleport match {
+        case None => Array.fill(ids.length)(1.0 - damping)
+        case Some(tp) => ids.map(n =>
+          if (java.util.Arrays.binarySearch(seedSet, n) >= 0) tp else 0.0)
+      }
+      val nbr = Adjacency.distinctSorted(a.dst)
+      def w(j: Int) = if (a.weight == null) 1.0 else a.weight(j)
+      val share = new Array[Double](a.dst.length)
+      for (s <- a.src.indices) {
+        val edges = a.offset(s) until a.offset(s + 1)
+        val out = edges.map(w).sum
+        edges.foreach(j => share(j) = w(j) / out)
+      }
+      RankLayout(ids, base, a.src.map(java.util.Arrays.binarySearch(ids, _)),
+        nbr, a.dst.map(java.util.Arrays.binarySearch(nbr, _)), share)
+    }
   }
 
   /**
    * Weighted PageRank: each node distributes its rank across out-edges
    * proportionally to edge weight instead of uniformly —
    *   contrib(u→v) = rank(u) · w(u→v) / Σ_x w(u→x)
-   * (the GDS-style relationship-weighted variant). Same per-iteration
-   * shape as [[pageRank]]: one join + one partial-aggregating sum, both
-   * hash-partitioned on 8-byte node ids; the only extra state is the
-   * per-node out-weight total, computed once.
+   * (the GDS-style relationship-weighted variant). Same rounds as
+   * [[pageRank]]; each edge's share of its source's out-weight is laid
+   * out once, next to its adjacency block.
    *
    * @param edges (src, dst, weight DOUBLE > 0); multi-edges each carry
    *              their own weight
@@ -173,9 +230,9 @@ object Ranking {
    * the teleport mass restarts at the SOURCE set instead of uniformly —
    *   rank_{t+1}(v) = (1−d)·1[v ∈ S]/|S| + d · Σ_{u→v} rank_t(u)/outdeg(u)
    * — the similarity-to-my-seeds ranking behind recommendation and
-   * related-entity queries. Same per-iteration shape as [[pageRank]]
-   * (one join + one aggregate, hash-partitioned on node ids); the source
-   * set joins as a DataFrame, |S| is the one driver scalar.
+   * related-entity queries. Same rounds as [[pageRank]]; the seeds join
+   * the node ids of their partitions once, and |S| is the one driver
+   * scalar.
    *
    * @param edges (src, dst); sources (source LONG)
    * @return (node, rank) — nodes with rank 0 included (they're in the
@@ -186,8 +243,7 @@ object Ranking {
     require(iterations >= 1 && damping > 0 && damping < 1,
       s"bad pageRank config: iterations=$iterations damping=$damping")
     iterateRanks(edges.select(col("src").cast("long"),
-        col("dst").cast("long"), lit(1.0).as("w")),
-      iterations, damping,
+        col("dst").cast("long")), iterations, damping,
       sources = Some(sources.select(col("source").cast("long")).distinct()))
   }
 

@@ -17,6 +17,14 @@ import org.apache.spark.storage.StorageLevel
  * round (and any reused input) through [[persist]] and materializes it
  * with the round's one action, and at the end [[release]]s every RDD it
  * persisted that the result does not read.
+ *
+ * A loop over a graph that does not change between rounds (BFS, the
+ * PageRank family) reads its edges as [[adjacency]] blocks: the edges
+ * shuffle onto [[part]] once, each partition becomes one persisted CSR
+ * [[Adjacency]], and a round joins its keyed state into the block of the
+ * same partition through `zipPartitions` and index lookups, so no round
+ * reads or rehashes the edges again (GraphX's `EdgePartition`; Pregelix's
+ * resident vertex and edge state).
  */
 final class Rounds private (val part: HashPartitioner) {
   private val held = scala.collection.mutable.ArrayBuffer.empty[RDD[_]]
@@ -32,6 +40,24 @@ final class Rounds private (val part: HashPartitioner) {
     pairs.map((_, ())).combineByKeyWithClassTag((u: Unit) => u, (u: Unit, _: Unit) => u,
         (u: Unit, _: Unit) => u, Rounds.byFirst(part.numPartitions), mapSideCombine = false)
       .mapPartitions(_.map(_._1), preservesPartitioning = true)
+
+  /** The edges as one persisted [[Adjacency]] block per partition of
+    * [[part]], each holding the edges whose source that partition owns —
+    * one shuffle of `edges`. With `dedupe`, each block keeps a pair once:
+    * after the shuffle every copy of a pair is in its source's partition,
+    * so no shuffle aggregation is needed. A round reads the block of its
+    * own partition: `state.zipPartitions(block)` with `state` on [[part]]. */
+  def adjacency(edges: RDD[(Long, Long)], dedupe: Boolean): RDD[Adjacency] =
+    persist(edges.partitionBy(part).mapPartitions(it =>
+      Iterator.single(Adjacency.build(it.map(e => (e._1, e._2, 0.0)),
+        weighted = false, dedupe))))
+
+  /** [[adjacency]] of weighted edges `(src, (dst, weight))`: multi-edges
+    * are kept, each with its own weight. */
+  def weightedAdjacency(edges: RDD[(Long, (Long, Double))]): RDD[Adjacency] =
+    persist(edges.partitionBy(part).mapPartitions(it =>
+      Iterator.single(Adjacency.build(it.map(e => (e._1, e._2._1, e._2._2)),
+        weighted = true, dedupe = false))))
 
   /** Persisted at MEMORY_AND_DISK until [[unpersist]] or [[release]]. */
   def persist[T](rdd: RDD[T]): RDD[T] = {
@@ -91,5 +117,68 @@ object Rounds {
     spark.createDataFrame(rows.map(Row.fromTuple),
       StructType(fields.zip(named).map { case (f, n) =>
         f.copy(name = n, nullable = false) }))
+  }
+}
+
+/** One partition's edges in compressed sparse row form: the partition's
+  * sources ascending in `src`; the i-th source's neighbours are
+  * `dst(offset(i) until offset(i + 1))` — ascending when unweighted; a
+  * weighted block keeps each source's edges in input order, with their
+  * weights at the same positions of `weight` (null when unweighted). */
+final class Adjacency private (val src: Array[Long], val offset: Array[Int],
+    val dst: Array[Long], val weight: Array[Double]) extends Serializable {
+
+  /** The neighbours of `s` (empty when it has no edge here). */
+  def neighbours(s: Long): Iterator[Long] = {
+    val i = java.util.Arrays.binarySearch(src, s)
+    if (i < 0) Iterator.empty else Iterator.range(offset(i), offset(i + 1)).map(dst)
+  }
+}
+
+object Adjacency {
+
+  /** `xs` ascending without repeats. */
+  private[ops] def distinctSorted(xs: Array[Long]): Array[Long] = {
+    val a = xs.clone()
+    java.util.Arrays.sort(a)
+    var n = 0
+    for (x <- a) if (n == 0 || x != a(n - 1)) { a(n) = x; n += 1 }
+    java.util.Arrays.copyOf(a, n)
+  }
+
+  /** The block of `(src, dst, weight)` edges: a counting sort into source
+    * order; unweighted, each source's neighbours are then sorted and, with
+    * `dedupe`, kept once. */
+  private[ops] def build(edges: Iterator[(Long, Long, Double)], weighted: Boolean,
+      dedupe: Boolean): Adjacency = {
+    val (sb, db, wb) = (Array.newBuilder[Long], Array.newBuilder[Long], Array.newBuilder[Double])
+    edges.foreach { case (s, d, w) => sb += s; db += d; if (weighted) wb += w }
+    val (s, d, w) = (sb.result(), db.result(), wb.result())
+    val src = distinctSorted(s)
+    val at = s.map(java.util.Arrays.binarySearch(src, _))
+    val offset = new Array[Int](src.length + 1)
+    at.foreach(i => offset(i + 1) += 1)
+    for (i <- src.indices) offset(i + 1) += offset(i)
+    val next = java.util.Arrays.copyOf(offset, src.length)
+    val (dst, weight) = (new Array[Long](s.length), if (weighted) new Array[Double](s.length) else null)
+    for (j <- s.indices) {
+      val k = next(at(j))
+      next(at(j)) += 1
+      dst(k) = d(j)
+      if (weighted) weight(k) = w(j)
+    }
+    if (weighted) return new Adjacency(src, offset, dst, weight)
+    // sort each source's run, then (dedupe) compact it in place
+    var (n, from) = (0, 0)
+    for (i <- src.indices) {
+      val to = offset(i + 1)
+      java.util.Arrays.sort(dst, from, to)
+      if (dedupe) {
+        for (j <- from until to) if (j == from || dst(j) != dst(j - 1)) { dst(n) = dst(j); n += 1 }
+        offset(i + 1) = n
+      }
+      from = to
+    }
+    new Adjacency(src, offset, if (dedupe) java.util.Arrays.copyOf(dst, n) else dst, null)
   }
 }

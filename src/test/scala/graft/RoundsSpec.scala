@@ -3,7 +3,7 @@ package graft
 import graft.ops.{Bfs, Ranking, Trail}
 import org.apache.spark.TestBus
 import org.apache.spark.rdd.RDD
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.storage.StorageLevel
@@ -63,10 +63,63 @@ class RoundsSpec extends AnyFunSuite {
     "Bfs.listRanks" -> (() => Bfs.listRanks(
       (0L until 6L).map(i => (i, i + 1)).toDF("src", "dst"))),
     "Ranking.pageRank" -> (() => Ranking.pageRank(edges, 3)),
+    "Ranking.weightedPageRank" -> (() => Ranking.weightedPageRank(
+      grid.map { case (s, d) => (s, d, 1.0 + s) }.toDF("src", "dst", "weight"), 3)),
+    "Ranking.personalizedPageRank" -> (() =>
+      Ranking.personalizedPageRank(edges, sources, 3)),
     "Bfs.connectedComponents" -> (() => Bfs.connectedComponents(edges))
   ).foreach { case (name, result) =>
     test(s"$name releases every persisted RDD its result does not read") {
       TestSession.withForcedDistributed(true)(assertReleased(name)(result()))
+    }
+  }
+
+  /** Jobs started and shuffle records written while `body` runs. */
+  private def listen(body: => Unit): (Int, Long) = {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val records = new java.util.concurrent.atomic.AtomicLong
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        Option(e.taskMetrics).foreach(m =>
+          records.addAndGet(m.shuffleWriteMetrics.recordsWritten))
+    }
+    TestBus.drain(sc)
+    sc.addSparkListener(l)
+    try { body; TestBus.drain(sc) }
+    finally sc.removeSparkListener(l)
+    (jobs.get, records.get)
+  }
+
+  test("forced Bfs.distances shuffles its edges once and runs one job a round plus the seed count") {
+    // the driver-side BFS from 0 and 4 to depth 5: its rounds and the rows
+    // they expand (one per frontier row and distinct out-neighbour)
+    val out = grid.distinct.groupBy(_._1).map { case (u, es) => u -> es.map(_._2) }
+    var frontier = Seq((0L, 0L), (4L, 4L))
+    val seen = scala.collection.mutable.Set(frontier: _*)
+    var (rounds, expanded) = (0, 0L)
+    while (rounds < 5 && frontier.nonEmpty) {
+      rounds += 1
+      val next = frontier.flatMap { case (n, s) => out.getOrElse(n, Nil).map((_, s)) }
+      expanded += next.size
+      frontier = next.filter(seen.add)
+    }
+    TestSession.withForcedDistributed(true) {
+      val (jobs, records) = listen(Bfs.distances(edges, sources, 5).collect())
+      // each edge row (duplicates too), each source and each expanded row
+      // is shuffled once: no separate edge dedupe
+      assert(records == grid.size + 2 + expanded,
+        s"$records shuffle records for ${grid.size} edges, 2 sources, $expanded expanded rows")
+      // the seed count, one job a round, and the collect
+      assert(jobs == rounds + 2, s"$jobs jobs for $rounds rounds")
+    }
+  }
+
+  test("forced pageRank runs one job") {
+    TestSession.withForcedDistributed(true) {
+      val (jobs, _) = listen(Ranking.pageRank(edges, 3).collect())
+      assert(jobs == 1, s"$jobs jobs")
     }
   }
 

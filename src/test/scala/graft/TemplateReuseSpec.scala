@@ -141,6 +141,21 @@ class TemplateReuseSpec extends AnyFunSuite {
     }
   }
 
+  test("a shortestPath template's first request plans once, with its values") {
+    val g = shop()
+    val q = "MATCH (c:Customer) WHERE c.key = $k " +
+      "MATCH p = shortestPath((c)-[:PLACED*..2]->(o:Order)) RETURN o.totalprice AS t"
+    def valued() = Planner.plan(spark, g, Cypher.parse(q), Map("k" -> 2L))
+    valued() // the snapshot's count store and topology, once per snapshot
+    val fresh = jobsDuring(valued())
+    assert(fresh > 0, "the shortest-path search runs while the query plans")
+    val fallbacks = Planner.templateFallbacks
+    val first = jobsDuring(Cypher.run(spark, g, q, Map("k" -> 2L)))
+    assert(Planner.templateFallbacks == fallbacks,
+      "the first request planned a template that its search could not hold")
+    assert(first == fresh, s"the first request launched $first jobs, a valued plan $fresh")
+  }
+
   test("a write's new snapshot misses the plan cache") {
     val g = shop()
     val q = "MATCH (c:Customer) WHERE c.key > $k RETURN count(c) AS n"
