@@ -2773,10 +2773,10 @@ object Planner {
     val res0 = if (s.groups) {
       // SHORTEST k GROUPS (reference Selector.ShortestGroups): whole
       // length-groups survive, so the search runs the distinct-arrival-
-      // depth budget. A single plain var-length leg takes the
-      // shortestGroups fast path (driver-local replica for small
-      // inputs); alternation branches and interior node predicates run
-      // the same product-graph search as SHORTEST k with group pruning
+      // depth budget. A single plain var-length leg takes the single-leg
+      // shortestGroups (one arrival budget per (source, node));
+      // alternation branches and interior node predicates run the same
+      // product-graph search as SHORTEST k with group pruning
       // (Trail.shortestGroupsSegments).
       val simple = segs.size == 1 && !segs.head.composite &&
         segs.head.boundary.isEmpty

@@ -492,7 +492,7 @@ object Procedures {
       case other  => throw new IllegalArgumentException(
         s"direction must be OUT, IN or BOTH, got $other")
     }
-    val pairs = srcs.toDF("source").crossJoin(dsts.toDF("target"))
+    val pairs = (for (s <- srcs; d <- dsts) yield (s, d)).toDF("source", "target")
     graft.ops.WeightedPaths.kCheapest(edges, pairs, k, maxDepth)
       .select(col("source").as("sourceNode"), col("target").as("targetNode"),
         col("dist").as("totalCost"), col("hops"), col("path").as("relIds"),

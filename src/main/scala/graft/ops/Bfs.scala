@@ -201,9 +201,10 @@ object Bfs {
    * under an arrival budget of one: a (source, node) state keeps every
    * tie of the round it is first reached in, later arrivals are dropped
    * and never expand, and the trail check never fires (a repeated rel
-   * would repeat a node). Path count can be exponential on dense graphs
-   * (inherent to the semantics — the reference enumerates the same set
-   * serially); maxDepth bounds the walk.
+   * would repeat a node). The rounds run on the driver or distributed by
+   * input size; null sources match nothing. Path count can be exponential
+   * on dense graphs (inherent to the semantics — the reference enumerates
+   * the same set serially); maxDepth bounds the walk.
    *
    * @param edges (id, src, dst) pre-oriented/filtered
    * @param sources (source)
@@ -211,14 +212,11 @@ object Bfs {
    *         nodes ARRAY<LONG> of node ids incl. both endpoints) — one row
    *         per distinct shortest path
    */
-  def allShortestPaths(edges: DataFrame, sources: DataFrame, maxDepth: Int): DataFrame = {
-    val out = TrailRdd.search(Seq(TrailRdd.legEdges(edges)), Seq(None),
-      sources.select("source").na.drop(), Array(0), Array(maxDepth),
-      TrailRdd.ArrivalBudget(1), keepAll = true, maxRounds = maxDepth)
-    Rounds.toDf(edges.sparkSession, out.result)
+  def allShortestPaths(edges: DataFrame, sources: DataFrame, maxDepth: Int): DataFrame =
+    TrailRdd.search(Seq(Trail.PathSegment(edges, 0, maxDepth)), sources,
+      TrailRdd.ArrivalBudget(1), keepAll = true)
       .select(col("source"), col("end").as("node"), col("hops").as("dist"),
         col("path"), col("nodes"))
-  }
 
   /**
    * List ranking by pointer doubling (Wyllie's algorithm) — the scale path

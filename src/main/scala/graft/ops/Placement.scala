@@ -21,10 +21,14 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
  *  - [[Walk]] — collect once, then one linear walk (components, SCC,
  *    coreness, topological layers, list ranking, earliest arrival,
  *    closeness, betweenness);
- *  - [[RoundDp]] — round-iterated driver DPs whose frontier grows with
- *    sources × fan-out (Trail searches, kCheapest, A*, all-pairs). Raising
- *    it to 200k was measured 7–20× slower on the 15k-edge sf0.1 Trail
- *    fixtures: past ~10k edges the distributed rounds win;
+ *  - [[RoundDp]] — round-iterated DPs whose frontier grows with
+ *    sources × fan-out: the path-search family (SHORTEST k / GROUPS,
+ *    shortestK, allShortestPaths, kCheapest), decided once in
+ *    `TrailRdd.search`, which probes each segment's edges and boundary
+ *    set, then the sources, and runs the same round step on the driver or
+ *    as RDD rounds; A* and all-pairs. Raising it to 200k was measured
+ *    7–20× slower on the 15k-edge sf0.1 Trail fixtures: past ~10k edges
+ *    the distributed rounds win;
  *  - [[Louvain]] — the sequential greedy over a collected edge list;
  *  - [[BpeDict]] — the word dictionary of the BPE merge loop.
  *

@@ -111,12 +111,24 @@ object Rounds {
   /** Result rows → DataFrame. Column types come from `T`'s fields, every
     * column non-null; `names` renames them (default: the field names). */
   def toDf[T <: Product : TypeTag](spark: SparkSession, rows: RDD[T],
+      names: String*): DataFrame =
+    spark.createDataFrame(rows.map(Row.fromTuple), schema[T](names))
+
+  /** [[toDf]] of rows held on the driver: a local relation in one
+    * partition (the rows are few, and a per-key rank over them then needs
+    * no shuffle), no job. */
+  def localDf[T <: Product : TypeTag](spark: SparkSession, rows: Seq[T],
       names: String*): DataFrame = {
+    import scala.jdk.CollectionConverters._
+    spark.createDataFrame(rows.map(Row.fromTuple).asJava, schema[T](names))
+      .coalesce(1)
+  }
+
+  private def schema[T <: Product : TypeTag](names: Seq[String]): StructType = {
     val fields = Encoders.product[T].schema.fields
     val named = if (names.isEmpty) fields.map(_.name).toSeq else names
-    spark.createDataFrame(rows.map(Row.fromTuple),
-      StructType(fields.zip(named).map { case (f, n) =>
-        f.copy(name = n, nullable = false) }))
+    StructType(fields.zip(named).map { case (f, n) =>
+      f.copy(name = n, nullable = false) })
   }
 }
 

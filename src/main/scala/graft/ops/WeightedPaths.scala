@@ -199,8 +199,10 @@ object WeightedPaths {
    * r-hop partials, because k cheaper same-hop partials would extend by
    * the same suffix into k cheaper full paths. Work per round is bounded
    * by |reached| × k, never by the path count — the priority queue the
-   * single-machine formulation needs is replaced by one window rank per
-   * round over (source, node).
+   * single-machine formulation needs is replaced by one per-state top-k
+   * a round. The rounds are the path-search family's
+   * ([[TrailRdd.search]] under its k-best-per-state policy, ordered by
+   * cost first), on the driver or distributed by input size.
    *
    * @param edges (id LONG, src LONG, dst LONG, weight DOUBLE >= 0)
    * @param pairs (source, target)
@@ -210,52 +212,15 @@ object WeightedPaths {
       maxDepth: Int): DataFrame = {
     require(k >= 1 && maxDepth >= 1 && maxDepth <= 30,
       s"kCheapest bounds out of range: k=$k maxDepth=$maxDepth")
-    // Small-input fast path (the pattern of astar/allPairsDistances): the
-    // distributed rounds cost a driver job each — pure scheduling latency
-    // on a graph that fits in one task. The local loop replicates the
-    // EXACT same DP (per-round per-(source,node) top-k by (dist,
-    // path-lex)), so results are identical, not merely equivalent.
-    for (es <- Placement.local(edges.select(col("id"), col("src"), col("dst"),
-           col("weight").cast("double")), Placement.RoundDp);
-         ps <- Placement.local(pairs.select(col("source"), col("target")),
-           Placement.RoundDp))
-      return localKCheapest(edges.sparkSession,
-        es.map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))),
-        ps.map(r => (r.getLong(0), r.getLong(1))), k, maxDepth)
-    val e = edges.select(col("id").as("__er"), col("src").as("__es"),
-      col("dst").as("__ed"), col("weight").cast("double").as("__ew"))
-    val wRound = org.apache.spark.sql.expressions.Window
-      .partitionBy("source", "end").orderBy(col("dist").asc, col("path").asc)
-
-    var frontier = pairs.select("source").distinct()
-      .select(col("source"), col("source").as("end"), lit(0.0).as("dist"),
-        lit(0).as("hops"), array().cast("array<long>").as("path"))
-      .freshCkpt()
-    val keptPieces = Seq.newBuilder[DataFrame]
-    keptPieces += frontier
-    var d = 0
-    var fCnt = frontier.count()
-    while (d < maxDepth && fCnt > 0) {
-      val f = if (fCnt <= Rounds.BroadcastFrontierRows) broadcast(frontier) else frontier
-      val kept = f.join(e,
-          col("end") === col("__es") && !array_contains(col("path"), col("__er")))
-        .select(col("source"), col("__ed").as("end"),
-          (col("dist") + col("__ew")).as("dist"), (col("hops") + 1).as("hops"),
-          concat(col("path"), array(col("__er"))).as("path"))
-        .withColumn("__rk", row_number().over(wRound))
-        .filter(col("__rk") <= k)
-        .drop("__rk")
-        .localCheckpoint(false) // the count() below materializes it
-      keptPieces += kept
-      frontier = kept
-      fCnt = frontier.count()
-      d += 1
-    }
+    val kept = TrailRdd.search(
+      Seq(Trail.PathSegment(TrailRdd.legEdges(edges, col("weight")), 0, maxDepth,
+        composite = true)),
+      pairs, TrailRdd.KBestPerState(k, Nil), keepAll = true)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("source", "target").orderBy(col("dist").asc, col("path").asc)
-    keptPieces.result().reduce(_ unionByName _)
-      .join(pairs, Seq("source")).filter(col("end") === col("target"))
-      .select(col("source"), col("target"), col("dist"), col("hops"), col("path"))
+    kept.join(pairs, Seq("source")).filter(col("end") === col("target"))
+      .select(col("source"), col("target"), col("cost").as("dist"), col("hops"),
+        col("path"))
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
   }
@@ -452,75 +417,6 @@ object WeightedPaths {
     best.filter(col("node") === target)
       .select(lit(source).as("source"), col("node").as("target"),
         col("dist"), col("path"), col("nodes"))
-  }
-
-  /** Driver-local replica of [[kCheapest]]'s round DP over a collected
-    * (bounded) edge set — same per-round per-(source, node) top-k by
-    * (dist, path-lexicographic), same trail constraint, same final
-    * ranking, so the output matches the distributed formulation row for
-    * row. */
-  private def localKCheapest(spark: org.apache.spark.sql.SparkSession,
-      edges: Array[(Long, Long, Long, Double)], pairs: Array[(Long, Long)],
-      k: Int, maxDepth: Int): DataFrame = {
-    import spark.implicits._
-    def lexLess(a: Vector[Long], b: Vector[Long]): Boolean = {
-      var i = 0
-      while (i < a.length && i < b.length) {
-        if (a(i) != b(i)) return a(i) < b(i)
-        i += 1
-      }
-      a.length < b.length
-    }
-    val pOrd = new Ordering[(Double, Vector[Long])] {
-      def compare(x: (Double, Vector[Long]), y: (Double, Vector[Long])): Int = {
-        val c = java.lang.Double.compare(x._1, y._1)
-        if (c != 0) c
-        else if (x._2 == y._2) 0
-        else if (lexLess(x._2, y._2)) -1 else 1
-      }
-    }
-    val adj = edges.groupBy(_._2) // src -> [(id, src, dst, w)]
-    val sources = pairs.map(_._1).distinct
-    var level: Map[(Long, Long), Seq[(Double, Vector[Long])]] =
-      sources.map(s => (s, s) -> Seq((0.0, Vector.empty[Long]))).toMap
-    val kept = Seq.newBuilder[(Long, Long, Double, Int, Vector[Long])]
-    level.foreach { case ((s, e), ps) =>
-      ps.foreach { case (dd, p) => kept += ((s, e, dd, 0, p)) } }
-    var d = 0
-    while (d < maxDepth && level.nonEmpty) {
-      d += 1
-      val next = scala.collection.mutable.HashMap
-        .empty[(Long, Long), scala.collection.mutable.ArrayBuffer[(Double, Vector[Long])]]
-      level.foreach { case ((src, end), ps) =>
-        ps.foreach { case (dist, path) =>
-          adj.getOrElse(end, Array.empty[(Long, Long, Long, Double)]).foreach {
-            case (eid, _, dst, w) =>
-              if (!path.contains(eid))
-                next.getOrElseUpdate((src, dst),
-                  scala.collection.mutable.ArrayBuffer.empty) +=
-                  ((dist + w, path :+ eid))
-          }
-        }
-      }
-      level = next.iterator.map { case (key, buf) =>
-        key -> buf.sorted(pOrd).take(k).toSeq }.toMap
-      level.foreach { case ((s, e), ps) =>
-        ps.foreach { case (dd, p) => kept += ((s, e, dd, d, p)) } }
-    }
-    val wanted = pairs.toSet
-    val rows = kept.result()
-      .filter(r => wanted((r._1, r._2)))
-      .groupBy(r => (r._1, r._2))
-      .flatMap { case ((s, t), rs) =>
-        rs.sortBy(r => (r._3, r._5))(Ordering.Tuple2(Ordering.Double.TotalOrdering,
-            new Ordering[Vector[Long]] {
-              def compare(a: Vector[Long], b: Vector[Long]): Int =
-                if (a == b) 0 else if (lexLess(a, b)) -1 else 1
-            }))
-          .take(k).zipWithIndex
-          .map { case (r, i) => (s, t, r._3, r._4, r._5, i + 1) }
-      }.toSeq
-    rows.toDF("source", "target", "dist", "hops", "path", "rank")
   }
 
   /**

@@ -1,16 +1,18 @@
 package graft
 
-import graft.ops.{Trail, WeightedPaths}
+import graft.ops.{Bfs, Trail, WeightedPaths}
+import graft.ops.Trail.PathSegment
+import org.apache.spark.sql.DataFrame
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Property test: the driver-local fast paths of kCheapest and
-  * shortestGroups must reproduce the distributed round DP row for row on
-  * RANDOM small multigraphs — not just the hand-picked spec fixtures.
-  * Both formulations claim to run the identical DP; this is the claim
-  * under adversarial inputs (cycles, parallel edges, dead ends,
-  * unreachable targets, weight ties). */
+/** Property test: every path search of the round-DP family returns the
+  * same rows from its driver executor (inputs within Placement.RoundDp)
+  * and from its forced RDD rounds on RANDOM small multigraphs — not just
+  * the hand-picked spec fixtures. Both executors run the same step; this
+  * is the claim under adversarial inputs (cycles, parallel edges, dead
+  * ends, unreachable targets, weight ties). */
 class PathReplicaPropertySpec extends AnyFunSuite {
   lazy val spark = TestSession.spark
   import spark.implicits._
@@ -64,5 +66,43 @@ class PathReplicaPropertySpec extends AnyFunSuite {
         assert(run(false).toList == run(true).toList, s"sample $i: $es $src->$dst")
       }
     }
+  }
+
+  /** `search(edges (id, src, dst), pairs)` run on the driver, then forced
+    * distributed, over samples `seeds`: the same rows. */
+  private def driverEqualsForced(name: String, seeds: Range)(
+      search: (DataFrame, DataFrame) => DataFrame): Unit =
+    test(s"$name local == distributed on random multigraphs") {
+      for (i <- seeds) {
+        val (es, src, dst) = sample(i)
+        if (es.nonEmpty) {
+          val e = es.map(x => (x._1, x._2, x._3)).toDF("id", "src", "dst")
+          val pairs = Seq((src, dst)).toDF("source", "target")
+          def run(forced: Boolean) = TestSession.withForcedDistributed(forced)(
+            search(e, pairs).collect()).map(_.toString).sorted.toList
+          assert(run(false) == run(true), s"sample $i: $es $src->$dst")
+        }
+      }
+    }
+
+  // the even-numbered nodes: a boundary set on every sample
+  private def evens = (0L until 6L by 2).toDF("id")
+
+  driverEqualsForced("shortestKSegments with a boundary on its second segment", 40 to 51) {
+    (e, pairs) => Trail.shortestKSegments(
+      Seq(PathSegment(e, 1, 2), PathSegment(e, 0, 2, Some(evens))), pairs, k = 2)
+  }
+
+  driverEqualsForced("shortestGroupsSegments", 60 to 71) { (e, pairs) =>
+    Trail.shortestGroupsSegments(
+      Seq(PathSegment(e, 1, 2, Some(evens)), PathSegment(e, 1, 2)), pairs, k = 2)
+  }
+
+  driverEqualsForced("shortestK", 80 to 91) { (e, pairs) =>
+    Trail.shortestK(e, pairs, k = 3, maxDepth = 4)
+  }
+
+  driverEqualsForced("allShortestPaths", 100 to 111) { (e, pairs) =>
+    Bfs.allShortestPaths(e, pairs.select("source"), maxDepth = 4)
   }
 }

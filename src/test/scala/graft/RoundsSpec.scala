@@ -1,6 +1,7 @@
 package graft
 
-import graft.ops.{Bfs, Ranking, Trail}
+import graft.ops.{Bfs, Placement, Ranking, Trail, WeightedPaths}
+import graft.ops.Trail.PathSegment
 import org.apache.spark.TestBus
 import org.apache.spark.rdd.RDD
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
@@ -54,11 +55,21 @@ class RoundsSpec extends AnyFunSuite {
     .map { case ((s, d), i) => (100L + i, s, d) }.toDF("id", "src", "dst")
   private lazy val sources = Seq(0L, 4L).toDF("source")
   private lazy val pairs = Seq((0L, 8L), (4L, 2L)).toDF("source", "target")
+  private lazy val weighted = grid.zipWithIndex
+    .map { case ((s, d), i) => (100L + i, s, d, 1.0 + i % 3) }
+    .toDF("id", "src", "dst", "weight")
+  // two legs, the first ending on an odd node
+  private def segments = Seq(
+    PathSegment(idEdges, 1, 2, Some(Seq(1L, 3L, 5L, 7L).toDF("id"))),
+    PathSegment(idEdges, 0, 3))
 
   Seq[(String, () => DataFrame)](
     "Bfs.distances" -> (() => Bfs.distances(edges, sources, 5)),
     "Bfs.shortestPathLengths" -> (() => Bfs.shortestPathLengths(edges, pairs, 5)),
     "Trail.shortestK" -> (() => Trail.shortestK(idEdges, pairs, 2, 6)),
+    "Trail.shortestGroups" -> (() => Trail.shortestGroups(idEdges, pairs, 2, 1, 6)),
+    "Trail.shortestKSegments" -> (() => Trail.shortestKSegments(segments, pairs, 2)),
+    "WeightedPaths.kCheapest" -> (() => WeightedPaths.kCheapest(weighted, pairs, 2, 6)),
     "Bfs.allShortestPaths" -> (() => Bfs.allShortestPaths(idEdges, sources, 5)),
     "Bfs.listRanks" -> (() => Bfs.listRanks(
       (0L until 6L).map(i => (i, i + 1)).toDF("src", "dst"))),
@@ -74,13 +85,16 @@ class RoundsSpec extends AnyFunSuite {
     }
   }
 
-  /** Jobs started and shuffle records written while `body` runs. */
-  private def listen(body: => Unit): (Int, Long) = {
+  /** The descriptions of the jobs started (empty when unset) and the
+    * shuffle records written while `body` runs. */
+  private def listen(body: => Unit): (Seq[String], Long) = {
     val sc = spark.sparkContext
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]
     val records = new java.util.concurrent.atomic.AtomicLong
     val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.add(Option(e.properties).flatMap(p =>
+          Option(p.getProperty("spark.job.description"))).getOrElse(""))
       override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
         Option(e.taskMetrics).foreach(m =>
           records.addAndGet(m.shuffleWriteMetrics.recordsWritten))
@@ -89,7 +103,7 @@ class RoundsSpec extends AnyFunSuite {
     sc.addSparkListener(l)
     try { body; TestBus.drain(sc) }
     finally sc.removeSparkListener(l)
-    (jobs.get, records.get)
+    (jobs.toArray(Array.empty[String]).toSeq, records.get)
   }
 
   test("forced Bfs.distances shuffles its edges once and runs one job a round plus the seed count") {
@@ -112,14 +126,32 @@ class RoundsSpec extends AnyFunSuite {
       assert(records == grid.size + 2 + expanded,
         s"$records shuffle records for ${grid.size} edges, 2 sources, $expanded expanded rows")
       // the seed count, one job a round, and the collect
-      assert(jobs == rounds + 2, s"$jobs jobs for $rounds rounds")
+      assert(jobs.size == rounds + 2, s"${jobs.size} jobs for $rounds rounds")
     }
   }
 
   test("forced pageRank runs one job") {
     TestSession.withForcedDistributed(true) {
       val (jobs, _) = listen(Ranking.pageRank(edges, 3).collect())
-      assert(jobs == 1, s"$jobs jobs")
+      assert(jobs.size == 1, s"${jobs.size} jobs")
+    }
+  }
+
+  Seq[(String, () => DataFrame)](
+    "Trail.shortestK" -> (() => Trail.shortestK(idEdges, pairs, 2, 6)),
+    "Trail.shortestKSegments" -> (() => Trail.shortestKSegments(segments, pairs, 2)),
+    "WeightedPaths.kCheapest" -> (() => WeightedPaths.kCheapest(weighted, pairs, 2, 6)),
+    "Bfs.allShortestPaths" -> (() => Bfs.allShortestPaths(idEdges, sources, 5))
+  ).foreach { case (name, result) =>
+    test(s"$name within RoundDp runs only probe jobs while its result is built; forced, its rounds") {
+      def built(forced: Boolean) =
+        TestSession.withForcedDistributed(forced)(listen(result())._1)
+      val local = built(false)
+      assert(local.nonEmpty && local.forall(_.startsWith(Placement.ProbeDescription)),
+        s"unforced jobs: $local")
+      val rounds = built(true)
+      assert(rounds.nonEmpty && !rounds.exists(_.startsWith(Placement.ProbeDescription)),
+        s"forced jobs: $rounds")
     }
   }
 

@@ -298,7 +298,7 @@ class TrailPathsSpec extends AnyFunSuite {
       (113L, 12L, 13L), (114L, 13L, 1L)
     ).toDF("id", "src", "dst")
     val pairs = Seq((0L, 2L)).toDF("source", "target")
-    TestSession.bothPlacements { forced => // local replica AND distributed rounds
+    TestSession.bothPlacements { forced => // driver AND distributed rounds
       val hops = graft.ops.Trail.shortestGroups(e, pairs, k = 2,
           min = 1, maxDepth = 8)
         .collect().map(r => r.getInt(r.fieldIndex("hops"))).toSeq.sorted
@@ -403,5 +403,44 @@ class TrailPathsSpec extends AnyFunSuite {
       PathSegment(edges, 1, 2))
     assert(canon(false)(graft.ops.Trail.shortestGroupsSegments(segsG, pairs, k = 2)) ==
       canon(true)(graft.ops.Trail.shortestGroupsSegments(segsG, pairs, k = 2)))
+  }
+
+  test("a null start node in SHORTEST k / GROUPS matches nothing") {
+    val g = GraphFixtures.chainGraph(spark, 4)
+    val prefix = "MATCH (a:N) OPTIONAL MATCH (a)-[:NOPE]->(m) "
+    val patterns = Seq(
+      "MATCH p = SHORTEST 1 (m)-[:T*1..3]->(x)",
+      "MATCH p = SHORTEST 1 GROUPS (m)-[:T*1..3]->(x)",
+      "MATCH p = SHORTEST 2 (m)-[:T]->()-[:T*1..2]->(x)",
+      "MATCH p = SHORTEST 1 GROUPS (m)-[:T]->(:N)-[:T*1..2]->(x)",
+      "MATCH (x:N) MATCH p = SHORTEST 1 (m)-[:T*1..3]->(x)",
+      "MATCH p = shortestPath((m)-[:T*1..3]->(x))",
+      "MATCH p = allShortestPaths((m)-[:T*1..3]->(x))")
+    TestSession.bothPlacements { forced =>
+      patterns.foreach { pat =>
+        val c = graft.cypher.Cypher.run(spark, g,
+          prefix + pat + " RETURN count(*) AS c").collect().head.getLong(0)
+        assert(c == 0, s"forced=$forced: $pat")
+      }
+    }
+  }
+
+  test("path searches from a null source match nothing") {
+    import spark.implicits._
+    val e = Seq((100L, 0L, 1L, 1.0), (101L, 1L, 2L, 1.0))
+      .toDF("id", "src", "dst", "weight")
+    val ids = e.select("id", "src", "dst")
+    val pairs = Seq[(Option[Long], Long)]((None, 2L), (Some(0L), 2L))
+      .toDF("source", "target")
+    TestSession.bothPlacements { forced =>
+      def sources(df: org.apache.spark.sql.DataFrame) =
+        df.collect().map(r => Option(r.get(r.fieldIndex("source")))).toSet
+      val one: Set[Option[Any]] = Set(Some(0L))
+      assert(sources(Trail.shortestK(ids, pairs, 2, 3)) == one, s"forced=$forced")
+      assert(sources(Trail.shortestGroups(ids, pairs, 1, 1, 3)) == one, s"forced=$forced")
+      assert(sources(Trail.shortestKSegments(
+        Seq(Trail.PathSegment(ids, 1, 3)), pairs, 2)) == one, s"forced=$forced")
+      assert(sources(WeightedPaths.kCheapest(e, pairs, 2, 3)) == one, s"forced=$forced")
+    }
   }
 }
