@@ -36,13 +36,21 @@ private[ops] object TrailRdd {
       hops: Int, cost: Double, path: Array[Long], nodes: Array[Long],
       bnds: Array[Long])
 
+  /** A [[KCheapest]] result row: one of the k cheapest paths of a
+    * (source, target) pair, rank 1..k. */
+  final case class Ranked(source: Long, target: Long, dist: Double, hops: Int,
+      path: Array[Long], rank: Int)
+
   /** Per-state prune policy. */
   sealed trait Policy
-  /** shortestKSegments: k best (cost, hops, path) rows per
-    * (source, end, seg, segHops, bnds@partBnds). kCheapest's one weighted
-    * segment makes a state a node of one round, so there it keeps the k
-    * cheapest (cost, path) partials per (source, node) and round. */
+  /** shortestKSegments: k best (hops, path) rows per
+    * (source, end, seg, segHops, bnds@partBnds). */
   final case class KBestPerState(k: Int, partBnds: Seq[Int]) extends Policy
+  /** kCheapest: over its one weighted segment a state is a (source, node)
+    * of one round, which keeps its k cheapest (cost, path) partials; the
+    * search's result is then the k cheapest rows per (source, target)
+    * pair over all rounds, [[Ranked]]. */
+  final case class KCheapest(k: Int) extends Policy
   /** shortestGroupsSegments: length-cohort budget within
     * (source, end, seg, segHops) + distinct-arrival-round budget per
     * (source, end, seg), ledger-carried. */
@@ -138,12 +146,14 @@ private[ops] object TrailRdd {
       val out = Seq.newBuilder[RRow]
       def ledger(s: Long, e: Long, g: Int, n: Int) =
         RRow(s, e, g, -1, n, 0.0, Array.empty, Array.empty, Array.empty)
+      def kBest(k: Int, partBnds: Seq[Int]): Unit =
+        cands.groupBy(r => (r.source, r.end, r.seg, r.segHops,
+            partBnds.map(i => r.bnds.lift(i))))
+          .valuesIterator.foreach { rs =>
+            out ++= rs.sorted(rowOrd).take(k) }
       policy match {
-        case KBestPerState(k, partBnds) =>
-          cands.groupBy(r => (r.source, r.end, r.seg, r.segHops,
-              partBnds.map(i => r.bnds.lift(i))))
-            .valuesIterator.foreach { rs =>
-              out ++= rs.sorted(rowOrd).take(k) }
+        case KBestPerState(k, partBnds) => kBest(k, partBnds)
+        case KCheapest(k) => kBest(k, Nil)
         case GroupsLedger(budget) =>
           val prior = ledgers.map(l => ((l.source, l.end, l.seg), l.hops)).toMap
           val arrived = scala.collection.mutable.HashSet.empty[(Long, Long, Int)]
@@ -196,6 +206,23 @@ private[ops] object TrailRdd {
     }
   }
 
+  /** [[KCheapest]]'s result from its accepted rows: per (source, end) in
+    * `pairs`, the k cheapest by (cost, path), ranked. Keyed on `end`, so
+    * an end-closed subset of the rows with the pairs ending there gives
+    * that subset's share. */
+  private def rankPairs(rows: Iterator[RRow], pairs: Iterator[(Long, Long)],
+      k: Int): Iterator[Ranked] = {
+    val wanted = pairs.toSet
+    val ord: Ordering[RRow] = (a: RRow, b: RRow) => {
+      val c = java.lang.Double.compare(a.cost, b.cost)
+      if (c != 0) c else arrOrd.compare(a.path, b.path)
+    }
+    rows.filter(r => wanted((r.source, r.end))).toArray
+      .groupBy(r => (r.source, r.end)).valuesIterator
+      .flatMap(_.sorted(ord).iterator.take(k).zipWithIndex.map { case (r, i) =>
+        Ranked(r.source, r.end, r.cost, r.hops, r.path, i + 1) })
+  }
+
   /** An edge row of the normalized form (see [[search]]) as a step. */
   private def toEdge(r: Row, mask: Int): REdge =
     REdge(r.getLong(1), r.getSeq[Long](2).toArray, r.getSeq[Long](3).toArray,
@@ -217,12 +244,14 @@ private[ops] object TrailRdd {
    *                 (__es, __ed, __ers, __ens, __elen[, __ew DOUBLE cost,
    *                 0 when absent]); each with its optional boundary node
    *                 set (column `id`) required to ADVANCE out of it
-   * @param sources  source ids (column `source`); nulls match nothing and a
+   * @param sources  source ids (column `source`; under [[KCheapest]] the
+   *                 (source, target) pairs); nulls match nothing and a
    *                 repeated id searches once (the probe counts the rows
    *                 as given)
    * @param keepAll  true = every kept row is a result (single-leg
    *                 families); false = only rows past the last segment
-   * @return the accepted rows, [[RRow]] columns
+   * @return the accepted rows, [[RRow]] columns; under [[KCheapest]] the
+   *         [[Ranked]] rows
    */
   def search(segments: Seq[Trail.PathSegment], sources: DataFrame,
       policy: Policy, keepAll: Boolean): DataFrame = {
@@ -257,8 +286,13 @@ private[ops] object TrailRdd {
     }
     val bounds = segments.map(_.boundary.map(b =>
       checkpoint(b.select(col("id")))))
+    val rankK = policy match {
+      case KCheapest(k) => Some(k)
+      case _ => None
+    }
     // repeats are dropped by the executors, not by a shuffle here
-    val srcs = sources.select(col("source")).na.drop()
+    val srcs = sources.select((col("source") +: rankK.map(_ => col("target")).toSeq): _*)
+      .na.drop()
 
     // The checkpointed relations first: the rows a probe past the bound
     // read stay cached for the rounds, so stopping there wastes nothing.
@@ -272,14 +306,21 @@ private[ops] object TrailRdd {
         } yield done :+ ((es, bs))
       }
       s <- probe(srcs)
-    } yield (s.map(_.getLong(0)).distinct, g)
+    } yield (s, g)
+    def pair(r: Row) = (r.getLong(0), r.getLong(1))
     val (accepted, horizon) = probed match {
       case Some((s, g)) =>
-        val (rows, h) = onDriver(step, s, g.map(_._1), g.map(_._2), maxRounds)
-        (Rounds.localDf(spark, rows), h)
+        val (rows, h) = onDriver(step, s.map(_.getLong(0)).distinct, g.map(_._1),
+          g.map(_._2), maxRounds)
+        (rankK.fold(Rounds.localDf(spark, rows))(k =>
+          Rounds.localDf(spark, rankPairs(rows.iterator, s.iterator.map(pair), k).toSeq)), h)
       case None =>
         val (rows, h) = inRounds(step, srcs, edges, bounds, maxRounds)
-        (Rounds.toDf(spark, rows), h)
+        // the pairs meet their rows in the partition of their target
+        (rankK.fold(Rounds.toDf(spark, rows.values))(k => Rounds.toDf(spark,
+          rows.zipPartitions(srcs.rdd.map(r => (r.getLong(1), pair(r)))
+            .partitionBy(rows.partitioner.get))((rs, ps) =>
+            rankPairs(rs.map(_._2), ps.map(_._2), k)))), h)
     }
     held.result().foreach(_.unpersist(blocking = false))
     if (horizon) Trail.onHorizon("SHORTEST", maxRounds)
@@ -321,10 +362,11 @@ private[ops] object TrailRdd {
   }
 
   /** The distributed executor: RDD rounds, each round's frontier
-    * persisted (the lazy result reads them). Returns the accepted rows and
-    * whether the search hit an unbounded cap. */
+    * persisted (the lazy result reads them). Returns the accepted rows,
+    * keyed and partitioned by `end`, and whether the search hit an
+    * unbounded cap. */
   private def inRounds(step: Step, sources: DataFrame, edges: Seq[DataFrame],
-      bounds: Seq[Option[DataFrame]], maxRounds: Int): (RDD[RRow], Boolean) = {
+      bounds: Seq[Option[DataFrame]], maxRounds: Int): (RDD[(Long, RRow)], Boolean) = {
     val sc = sources.sparkSession.sparkContext
     val rounds = Rounds(sources.sparkSession, edges.map(_.rdd.getNumPartitions).max)
     val part = rounds.part
@@ -408,7 +450,8 @@ private[ops] object TrailRdd {
     // one tiny job, only for searches with an unbounded quantifier
     val horizon = step.hasUnbounded &&
       frontier.filter(p => step.atHorizon(p._2)).take(1).nonEmpty
-    (sc.union(fs.map(_.map(_._2).filter(step.isAccepted))), horizon)
+    // every frontier has `part`: the union stays partitioned by `end`
+    (sc.union(fs.map(_.filter(p => step.isAccepted(p._2)))), horizon)
   }
 
   /** A plain var-length leg in the composite edge form [[search]] takes:

@@ -200,9 +200,9 @@ object WeightedPaths {
    * the same suffix into k cheaper full paths. Work per round is bounded
    * by |reached| × k, never by the path count — the priority queue the
    * single-machine formulation needs is replaced by one per-state top-k
-   * a round. The rounds are the path-search family's
-   * ([[TrailRdd.search]] under its k-best-per-state policy, ordered by
-   * cost first), on the driver or distributed by input size.
+   * a round. The rounds, and the final per-pair rank, are the path-search
+   * family's ([[TrailRdd.search]] under its [[TrailRdd.KCheapest]]
+   * policy), on the driver or distributed by input size.
    *
    * @param edges (id LONG, src LONG, dst LONG, weight DOUBLE >= 0)
    * @param pairs (source, target)
@@ -212,17 +212,10 @@ object WeightedPaths {
       maxDepth: Int): DataFrame = {
     require(k >= 1 && maxDepth >= 1 && maxDepth <= 30,
       s"kCheapest bounds out of range: k=$k maxDepth=$maxDepth")
-    val kept = TrailRdd.search(
+    TrailRdd.search(
       Seq(Trail.PathSegment(TrailRdd.legEdges(edges, col("weight")), 0, maxDepth,
         composite = true)),
-      pairs, TrailRdd.KBestPerState(k, Nil), keepAll = true)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("source", "target").orderBy(col("dist").asc, col("path").asc)
-    kept.join(pairs, Seq("source")).filter(col("end") === col("target"))
-      .select(col("source"), col("target"), col("cost").as("dist"), col("hops"),
-        col("path"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+      pairs, TrailRdd.KCheapest(k), keepAll = true)
   }
 
   /** Shortest path lengths+paths restricted to requested (source, target)
