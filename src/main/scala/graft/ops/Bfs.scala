@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.ops.Ckpt._
+import graft.ops.Rounds.longId
 
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
@@ -27,18 +28,6 @@ import org.apache.spark.sql.functions._
  * O(V·D) redundant I/O).
  */
 object Bfs {
-
-  /** Long-id contract cast for the RDD/local fast paths: a non-null id
-    * that does not cast to LONG fails loudly, naming the operator, instead
-    * of becoming NULL and silently dropping the edge (the generic-typed
-    * DataFrame joins these paths replaced would have matched string ids).
-    * `try_cast` keeps the named error under ANSI mode too. */
-  private def longId(c: org.apache.spark.sql.Column, op: String):
-      org.apache.spark.sql.Column =
-    when(c.isNotNull && c.try_cast("long").isNull,
-      raise_error(concat(lit(s"$op: id not castable to LONG: "),
-        c.cast("string"))).cast("long"))
-      .otherwise(c.try_cast("long"))
 
   /**
    * Multi-source BFS distances.

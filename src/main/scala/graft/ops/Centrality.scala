@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.ops.Ckpt._
+import graft.ops.Wedges.round4
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
@@ -66,9 +67,6 @@ object Centrality {
           .as("closeness"),
         round(sum(lit(1.0) / col("dist")), 4).as("harmonic"))
   }
-
-  private def round4(x: Double): Double =
-    BigDecimal(x).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
 
   /** Some((adj, distinct sources)) when BOTH the edge list and the source
     * set fit [[Placement.Walk]]. */
@@ -648,87 +646,66 @@ object Centrality {
    * shape): Jaccard = |N(a)∩N(b)| / |N(a)∪N(b)| for node pairs sharing
    * at least one neighbor, top-k pairs per node.
    *
-   * Scale shape: candidate pairs are generated by the shared-neighbor
-   * self-join — cost Σ_w fan(w)², so high-fanout hub neighbors are
-   * excluded from pair GENERATION by `fanoutCap` (degrees for the
-   * denominator still count them; the standard degree-cap approximation,
-   * exact whenever no neighbor exceeds the cap). Pairs shuffle as id
-   * triples; neighborhoods are never collected.
+   * Scale shape: the one wedge kernel ([[Wedges.similarity]]) — each node's
+   * in-list carries its sources' out-degrees, each partition fetches the
+   * in-lists of the neighbours its nodes point to and counts shared
+   * neighbours per candidate in the task, so no candidate pair or wedge
+   * row is shuffled and the call is one job. Cost Σ_w fan(w)², so
+   * high-fanout hub neighbors are excluded from pair GENERATION by
+   * `fanoutCap` (degrees for the denominator still count them; the
+   * standard degree-cap approximation, exact whenever no neighbor exceeds
+   * the cap).
    *
-   * @param edges (src, dst) — similarity between src nodes
-   * @return (n1, n2, similarity DOUBLE 4dp, rank 1..k per n1) with n1 < n2
+   * @param edges (src, dst) — similarity between src nodes; ids cast to
+   *              LONG, rows with a null endpoint dropped
+   * @return (n1, n2, similarity DOUBLE 4dp, rank 1..k per n1) with n1 < n2,
+   *         ranked by similarity, then n2 ascending
    */
   def nodeSimilarity(edges: DataFrame, topK: Int,
       fanoutCap: Int = 100000): DataFrame = {
-    val e = edges.select(col("src"), col("dst")).distinct()
-      .localCheckpoint(false)
-    val deg = e.groupBy(col("src")).agg(count(lit(1)).as("__deg"))
-    val smallFan = e.groupBy(col("dst")).agg(count(lit(1)).as("__fan"))
-      .filter(col("__fan") <= fanoutCap).select(col("dst"))
-    // explicit dst-partitioning at the session's configured width: the
-    // wedge self-join EXPLODES its input 10-100x (Σ fan² vs |E|), but AQE
-    // coalesces on the join's INPUT bytes — a KB-sized edge shuffle would
-    // be squeezed into a handful of partitions that each pay the squared
-    // work (measured r16: advisory 8m ran this 2.8x slower than 2m).
-    // A user repartition is exempt from AQE coalescing, both join sides
-    // share the one exchange, and the width follows the session conf
-    // rather than a local constant.
-    val nPart = e.sparkSession.sessionState.conf.numShufflePartitions
-    val pruned = e.join(smallFan, Seq("dst"), "left_semi")
-      .repartition(nPart, col("dst"))
-    val inter = pruned.select(col("dst"), col("src").as("n1"))
-      .join(pruned.select(col("dst"), col("src").as("n2")), Seq("dst"))
-      .filter(col("n1") < col("n2"))
-      .groupBy(col("n1"), col("n2")).agg(count(lit(1)).as("__i"))
-    val sim = inter
-      .join(deg.select(col("src").as("n1"), col("__deg").as("__d1")), Seq("n1"))
-      .join(deg.select(col("src").as("n2"), col("__deg").as("__d2")), Seq("n2"))
-      .withColumn("similarity", round(col("__i").cast("double") /
-        (col("__d1") + col("__d2") - col("__i")), 4))
-    val w = org.apache.spark.sql.expressions.Window.partitionBy(col("n1"))
-      .orderBy(col("similarity").desc, col("n2").asc)
-    sim.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= topK)
-      .select(col("n1"), col("n2"), col("similarity"), col("rank"))
+    val (rounds, e) = Wedges.pairs(edges, "nodeSimilarity")
+    Rounds.toDf(edges.sparkSession, Wedges.similarity(rounds, e, topK, fanoutCap),
+      "n1", "n2", "similarity", "rank")
   }
 
   /**
    * k-truss decomposition (Cohen 2008; the cohesive-subgraph sibling of
    * [[kCore]] in the graph-data-science family): the maximal subgraph in
    * which every edge closes at least k−2 triangles. Iterative support
-   * peeling — each round recounts per-edge triangle support on the
-   * surviving edge set (canonical-orientation wedge join, the
-   * [[Ranking.triangles]] shape) and drops under-supported edges;
-   * deletions cascade, so rounds repeat to fixpoint (bounded: each round
-   * either deletes or terminates). Edge-support counting is two
-   * partial-aggregable joins on node ids; nothing scans past the
-   * surviving |E| per round.
+   * peeling over RDD rounds ([[Rounds]]) — each round counts per-edge
+   * triangle support on the surviving edge set with the wedge kernel
+   * ([[Wedges.triangles]]) and keeps the edges of support ≥ k−2 (an edge
+   * of no triangle has none); deletions cascade, so rounds repeat to
+   * fixpoint (bounded: each round either deletes or terminates), one job
+   * a round.
    *
-   * @param edges (src, dst) — direction ignored
+   * @param edges (src, dst) — direction ignored; ids cast to LONG, rows
+   *              with a null endpoint dropped
    * @return surviving undirected edges (u, v) with u < v
    */
   def kTruss(edges: DataFrame, k: Int, maxIter: Int = 30): DataFrame = {
     require(k >= 3, s"k-truss needs k >= 3, got $k")
-    var e = Ranking.canonical(edges).freshCkpt()
+    val (rounds, in) = Wedges.pairs(edges, "kTruss")
+    var e = rounds.persist(rounds.dedupe(in.collect {
+      case (a, b) if a != b => (math.min(a, b), math.max(a, b)) }))
+    var n = e.count()
     var dropped = 1L
     var it = 0
     while (dropped > 0 && it < maxIter) {
       it += 1
-      val tri = Ranking.canonicalTriangles(e)
       // each triangle (a < b < c) supports edges (a,b), (b,c), (a,c)
-      val support = tri.select(col("a").as("u"), col("b").as("v"))
-        .unionByName(tri.select(col("b").as("u"), col("c").as("v")))
-        .unionByName(tri.select(col("a").as("u"), col("c").as("v")))
-        .groupBy("u", "v").agg(count(lit(1)).as("__sup"))
-      val kept = e.join(support, Seq("u", "v"), "left_outer")
-        .filter(coalesce(col("__sup"), lit(0L)) >= k - 2)
-        .drop("__sup")
-        .freshCkpt()
-      dropped = e.count() - kept.count()
+      val kept = rounds.persist(Wedges.triangles(rounds, e)
+        .flatMap { case (a, b, c) => Iterator((a, b), (b, c), (a, c)) }
+        .map((_, 1L)).reduceByKey(rounds.part, _ + _)
+        .collect { case (uv, support) if support >= k - 2 => uv })
+      val m = kept.count()
+      rounds.release(Seq(kept))
+      dropped = n - m
+      n = m
       e = kept
     }
     require(dropped == 0, s"kTruss did not converge within $maxIter rounds")
-    e
+    Rounds.toDf(edges.sparkSession, e, "u", "v")
   }
 
   /**
@@ -743,17 +720,15 @@ object Centrality {
    */
   def trussDecomposition(edges: DataFrame, maxIter: Int = 200): DataFrame = {
     val und = Ranking.canonical(edges).localCheckpoint(false)
-    // Triangles computed ONCE (the peeling cascade recomputed them every
-    // peel of every phase); melt each triangle (a<b<c) into its three
-    // (edge, other-edge-1, other-edge-2) incidences.
-    val tri = Ranking.canonicalTriangles(und)
-    def inc(e: (Column, Column), o1: (Column, Column), o2: (Column, Column)) =
-      tri.select(e._1.as("u"), e._2.as("v"), o1._1.as("p1"), o1._2.as("q1"),
-        o2._1.as("p2"), o2._2.as("q2"))
-    val ab = (col("a"), col("b")); val bc = (col("b"), col("c"))
-    val ac = (col("a"), col("c"))
-    val incidences = inc(ab, bc, ac).unionByName(inc(bc, ab, ac))
-      .unionByName(inc(ac, ab, bc)).localCheckpoint(false)
+    // Triangles computed ONCE by the wedge kernel (the peeling cascade
+    // recomputed them every peel of every phase); melt each triangle
+    // (a<b<c) into its three (edge, other-edge-1, other-edge-2) incidences.
+    val (rounds, e) = Wedges.pairs(und.select(col("u").as("src"), col("v").as("dst")),
+      "trussDecomposition")
+    val incidences = Rounds.toDf(edges.sparkSession,
+      Wedges.triangles(rounds, e).flatMap { case (a, b, c) =>
+        Iterator((a, b, b, c, a, c), (b, c, a, b, a, c), (a, c, a, b, b, c)) },
+      "u", "v", "p1", "q1", "p2", "q2").localCheckpoint(false)
     // σ(e) init = support; iterate σ(e) ← H({min(σ(e1), σ(e2))}) to
     // fixpoint (Sariyüce, Seshadhri & Pinar, VLDB 2018 — local nucleus
     // decomposition); trussness = σ∞ + 2. Same grouped-count h-index as

@@ -51,27 +51,19 @@ object Ranking {
 
   /**
    * Clustering coefficients over the undirected simple graph:
-   * local C(v) = 2·tri(v) / (deg(v)·(deg(v)−1)) and the global
-   * (transitivity) ratio 3·triangles / wedges. Reuses the canonical
-   * two-join triangle enumeration ([[triangles]]); wedges come from the
-   * degree aggregate — nothing new shuffles.
+   * local C(v) = 2·tri(v) / (deg(v)·(deg(v)−1)). The triangle counts and
+   * the degrees come from the one wedge kernel ([[Wedges.clustering]]):
+   * one job, no wedge row shuffled.
    *
-   * @param edges (src, dst) — direction ignored
+   * @param edges (src, dst) — direction ignored; ids cast to LONG, rows
+   *              with a null endpoint dropped
    * @return (node, degree LONG, triangles LONG, coeff DOUBLE 4dp) for
    *         nodes with degree ≥ 2
    */
   def clusteringCoefficients(edges: DataFrame): DataFrame = {
-    val canon = canonical(edges).localCheckpoint(false)
-    val deg = canon.select(col("u").as("node"))
-      .unionByName(canon.select(col("v").as("node")))
-      .groupBy("node").agg(count(lit(1)).as("degree"))
-    val tri = cornerCounts(canonicalTriangles(canon))
-    deg.filter(col("degree") >= 2)
-      .join(tri, Seq("node"), "left_outer")
-      .select(col("node"), col("degree"),
-        coalesce(col("triangles"), lit(0L)).as("triangles"),
-        round(lit(2.0) * coalesce(col("triangles"), lit(0L)) /
-          (col("degree") * (col("degree") - 1)), 4).as("coeff"))
+    val (rounds, e) = Wedges.pairs(edges, "clusteringCoefficients")
+    Rounds.toDf(edges.sparkSession, Wedges.clustering(rounds, e),
+      "node", "degree", "triangles", "coeff")
   }
 
   /**
@@ -248,23 +240,29 @@ object Ranking {
   }
 
   /**
-   * Triangle enumeration over the undirected simple graph: canonicalize
-   * every edge to (u < v), join wedges a<b<c on the shared middle node,
-   * close them against the edge set. One row per distinct triangle —
-   * the standard two-join MapReduce formulation; at scale both joins
-   * hash-partition on node ids and the canonical orientation keeps each
-   * triangle counted exactly once.
+   * Triangle enumeration over the undirected simple graph (direction
+   * ignored, self-loops dropped, a node pair once) by the one wedge kernel
+   * ([[Wedges]]): each node keeps its neighbours of higher (degree, id),
+   * fetches those lists of its neighbours and merges them, so each
+   * triangle is found once, at its lowest-ranked node, in one job and
+   * without shuffling a wedge row.
    *
-   * @param edges (src, dst) — direction ignored
+   * @param edges (src, dst) — ids cast to LONG, rows with a null endpoint
+   *              dropped
    * @return (a, b, c) with a < b < c, one row per triangle
    */
-  def triangles(edges: DataFrame): DataFrame =
-    canonicalTriangles(canonical(edges).localCheckpoint(false))
+  def triangles(edges: DataFrame): DataFrame = {
+    val (rounds, e) = Wedges.pairs(edges, "triangles")
+    Rounds.toDf(edges.sparkSession, Wedges.triangles(rounds, e), "a", "b", "c")
+  }
 
   /** Per-node triangle participation counts (a node appears in each of its
-    * triangles once per corner role). */
-  def triangleCounts(edges: DataFrame): DataFrame =
-    cornerCounts(triangles(edges))
+    * triangles once per corner role): (node, triangles) for each node of at
+    * least one triangle. */
+  def triangleCounts(edges: DataFrame): DataFrame = {
+    val (rounds, e) = Wedges.pairs(edges, "triangleCounts")
+    Rounds.toDf(edges.sparkSession, Wedges.triangleCounts(rounds, e), "node", "triangles")
+  }
 
   /** The undirected simple edge set: (u, v) with u < v, self-loops
     * dropped, one row per node pair. */
@@ -272,21 +270,6 @@ object Ranking {
     edges.select(least(col("src"), col("dst")).as("u"),
         greatest(col("src"), col("dst")).as("v"))
       .filter(col("u") =!= col("v")).distinct()
-
-  /** [[triangles]] over an edge set that is already [[canonical]] — read
-    * three times, so pass it materialized. */
-  private[ops] def canonicalTriangles(und: DataFrame): DataFrame = {
-    val wedges = und.select(col("u").as("a"), col("v").as("b"))
-      .join(und.select(col("u").as("b"), col("v").as("c")), "b")
-    wedges.join(und.select(col("u").as("a"), col("v").as("c")), Seq("a", "c"))
-      .select(col("a"), col("b"), col("c"))
-  }
-
-  private def cornerCounts(t: DataFrame): DataFrame =
-    t.select(col("a").as("node"))
-      .unionByName(t.select(col("b").as("node")))
-      .unionByName(t.select(col("c").as("node")))
-      .groupBy("node").agg(count(lit(1)).as("triangles"))
 
   /**
    * Label propagation (community detection, Raghavan et al. 2007) with

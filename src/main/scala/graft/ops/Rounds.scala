@@ -1,18 +1,21 @@
 package graft.ops
 
+import scala.reflect.ClassTag
 import scala.reflect.runtime.universe.TypeTag
 
 import org.apache.spark.HashPartitioner
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
+import org.apache.spark.sql.functions.{concat, lit, raise_error, when}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.storage.StorageLevel
 
 /**
  * The mechanics shared by the RDD round loops (Bfs.distancesImpl,
  * Bfs.listRanks, Bfs.connectedComponents, Ranking.iterateRanks,
- * TrailRdd.search) — the Pregelix shape: every superstep runs through one
- * engine, each operator supplies only its step function. A loop opens one
+ * TrailRdd.search, Centrality.kTruss, the [[Wedges]] kernel) — the
+ * Pregelix shape: every superstep runs through one engine, each operator
+ * supplies only its step function. A loop opens one
  * `Rounds`, partitions all its keyed state with [[part]], persists each
  * round (and any reused input) through [[persist]] and materializes it
  * with the round's one action, and at the end [[release]]s every RDD it
@@ -25,6 +28,14 @@ import org.apache.spark.storage.StorageLevel
  * same partition through `zipPartitions` and index lookups, so no round
  * reads or rehashes the edges again (GraphX's `EdgePartition`; Pregelix's
  * resident vertex and edge state).
+ *
+ * The wedge kernel ([[Wedges]]: triangles, their per-node counts, the
+ * clustering coefficients, k-truss support and node similarity) adds one
+ * step, [[fetch]]: each partition asks for the neighbour lists of the node
+ * ids its block references and gets them in two shuffles, so no wedge row
+ * is ever shuffled. A task's memory is bounded by its own block plus the
+ * lists it fetched: at most min(|E|, the lists it references). Fetching in
+ * chunks, for a partition whose references outgrow a task, is left open.
  */
 final class Rounds private (val part: HashPartitioner) {
   private val held = scala.collection.mutable.ArrayBuffer.empty[RDD[_]]
@@ -48,16 +59,36 @@ final class Rounds private (val part: HashPartitioner) {
     * so no shuffle aggregation is needed. A round reads the block of its
     * own partition: `state.zipPartitions(block)` with `state` on [[part]]. */
   def adjacency(edges: RDD[(Long, Long)], dedupe: Boolean): RDD[Adjacency] =
-    persist(edges.partitionBy(part).mapPartitions(it =>
-      Iterator.single(Adjacency.build(it.map(e => (e._1, e._2, 0.0)),
-        weighted = false, dedupe))))
+    persist(blocks(edges)(it => Adjacency.build(it.map(e => (e._1, e._2, 0.0)),
+      weighted = false, dedupe)))
 
   /** [[adjacency]] of weighted edges `(src, (dst, weight))`: multi-edges
     * are kept, each with its own weight. */
   def weightedAdjacency(edges: RDD[(Long, (Long, Double))]): RDD[Adjacency] =
-    persist(edges.partitionBy(part).mapPartitions(it =>
-      Iterator.single(Adjacency.build(it.map(e => (e._1, e._2._1, e._2._2)),
-        weighted = true, dedupe = false))))
+    persist(blocks(edges)(it => Adjacency.build(it.map(e => (e._1, e._2._1, e._2._2)),
+      weighted = true, dedupe = false)))
+
+  /** `rows` shuffled onto [[part]] by key, each partition `build` into one
+    * block; not persisted. */
+  private[ops] def blocks[V: ClassTag](rows: RDD[(Long, V)])(
+      build: Iterator[(Long, V)] => Adjacency): RDD[Adjacency] =
+    rows.partitionBy(part).mapPartitions(it => Iterator.single(build(it)))
+
+  /** The fetch step: partition i of the result holds `(id, list)` for each
+    * distinct id of partition i of `refs` that has a list in `lists` (one
+    * list per node, on [[part]]). Two shuffles: the requests keyed by node,
+    * the replies keyed by partition id — at most partitions × |lists|
+    * records, whatever the lists are used for. */
+  def fetch[L: ClassTag](lists: RDD[(Long, L)], refs: RDD[Long]): RDD[(Long, L)] =
+    refs.mapPartitionsWithIndex((i, ids) =>
+        Adjacency.distinctSorted(ids.toArray).iterator.map((_, i)))
+      .partitionBy(part)
+      .zipPartitions(lists, preservesPartitioning = false) { (asked, own) =>
+        val at = scala.collection.mutable.LongMap.from(own)
+        asked.flatMap { case (id, i) => at.get(id).map(l => (i, (id, l))) }
+      }
+      // an Int key in [0, n) is its own partition under `part`
+      .partitionBy(part).values
 
   /** Persisted at MEMORY_AND_DISK until [[unpersist]] or [[release]]. */
   def persist[T](rdd: RDD[T]): RDD[T] = {
@@ -72,11 +103,11 @@ final class Rounds private (val part: HashPartitioner) {
   }
 
   /** Unpersists every RDD this loop persisted except `reads`, the ones the
-    * (lazy) result is built on. */
+    * (lazy) result or the next round is built on; those stay held. */
   def release(reads: Seq[RDD[_]]): Unit = {
     val keep = reads.toSet
     held.filterNot(keep).foreach(_.unpersist(blocking = false))
-    held.clear()
+    held.filterInPlace(keep)
   }
 }
 
@@ -89,6 +120,17 @@ object Rounds {
     override def getPartition(key: Any): Int =
       super.getPartition(key match { case (a, _) => a; case k => k })
   }
+
+  /** Long-id contract cast for the RDD round loops: a non-null id that
+    * does not cast to LONG fails loudly, naming the operator, instead of
+    * becoming NULL and silently dropping the edge (the generic-typed
+    * DataFrame joins these loops replaced would have matched string ids).
+    * `try_cast` keeps the named error under ANSI mode too. */
+  def longId(c: Column, op: String): Column =
+    when(c.isNotNull && c.try_cast("long").isNull,
+      raise_error(concat(lit(s"$op: id not castable to LONG: "),
+        c.cast("string"))).cast("long"))
+      .otherwise(c.try_cast("long"))
 
   /** Frontier rows up to which a round broadcasts its frontier instead of
     * shuffling it against the edges. */

@@ -637,8 +637,8 @@ object GraphQueries {
              |FROM deg LEFT JOIN intra ON intra.c = deg.c, m""".stripMargin)),
 
     // Triangle counting: nations linked iff same region → each region is a
-    // clique; triangles = Σ C(|region|, 3), counted by the two-join
-    // canonical-orientation enumeration.
+    // clique; triangles = Σ C(|region|, 3), counted by the degree-ordered
+    // wedge kernel (graft.ops.Wedges).
     QueryDef("q_triangle_count",
       (s, d) => {
         val n = t(s, d, "nation")
@@ -1245,7 +1245,7 @@ object GraphQueries {
     // Node similarity (gds.nodeSimilarity shape): Jaccard over supplier
     // out-neighborhoods in the supplier→part bipartite graph from
     // lineitem, top-5 pairs per supplier, ties by partner id. Candidate
-    // pairs come from the shared-neighbor self-join; the fanout cap that
+    // pairs come from the wedge kernel's fetched in-lists; the fanout cap that
     // bounds hub cost at scale is left at its default (no part's supplier
     // fanout approaches it here, so the result is exact).
     QueryDef("q_node_similarity",

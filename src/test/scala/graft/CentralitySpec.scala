@@ -144,6 +144,30 @@ class CentralitySpec extends AnyFunSuite {
     assert(r == Map((1L, 2L) -> 0.3333))
   }
 
+  test("nodeSimilarity drops a row with a null endpoint: it is no neighbour and no degree") {
+    import spark.implicits._
+    // N(1) = N(2) = {10, 11}; the null row must not make N(1) three long
+    val e = Seq((1L, Option(10L)), (1L, Option(11L)), (2L, Option(10L)),
+      (2L, Option(11L)), (1L, None)).toDF("src", "dst")
+    val r = Centrality.nodeSimilarity(e, topK = 5)
+      .collect().map(x => (x.getLong(0), x.getLong(1)) -> x.getDouble(2)).toMap
+    assert(r == Map((1L, 2L) -> 1.0))
+  }
+
+  test("nodeSimilarity fails loudly on an id not castable to LONG") {
+    import spark.implicits._
+    val e = Seq(("1", "10"), ("2", "x1")).toDF("src", "dst")
+    val ansi = "spark.sql.ansi.enabled"
+    val prev = spark.conf.getOption(ansi)
+    try Seq("true", "false").foreach { on =>
+      spark.conf.set(ansi, on)
+      val err = intercept[Exception](Centrality.nodeSimilarity(e, topK = 5).collect())
+      assert(Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+        .exists(x => String.valueOf(x.getMessage)
+          .contains("nodeSimilarity: id not castable to LONG: x1")), s"ansi=$on: $err")
+    } finally prev.fold(spark.conf.unset(ansi))(spark.conf.set(ansi, _))
+  }
+
   test("kTruss keeps cliques, peels bridges, and cascades deletions") {
     import spark.implicits._
     // K5 (1..5) + pendant bridge 5-6

@@ -1,6 +1,6 @@
 package graft
 
-import graft.ops.{Bfs, Placement, Ranking, Trail, WeightedPaths}
+import graft.ops.{Bfs, Centrality, Placement, Ranking, Rounds, Trail, WeightedPaths}
 import graft.ops.Trail.PathSegment
 import org.apache.spark.TestBus
 import org.apache.spark.rdd.RDD
@@ -51,6 +51,8 @@ class RoundsSpec extends AnyFunSuite {
     yield (r * 3 + c, (r + dr) * 3 + c + dc)) ++ Seq((0L, 1L), (4L, 4L))
 
   private lazy val edges = grid.toDF("src", "dst")
+  // the grid with two diagonals: four triangles around node 4
+  private lazy val triEdges = (grid ++ Seq((0L, 4L), (8L, 4L))).toDF("src", "dst")
   private lazy val idEdges = grid.zipWithIndex
     .map { case ((s, d), i) => (100L + i, s, d) }.toDF("id", "src", "dst")
   private lazy val sources = Seq(0L, 4L).toDF("source")
@@ -78,7 +80,12 @@ class RoundsSpec extends AnyFunSuite {
       grid.map { case (s, d) => (s, d, 1.0 + s) }.toDF("src", "dst", "weight"), 3)),
     "Ranking.personalizedPageRank" -> (() =>
       Ranking.personalizedPageRank(edges, sources, 3)),
-    "Bfs.connectedComponents" -> (() => Bfs.connectedComponents(edges))
+    "Bfs.connectedComponents" -> (() => Bfs.connectedComponents(edges)),
+    "Ranking.triangles" -> (() => Ranking.triangles(triEdges)),
+    "Ranking.triangleCounts" -> (() => Ranking.triangleCounts(triEdges)),
+    "Ranking.clusteringCoefficients" -> (() => Ranking.clusteringCoefficients(triEdges)),
+    "Centrality.nodeSimilarity" -> (() => Centrality.nodeSimilarity(triEdges, 2)),
+    "Centrality.kTruss" -> (() => Centrality.kTruss(triEdges, 3))
   ).foreach { case (name, result) =>
     test(s"$name releases every persisted RDD its result does not read") {
       TestSession.withForcedDistributed(true)(assertReleased(name)(result()))
@@ -134,6 +141,36 @@ class RoundsSpec extends AnyFunSuite {
     TestSession.withForcedDistributed(true) {
       val (jobs, _) = listen(Ranking.pageRank(edges, 3).collect())
       assert(jobs.size == 1, s"${jobs.size} jobs")
+    }
+  }
+
+  test("triangleCounts and nodeSimilarity run one job and shuffle no wedge row") {
+    val part = Rounds(spark, edges.rdd.getNumPartitions).part
+    // the lists each partition references, by the nodes it owns
+    def referenced(lists: Map[Long, Iterable[Long]]): Seq[Set[Long]] =
+      lists.keys.groupBy(part.getPartition).values.toSeq
+        .map(_.flatMap(lists).toSet)
+    // triangles: the symmetric edges (both directions of each non-loop
+    // row), one degree message per neighbour, and for each partition one
+    // request per id in its nodes' up-lists and one reply per non-empty
+    // up-list among them; the grid has no triangle, so no corner count
+    val nbrs = grid.filter(e => e._1 != e._2).flatMap(e => Seq(e, e.swap)).distinct
+      .groupBy(_._1).map { case (u, es) => u -> es.map(_._2) }
+    def rank(u: Long) = (nbrs(u).size, u)
+    val up = nbrs.map { case (u, ns) => u -> ns.filter(v => Ordering[(Int, Long)].gt(rank(v), rank(u))) }
+    val upRefs = referenced(up)
+    val triRecords = 2 * grid.count(e => e._1 != e._2) + nbrs.values.map(_.size).sum +
+      upRefs.map(_.size).sum + upRefs.map(_.count(up(_).nonEmpty)).sum
+    // similarity: the edge rows, one in-list entry per distinct edge, and
+    // one request and one reply per out-neighbour id a partition references
+    val out = grid.distinct.groupBy(_._1).map { case (s, es) => s -> es.map(_._2) }
+    val simRecords = grid.size + grid.distinct.size + 2 * referenced(out).map(_.size).sum
+    for ((name, run, want) <- Seq(
+        ("triangleCounts", () => Ranking.triangleCounts(edges).collect(), triRecords),
+        ("nodeSimilarity", () => Centrality.nodeSimilarity(edges, 3).collect(), simRecords))) {
+      val (jobs, records) = listen(run())
+      assert(jobs.size == 1, s"$name: ${jobs.size} jobs")
+      assert(records == want, s"$name: $records shuffle records, want $want")
     }
   }
 
