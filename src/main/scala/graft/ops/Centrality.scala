@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.ops.Ckpt._
+import graft.ops.Rounds.longId
 import graft.ops.Wedges.round4
 
 import org.apache.spark.sql.{Column, DataFrame}
@@ -14,10 +15,14 @@ import org.apache.spark.sql.functions._
  * counting / label propagation in [[Ranking]].
  *
  * Scale rules shared by every algorithm here:
- *  - state rows are (source, node) pairs of 8-byte ids — properties never
- *    enter the loops;
- *  - each round is one join + one aggregate, both hash-partitioned on node
- *    ids, frontiers lazily checkpointed so one action materializes a round;
+ *  - state is per node or per (source, node) pair of 8-byte ids —
+ *    properties never enter the loops;
+ *  - coreness and k-core are a vertex program on [[Rounds.step]] (one
+ *    shuffle of node state a round, the update in the task); k-truss and
+ *    node similarity run the wedge kernel ([[Wedges]]); the other loops
+ *    are DataFrame rounds of one join + one aggregate, both
+ *    hash-partitioned on node ids, frontiers lazily checkpointed so one
+ *    action materializes a round;
  *  - exact all-pairs forms are O(|V|·|E|) by nature, so the entry points
  *    take an explicit `sources` relation: pass every node for exact
  *    results on bounded graphs, or a sampled pivot set for the standard
@@ -232,41 +237,16 @@ object Centrality {
 
   /**
    * k-core: the maximal subgraph in which every node has (undirected)
-   * degree ≥ k, by iterative peeling — drop nodes under the threshold,
-   * recompute degrees, repeat to fixpoint. Each round is one aggregate +
-   * two semi-joins over the shrinking edge set; round count is the peel
-   * depth (≤ graph degeneracy), independent of |V|. The standard
-   * distributed formulation — no per-node driver state.
+   * degree ≥ k — the nodes whose coreness ([[coreDecomposition]]) is at
+   * least k.
    *
-   * @param edges (src, dst) — direction ignored, self-loops dropped
+   * @param edges (src, dst) — direction ignored, self-loops dropped; ids
+   *              read as LONG ([[Rounds.longId]])
    * @return (node LONG) — members of the k-core
    */
-  def kCore(edges: DataFrame, k: Int, maxIter: Int = 100): DataFrame = {
+  def kCore(edges: DataFrame, k: Int): DataFrame = {
     require(k >= 1, s"k must be >= 1: $k")
-    val canon = edges.select(col("src"), col("dst"))
-      .filter(col("src") =!= col("dst"))
-      .select(least(col("src"), col("dst")).as("src"),
-        greatest(col("src"), col("dst")).as("dst"))
-      .distinct()
-    var e = canon
-      .unionByName(canon.select(col("dst").as("src"), col("src").as("dst")))
-      .localCheckpoint(false)
-    var edgeCnt = e.count()
-    var stable = edgeCnt == 0
-    var i = 0
-    while (!stable && i < maxIter) {
-      val keep = e.groupBy("src").agg(count(lit(1)).as("__deg"))
-        .filter(col("__deg") >= k).select(col("src").as("__n"))
-      val next = e
-        .join(keep, col("src") === col("__n"), "left_semi")
-        .join(keep, col("dst") === col("__n"), "left_semi")
-        .localCheckpoint(false)
-      val nextCnt = next.count()
-      stable = nextCnt == edgeCnt || nextCnt == 0
-      e = next; edgeCnt = nextCnt; i += 1
-    }
-    require(stable, s"kCore did not converge in $maxIter peels")
-    e.select(col("src").as("node")).distinct()
+    coreness(edges, maxIter = 200, "kCore").filter(col("coreness") >= k).select(col("node"))
   }
 
   /**
@@ -280,57 +260,68 @@ object Centrality {
    * neighbors currently have estimate ≥ h). Estimates decrease
    * monotonically and converge exactly to coreness.
    *
-   * Scale shape: ONE iterative job whose round count is the convergence
-   * depth (empirically tens, independent of k_max) — unlike the k-phase
-   * peeling cascade whose driver-round count is Σ_k peels_k. Each round
-   * is an edge×estimate hash join plus a per-node h-index, computed
-   * without collecting neighbor lists: group neighbor estimates to
-   * (node, value, cnt), take a descending running count per node, and
-   * h = max(min(value, running)). All shuffles are key-partitioned on
-   * node id; state is one long per node. The peeling formulation is
-   * kept as [[coreDecompositionPeeling]] and cross-checked by spec.
+   * Edge lists within [[Placement.Walk]] peel on the driver
+   * (Batagelj–Zaveršnik). Past it, a vertex program on [[Rounds.step]]
+   * over symmetric adjacency blocks: a round ships each node's estimate
+   * (one Int) to the partitions whose blocks reference it and takes each
+   * node's h-index of its neighbours' estimates in the task; its one job
+   * materializes the round and tells whether any estimate moved. The
+   * round count is the convergence depth (empirically tens, independent
+   * of k_max), not the Σ_k peels_k of a peeling cascade.
    *
-   * @return (node, coreness) — floor 1 (isolated nodes only appear
+   * @param edges (src, dst) — direction ignored, self-loops dropped; ids
+   *              read as LONG ([[Rounds.longId]]), rows with a null
+   *              endpoint dropped
+   * @return (node, coreness INT) — floor 1 (isolated nodes only appear
    *         through edges)
    */
-  def coreDecomposition(edges: DataFrame, maxIter: Int = 200): DataFrame = {
-    val raw = edges.select(col("src").cast("long"), col("dst").cast("long"))
-      .filter(col("src") =!= col("dst"))
-    // graphs whose edge list fits the driver peel locally
-    // (Batagelj–Zaveršnik)
+  def coreDecomposition(edges: DataFrame, maxIter: Int = 200): DataFrame =
+    coreness(edges, maxIter, "coreDecomposition")
+
+  private def coreness(edges: DataFrame, maxIter: Int, op: String): DataFrame = {
+    val spark = edges.sparkSession
+    val raw = edges.select(longId(col("src"), op).as("u"), longId(col("dst"), op).as("v"))
+      .filter(col("u") =!= col("v")) // also drops null endpoints
     for (rows <- Placement.local(raw, Placement.Walk))
-      return localCoreness(edges.sparkSession, rows)
-    val canon = raw
-      .select(least(col("src"), col("dst")).as("src"),
-        greatest(col("src"), col("dst")).as("dst"))
-      .distinct()
-    val und = canon
-      .unionByName(canon.select(col("dst").as("src"), col("src").as("dst")))
-      .localCheckpoint(false)
-    var cur = und.groupBy(col("src").as("node"))
-      .agg(count(lit(1)).as("c")).localCheckpoint(false)
-    var checksum = if (cur.isEmpty) 0L else cur.agg(sum("c")).head().getLong(0)
-    var converged = checksum == 0
-    var i = 0
-    val byNode = Window.partitionBy("node").orderBy(col("c").desc)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+      return localCoreness(spark, rows)
+    val in = raw.rdd.map(r => (r.getLong(0), r.getLong(1)))
+    val rounds = Rounds(spark, in.getNumPartitions)
+    val adj = rounds.adjacency(in.flatMap(e => Iterator(e, e.swap)), dedupe = true)
+    val vs = rounds.vertices(adj, None)
+    // a node's estimate starts at its degree: the edges that reference it
+    var cur = rounds.persist(vs.map(_.weight.map(_.toInt)))
+    var (converged, i) = (false, 0)
     while (!converged && i < maxIter) {
-      // neighbor estimates → h-index per node, via grouped counts + a
-      // descending running total (no per-node list materialization)
-      val next = und
-        .join(cur.withColumnRenamed("node", "dst"), Seq("dst"))
-        .groupBy(col("src").as("node"), col("c"))
-        .agg(count(lit(1)).as("__cnt"))
-        .withColumn("__rt", sum(col("__cnt")).over(byNode))
-        .groupBy("node")
-        .agg(max(least(col("c"), col("__rt"))).as("c"))
-        .localCheckpoint(false)
-      val nextSum = if (next.isEmpty) 0L else next.agg(sum("c")).head().getLong(0)
-      converged = nextSum == checksum
-      cur = next; checksum = nextSum; i += 1
+      i += 1
+      val next = rounds.persist(rounds.step(adj, vs, cur)((_, c, j) => c(j))(hIndex))
+      // the round's one job: materializes it and tells whether it moved
+      converged = next.zipPartitions(cur)((n, c) =>
+        Iterator.single(java.util.Arrays.equals(n.next(), c.next()))).collect().forall(identity)
+      rounds.unpersist(cur)
+      cur = next
     }
-    require(converged, s"coreDecomposition did not converge in $maxIter rounds")
-    cur.select(col("node"), col("c").cast("int").as("coreness"))
+    rounds.release(if (converged) Seq(vs, cur) else Nil)
+    require(converged, s"$op did not converge in $maxIter rounds")
+    Rounds.toDf(spark, Rounds.byNode(vs, cur), "node", "coreness")
+  }
+
+  /** Each source's h-index of its neighbours' estimates `in`: the largest h
+    * such that at least h of them are ≥ h. Every node of a symmetric block
+    * is one of its sources. */
+  private def hIndex(a: Adjacency, v: Vertices, in: Array[Int]): Array[Int] = {
+    val next = new Array[Int](v.ids.length)
+    var atLeast = new Array[Int](1) // atLeast(h): neighbours at min(estimate, degree) = h
+    for (k <- a.src.indices) {
+      val (from, d) = (a.offset(k), a.offset(k + 1) - a.offset(k))
+      if (atLeast.length <= d) atLeast = new Array[Int](d + 1)
+      else java.util.Arrays.fill(atLeast, 0, d + 1, 0)
+      for (e <- from until from + d) atLeast(math.min(in(v.refAt(e)), d)) += 1
+      var h = d
+      var n = atLeast(d)
+      while (n < h) { h -= 1; n += atLeast(h) }
+      next(v.srcAt(k)) = h
+    }
+    next
   }
 
   /** Driver-local coreness: Batagelj–Zaveršnik bucket peeling over a
@@ -370,39 +361,6 @@ object Centrality {
     }
     core.toSeq.map { case (n, c) => (n, c) }.toDF("node", "coreness")
       .select(col("node"), col("coreness").cast("int"))
-  }
-
-  /**
-   * Peeling formulation of [[coreDecomposition]] (phases k = 2 upward,
-   * each phase a full [[kCore]] peel of the previous survivors; a node
-   * removed in phase k carries coreness k−1). Driver-round count is
-   * Σ_k peels_k — quadratic-ish in degeneracy, so this is the spec
-   * cross-check for the h-index form, not the production path.
-   */
-  def coreDecompositionPeeling(edges: DataFrame, maxK: Int = 100): DataFrame = {
-    val e0 = edges.select(col("src"), col("dst"))
-      .filter(col("src") =!= col("dst"))
-      .freshCkpt()
-    var cur = e0.select(col("src").as("node"))
-      .unionByName(e0.select(col("dst").as("node"))).distinct()
-      .freshCkpt()
-    val out = Seq.newBuilder[DataFrame]
-    var k = 2
-    var curCnt = cur.count()
-    while (curCnt > 0 && k <= maxK) {
-      // restrict edges to surviving nodes, then peel at k
-      val next = kCore(
-        e0.join(cur.withColumnRenamed("node", "src"), Seq("src"), "left_semi")
-          .join(cur.withColumnRenamed("node", "dst"), Seq("dst"), "left_semi"),
-        k).freshCkpt()
-      out += cur.join(next, Seq("node"), "left_anti")
-        .withColumn("coreness", lit(k - 1))
-      cur = next
-      curCnt = cur.count()
-      k += 1
-    }
-    require(curCnt == 0, s"coreDecompositionPeeling exceeded maxK=$maxK")
-    out.result().reduce(_ unionByName _)
   }
 
   /**
@@ -731,8 +689,9 @@ object Centrality {
       "u", "v", "p1", "q1", "p2", "q2").localCheckpoint(false)
     // σ(e) init = support; iterate σ(e) ← H({min(σ(e1), σ(e2))}) to
     // fixpoint (Sariyüce, Seshadhri & Pinar, VLDB 2018 — local nucleus
-    // decomposition); trussness = σ∞ + 2. Same grouped-count h-index as
-    // [[coreDecomposition]]; round count = convergence depth, not Σ peels.
+    // decomposition); trussness = σ∞ + 2. The h-index of
+    // [[coreDecomposition]], here as grouped counts and a descending
+    // running total; round count = convergence depth, not Σ peels.
     var cur = incidences.groupBy("u", "v").agg(count(lit(1)).as("s"))
       .localCheckpoint(false)
     var checksum = if (cur.isEmpty) 0L else cur.agg(sum("s")).head().getLong(0)
@@ -760,29 +719,6 @@ object Centrality {
     und.join(cur, Seq("u", "v"), "left_outer")
       .select(col("u"), col("v"),
         (coalesce(col("s"), lit(0L)) + 2).cast("int").as("trussness"))
-  }
-
-  /**
-   * Peeling formulation of [[trussDecomposition]] (phases k = 3 upward,
-   * each a full [[kTruss]] of the previous survivors) — kept as the spec
-   * cross-check for the h-index fixpoint form.
-   */
-  def trussDecompositionPeeling(edges: DataFrame, maxK: Int = 30): DataFrame = {
-    var cur = Ranking.canonical(edges).freshCkpt()
-    val out = Seq.newBuilder[DataFrame]
-    var k = 3
-    var curCnt = cur.count()
-    while (curCnt > 0 && k <= maxK) {
-      val next = kTruss(cur.select(col("u").as("src"), col("v").as("dst")), k)
-        .freshCkpt()
-      out += cur.join(next, Seq("u", "v"), "left_anti")
-        .withColumn("trussness", lit(k - 1))
-      cur = next
-      curCnt = cur.count()
-      k += 1
-    }
-    require(curCnt == 0, s"trussDecompositionPeeling exceeded maxK=$maxK")
-    out.result().reduce(_ unionByName _)
   }
 
   /**

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.ops.Ckpt._
+import graft.ops.Rounds.longId
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -73,29 +74,28 @@ object Ranking {
    * libraries use). Init rank = (1-d), the fixed point for in-degree-0
    * nodes, so DAGs converge in longest-path iterations exactly.
    *
-   * The rounds run over RDDs under ONE shared HashPartitioner (the GraphX
-   * pattern): the edges shuffle once into [[Rounds.adjacency]] blocks,
-   * each partition's node ids and normalised out-weights are laid out
-   * once, and a round is the rank array zipped with the block, messages
-   * combined per destination on the map side, ONE shuffle, and a reduce
-   * side that adds into the rank array of the destination's partition —
-   * no round reads or rehashes the edges again, and ZERO Catalyst
+   * A vertex program on [[Rounds.step]]: the edges shuffle once into
+   * in-neighbour [[Rounds.adjacency]] blocks, and a round ships each
+   * node's rank over its out-weight to the partitions whose blocks read
+   * it (ONE shuffle), where each node sums its in-edges in the task — no
+   * round reads or rehashes the edges again, and ZERO Catalyst
    * analysis/codegen passes per round (the r13 profile showed planning
-   * at ~90% of this query's wall). The blocks are persisted and read by
-   * the (lazy) result, so the whole call is one job.
+   * at ~90% of this query's wall). The rounds are lazy and the blocks
+   * persisted, so the whole call is one job.
    *
-   * @param edges (src, dst)
+   * @param edges (src, dst) — ids read as LONG ([[Rounds.longId]]), rows
+   *              with a null endpoint dropped
    * @return (node, rank)
    */
   def pageRank(edges: DataFrame, iterations: Int = 10,
       damping: Double = 0.85): DataFrame = {
     require(iterations >= 1 && damping > 0 && damping < 1,
       s"bad pageRank config: iterations=$iterations damping=$damping")
-    iterateRanks(edges.select(col("src").cast("long"),
-        col("dst").cast("long")), iterations, damping, sources = None)
+    iterateRanks(edges.select(longId(col("src"), "pageRank"),
+        longId(col("dst"), "pageRank")), iterations, damping, sources = None)
   }
 
-  /** Shared RDD round loop for the pageRank family. `edges` must be
+  /** Shared vertex program for the pageRank family. `edges` must be
     * (src LONG, dst LONG[, w DOUBLE]); without `w` every edge weighs 1.
     * `sources` switches the teleport mass to the personalized
     * (seed-restart) form. */
@@ -108,12 +108,12 @@ object Ranking {
     // DataFrame formulation's null-sum semantics), not NPE the job
     val rows = edges.na.drop("any").rdd
     val rounds = Rounds(spark, rows.getNumPartitions)
-    val part = rounds.part
-    // multi-edges are kept: each copy carries its own weight
+    // each node's in-edges, in its own partition; multi-edges are kept,
+    // each copy with its own weight
     val adj =
       if (weighted) rounds.weightedAdjacency(
-        rows.map(r => (r.getLong(0), (r.getLong(1), r.getDouble(2)))))
-      else rounds.adjacency(rows.map(r => (r.getLong(0), r.getLong(1))),
+        rows.map(r => (r.getLong(1), (r.getLong(0), r.getDouble(2)))))
+      else rounds.adjacency(rows.map(r => (r.getLong(1), r.getLong(0))),
         dedupe = false)
     val seeds = sources.map(_.rdd.map(_.getLong(0)))
     // teleport term: uniform (1-d) classic; (1-d)/|S| on seeds personalized
@@ -122,79 +122,26 @@ object Ranking {
       require(nS > 0, "personalized PageRank needs a non-empty source set")
       (1.0 - damping) / nS
     }
-    // each partition's node ids — its sources, the destinations and seeds
-    // [[part]] places there — gathered by one shuffle of each block's
-    // distinct destinations, then laid out against the block
-    val ids = adj.mapPartitions(it => Adjacency.distinctSorted(it.next().dst)
-        .iterator.map((_, false)))
-      .union(seeds.fold(spark.sparkContext.emptyRDD[(Long, Boolean)])(_.map((_, true))))
-      .partitionBy(part)
-    val layout = rounds.persist(adj.zipPartitions(ids) { (aIt, idIt) =>
-      Iterator.single(RankLayout(aIt.next(), idIt, damping, teleport))
-    })
-    var ranks = layout.map(_.base)
-    var i = 0
-    while (i < iterations) {
-      // messages keyed by destination: not `part`'s layout
-      val msgs = adj.zipPartitions(layout, ranks, preservesPartitioning = false) {
-        (aIt, lIt, rIt) =>
-          val (a, l, r) = (aIt.next(), lIt.next(), rIt.next())
-          val sum = new Array[Double](l.nbr.length)
-          for (s <- a.src.indices) {
-            val rs = r(l.srcAt(s))
-            for (j <- a.offset(s) until a.offset(s + 1)) sum(l.nbrAt(j)) += rs * l.share(j)
-          }
-          Iterator.tabulate(sum.length)(k => (l.nbr(k), sum(k)))
-      }.partitionBy(part) // the one shuffle of the round
-      ranks = layout.zipPartitions(msgs) { (lIt, mIt) =>
-        val l = lIt.next()
-        val in = new Array[Double](l.ids.length)
-        mIt.foreach { case (d, v) => in(java.util.Arrays.binarySearch(l.ids, d)) += v }
-        Iterator.single(Array.tabulate(in.length)(k => l.base(k) + damping * in(k)))
-      }
-      i += 1
+    def base(v: Vertices): Array[Double] = teleport match {
+      case None => Array.fill(v.ids.length)(1.0 - damping)
+      case Some(tp) => v.seeded.map(s => if (s) tp else 0.0)
     }
-    rounds.release(Seq(adj, layout))
-    Rounds.toDf(spark, layout.zipPartitions(ranks) { (lIt, rIt) =>
-      val (l, r) = (lIt.next(), rIt.next())
-      Iterator.tabulate(r.length)(k => (l.ids(k), r(k)))
-    }, "node", "rank")
-  }
-
-  /** One partition's rank layout next to its [[Adjacency]] block: `ids`,
-    * the partition's node ids ascending, and `base`, their teleport terms;
-    * `srcAt` places the block's sources in `ids`; `nbr` lists the block's
-    * distinct destinations and `nbrAt` places each edge's destination in
-    * it; `share` is each edge's weight over its source's total out-weight. */
-  private final case class RankLayout(ids: Array[Long], base: Array[Double],
-      srcAt: Array[Int], nbr: Array[Long], nbrAt: Array[Int], share: Array[Double])
-
-  private object RankLayout {
-    /** `idIt`: (node id, is a seed) rows [[Rounds.part]] places here. */
-    def apply(a: Adjacency, idIt: Iterator[(Long, Boolean)], damping: Double,
-        teleport: Option[Double]): RankLayout = {
-      val (all, seeds) = (Array.newBuilder[Long], Array.newBuilder[Long])
-      all ++= a.src
-      idIt.foreach { case (n, seed) => all += n; if (seed) seeds += n }
-      val ids = Adjacency.distinctSorted(all.result())
-      val seedSet = seeds.result()
-      java.util.Arrays.sort(seedSet)
-      val base = teleport match {
-        case None => Array.fill(ids.length)(1.0 - damping)
-        case Some(tp) => ids.map(n =>
-          if (java.util.Arrays.binarySearch(seedSet, n) >= 0) tp else 0.0)
+    val vs = rounds.vertices(adj, seeds)
+    var ranks = vs.map(base)
+    for (_ <- 1 to iterations)
+      // a node sends its rank per unit of out-weight
+      ranks = rounds.step(adj, vs, ranks)((v, r, i) => r(i) / v.weight(i)) { (a, v, in) =>
+        val next = base(v)
+        for (k <- a.src.indices) {
+          var sum = 0.0
+          for (e <- a.offset(k) until a.offset(k + 1))
+            sum += (if (a.weight == null) in(v.refAt(e)) else a.weight(e) * in(v.refAt(e)))
+          next(v.srcAt(k)) += damping * sum
+        }
+        next
       }
-      val nbr = Adjacency.distinctSorted(a.dst)
-      def w(j: Int) = if (a.weight == null) 1.0 else a.weight(j)
-      val share = new Array[Double](a.dst.length)
-      for (s <- a.src.indices) {
-        val edges = a.offset(s) until a.offset(s + 1)
-        val out = edges.map(w).sum
-        edges.foreach(j => share(j) = w(j) / out)
-      }
-      RankLayout(ids, base, a.src.map(java.util.Arrays.binarySearch(ids, _)),
-        nbr, a.dst.map(java.util.Arrays.binarySearch(nbr, _)), share)
-    }
+    rounds.release(Seq(adj, vs))
+    Rounds.toDf(spark, Rounds.byNode(vs, ranks), "node", "rank")
   }
 
   /**
@@ -202,8 +149,8 @@ object Ranking {
    * proportionally to edge weight instead of uniformly —
    *   contrib(u→v) = rank(u) · w(u→v) / Σ_x w(u→x)
    * (the GDS-style relationship-weighted variant). Same rounds as
-   * [[pageRank]]; each edge's share of its source's out-weight is laid
-   * out once, next to its adjacency block.
+   * [[pageRank]]; a node ships its rank over its total out-weight, and
+   * each in-edge multiplies that by its own weight.
    *
    * @param edges (src, dst, weight DOUBLE > 0); multi-edges each carry
    *              their own weight
@@ -212,8 +159,8 @@ object Ranking {
       damping: Double = 0.85): DataFrame = {
     require(iterations >= 1 && damping > 0 && damping < 1,
       s"bad pageRank config: iterations=$iterations damping=$damping")
-    iterateRanks(edges.select(col("src").cast("long"),
-        col("dst").cast("long"), col("weight").cast("double")),
+    iterateRanks(edges.select(longId(col("src"), "weightedPageRank"),
+        longId(col("dst"), "weightedPageRank"), col("weight").cast("double")),
       iterations, damping, sources = None)
   }
 
@@ -223,8 +170,8 @@ object Ranking {
    *   rank_{t+1}(v) = (1−d)·1[v ∈ S]/|S| + d · Σ_{u→v} rank_t(u)/outdeg(u)
    * — the similarity-to-my-seeds ranking behind recommendation and
    * related-entity queries. Same rounds as [[pageRank]]; the seeds join
-   * the node ids of their partitions once, and |S| is the one driver
-   * scalar.
+   * the vertex layout of their partitions once, and |S| is the one driver
+   * scalar (one job).
    *
    * @param edges (src, dst); sources (source LONG)
    * @return (node, rank) — nodes with rank 0 included (they're in the
@@ -234,9 +181,10 @@ object Ranking {
       iterations: Int = 10, damping: Double = 0.85): DataFrame = {
     require(iterations >= 1 && damping > 0 && damping < 1,
       s"bad pageRank config: iterations=$iterations damping=$damping")
-    iterateRanks(edges.select(col("src").cast("long"),
-        col("dst").cast("long")), iterations, damping,
-      sources = Some(sources.select(col("source").cast("long")).distinct()))
+    iterateRanks(edges.select(longId(col("src"), "personalizedPageRank"),
+        longId(col("dst"), "personalizedPageRank")), iterations, damping,
+      sources = Some(sources.select(longId(col("source"), "personalizedPageRank"))
+        .na.drop("any").distinct()))
   }
 
   /**

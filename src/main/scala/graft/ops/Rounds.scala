@@ -12,22 +12,30 @@ import org.apache.spark.storage.StorageLevel
 
 /**
  * The mechanics shared by the RDD round loops (Bfs.distancesImpl,
- * Bfs.listRanks, Bfs.connectedComponents, Ranking.iterateRanks,
- * TrailRdd.search, Centrality.kTruss, the [[Wedges]] kernel) — the
- * Pregelix shape: every superstep runs through one engine, each operator
- * supplies only its step function. A loop opens one
- * `Rounds`, partitions all its keyed state with [[part]], persists each
- * round (and any reused input) through [[persist]] and materializes it
- * with the round's one action, and at the end [[release]]s every RDD it
- * persisted that the result does not read.
+ * Bfs.listRanks, Bfs.connectedComponents, the PageRank family,
+ * Centrality.coreDecomposition and kCore, TrailRdd.search,
+ * Centrality.kTruss, the [[Wedges]] kernel) — the Pregelix shape: every
+ * superstep runs through one engine, each operator supplies only its step
+ * function. A loop opens one `Rounds`, partitions all its keyed state with
+ * [[part]], persists each round (and any reused input) through [[persist]]
+ * and materializes it with the round's one action, and at the end
+ * [[release]]s every RDD it persisted that the result does not read.
  *
  * A loop over a graph that does not change between rounds (BFS, the
- * PageRank family) reads its edges as [[adjacency]] blocks: the edges
+ * vertex programs) reads its edges as [[adjacency]] blocks: the edges
  * shuffle onto [[part]] once, each partition becomes one persisted CSR
  * [[Adjacency]], and a round joins its keyed state into the block of the
  * same partition through `zipPartitions` and index lookups, so no round
  * reads or rehashes the edges again (GraphX's `EdgePartition`; Pregelix's
  * resident vertex and edge state).
+ *
+ * The vertex programs (the PageRank family over in-neighbour blocks,
+ * coreness over symmetric ones) run [[step]]: one state value per node,
+ * shipped to each partition whose block references the node (GraphX's
+ * routing table, built once by [[vertices]]), then each partition computes
+ * its own nodes' next state in the task. The update sees every value its
+ * node reads at once, so it need not combine on the map side (the h-index
+ * does not).
  *
  * The wedge kernel ([[Wedges]]: triangles, their per-node counts, the
  * clustering coefficients, k-truss support and node similarity) adds one
@@ -90,6 +98,49 @@ final class Rounds private (val part: HashPartitioner) {
       // an Int key in [0, n) is its own partition under `part`
       .partitionBy(part).values
 
+  /** The vertex layout of the blocks `adj` (on [[part]]): one persisted
+    * [[Vertices]] per partition, owning the nodes [[part]] places there —
+    * its block's sources, the ids any block references and `seeds`. Built
+    * lazily with one shuffle: each block's distinct referenced ids, keyed
+    * by node, tell their owners which partition reads them at which
+    * position, with the weight of the block's edges to them. */
+  def vertices(adj: RDD[Adjacency], seeds: Option[RDD[Long]]): RDD[Vertices] = {
+    val asks = adj.mapPartitionsWithIndex { (p, it) =>
+      val a = it.next()
+      val refs = Adjacency.distinctSorted(a.dst)
+      val w = new Array[Double](refs.length)
+      for (e <- a.dst.indices)
+        w(java.util.Arrays.binarySearch(refs, a.dst(e))) += (if (a.weight == null) 1.0 else a.weight(e))
+      Iterator.tabulate(refs.length)(k => (refs(k), (p, k, w(k))))
+    }.union(seeds.fold(adj.sparkContext.emptyRDD[(Long, (Int, Int, Double))])(
+        _.map((_, (-1, 0, 0.0)))))
+      .partitionBy(part)
+    persist(adj.zipPartitions(asks)((aIt, asked) => Iterator.single(Vertices(aIt.next(), asked))))
+  }
+
+  /** One round of a vertex program over the blocks `adj` laid out as `vs`:
+    * a partition's i-th node sends `send(v, state, i)` to each partition
+    * whose block references it — ONE shuffle, at most one record per
+    * (partition, distinct referenced id) — and each partition computes its
+    * own nodes' next state in the task, `update(block, v, in)`, where
+    * `in(k)` is what the block's k-th distinct referenced id sent. `state`
+    * is read once, so a lazy chain of rounds runs each round once. */
+  def step[S: ClassTag, M: ClassTag](adj: RDD[Adjacency], vs: RDD[Vertices],
+      state: RDD[Array[S]])(send: (Vertices, Array[S], Int) => M)(
+      update: (Adjacency, Vertices, Array[M]) => Array[S]): RDD[Array[S]] = {
+    // keyed by the reading partition: not `part`'s layout
+    val msgs = vs.zipPartitions(state, preservesPartitioning = false) { (vIt, sIt) =>
+      val (v, s) = (vIt.next(), sIt.next())
+      Iterator.tabulate(v.from.length)(r => (v.to(r), (v.at(r), send(v, s, v.from(r)))))
+    }.partitionBy(part) // an Int key in [0, n) is its own partition
+    adj.zipPartitions(vs, msgs) { (aIt, vIt, mIt) =>
+      val v = vIt.next()
+      val in = new Array[M](v.refs)
+      mIt.foreach { case (_, (k, m)) => in(k) = m }
+      Iterator.single(update(aIt.next(), v, in))
+    }
+  }
+
   /** Persisted at MEMORY_AND_DISK until [[unpersist]] or [[release]]. */
   def persist[T](rdd: RDD[T]): RDD[T] = {
     held += rdd
@@ -149,6 +200,13 @@ object Rounds {
       spark.sessionState.conf.numShufflePartitions,
       math.max(math.max(1, spark.sparkContext.defaultParallelism / 4),
         inputPartitions))))
+
+  /** A vertex program's state as (node id, state) rows. */
+  def byNode[S: ClassTag](vs: RDD[Vertices], state: RDD[Array[S]]): RDD[(Long, S)] =
+    vs.zipPartitions(state) { (vIt, sIt) =>
+      val (v, s) = (vIt.next(), sIt.next())
+      Iterator.tabulate(s.length)(k => (v.ids(k), s(k)))
+    }
 
   /** Result rows → DataFrame. Column types come from `T`'s fields, every
     * column non-null; `names` renames them (default: the field names). */
@@ -234,5 +292,35 @@ object Adjacency {
       from = to
     }
     new Adjacency(src, offset, if (dedupe) java.util.Arrays.copyOf(dst, n) else dst, null)
+  }
+}
+
+/** One partition's vertex layout next to its [[Adjacency]] block: `ids`,
+  * the nodes it owns, ascending; `srcAt` places the block's sources in
+  * `ids`; `refAt` places each edge's neighbour among the block's `refs`
+  * distinct neighbours (ascending); `weight(i)` is the total weight of the
+  * edges, in all blocks, that reference node i (its out-weight in
+  * in-neighbour blocks, its degree in symmetric ones); `seeded(i)` marks
+  * the seeds. The routing table: owned node `from(r)` is read by partition
+  * `to(r)` as its `at(r)`-th distinct neighbour. */
+final class Vertices private (val ids: Array[Long], val srcAt: Array[Int],
+    val refs: Int, val refAt: Array[Int], val weight: Array[Double],
+    val seeded: Array[Boolean], val from: Array[Int], val to: Array[Int],
+    val at: Array[Int]) extends Serializable
+
+object Vertices {
+
+  /** `asked`: (id, (reading partition, position there, edge weight)) rows
+    * [[Rounds.part]] places here; a seed reads (id, (-1, 0, 0.0)). */
+  private[ops] def apply(a: Adjacency, asked: Iterator[(Long, (Int, Int, Double))]): Vertices = {
+    val rows = asked.toArray
+    val ids = Adjacency.distinctSorted(a.src ++ rows.map(_._1))
+    def at(id: Long) = java.util.Arrays.binarySearch(ids, id)
+    val (weight, seeded) = (new Array[Double](ids.length), new Array[Boolean](ids.length))
+    rows.foreach { case (id, (p, _, w)) => if (p < 0) seeded(at(id)) = true else weight(at(id)) += w }
+    val routes = rows.filter(_._2._1 >= 0)
+    val refs = Adjacency.distinctSorted(a.dst)
+    new Vertices(ids, a.src.map(at), refs.length, a.dst.map(java.util.Arrays.binarySearch(refs, _)),
+      weight, seeded, routes.map(r => at(r._1)), routes.map(_._2._1), routes.map(_._2._2))
   }
 }

@@ -75,7 +75,7 @@ class CentralitySpec extends AnyFunSuite {
       0L -> 20L, 30L -> 31L, 31L -> 32L, 32L -> 33L, 33L -> 30L)
     def toMapOf(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(x => x.getLong(0) -> x.getInt(1)).toMap
-    val peel = toMapOf(Centrality.coreDecompositionPeeling(e)
+    val peel = toMapOf(Peeling.coreDecompositionPeeling(e)
       .select(col("node"), col("coreness").cast("int")))
     TestSession.bothPlacements { forced => // local BZ peel AND distributed h-index
       val r = toMapOf(Centrality.coreDecomposition(e))
@@ -154,18 +154,31 @@ class CentralitySpec extends AnyFunSuite {
     assert(r == Map((1L, 2L) -> 1.0))
   }
 
-  test("nodeSimilarity fails loudly on an id not castable to LONG") {
-    import spark.implicits._
-    val e = Seq(("1", "10"), ("2", "x1")).toDF("src", "dst")
-    val ansi = "spark.sql.ansi.enabled"
-    val prev = spark.conf.getOption(ansi)
-    try Seq("true", "false").foreach { on =>
-      spark.conf.set(ansi, on)
-      val err = intercept[Exception](Centrality.nodeSimilarity(e, topK = 5).collect())
-      assert(Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
-        .exists(x => String.valueOf(x.getMessage)
-          .contains("nodeSimilarity: id not castable to LONG: x1")), s"ansi=$on: $err")
-    } finally prev.fold(spark.conf.unset(ansi))(spark.conf.set(ansi, _))
+  Seq[(String, org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)](
+    "nodeSimilarity" -> (Centrality.nodeSimilarity(_, topK = 5)),
+    "pageRank" -> (graft.ops.Ranking.pageRank(_)),
+    "weightedPageRank" -> (e => graft.ops.Ranking.weightedPageRank(
+      e.withColumn("weight", lit(1.0)))),
+    "personalizedPageRank" -> (e => graft.ops.Ranking.personalizedPageRank(e,
+      e.select(col("src").as("source")))),
+    "coreDecomposition" -> (Centrality.coreDecomposition(_)),
+    "kCore" -> (Centrality.kCore(_, 1))
+  ).foreach { case (op, run) =>
+    test(s"$op fails loudly on an id not castable to LONG") {
+      import spark.implicits._
+      val e = Seq(("1", "10"), ("2", "x1")).toDF("src", "dst")
+      val ansi = "spark.sql.ansi.enabled"
+      val prev = spark.conf.getOption(ansi)
+      try for (on <- Seq("true", "false"); forced <- Seq(false, true)) {
+        spark.conf.set(ansi, on)
+        val err = intercept[Exception](
+          TestSession.withForcedDistributed(forced)(run(e).collect()))
+        assert(Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+          .exists(x => String.valueOf(x.getMessage)
+            .contains(s"$op: id not castable to LONG: x1")),
+          s"ansi=$on forced=$forced: $err")
+      } finally prev.fold(spark.conf.unset(ansi))(spark.conf.set(ansi, _))
+    }
   }
 
   test("kTruss keeps cliques, peels bridges, and cascades deletions") {
@@ -202,7 +215,7 @@ class CentralitySpec extends AnyFunSuite {
       assert(r(p) == 3, s"$p: ${r(p)}"))
     assert(r((6L, 7L)) == 2)
     // h-index fixpoint ≡ peeling cascade on the same mixed fixture
-    val peel = Centrality.trussDecompositionPeeling(e).collect()
+    val peel = Peeling.trussDecompositionPeeling(e).collect()
       .map(x => (x.getLong(0), x.getLong(1)) -> x.getInt(2)).toMap
     assert(r == peel)
   }

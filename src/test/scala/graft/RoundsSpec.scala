@@ -85,7 +85,9 @@ class RoundsSpec extends AnyFunSuite {
     "Ranking.triangleCounts" -> (() => Ranking.triangleCounts(triEdges)),
     "Ranking.clusteringCoefficients" -> (() => Ranking.clusteringCoefficients(triEdges)),
     "Centrality.nodeSimilarity" -> (() => Centrality.nodeSimilarity(triEdges, 2)),
-    "Centrality.kTruss" -> (() => Centrality.kTruss(triEdges, 3))
+    "Centrality.kTruss" -> (() => Centrality.kTruss(triEdges, 3)),
+    "Centrality.coreDecomposition" -> (() => Centrality.coreDecomposition(triEdges)),
+    "Centrality.kCore" -> (() => Centrality.kCore(triEdges, 2))
   ).foreach { case (name, result) =>
     test(s"$name releases every persisted RDD its result does not read") {
       TestSession.withForcedDistributed(true)(assertReleased(name)(result()))
@@ -189,6 +191,22 @@ class RoundsSpec extends AnyFunSuite {
       val rounds = built(true)
       assert(rounds.nonEmpty && !rounds.exists(_.startsWith(Placement.ProbeDescription)),
         s"forced jobs: $rounds")
+    }
+  }
+
+  test("forced coreDecomposition runs one job a round plus the collect") {
+    // a triangle wearing a 12-node tail: the estimates settle from the
+    // tail's end inward over several rounds
+    val tail = ((2L until 14L).map(i => (i, i + 1)) ++ Seq((0L, 1L), (1L, 2L), (0L, 2L)))
+      .toDF("src", "dst")
+    TestSession.withForcedDistributed(true) {
+      // its rounds: the least maxIter the h-index fixpoint is reached within
+      val rounds = (1 to 25).find(k => scala.util.Try(
+          Centrality.coreDecomposition(tail, maxIter = k)).isSuccess)
+        .getOrElse(fail("no convergence within 25 rounds"))
+      assert(rounds > 2, s"$rounds rounds")
+      val (jobs, _) = listen(Centrality.coreDecomposition(tail).collect())
+      assert(jobs.size == rounds + 1, s"${jobs.size} jobs for $rounds rounds")
     }
   }
 

@@ -8,8 +8,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Property test: the wedge kernel's operators — triangles, per-node
   * triangle counts, clustering coefficients, k-truss, truss decomposition
-  * and node similarity — against driver-side references on seeded random
-  * multigraphs: self-loops, parallel and reversed edges, negative ids, a
+  * and node similarity — and the core decomposition and k-core against
+  * driver-side references on seeded random multigraphs: self-loops, parallel and reversed edges, negative ids, a
   * hub above a small fanout cap, more partitions than nodes, and a
   * similarity tie that only exists after rounding. Rows are compared
   * exactly. */
@@ -137,9 +137,45 @@ class WedgePropertySpec extends AnyFunSuite {
         def rows(d: DataFrame) = d.select("u", "v", "trussness").collect()
           .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSeq.sorted
         assert(rows(Centrality.trussDecomposition(e)) ==
-          rows(Centrality.trussDecompositionPeeling(e)), s"sample $i: $s")
+          rows(Peeling.trussDecompositionPeeling(e)), s"sample $i: $s")
       }
     }
+  }
+
+  /** The nodes left by peeling nodes of degree below k, repeatedly. */
+  private def kCore(adj0: Map[Long, Set[Long]], k: Int): Set[Long] = {
+    var adj = adj0
+    var weak = adj.keySet.filter(adj(_).size < k)
+    while (weak.nonEmpty) {
+      adj = (adj -- weak).map { case (u, nu) => u -> (nu -- weak) }
+      weak = adj.keySet.filter(adj(_).size < k)
+    }
+    adj.keySet
+  }
+
+  test("coreDecomposition equals coreDecompositionPeeling and kCore a driver-side peel") {
+    var core3 = 0
+    for (i <- 1 to 8) {
+      val s = sample(i)
+      val adj = simple(s.edges)
+      if (adj.nonEmpty) {
+        val e = df(s.edges, s.partitions)
+        val peel = Peeling.coreDecompositionPeeling(e).select("node", "coreness").collect()
+          .map(r => (r.getLong(0), r.getInt(1))).toSeq.sorted
+        if (kCore(adj, 3).nonEmpty) core3 += 1
+        TestSession.bothPlacements { forced =>
+          val got = Centrality.coreDecomposition(e).select("node", "coreness").collect()
+            .map(r => (r.getLong(0), r.getInt(1))).toSeq.sorted
+          assert(got == peel, s"coreDecomposition forced=$forced, sample $i: $s")
+          for (k <- 1 to 3) {
+            val core = Centrality.kCore(e, k).collect().map(_.getLong(0)).toSet
+            assert(core == kCore(adj, k), s"kCore($k) forced=$forced, sample $i: $s")
+          }
+        }
+      }
+    }
+    // the samples must hold some 3-core
+    assert(core3 >= 2, s"$core3 samples with a 3-core")
   }
 
   test("nodeSimilarity equals a driver-side Jaccard top-k") {
