@@ -238,7 +238,12 @@ object Centrality {
   /**
    * k-core: the maximal subgraph in which every node has (undirected)
    * degree ≥ k — the nodes whose coreness ([[coreDecomposition]]) is at
-   * least k.
+   * least k. Within [[Placement.Walk]] the driver-local peel's coreness
+   * is filtered; past it, the vertex program of [[coreDecomposition]] with
+   * each estimate capped at k and one below k dropped to 0: a node keeps
+   * k while at least k of its neighbours do. That is the parallel peel
+   * for k alone, so the round count is its peel depth, not the coreness
+   * convergence depth (one round on a chain for k = 1 or k = 3).
    *
    * @param edges (src, dst) — direction ignored, self-loops dropped; ids
    *              read as LONG ([[Rounds.longId]])
@@ -246,7 +251,8 @@ object Centrality {
    */
   def kCore(edges: DataFrame, k: Int): DataFrame = {
     require(k >= 1, s"k must be >= 1: $k")
-    coreness(edges, maxIter = 200, "kCore").filter(col("coreness") >= k).select(col("node"))
+    coreness(edges, maxIter = 200, "kCore", Some(k))
+      .filter(col("coreness") >= k).select(col("node"))
   }
 
   /**
@@ -276,9 +282,12 @@ object Centrality {
    *         through edges)
    */
   def coreDecomposition(edges: DataFrame, maxIter: Int = 200): DataFrame =
-    coreness(edges, maxIter, "coreDecomposition")
+    coreness(edges, maxIter, "coreDecomposition", None)
 
-  private def coreness(edges: DataFrame, maxIter: Int, op: String): DataFrame = {
+  /** Per-node coreness; with `k`, past [[Placement.Walk]], only k for the
+    * nodes of the k-core and 0 for the rest. */
+  private def coreness(edges: DataFrame, maxIter: Int, op: String,
+      k: Option[Int]): DataFrame = {
     val spark = edges.sparkSession
     val raw = edges.select(longId(col("src"), op).as("u"), longId(col("dst"), op).as("v"))
       .filter(col("u") =!= col("v")) // also drops null endpoints
@@ -289,11 +298,13 @@ object Centrality {
     val adj = rounds.adjacency(in.flatMap(e => Iterator(e, e.swap)), dedupe = true)
     val vs = rounds.vertices(adj, None)
     // a node's estimate starts at its degree: the edges that reference it
-    var cur = rounds.persist(vs.map(_.weight.map(_.toInt)))
+    val start = (d: Double) => k.fold(d.toInt)(c => if (d >= c) c else 0)
+    val update = k.fold(hIndex _)(c => stays(c) _)
+    var cur = rounds.persist(vs.map(_.weight.map(start)))
     var (converged, i) = (false, 0)
     while (!converged && i < maxIter) {
       i += 1
-      val next = rounds.persist(rounds.step(adj, vs, cur)((_, c, j) => c(j))(hIndex))
+      val next = rounds.persist(rounds.step(adj, vs, cur)((_, c, j) => c(j))(update))
       // the round's one job: materializes it and tells whether it moved
       converged = next.zipPartitions(cur)((n, c) =>
         Iterator.single(java.util.Arrays.equals(n.next(), c.next()))).collect().forall(identity)
@@ -320,6 +331,18 @@ object Centrality {
       var n = atLeast(d)
       while (n < h) { h -= 1; n += atLeast(h) }
       next(v.srcAt(k)) = h
+    }
+    next
+  }
+
+  /** kCore's round: a node keeps k while at least k of its neighbours
+    * hold k (the h-index of estimates capped at k, 0 below k). */
+  private def stays(k: Int)(a: Adjacency, v: Vertices, in: Array[Int]): Array[Int] = {
+    val next = new Array[Int](v.ids.length)
+    for (s <- a.src.indices) {
+      var n = 0
+      for (e <- a.offset(s) until a.offset(s + 1)) if (in(v.refAt(e)) == k) n += 1
+      if (n >= k) next(v.srcAt(s)) = k
     }
     next
   }

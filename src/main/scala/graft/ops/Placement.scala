@@ -26,9 +26,9 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
  *    [[Rounds.step]] rounds —
  *    {{{
  *    edges     local    rounds
- *     45,686   0.21 s   0.98 s
- *    188,419   0.53 s   1.58 s
- *    769,311   2.30 s   3.09 s
+ *     45,686   0.24 s   1.12 s
+ *    188,419   0.67 s   1.80 s
+ *    769,311   3.29 s   2.56 s
  *    }}}
  *    so the local side stays below the bound;
  *  - [[RoundDp]] — round-iterated DPs whose frontier grows with

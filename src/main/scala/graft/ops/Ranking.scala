@@ -132,10 +132,12 @@ object Ranking {
       // a node sends its rank per unit of out-weight
       ranks = rounds.step(adj, vs, ranks)((v, r, i) => r(i) / v.weight(i)) { (a, v, in) =>
         val next = base(v)
+        val (w, ref) = (a.weight, v.refAt)
         for (k <- a.src.indices) {
-          var sum = 0.0
-          for (e <- a.offset(k) until a.offset(k + 1))
-            sum += (if (a.weight == null) in(v.refAt(e)) else a.weight(e) * in(v.refAt(e)))
+          var (sum, e) = (0.0, a.offset(k))
+          val to = a.offset(k + 1)
+          if (w == null) while (e < to) { sum += in(ref(e)); e += 1 }
+          else while (e < to) { sum += w(e) * in(ref(e)); e += 1 }
           next(v.srcAt(k)) += damping * sum
         }
         next

@@ -3,7 +3,7 @@ package graft.ops
 import scala.reflect.ClassTag
 import scala.reflect.runtime.universe.TypeTag
 
-import org.apache.spark.HashPartitioner
+import org.apache.spark.{HashPartitioner, TaskContext}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions.{concat, lit, raise_error, when}
@@ -30,12 +30,12 @@ import org.apache.spark.storage.StorageLevel
  * resident vertex and edge state).
  *
  * The vertex programs (the PageRank family over in-neighbour blocks,
- * coreness over symmetric ones) run [[step]]: one state value per node,
- * shipped to each partition whose block references the node (GraphX's
- * routing table, built once by [[vertices]]), then each partition computes
- * its own nodes' next state in the task. The update sees every value its
- * node reads at once, so it need not combine on the map side (the h-index
- * does not).
+ * coreness and kCore over symmetric ones) run [[step]]: one state value
+ * per node, shipped to each partition whose block references the node
+ * (GraphX's routing table, built once by [[vertices]]), then each
+ * partition computes its own nodes' next state in the task. The update
+ * sees every value its node reads at once, so it need not combine on the
+ * map side (the h-index does not).
  *
  * The wedge kernel ([[Wedges]]: triangles, their per-node counts, the
  * clustering coefficients, k-truss support and node similarity) adds one
@@ -102,8 +102,8 @@ final class Rounds private (val part: HashPartitioner) {
     * [[Vertices]] per partition, owning the nodes [[part]] places there —
     * its block's sources, the ids any block references and `seeds`. Built
     * lazily with one shuffle: each block's distinct referenced ids, keyed
-    * by node, tell their owners which partition reads them at which
-    * position, with the weight of the block's edges to them. */
+    * by node, tell their owners which partition reads them, with the
+    * weight of the block's edges to them. */
   def vertices(adj: RDD[Adjacency], seeds: Option[RDD[Long]]): RDD[Vertices] = {
     val asks = adj.mapPartitionsWithIndex { (p, it) =>
       val a = it.next()
@@ -111,32 +111,40 @@ final class Rounds private (val part: HashPartitioner) {
       val w = new Array[Double](refs.length)
       for (e <- a.dst.indices)
         w(java.util.Arrays.binarySearch(refs, a.dst(e))) += (if (a.weight == null) 1.0 else a.weight(e))
-      Iterator.tabulate(refs.length)(k => (refs(k), (p, k, w(k))))
-    }.union(seeds.fold(adj.sparkContext.emptyRDD[(Long, (Int, Int, Double))])(
-        _.map((_, (-1, 0, 0.0)))))
+      Iterator.tabulate(refs.length)(k => (refs(k), (p, w(k))))
+    }.union(seeds.fold(adj.sparkContext.emptyRDD[(Long, (Int, Double))])(
+        _.map((_, (-1, 0.0)))))
       .partitionBy(part)
-    persist(adj.zipPartitions(asks)((aIt, asked) => Iterator.single(Vertices(aIt.next(), asked))))
+    val owners = part // the closures must not capture this Rounds
+    persist(adj.zipPartitions(asks)((aIt, asked) =>
+      Iterator.single(Vertices(aIt.next(), asked, owners))))
   }
 
   /** One round of a vertex program over the blocks `adj` laid out as `vs`:
     * a partition's i-th node sends `send(v, state, i)` to each partition
-    * whose block references it — ONE shuffle, at most one record per
-    * (partition, distinct referenced id) — and each partition computes its
-    * own nodes' next state in the task, `update(block, v, in)`, where
-    * `in(k)` is what the block's k-th distinct referenced id sent. `state`
-    * is read once, so a lazy chain of rounds runs each round once. */
+    * whose block references it — ONE shuffle of one record per pair of
+    * partitions, an array of one value per (partition, distinct referenced
+    * id) — and each partition computes its own nodes' next state in the
+    * task, `update(block, v, in)`, where `in(refAt(e))` is what edge e's
+    * neighbour sent. `state` is read once, so a lazy chain of rounds runs
+    * each round once. */
   def step[S: ClassTag, M: ClassTag](adj: RDD[Adjacency], vs: RDD[Vertices],
       state: RDD[Array[S]])(send: (Vertices, Array[S], Int) => M)(
       update: (Adjacency, Vertices, Array[M]) => Array[S]): RDD[Array[S]] = {
+    val n = part.numPartitions // the closures must not capture this Rounds
     // keyed by the reading partition: not `part`'s layout
     val msgs = vs.zipPartitions(state, preservesPartitioning = false) { (vIt, sIt) =>
-      val (v, s) = (vIt.next(), sIt.next())
-      Iterator.tabulate(v.from.length)(r => (v.to(r), (v.at(r), send(v, s, v.from(r)))))
+      val (v, s, self) = (vIt.next(), sIt.next(), TaskContext.getPartitionId())
+      Iterator.range(0, n).filter(q => v.outFrom(q + 1) > v.outFrom(q)).map { q =>
+        val m = new Array[M](v.outFrom(q + 1) - v.outFrom(q))
+        for (r <- m.indices) m(r) = send(v, s, v.from(v.outFrom(q) + r))
+        (q, (self, m))
+      }
     }.partitionBy(part) // an Int key in [0, n) is its own partition
     adj.zipPartitions(vs, msgs) { (aIt, vIt, mIt) =>
       val v = vIt.next()
-      val in = new Array[M](v.refs)
-      mIt.foreach { case (_, (k, m)) => in(k) = m }
+      val in = new Array[M](v.inFrom(n))
+      mIt.foreach { case (_, (p, m)) => System.arraycopy(m, 0, in, v.inFrom(p), m.length) }
       Iterator.single(update(aIt.next(), v, in))
     }
   }
@@ -297,30 +305,47 @@ object Adjacency {
 
 /** One partition's vertex layout next to its [[Adjacency]] block: `ids`,
   * the nodes it owns, ascending; `srcAt` places the block's sources in
-  * `ids`; `refAt` places each edge's neighbour among the block's `refs`
-  * distinct neighbours (ascending); `weight(i)` is the total weight of the
-  * edges, in all blocks, that reference node i (its out-weight in
-  * in-neighbour blocks, its degree in symmetric ones); `seeded(i)` marks
-  * the seeds. The routing table: owned node `from(r)` is read by partition
-  * `to(r)` as its `at(r)`-th distinct neighbour. */
+  * `ids`; `refAt` places each edge's neighbour among the block's distinct
+  * neighbours, grouped by the partition that owns them (partition p's from
+  * `inFrom(p)` to `inFrom(p + 1)`) and ascending within a group;
+  * `weight(i)` is the total weight of the edges, in all blocks, that
+  * reference node i (its out-weight in in-neighbour blocks, its degree in
+  * symmetric ones); `seeded(i)` marks the seeds. The routing table:
+  * partition q reads the owned nodes `from(outFrom(q) until outFrom(q + 1))`
+  * — ascending, so in the order of its group for this partition. */
 final class Vertices private (val ids: Array[Long], val srcAt: Array[Int],
-    val refs: Int, val refAt: Array[Int], val weight: Array[Double],
-    val seeded: Array[Boolean], val from: Array[Int], val to: Array[Int],
-    val at: Array[Int]) extends Serializable
+    val refAt: Array[Int], val inFrom: Array[Int], val weight: Array[Double],
+    val seeded: Array[Boolean], val from: Array[Int], val outFrom: Array[Int])
+  extends Serializable
 
 object Vertices {
 
-  /** `asked`: (id, (reading partition, position there, edge weight)) rows
-    * [[Rounds.part]] places here; a seed reads (id, (-1, 0, 0.0)). */
-  private[ops] def apply(a: Adjacency, asked: Iterator[(Long, (Int, Int, Double))]): Vertices = {
+  /** `asked`: (id, (reading partition, edge weight)) rows `part` places
+    * here; a seed reads (id, (-1, 0.0)). */
+  private[ops] def apply(a: Adjacency, asked: Iterator[(Long, (Int, Double))],
+      part: HashPartitioner): Vertices = {
     val rows = asked.toArray
     val ids = Adjacency.distinctSorted(a.src ++ rows.map(_._1))
     def at(id: Long) = java.util.Arrays.binarySearch(ids, id)
     val (weight, seeded) = (new Array[Double](ids.length), new Array[Boolean](ids.length))
-    rows.foreach { case (id, (p, _, w)) => if (p < 0) seeded(at(id)) = true else weight(at(id)) += w }
-    val routes = rows.filter(_._2._1 >= 0)
+    rows.foreach { case (id, (p, w)) => if (p < 0) seeded(at(id)) = true else weight(at(id)) += w }
+    val routes = rows.filter(_._2._1 >= 0).sortBy(_._1)
+    val (outFrom, place) = groups(part.numPartitions, routes.map(_._2._1))
+    val from = new Array[Int](routes.length)
+    for (r <- routes.indices) from(place(r)) = at(routes(r)._1)
     val refs = Adjacency.distinctSorted(a.dst)
-    new Vertices(ids, a.src.map(at), refs.length, a.dst.map(java.util.Arrays.binarySearch(refs, _)),
-      weight, seeded, routes.map(r => at(r._1)), routes.map(_._2._1), routes.map(_._2._2))
+    val (inFrom, refPlace) = groups(part.numPartitions, refs.map(part.getPartition(_)))
+    new Vertices(ids, a.src.map(at), a.dst.map(d => refPlace(java.util.Arrays.binarySearch(refs, d))),
+      inFrom, weight, seeded, from, outFrom)
+  }
+
+  /** A stable counting sort of items by `group` (each in [0, n)): each
+    * group's start offset (n + 1 of them) and each item's place. */
+  private def groups(n: Int, group: Array[Int]): (Array[Int], Array[Int]) = {
+    val start = new Array[Int](n + 1)
+    group.foreach(g => start(g + 1) += 1)
+    for (g <- 0 until n) start(g + 1) += start(g)
+    val next = java.util.Arrays.copyOf(start, n)
+    (start, group.map { g => next(g) += 1; next(g) - 1 })
   }
 }

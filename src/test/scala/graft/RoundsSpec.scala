@@ -210,6 +210,21 @@ class RoundsSpec extends AnyFunSuite {
     }
   }
 
+  test("forced kCore on a 1000-node chain runs its peel depth for k, not the coreness depth") {
+    // the chain's coreness settles one hop a round from each end (~500
+    // rounds), but every node survives the 1-core and none the 3-core
+    val chain = (0L until 999L).map(i => (i, i + 1)).toDF("src", "dst")
+    TestSession.withForcedDistributed(true) {
+      for ((k, want) <- Seq(1 -> 1000L, 3 -> 0L)) {
+        var n = 0L
+        val (jobs, _) = listen { n = Centrality.kCore(chain, k).collect().length }
+        assert(n == want, s"kCore($k): $n nodes")
+        // one round, which converges, and the collect
+        assert(jobs.size == 2, s"kCore($k): ${jobs.size} jobs")
+      }
+    }
+  }
+
   test("forced connectedComponents launches one job a round plus at most three") {
     // the 1000-node chain of GraphOpsSpec's convergence test
     val chain = (0L until 999L).map(i => (i, i + 1)).toDF("src", "dst")
