@@ -60,10 +60,7 @@ object Bfs {
     val spark = edges.sparkSession
     // ids go through the longId contract: a non-null id that does not cast
     // fails loudly; a null endpoint or source never matched a join either
-    val eRaw = edges.select(longId(col("src"), "distances"),
-        longId(col("dst"), "distances"))
-      .na.drop("any")
-      .rdd.map(r => (r.getLong(0), r.getLong(1)))
+    val eRaw = Rounds.endpoints(edges, "distances").rdd.map(r => (r.getLong(0), r.getLong(1)))
     val rounds = Rounds(spark, eRaw.getNumPartitions)
     val part = rounds.part
     // reachability only sees distinct (src, dst): parallel edges would be
@@ -225,9 +222,7 @@ object Bfs {
    */
   def listRanks(edges: DataFrame, maxLength: Long = 1L << 20): DataFrame = {
     val spark = edges.sparkSession
-    val raw = edges.select(longId(col("src"), "listRanks").as("src"),
-        longId(col("dst"), "listRanks").as("dst"))
-      .na.drop("any")
+    val raw = Rounds.endpoints(edges, "listRanks")
     val roundsCap = (64 - java.lang.Long.numberOfLeadingZeros(math.max(1L, maxLength))) + 1
     for (rows <- Placement.local(raw, Placement.Walk))
       return localListRanks(spark, rows.map(r => (r.getLong(0), r.getLong(1))),
@@ -495,9 +490,8 @@ object Bfs {
       lit(0L).as("arrival"))
     // a bounded temporal-edge list runs the SAME keep-the-min round DP on
     // the driver — 2 jobs total instead of ~3 per relaxation round
-    val eLocal = edges.select(longId(col("src"), "earliestArrival"),
-        longId(col("dst"), "earliestArrival"), col("ts").cast("long"))
-      .na.drop("any") // a null edge field never matches the join either
+    val eLocal = Rounds.endpoints(edges, "earliestArrival", col("ts").cast("long").as("ts"))
+      .na.drop(Seq("ts")) // a null edge field never matches the join either
     for (es <- Placement.local(eLocal, Placement.Walk);
          ss <- Placement.local(s0, Placement.Walk))
       return localEarliestArrival(edges.sparkSession,

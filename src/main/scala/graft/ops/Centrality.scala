@@ -1,11 +1,10 @@
 package graft.ops
 
 import graft.ops.Ckpt._
-import graft.ops.Rounds.longId
 import graft.ops.Wedges.round4
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /**
@@ -17,9 +16,10 @@ import org.apache.spark.sql.functions._
  * Scale rules shared by every algorithm here:
  *  - state is per node or per (source, node) pair of 8-byte ids —
  *    properties never enter the loops;
- *  - coreness and k-core are a vertex program on [[Rounds.step]] (one
- *    shuffle of node state a round, the update in the task); k-truss and
- *    node similarity run the wedge kernel ([[Wedges]]); the other loops
+ *  - coreness, k-core, trussness and k-truss are one vertex program on
+ *    [[Rounds.step]] (one shuffle of node state a round, the update in the
+ *    task; truss's vertices are the edges, its triangles from the wedge
+ *    kernel [[Wedges]], which node similarity runs too); the other loops
  *    are DataFrame rounds of one join + one aggregate, both
  *    hash-partitioned on node ids, frontiers lazily checkpointed so one
  *    action materializes a round;
@@ -289,23 +289,39 @@ object Centrality {
   private def coreness(edges: DataFrame, maxIter: Int, op: String,
       k: Option[Int]): DataFrame = {
     val spark = edges.sparkSession
-    val raw = edges.select(longId(col("src"), op).as("u"), longId(col("dst"), op).as("v"))
-      .filter(col("u") =!= col("v")) // also drops null endpoints
+    val raw = Rounds.endpoints(edges, op)
     for (rows <- Placement.local(raw, Placement.Walk))
       return localCoreness(spark, rows)
-    val in = raw.rdd.map(r => (r.getLong(0), r.getLong(1)))
+    val in = raw.rdd.map(r => (r.getLong(0), r.getLong(1))).filter(e => e._1 != e._2)
     val rounds = Rounds(spark, in.getNumPartitions)
     val adj = rounds.adjacency(in.flatMap(e => Iterator(e, e.swap)), dedupe = true)
+    val (vs, cur) = decompose(rounds, adj, width = 1, maxIter, op, k)
+    Rounds.toDf(spark, Rounds.byNode(vs, cur), "node", "coreness")
+  }
+
+  /** The one decomposition loop, of coreness, kCore, trussness and kTruss,
+    * over blocks whose runs list each node's items `width` entries apiece:
+    * a neighbour (coreness) or a triangle's two partner edges (trussness),
+    * an item worth the least estimate among its entries. Each estimate
+    * starts at the node's item count (an item references each of its
+    * entries once, so that is `Vertices.weight / width`) and moves to the
+    * h-index of its items ([[hIndex]]); with `cap`, it is capped at `cap`
+    * and one below `cap` drops to 0 ([[stays]]). One [[Rounds.step]] a
+    * round; the round's one job materializes it and tells whether any
+    * estimate moved. Returns the layout and the fixpoint, both held. */
+  private def decompose(rounds: Rounds, adj: RDD[Adjacency], width: Int, maxIter: Int,
+      op: String, cap: Option[Int]): (RDD[Vertices], RDD[Array[Int]]) = {
     val vs = rounds.vertices(adj, None)
-    // a node's estimate starts at its degree: the edges that reference it
-    val start = (d: Double) => k.fold(d.toInt)(c => if (d >= c) c else 0)
-    val update = k.fold(hIndex _)(c => stays(c) _)
+    val start = (w: Double) => {
+      val d = (w / width).toInt
+      cap.fold(d)(c => if (d >= c) c else 0)
+    }
+    val update = cap.fold(hIndex(width) _)(stays(width, _) _)
     var cur = rounds.persist(vs.map(_.weight.map(start)))
     var (converged, i) = (false, 0)
     while (!converged && i < maxIter) {
       i += 1
       val next = rounds.persist(rounds.step(adj, vs, cur)((_, c, j) => c(j))(update))
-      // the round's one job: materializes it and tells whether it moved
       converged = next.zipPartitions(cur)((n, c) =>
         Iterator.single(java.util.Arrays.equals(n.next(), c.next()))).collect().forall(identity)
       rounds.unpersist(cur)
@@ -313,20 +329,29 @@ object Centrality {
     }
     rounds.release(if (converged) Seq(vs, cur) else Nil)
     require(converged, s"$op did not converge in $maxIter rounds")
-    Rounds.toDf(spark, Rounds.byNode(vs, cur), "node", "coreness")
+    (vs, cur)
   }
 
-  /** Each source's h-index of its neighbours' estimates `in`: the largest h
-    * such that at least h of them are ≥ h. Every node of a symmetric block
-    * is one of its sources. */
-  private def hIndex(a: Adjacency, v: Vertices, in: Array[Int]): Array[Int] = {
+  /** The item of `width` entries from block position `e`: the least of
+    * their estimates `in`. */
+  private def item(v: Vertices, in: Array[Int], e: Int, width: Int): Int = {
+    var (m, j) = (in(v.refAt(e)), 1)
+    while (j < width) { m = math.min(m, in(v.refAt(e + j))); j += 1 }
+    m
+  }
+
+  /** Each source's h-index of its items: the largest h such that at least
+    * h of them are worth ≥ h. Every node of the blocks is one of their
+    * sources. */
+  private def hIndex(width: Int)(a: Adjacency, v: Vertices, in: Array[Int]): Array[Int] = {
     val next = new Array[Int](v.ids.length)
-    var atLeast = new Array[Int](1) // atLeast(h): neighbours at min(estimate, degree) = h
+    var atLeast = new Array[Int](1) // atLeast(h): items at min(worth, item count) = h
     for (k <- a.src.indices) {
-      val (from, d) = (a.offset(k), a.offset(k + 1) - a.offset(k))
+      val (from, to) = (a.offset(k), a.offset(k + 1))
+      val d = (to - from) / width
       if (atLeast.length <= d) atLeast = new Array[Int](d + 1)
       else java.util.Arrays.fill(atLeast, 0, d + 1, 0)
-      for (e <- from until from + d) atLeast(math.min(in(v.refAt(e)), d)) += 1
+      for (e <- from until to by width) atLeast(math.min(item(v, in, e, width), d)) += 1
       var h = d
       var n = atLeast(d)
       while (n < h) { h -= 1; n += atLeast(h) }
@@ -335,24 +360,26 @@ object Centrality {
     next
   }
 
-  /** kCore's round: a node keeps k while at least k of its neighbours
-    * hold k (the h-index of estimates capped at k, 0 below k). */
-  private def stays(k: Int)(a: Adjacency, v: Vertices, in: Array[Int]): Array[Int] = {
+  /** A capped round (kCore, kTruss): a node keeps `cap` while at least
+    * `cap` of its items are worth `cap` (the h-index of estimates capped
+    * at `cap`, 0 below it). */
+  private def stays(width: Int, cap: Int)(a: Adjacency, v: Vertices, in: Array[Int]): Array[Int] = {
     val next = new Array[Int](v.ids.length)
     for (s <- a.src.indices) {
       var n = 0
-      for (e <- a.offset(s) until a.offset(s + 1)) if (in(v.refAt(e)) == k) n += 1
-      if (n >= k) next(v.srcAt(s)) = k
+      for (e <- a.offset(s) until a.offset(s + 1) by width) if (item(v, in, e, width) == cap) n += 1
+      if (n >= cap) next(v.srcAt(s)) = cap
     }
     next
   }
 
   /** Driver-local coreness: Batagelj–Zaveršnik bucket peeling over a
-    * collected adjacency (min-heap with lazy deletion; O(E log V)). */
+    * collected adjacency (min-heap with lazy deletion; O(E log V));
+    * self-loops dropped. */
   private def localCoreness(spark: org.apache.spark.sql.SparkSession,
       rows: Array[org.apache.spark.sql.Row]): DataFrame = {
     import spark.implicits._
-    val pairs = rows.map { r =>
+    val pairs = rows.collect { case r if r.getLong(0) != r.getLong(1) =>
       val (a, b) = (r.getLong(0), r.getLong(1))
       (math.min(a, b), math.max(a, b))
     }.distinct
@@ -650,98 +677,67 @@ object Centrality {
   }
 
   /**
-   * k-truss decomposition (Cohen 2008; the cohesive-subgraph sibling of
-   * [[kCore]] in the graph-data-science family): the maximal subgraph in
-   * which every edge closes at least k−2 triangles. Iterative support
-   * peeling over RDD rounds ([[Rounds]]) — each round counts per-edge
-   * triangle support on the surviving edge set with the wedge kernel
-   * ([[Wedges.triangles]]) and keeps the edges of support ≥ k−2 (an edge
-   * of no triangle has none); deletions cascade, so rounds repeat to
-   * fixpoint (bounded: each round either deletes or terminates), one job
-   * a round.
+   * k-truss (Cohen 2008; the cohesive-subgraph sibling of [[kCore]] in the
+   * graph-data-science family): the maximal subgraph in which every edge
+   * closes at least k−2 triangles — the edges whose trussness
+   * ([[trussDecomposition]]) is at least k. The vertex program of
+   * [[trussDecomposition]] with each estimate capped at k−2 and one below
+   * k−2 dropped to 0: an edge keeps k−2 while at least k−2 of its
+   * triangles have both partner edges holding it. That is the parallel
+   * support peel for k alone, so the round count is its peel depth for k,
+   * not the trussness convergence depth.
    *
-   * @param edges (src, dst) — direction ignored; ids cast to LONG, rows
-   *              with a null endpoint dropped
+   * @param edges (src, dst) — direction ignored, self-loops dropped; ids
+   *              read as LONG ([[Rounds.longId]]), rows with a null
+   *              endpoint dropped
    * @return surviving undirected edges (u, v) with u < v
    */
-  def kTruss(edges: DataFrame, k: Int, maxIter: Int = 30): DataFrame = {
+  def kTruss(edges: DataFrame, k: Int): DataFrame = {
     require(k >= 3, s"k-truss needs k >= 3, got $k")
-    val (rounds, in) = Wedges.pairs(edges, "kTruss")
-    var e = rounds.persist(rounds.dedupe(in.collect {
-      case (a, b) if a != b => (math.min(a, b), math.max(a, b)) }))
-    var n = e.count()
-    var dropped = 1L
-    var it = 0
-    while (dropped > 0 && it < maxIter) {
-      it += 1
-      // each triangle (a < b < c) supports edges (a,b), (b,c), (a,c)
-      val kept = rounds.persist(Wedges.triangles(rounds, e)
-        .flatMap { case (a, b, c) => Iterator((a, b), (b, c), (a, c)) }
-        .map((_, 1L)).reduceByKey(rounds.part, _ + _)
-        .collect { case (uv, support) if support >= k - 2 => uv })
-      val m = kept.count()
-      rounds.release(Seq(kept))
-      dropped = n - m
-      n = m
-      e = kept
-    }
-    require(dropped == 0, s"kTruss did not converge within $maxIter rounds")
-    Rounds.toDf(edges.sparkSession, e, "u", "v")
+    trussness(edges, maxIter = 200, "kTruss", Some(k - 2))
+      .filter(col("trussness") === k).select(col("u"), col("v"))
   }
 
   /**
-   * Full truss decomposition: per-edge TRUSSNESS — the largest k for
-   * which the edge survives the k-truss ([[kTruss]]). Phases peel k = 3
-   * upward, each phase starting from the previous phase's survivors
-   * (edge sets only shrink, so no phase rescans removed edges); an edge
-   * removed in phase k carries trussness k−1, and edges outside any
-   * triangle carry the floor value 2.
+   * Full truss decomposition: per-edge TRUSSNESS — the largest k for which
+   * the edge survives the k-truss ([[kTruss]]) — by the h-index fixpoint of
+   * [[coreDecomposition]] with the edges as vertices (Sariyüce, Seshadhri &
+   * Pinar, VLDB 2018 — local nucleus decomposition): σ(e) starts at e's
+   * triangle support and iterates
+   *   σ(e) ← H({min(σ(e1), σ(e2)) : e, e1, e2 close a triangle})
+   * to fixpoint; trussness = σ∞ + 2, and 2 for an edge of no triangle.
    *
-   * @return (u, v, trussness) for every undirected input edge
+   * The wedge kernel numbers each undirected edge and enumerates the
+   * triangles once ([[Wedges.numberedTriangles]]); each triangle gives each
+   * of its edges one item, its two partner edges side by side in the edge's
+   * block run. The rounds are the [[Rounds.step]] loop of
+   * [[coreDecomposition]], one job each, and their count is the
+   * convergence depth, not the Σ_k peels_k of a peeling cascade.
+   *
+   * @param edges (src, dst) — direction ignored, self-loops dropped; ids
+   *              read as LONG ([[Rounds.longId]]), rows with a null
+   *              endpoint dropped
+   * @return (u, v, trussness INT) for every undirected edge, u < v
    */
-  def trussDecomposition(edges: DataFrame, maxIter: Int = 200): DataFrame = {
-    val und = Ranking.canonical(edges).localCheckpoint(false)
-    // Triangles computed ONCE by the wedge kernel (the peeling cascade
-    // recomputed them every peel of every phase); melt each triangle
-    // (a<b<c) into its three (edge, other-edge-1, other-edge-2) incidences.
-    val (rounds, e) = Wedges.pairs(und.select(col("u").as("src"), col("v").as("dst")),
-      "trussDecomposition")
-    val incidences = Rounds.toDf(edges.sparkSession,
-      Wedges.triangles(rounds, e).flatMap { case (a, b, c) =>
-        Iterator((a, b, b, c, a, c), (b, c, a, b, a, c), (a, c, a, b, b, c)) },
-      "u", "v", "p1", "q1", "p2", "q2").localCheckpoint(false)
-    // σ(e) init = support; iterate σ(e) ← H({min(σ(e1), σ(e2))}) to
-    // fixpoint (Sariyüce, Seshadhri & Pinar, VLDB 2018 — local nucleus
-    // decomposition); trussness = σ∞ + 2. The h-index of
-    // [[coreDecomposition]], here as grouped counts and a descending
-    // running total; round count = convergence depth, not Σ peels.
-    var cur = incidences.groupBy("u", "v").agg(count(lit(1)).as("s"))
-      .localCheckpoint(false)
-    var checksum = if (cur.isEmpty) 0L else cur.agg(sum("s")).head().getLong(0)
-    var converged = checksum == 0
-    var i = 0
-    val byEdge = Window.partitionBy("u", "v").orderBy(col("m").desc)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    while (!converged && i < maxIter) {
-      val next = incidences
-        .join(cur.select(col("u").as("p1"), col("v").as("q1"),
-          col("s").as("s1")), Seq("p1", "q1"))
-        .join(cur.select(col("u").as("p2"), col("v").as("q2"),
-          col("s").as("s2")), Seq("p2", "q2"))
-        .select(col("u"), col("v"), least(col("s1"), col("s2")).as("m"))
-        .groupBy("u", "v", "m").agg(count(lit(1)).as("__cnt"))
-        .withColumn("__rt", sum(col("__cnt")).over(byEdge))
-        .groupBy("u", "v")
-        .agg(max(least(col("m"), col("__rt"))).as("s"))
-        .localCheckpoint(false)
-      val nextSum = if (next.isEmpty) 0L else next.agg(sum("s")).head().getLong(0)
-      converged = nextSum == checksum
-      cur = next; checksum = nextSum; i += 1
-    }
-    require(converged, s"trussDecomposition did not converge in $maxIter rounds")
-    und.join(cur, Seq("u", "v"), "left_outer")
-      .select(col("u"), col("v"),
-        (coalesce(col("s"), lit(0L)) + 2).cast("int").as("trussness"))
+  def trussDecomposition(edges: DataFrame, maxIter: Int = 200): DataFrame =
+    trussness(edges, maxIter, "trussDecomposition", None)
+
+  /** Per-edge trussness; with `cap`, only cap + 2 for the edges of the
+    * (cap + 2)-truss and 2 for the rest. */
+  private def trussness(edges: DataFrame, maxIter: Int, op: String,
+      cap: Option[Int]): DataFrame = {
+    val (rounds, e) = Wedges.pairs(edges, op)
+    val (numbered, tri) = Wedges.numberedTriangles(rounds, e)
+    // each edge's run: the partner pair of each of its triangles, side by side
+    val adj = rounds.persist(rounds.blocks(tri.flatMap { case (x, y, z) =>
+      Iterator((x, (y, z)), (y, (x, z)), (z, (x, y))) })(it => Adjacency.ordered(
+        it.flatMap { case (x, (y, z)) => Iterator((x, y, 0.0), (x, z, 0.0)) }, weighted = false)))
+    val (vs, cur) = decompose(rounds, adj, width = 2, maxIter, op, cap)
+    Rounds.toDf(edges.sparkSession, numbered.partitionBy(rounds.part)
+      .zipPartitions(Rounds.byNode(vs, cur)) { (es, st) =>
+        val at = scala.collection.mutable.LongMap.from(st)
+        es.map { case (id, (u, v)) => (u, v, at.getOrElse(id, 0) + 2) }
+      }, "u", "v", "trussness")
   }
 
   /**

@@ -91,22 +91,23 @@ object Ranking {
       damping: Double = 0.85): DataFrame = {
     require(iterations >= 1 && damping > 0 && damping < 1,
       s"bad pageRank config: iterations=$iterations damping=$damping")
-    iterateRanks(edges.select(longId(col("src"), "pageRank"),
-        longId(col("dst"), "pageRank")), iterations, damping, sources = None)
+    iterateRanks(Rounds.endpoints(edges, "pageRank"), iterations, damping, sources = None)
   }
 
   /** Shared vertex program for the pageRank family. `edges` must be
-    * (src LONG, dst LONG[, w DOUBLE]); without `w` every edge weighs 1.
+    * [[Rounds.endpoints]] (src LONG, dst LONG[, weight DOUBLE]); without
+    * `weight` every edge weighs 1.
     * `sources` switches the teleport mass to the personalized
     * (seed-restart) form. */
   private def iterateRanks(edges: DataFrame, iterations: Int,
       damping: Double, sources: Option[DataFrame]): DataFrame = {
     val spark = edges.sparkSession
     val weighted = edges.columns.length == 3
-    // drop null src/dst/weight rows BEFORE the primitive-getter RDD map:
-    // a rel missing the weight property must be ignored (the old
-    // DataFrame formulation's null-sum semantics), not NPE the job
-    val rows = edges.na.drop("any").rdd
+    // drop null-weight rows BEFORE the primitive-getter RDD map (the
+    // endpoints dropped theirs): a rel missing the weight property must be
+    // ignored (the old DataFrame formulation's null-sum semantics), not NPE
+    // the job
+    val rows = (if (weighted) edges.na.drop(Seq("weight")) else edges).rdd
     val rounds = Rounds(spark, rows.getNumPartitions)
     // each node's in-edges, in its own partition; multi-edges are kept,
     // each copy with its own weight
@@ -161,9 +162,8 @@ object Ranking {
       damping: Double = 0.85): DataFrame = {
     require(iterations >= 1 && damping > 0 && damping < 1,
       s"bad pageRank config: iterations=$iterations damping=$damping")
-    iterateRanks(edges.select(longId(col("src"), "weightedPageRank"),
-        longId(col("dst"), "weightedPageRank"), col("weight").cast("double")),
-      iterations, damping, sources = None)
+    iterateRanks(Rounds.endpoints(edges, "weightedPageRank",
+        col("weight").cast("double").as("weight")), iterations, damping, sources = None)
   }
 
   /**
@@ -183,10 +183,9 @@ object Ranking {
       iterations: Int = 10, damping: Double = 0.85): DataFrame = {
     require(iterations >= 1 && damping > 0 && damping < 1,
       s"bad pageRank config: iterations=$iterations damping=$damping")
-    iterateRanks(edges.select(longId(col("src"), "personalizedPageRank"),
-        longId(col("dst"), "personalizedPageRank")), iterations, damping,
-      sources = Some(sources.select(longId(col("source"), "personalizedPageRank"))
-        .na.drop("any").distinct()))
+    iterateRanks(Rounds.endpoints(edges, "personalizedPageRank"), iterations, damping,
+      sources = Some(sources.na.drop(Seq("source"))
+        .select(longId(col("source"), "personalizedPageRank")).distinct()))
   }
 
   /**
@@ -216,7 +215,7 @@ object Ranking {
 
   /** The undirected simple edge set: (u, v) with u < v, self-loops
     * dropped, one row per node pair. */
-  private[ops] def canonical(edges: DataFrame): DataFrame =
+  private def canonical(edges: DataFrame): DataFrame =
     edges.select(least(col("src"), col("dst")).as("u"),
         greatest(col("src"), col("dst")).as("v"))
       .filter(col("u") =!= col("v")).distinct()

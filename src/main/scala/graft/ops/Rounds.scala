@@ -6,15 +6,15 @@ import scala.reflect.runtime.universe.TypeTag
 import org.apache.spark.{HashPartitioner, TaskContext}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
-import org.apache.spark.sql.functions.{concat, lit, raise_error, when}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.functions.{col, concat, lit, raise_error, when}
+import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType, StructType}
 import org.apache.spark.storage.StorageLevel
 
 /**
  * The mechanics shared by the RDD round loops (Bfs.distancesImpl,
  * Bfs.listRanks, Bfs.connectedComponents, the PageRank family,
- * Centrality.coreDecomposition and kCore, TrailRdd.search,
- * Centrality.kTruss, the [[Wedges]] kernel) — the Pregelix shape: every
+ * Centrality's core and truss decompositions with kCore and kTruss,
+ * TrailRdd.search, the [[Wedges]] kernel) — the Pregelix shape: every
  * superstep runs through one engine, each operator supplies only its step
  * function. A loop opens one `Rounds`, partitions all its keyed state with
  * [[part]], persists each round (and any reused input) through [[persist]]
@@ -30,7 +30,8 @@ import org.apache.spark.storage.StorageLevel
  * resident vertex and edge state).
  *
  * The vertex programs (the PageRank family over in-neighbour blocks,
- * coreness and kCore over symmetric ones) run [[step]]: one state value
+ * coreness and kCore over symmetric ones, trussness and kTruss over blocks
+ * that list each edge's triangle partners) run [[step]]: one state value
  * per node, shipped to each partition whose block references the node
  * (GraphX's routing table, built once by [[vertices]]), then each
  * partition computes its own nodes' next state in the task. The update
@@ -38,12 +39,13 @@ import org.apache.spark.storage.StorageLevel
  * map side (the h-index does not).
  *
  * The wedge kernel ([[Wedges]]: triangles, their per-node counts, the
- * clustering coefficients, k-truss support and node similarity) adds one
- * step, [[fetch]]: each partition asks for the neighbour lists of the node
- * ids its block references and gets them in two shuffles, so no wedge row
- * is ever shuffled. A task's memory is bounded by its own block plus the
- * lists it fetched: at most min(|E|, the lists it references). Fetching in
- * chunks, for a partition whose references outgrow a task, is left open.
+ * clustering coefficients, the truss decomposition's triangles and node
+ * similarity) adds one step, [[fetch]]: each partition asks for the
+ * neighbour lists of the node ids its block references and gets them in
+ * two shuffles, so no wedge row is ever shuffled. A task's memory is
+ * bounded by its own block plus the lists it fetched: at most min(|E|, the
+ * lists it references). Fetching in chunks, for a partition whose
+ * references outgrow a task, is left open.
  */
 final class Rounds private (val part: HashPartitioner) {
   private val held = scala.collection.mutable.ArrayBuffer.empty[RDD[_]]
@@ -180,6 +182,19 @@ object Rounds {
       super.getPartition(key match { case (a, _) => a; case k => k })
   }
 
+  /** `edges`' `src` and `dst` read as LONG ids ([[longId]]; an integral
+    * column needs no guard), then `more`. Rows with a null endpoint are
+    * dropped first, on the raw columns: a null filter over the read ids is
+    * pushed below the projection and would evaluate each id's guard a
+    * second time. */
+  def endpoints(edges: DataFrame, op: String, more: Column*): DataFrame = {
+    def id(c: String) = edges.schema(c).dataType match {
+      case ByteType | ShortType | IntegerType | LongType => col(c).cast(LongType)
+      case _ => longId(col(c), op)
+    }
+    edges.na.drop(Seq("src", "dst")).select(Seq(id("src"), id("dst")) ++ more: _*)
+  }
+
   /** Long-id contract cast for the RDD round loops: a non-null id that
     * does not cast to LONG fails loudly, naming the operator, instead of
     * becoming NULL and silently dropping the edge (the generic-typed
@@ -242,9 +257,10 @@ object Rounds {
 
 /** One partition's edges in compressed sparse row form: the partition's
   * sources ascending in `src`; the i-th source's neighbours are
-  * `dst(offset(i) until offset(i + 1))` — ascending when unweighted; a
-  * weighted block keeps each source's edges in input order, with their
-  * weights at the same positions of `weight` (null when unweighted). */
+  * `dst(offset(i) until offset(i + 1))` — ascending when built unweighted;
+  * a weighted or [[Adjacency.ordered]] block keeps each source's edges in
+  * input order, their weights at the same positions of `weight` (null
+  * when unweighted). */
 final class Adjacency private (val src: Array[Long], val offset: Array[Int],
     val dst: Array[Long], val weight: Array[Double]) extends Serializable {
 
@@ -266,11 +282,11 @@ object Adjacency {
     java.util.Arrays.copyOf(a, n)
   }
 
-  /** The block of `(src, dst, weight)` edges: a counting sort into source
-    * order; unweighted, each source's neighbours are then sorted and, with
-    * `dedupe`, kept once. */
-  private[ops] def build(edges: Iterator[(Long, Long, Double)], weighted: Boolean,
-      dedupe: Boolean): Adjacency = {
+  /** The block of `(src, dst, weight)` edges in input order: a counting
+    * sort into source order, which keeps each source's edges in the order
+    * they came; the weights are kept when `weighted`, else dropped. */
+  private[ops] def ordered(edges: Iterator[(Long, Long, Double)],
+      weighted: Boolean): Adjacency = {
     val (sb, db, wb) = (Array.newBuilder[Long], Array.newBuilder[Long], Array.newBuilder[Double])
     edges.foreach { case (s, d, w) => sb += s; db += d; if (weighted) wb += w }
     val (s, d, w) = (sb.result(), db.result(), wb.result())
@@ -287,10 +303,20 @@ object Adjacency {
       dst(k) = d(j)
       if (weighted) weight(k) = w(j)
     }
-    if (weighted) return new Adjacency(src, offset, dst, weight)
+    new Adjacency(src, offset, dst, weight)
+  }
+
+  /** The block of `(src, dst, weight)` edges: weighted, [[ordered]];
+    * unweighted, each source's neighbours sorted and, with `dedupe`, kept
+    * once. */
+  private[ops] def build(edges: Iterator[(Long, Long, Double)], weighted: Boolean,
+      dedupe: Boolean): Adjacency = {
+    val a = ordered(edges, weighted)
+    if (weighted) return a
+    val (offset, dst) = (a.offset, a.dst)
     // sort each source's run, then (dedupe) compact it in place
     var (n, from) = (0, 0)
-    for (i <- src.indices) {
+    for (i <- a.src.indices) {
       val to = offset(i + 1)
       java.util.Arrays.sort(dst, from, to)
       if (dedupe) {
@@ -299,7 +325,7 @@ object Adjacency {
       }
       from = to
     }
-    new Adjacency(src, offset, if (dedupe) java.util.Arrays.copyOf(dst, n) else dst, null)
+    new Adjacency(a.src, offset, if (dedupe) java.util.Arrays.copyOf(dst, n) else dst, null)
   }
 }
 

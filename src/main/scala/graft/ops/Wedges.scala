@@ -5,14 +5,13 @@ import scala.reflect.ClassTag
 
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.col
 
 /**
  * The one wedge kernel, on [[Rounds]]: triangles ([[Ranking.triangles]],
- * `triangleCounts`, `clusteringCoefficients`, the support of
- * [[Centrality.kTruss]] and `trussDecomposition`) and
- * [[Centrality.nodeSimilarity]]. A wedge — two edges sharing a node — is
- * never a shuffled row: each partition fetches the neighbour lists its
+ * `triangleCounts`, `clusteringCoefficients`, and the numbered triangles
+ * that [[Centrality.trussDecomposition]] and `kTruss` read once, before
+ * their rounds) and [[Centrality.nodeSimilarity]]. A wedge — two edges
+ * sharing a node — is never a shuffled row: each partition fetches the neighbour lists its
  * block references ([[Rounds.fetch]]) and closes its wedges in the task, so
  * a call shuffles its edges, one degree message per edge and the fetch's
  * requests and replies (at most partitions × |E|), whatever the wedge
@@ -25,11 +24,10 @@ import org.apache.spark.sql.functions.col
  */
 object Wedges {
 
-  /** `edges`' (src, dst) as LONG ids through [[Rounds.longId]], rows with a
+  /** `edges`' (src, dst) as LONG ids ([[Rounds.endpoints]]), rows with a
     * null endpoint dropped, and the [[Rounds]] over their partitions. */
   def pairs(edges: DataFrame, op: String): (Rounds, RDD[(Long, Long)]) = {
-    val rows = edges.select(Rounds.longId(col("src"), op), Rounds.longId(col("dst"), op))
-      .na.drop("any").rdd.map(r => (r.getLong(0), r.getLong(1)))
+    val rows = Rounds.endpoints(edges, op).rdd.map(r => (r.getLong(0), r.getLong(1)))
     (Rounds(edges.sparkSession, rows.getNumPartitions), rows)
   }
 
@@ -40,6 +38,38 @@ object Wedges {
       val (lo, hi) = (math.min(u, math.min(v, w)), math.max(u, math.max(v, w)))
       (lo, u + v + w - lo - hi, hi)
     })
+
+  /** The undirected simple graph of `e` with its edges numbered: each edge
+    * as (number, (u, v)), u < v, and each triangle as the numbers of its
+    * three edges. An edge is numbered where its lower end in (degree, id)
+    * order holds it in its up-list, as `zipWithUniqueId` numbers the
+    * entries of the persisted up-lists: entry j of u's list is
+    * first(u) + j·n over n partitions, first(u) = p + (the entries before
+    * u's list in partition p)·n. No job runs, and a recomputed partition
+    * numbers alike (its nodes and lists are sorted). Each fetched up-list
+    * carries its first number. */
+  def numberedTriangles(rounds: Rounds, e: RDD[(Long, Long)]):
+      (RDD[(Long, (Long, Long))], RDD[(Long, Long, Long)]) = {
+    val n = rounds.part.numPartitions.toLong
+    val up = upLists(rounds, e).mapPartitionsWithIndex((p, it) => {
+      var first = p.toLong
+      it.map { case (u, _, l) => val f = first; first += l.length * n; (u, (l, f)) }
+    }, preservesPartitioning = true)
+    val lists = rounds.fetch(up.filter(_._2._1.nonEmpty), up.flatMap(_._2._1))
+    val tri = up.zipPartitions(lists, preservesPartitioning = false) { (own, got) =>
+      val upOf = LongMap.from(got)
+      def at(l: Array[Long], first: Long, w: Long) = first + java.util.Arrays.binarySearch(l, w) * n
+      own.flatMap { case (_, (uu, fu)) =>
+        uu.indices.iterator.flatMap(i => upOf.get(uu(i)).iterator.flatMap { case (vv, fv) =>
+          common(uu, vv).map(w => (fu + i * n, at(uu, fu, w), at(vv, fv, w)))
+        })
+      }
+    }
+    val edges = up.flatMap { case (u, (l, first)) =>
+      l.indices.iterator.map(j => (first + j * n, (math.min(u, l(j)), math.max(u, l(j)))))
+    }
+    (edges, tri)
+  }
 
   /** (node, triangles) for each node of at least one triangle, on
     * [[Rounds.part]]: corners are summed in the task, then reduced by node. */

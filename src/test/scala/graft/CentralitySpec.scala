@@ -162,7 +162,9 @@ class CentralitySpec extends AnyFunSuite {
     "personalizedPageRank" -> (e => graft.ops.Ranking.personalizedPageRank(e,
       e.select(col("src").as("source")))),
     "coreDecomposition" -> (Centrality.coreDecomposition(_)),
-    "kCore" -> (Centrality.kCore(_, 1))
+    "kCore" -> (Centrality.kCore(_, 1)),
+    "trussDecomposition" -> (Centrality.trussDecomposition(_)),
+    "kTruss" -> (Centrality.kTruss(_, 3))
   ).foreach { case (op, run) =>
     test(s"$op fails loudly on an id not castable to LONG") {
       import spark.implicits._
@@ -218,6 +220,23 @@ class CentralitySpec extends AnyFunSuite {
     val peel = Peeling.trussDecompositionPeeling(e).collect()
       .map(x => (x.getLong(0), x.getLong(1)) -> x.getInt(2)).toMap
     assert(r == peel)
+  }
+
+  test("trussDecomposition and kTruss read numeric-string ids as the LONG ids they cast to") {
+    import spark.implicits._
+    // K4 on 8..11 plus triangle 11-12-13 and pendant 13-14: as strings,
+    // "10" < "8" but 10 > 8, so the edges must be canonical in LONG order
+    val k4 = for (i <- 8L to 11L; j <- i + 1 to 11L) yield (i, j)
+    val longs = k4 ++ Seq((11L, 12L), (11L, 13L), (12L, 13L), (13L, 14L))
+    val strs = longs.map { case (a, b) => (a.toString, b.toString) }.toDF("src", "dst")
+    val e = longs.toDF("src", "dst")
+    def rows(d: org.apache.spark.sql.DataFrame) =
+      d.collect().map(r => r.toSeq).toSeq.sortBy(_.toString)
+    val truss = rows(Centrality.trussDecomposition(e))
+    assert(truss.collect { case Seq(u, v, t) if t == 4 => (u, v) }.toSet ==
+      k4.map { case (a, b) => (a, b) }.toSet, s"$truss")
+    assert(rows(Centrality.trussDecomposition(strs)) == truss)
+    for (k <- Seq(3, 4)) assert(rows(Centrality.kTruss(strs, k)) == rows(Centrality.kTruss(e, k)))
   }
 
   test("hits closed form on a two-hub bipartite fixture") {

@@ -1,12 +1,12 @@
 package graft
 
-import graft.ops.Centrality
 import graft.ops.Ckpt._
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** The peeling formulations of the core and truss decompositions: the
-  * specs' cross-checks for the h-index fixpoint forms in [[Centrality]].
+  * specs' cross-checks for the h-index fixpoint forms in
+  * [[graft.ops.Centrality]], which they do not call.
   * Their driver-round counts are Σ_k peels_k, so they are references, not
   * production paths. */
 object Peeling {
@@ -70,8 +70,33 @@ object Peeling {
     out.result().reduce(_ unionByName _)
   }
 
-  /** Trussness by phases k = 3 upward, each a full [[Centrality.kTruss]] of
-    * the previous survivors; an edge removed in phase k carries trussness
+  /** The k-truss's edges by iterative peeling — count each edge's
+    * triangles among the surviving edges, drop the edges of fewer than
+    * k − 2, repeat to fixpoint. `edges` are (u, v) with u < v, a pair
+    * once. */
+  def kTruss(edges: DataFrame, k: Int, maxIter: Int = 100): DataFrame = {
+    var e = edges.select(col("u"), col("v")).localCheckpoint(false)
+    var edgeCnt = e.count()
+    var stable = edgeCnt == 0
+    var i = 0
+    while (!stable && i < maxIter) {
+      val sym = e.unionByName(e.select(col("v").as("u"), col("u").as("v")))
+      // support(u, v) = |N(u) ∩ N(v)|: the w adjacent to both ends
+      val next = e.join(sym.withColumnRenamed("v", "w"), "u")
+        .join(sym.select(col("u").as("v"), col("v").as("w")), Seq("v", "w"))
+        .groupBy("u", "v").agg(count(lit(1)).as("__support"))
+        .filter(col("__support") >= k - 2).select(col("u"), col("v"))
+        .localCheckpoint(false)
+      val nextCnt = next.count()
+      stable = nextCnt == edgeCnt
+      e = next; edgeCnt = nextCnt; i += 1
+    }
+    require(stable, s"kTruss did not converge in $maxIter peels")
+    e
+  }
+
+  /** Trussness by phases k = 3 upward, each a full [[kTruss]] peel of the
+    * previous survivors; an edge removed in phase k carries trussness
     * k − 1. */
   def trussDecompositionPeeling(edges: DataFrame, maxK: Int = 30): DataFrame = {
     var cur = edges.select(least(col("src"), col("dst")).as("u"),
@@ -81,8 +106,7 @@ object Peeling {
     var k = 3
     var curCnt = cur.count()
     while (curCnt > 0 && k <= maxK) {
-      val next = Centrality.kTruss(cur.select(col("u").as("src"), col("v").as("dst")), k)
-        .freshCkpt()
+      val next = kTruss(cur, k).freshCkpt()
       out += cur.join(next, Seq("u", "v"), "left_anti")
         .withColumn("trussness", lit(k - 1))
       cur = next

@@ -86,6 +86,7 @@ class RoundsSpec extends AnyFunSuite {
     "Ranking.clusteringCoefficients" -> (() => Ranking.clusteringCoefficients(triEdges)),
     "Centrality.nodeSimilarity" -> (() => Centrality.nodeSimilarity(triEdges, 2)),
     "Centrality.kTruss" -> (() => Centrality.kTruss(triEdges, 3)),
+    "Centrality.trussDecomposition" -> (() => Centrality.trussDecomposition(triEdges)),
     "Centrality.coreDecomposition" -> (() => Centrality.coreDecomposition(triEdges)),
     "Centrality.kCore" -> (() => Centrality.kCore(triEdges, 2))
   ).foreach { case (name, result) =>
@@ -221,6 +222,43 @@ class RoundsSpec extends AnyFunSuite {
         assert(n == want, s"kCore($k): $n nodes")
         // one round, which converges, and the collect
         assert(jobs.size == 2, s"kCore($k): ${jobs.size} jobs")
+      }
+    }
+  }
+
+  test("forced trussDecomposition runs one job a round plus the collect") {
+    // a 4x4 grid with one diagonal per cell: every edge has trussness 3,
+    // but the inner edges start at support 2 and fall to 1 from the
+    // border inward, over several rounds
+    val e = (for (r <- 0L until 4L; c <- 0L until 4L; (dr, dc) <- Seq((0L, 1L), (1L, 0L), (1L, 1L))
+        if r + dr < 4 && c + dc < 4) yield (r * 4 + c, (r + dr) * 4 + c + dc)).toDF("src", "dst")
+    TestSession.withForcedDistributed(true) {
+      val rounds = (1 to 25).find(k => scala.util.Try(
+          Centrality.trussDecomposition(e, maxIter = k)).isSuccess)
+        .getOrElse(fail("no convergence within 25 rounds"))
+      assert(rounds > 2, s"$rounds rounds")
+      val (jobs, _) = listen(Centrality.trussDecomposition(e).collect())
+      assert(jobs.size == rounds + 1, s"${jobs.size} jobs for $rounds rounds")
+    }
+  }
+
+  test("forced kTruss runs its peel depth for k, not the trussness depth") {
+    // CentralitySpec's diamond 1-2-3 / 2-3-4: its trussness settles in two
+    // rounds (the shared edge falls from support 2 to 1, then a round that
+    // moves nothing). The 3-truss keeps every edge: one round that moves
+    // nothing. The 4-truss drops the outer edges at once, the shared edge
+    // in round one, and round two moves nothing.
+    val diamond = Seq((1L, 2L), (1L, 3L), (2L, 3L), (2L, 4L), (3L, 4L)).toDF("src", "dst")
+    TestSession.withForcedDistributed(true) {
+      val trussRounds = (1 to 25).find(k => scala.util.Try(
+          Centrality.trussDecomposition(diamond, maxIter = k)).isSuccess)
+        .getOrElse(fail("no convergence within 25 rounds"))
+      assert(trussRounds == 2, s"$trussRounds rounds")
+      for ((k, want, peels) <- Seq((3, 5L, 1), (4, 0L, 2))) {
+        var n = 0L
+        val (jobs, _) = listen { n = Centrality.kTruss(diamond, k).collect().length }
+        assert(n == want, s"kTruss($k): $n edges")
+        assert(jobs.size == peels + 1, s"kTruss($k): ${jobs.size} jobs")
       }
     }
   }
