@@ -233,8 +233,7 @@ class CentralitySpec extends AnyFunSuite {
     def rows(d: org.apache.spark.sql.DataFrame) =
       d.collect().map(r => r.toSeq).toSeq.sortBy(_.toString)
     val truss = rows(Centrality.trussDecomposition(e))
-    assert(truss.collect { case Seq(u, v, t) if t == 4 => (u, v) }.toSet ==
-      k4.map { case (a, b) => (a, b) }.toSet, s"$truss")
+    assert(truss.collect { case Seq(u, v, t) if t == 4 => (u, v) }.toSet == k4.toSet, s"$truss")
     assert(rows(Centrality.trussDecomposition(strs)) == truss)
     for (k <- Seq(3, 4)) assert(rows(Centrality.kTruss(strs, k)) == rows(Centrality.kTruss(e, k)))
   }
